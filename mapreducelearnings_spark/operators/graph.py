@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.iterate import iterate, loop_conf, loop_width
+from ..sources.io import from_rows
 
 INF = float("inf")
 
@@ -141,8 +142,9 @@ def pagerank(
         prev_mass = None
         try:
             for i in range(iterations):
+                r = ranks.hint("shuffle_hash")  # see the join-hint note in sssp
                 mass = (
-                    edges.join(ranks, edges.src == ranks.vertex)
+                    edges.join(r, edges.src == r.vertex)
                     .groupBy(edges.dst.alias("vertex"))
                     .agg(F.sum("rank").alias("mass"))
                     .persist(StorageLevel.MEMORY_AND_DISK)
@@ -162,11 +164,16 @@ def pagerank(
                         F.coalesce(F.col("mass"), F.lit(0.0)) + share
                     )
                 )
-                new_ranks = vertices.join(mass, "vertex", "left").select(
-                    "vertex", new_rank.alias("rank")
-                )
+                new_ranks = vertices.join(
+                    mass.hint("shuffle_hash"), "vertex", "left"
+                ).select("vertex", new_rank.alias("rank"))
                 if (i + 1) % 4 == 0 or i == iterations - 1:
-                    new_ranks = new_ranks.localCheckpoint(eager=True)
+                    # truncate lineage; mid-loop lazily, so the next
+                    # iteration's mass collect writes the checkpoint in
+                    # its own job while this mass is still cached
+                    new_ranks = new_ranks.localCheckpoint(
+                        eager=i == iterations - 1
+                    )
                 if prev_mass is not None:
                     prev_mass.unpersist()
                 prev_mass = mass
@@ -228,44 +235,57 @@ def sssp(
     sssp entries, width 2 regressed the path unroll); big-graph callers
     pass their own ∝|V| width or None to inherit the session's.
     """
-    # co-partition the loop-invariant edge list on the join key at loop
-    # width (same rationale and measurement as pagerank above)
-    if loop_partitions:
-        edges = edges.repartition(loop_partitions, "src")
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    vertices = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionByName(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    dist0 = vertices.select(
-        "vertex",
-        F.when(F.col("vertex") == source, 0.0).otherwise(F.lit(INF)).alias("dist"),
-    )
-
+    # Every per-iteration join hints shuffle_hash on its loop-state side.
+    # Both sides are already hash-partitioned on the key at the loop
+    # width, so the hinted join plans with no exchange; without the hint
+    # the k-row state falls under autoBroadcastJoinThreshold (AQE is off
+    # in the loop) and each join becomes a BroadcastExchange — one extra
+    # Spark job per join per iteration (the hints alone took SSSP from 20
+    # to 9 jobs per call and collect on the 5k-vertex follower graph,
+    # pagerank_standard from 37 to 17).
     def step(dist: DataFrame, _i: int) -> DataFrame:
+        d = dist.hint("shuffle_hash")
+        # one shuffle per iteration: only the relaxed candidates are
+        # regrouped (min over in-edges), then folded onto the
+        # co-partitioned state; least() skips the NULL of a vertex with
+        # no finite in-neighbour
         relaxed = (
-            edges.join(dist, edges.src == dist.vertex)
+            edges.join(d, edges.src == d.vertex)
             .where(F.col("dist") != INF)
-            .select(edges.dst.alias("vertex"), (F.col("dist") + 1).alias("dist"))
+            .groupBy(edges.dst.alias("vertex"))
+            .agg(F.min(F.col("dist") + 1).alias("rd"))
         )
-        return (
-            dist.unionByName(relaxed)
-            .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
+        return dist.join(relaxed.hint("shuffle_hash"), "vertex", "left").select(
+            "vertex", F.least("dist", "rd").alias("dist")
         )
 
     def converged(old: DataFrame, new: DataFrame) -> bool:
         changed = (
             new.alias("n")
-            .join(old.alias("o"), "vertex")
+            .join(old.alias("o").hint("shuffle_hash"), "vertex")
             .where(F.col("n.dist") != F.col("o.dist"))
             .count()
         )
         return changed == 0
 
+    # the setup runs in the scope too: persist() plans the cached tree at
+    # call time, and under the session's AQE each of its exchanges would
+    # run as a job of its own
     with _loop_shuffle_partitions(spark, loop_partitions):
+        # co-partition the loop-invariant edge list AND the distance
+        # state on the join key at loop width (same rationale as
+        # pagerank above)
+        if loop_partitions:
+            edges = edges.repartition(loop_partitions, "src")
+        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+        vertices = edges.select(F.col("src").alias("vertex")).unionByName(
+            edges.select(F.col("dst").alias("vertex"))
+        )
+        if loop_partitions:
+            vertices = vertices.repartition(loop_partitions, "vertex")
+        vertices = vertices.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+        start = F.when(F.col("vertex") == source, 0.0).otherwise(F.lit(INF))
+        dist0 = vertices.select("vertex", start.alias("dist"))
         # check_every=2 (r14): min-relax is a monotone fixpoint, so a
         # late convergence check returns the identical distance table —
         # it only halves the per-iteration diff-count control jobs
@@ -512,31 +532,24 @@ def _root_graph(forest: DataFrame) -> DataFrame:
 _CC_FUSED_RESIDUAL = True
 
 
-def _residual_rows(spark: SparkSession, g: DataFrame, cap: int) -> list:
+def _residual_rows(g: DataFrame, cap: int) -> list:
     """ONE control job instead of count()-then-collect() (r15, guide
-    §1.2 / VERDICT r14 Next #4): take ``cap + 1`` rows of the residual
-    root graph — ≤ cap rows means the list IS the complete residual
-    (feed it straight to the driver union-find), cap + 1 means "still
-    too big, contract another round" and the rows are discarded. The
-    driver never holds more than cap + 1 narrow rows, exactly the
-    bound the old count-guarded collect enforced. initialNumPartitions
-    is raised for the take so the common small-residual case scans all
-    (≤ loop-width) partitions in one job instead of CollectLimit's
-    1 → 4 → … escalation rounds, which would cost MORE jobs than the
-    count it replaces."""
+    §1.2 / VERDICT r14 Next #4): read ``cap + 1`` rows of the residual
+    — ≤ cap rows means the list IS the complete residual (feed it
+    straight to the driver union-find), cap + 1 means "still too big,
+    contract another round" and the rows are discarded. The driver
+    never holds more than cap + 1 narrow rows, exactly the bound the
+    old count-guarded collect enforced.
+
+    The limit sits UNDER a single-partition exchange: every partition
+    stops after cap + 1 rows, and one job reads them all. A plain
+    ``take`` plans ``CollectLimit``, which scans 1 → 4 → … partitions in
+    escalating jobs unless the session-global
+    ``spark.sql.limit.initialNumPartitions`` is raised around it."""
     if not _CC_FUSED_RESIDUAL:
         n = g.count()
         return g.collect() if n <= cap else [None] * (cap + 1)
-    key = "spark.sql.limit.initialNumPartitions"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "64")
-    try:
-        return g.take(cap + 1)
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    return g.limit(cap + 1).repartition(1).collect()
 
 
 def connected_components(
@@ -553,38 +566,40 @@ def connected_components(
 
     Two-phase distributed union-find, NOT a min-label fixpoint loop
     (O(diameter) shuffle rounds; measured 33 s on a 1 k-vertex sf0.1
-    graph purely in per-round job overhead):
+    graph purely in per-round job overhead). The raw edge list is round
+    0's RESIDUAL; while a residual exceeds ``driver_edge_cap`` rows:
 
-    1. one ``mapInPandas`` pass runs union-find per partition and emits
+    1. a ``mapInPandas`` pass runs union-find per partition and emits
        the local spanning forest (vertex → local min root) — exact
        connectivity, |V| narrow rows, embarrassingly parallel;
-    2. the ROOT GRAPH (edges among local roots, bounded by
-       partition-boundary vertices, ≪ |V|) is contracted again while it
-       exceeds ``driver_edge_cap``: first up to ``max_iter`` plain
-       forest rounds, then — if a hostile partition layout keeps the
-       per-partition union-find from making progress — each further
-       round prepends one alternating large-/small-star contraction
-       (:func:`_star_round`, pure JVM, layout-independent label
-       progress; Kiveris et al. SoCC 2014) before the forest pass, up
-       to ``star_budget`` rounds. Star rounds preserve both components
-       and the vertex set (every non-isolated vertex reappears), so
-       the (root → contracted-root) composition below is unchanged.
-       The residual handed to the driver-side union-find is therefore
-       bounded by ``driver_edge_cap`` REGARDLESS of partition layout
-       (up to the star budget, which converges in O(log²) rounds per
-       the paper) — a k-row control read like the centroid collect;
-    3. one broadcast join + min-agg maps every vertex to its component.
+    2. the next residual is the ROOT GRAPH (edges among local roots,
+       bounded by partition-boundary vertices, ≪ |V|). After the first
+       contraction, up to ``max_iter`` further plain forest rounds run;
+       then — if a hostile partition layout keeps the per-partition
+       union-find from making progress — each further round prepends
+       one alternating large-/small-star contraction (:func:`_star_round`,
+       pure JVM, layout-independent label progress; Kiveris et al. SoCC
+       2014) before the forest pass, up to ``star_budget`` rounds. Star
+       rounds preserve both components and the vertex set, so the
+       (root → contracted-root) composition below is unchanged.
+
+    The residual handed to the driver-side union-find is therefore
+    bounded by ``driver_edge_cap`` REGARDLESS of partition layout (up to
+    the star budget, which converges in O(log²) rounds per the paper) —
+    a k-row control read like the centroid collect. A graph with at most
+    ``driver_edge_cap`` edges runs ZERO contraction rounds: one bounded
+    read, the driver union-find, and the labels come back as a local
+    table — no Python worker starts (lesson 28 in PERFORMANCE.md).
+    Otherwise one broadcast join + min-agg maps every vertex to its
+    component. ``CC_LAST_STATS`` reports the rounds run.
 
     Returns (vertex, component) with component = min vertex id in the
     component (union-by-min keeps every local root the minimum of its
     tree, and every vertex ≥ its root, so the global min survives both
     phases). At 100 TB: phase 1 scales with edge partitions, phase 2
-    touches only boundary vertices, phase 3 is one shuffle on (vertex)
-    — no O(diameter) loop ever runs.
+    touches only boundary vertices, the labelling is one shuffle on
+    (vertex) — no O(diameter) loop ever runs.
     """
-    e = edges.select("src", "dst")
-    if loop_partitions:
-        e = e.repartition(loop_partitions, "src")
     # Two widths for two concerns (r15): ``loop_partitions`` keeps the
     # CONTRACTION width (it gates the per-partition Python union-find's
     # parallelism over edge rows — compute-bound, wants cores), while
@@ -595,15 +610,14 @@ def connected_components(
     # contraction width left at 8, vs mixed results when the
     # contraction width was shrunk too).
     with _loop_shuffle_partitions(spark, label_partitions):
-        forest = _forest_contract(e).persist(StorageLevel.MEMORY_AND_DISK)
-        g = _root_graph(forest)
-        rounds = 0
-        extra = []  # (root → contracted-root) maps from extra rounds
-        rows = _residual_rows(spark, g, driver_edge_cap)
-        n = len(rows)
-        while n > driver_edge_cap and rounds < max_iter + star_budget:
+        g = edges.select("src", "dst")
+        forests = []  # (vertex → root) map of every contraction round
+        rows = _residual_rows(g, driver_edge_cap)
+        budget = 1 + max_iter + star_budget
+        while len(rows) > driver_edge_cap and len(forests) < budget:
+            rounds = len(forests)
             src = g
-            if rounds >= max_iter:
+            if rounds > max_iter:
                 # forest-only budget exhausted above the cap: the
                 # adversarial case where consecutive path vertices
                 # never co-locate, so partition-local union-find
@@ -611,29 +625,25 @@ def connected_components(
                 # minima independent of layout; the forest pass then
                 # folds the contraction into a composable root map.
                 src = _star_round(
-                    g, large=((rounds - max_iter) % 2 == 0)
+                    g, large=((rounds - 1 - max_iter) % 2 == 0)
                 ).localCheckpoint(eager=True)
-            f2 = _forest_contract(
-                src.repartition(loop_partitions or 8, "src")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            extra.append(f2)
-            g = _root_graph(f2)
-            rows = _residual_rows(spark, g, driver_edge_cap)
-            n = len(rows)
-            rounds += 1
-        if n > driver_edge_cap:
+            f = _forest_contract(src.repartition(loop_partitions or 8, "src"))
+            forests.append(f.persist(StorageLevel.MEMORY_AND_DISK))
+            g = _root_graph(forests[-1])
+            rows = _residual_rows(g, driver_edge_cap)
+        if len(rows) > driver_edge_cap:
             # round budget exhausted while still above the cap
             # (adversarial layouts only): the truncated take is NOT the
             # full residual — fall back to the exact full collect the
             # pre-fusion code always did.
             rows = g.collect()
-            n = len(rows)
-        CC_LAST_STATS["residual_edges"] = n
-        CC_LAST_STATS["rounds"] = rounds
-        CC_LAST_STATS["star_rounds"] = max(0, rounds - max_iter)
+        CC_LAST_STATS["residual_edges"] = len(rows)
+        CC_LAST_STATS["rounds"] = len(forests)
+        CC_LAST_STATS["star_rounds"] = max(0, len(forests) - 1 - max_iter)
 
-        # driver union-find over the residual root graph (small by
-        # construction; a k-row control read like the centroid collect)
+        # driver union-find over the residual (small by construction; a
+        # k-row control read like the centroid collect). Rows unpack as
+        # tuples: Row attribute access is 4× slower.
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -642,57 +652,57 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in rows:
-            ra, rb = find(r.src), find(r.dst)
+        for a, b in rows:
+            ra, rb = find(a), find(b)
             if ra != rb:
                 if ra < rb:
                     parent[rb] = ra
                 else:
                     parent[ra] = rb
-        mapping = [(v, find(v)) for v in parent]
-        labels = forest
-        for f2 in extra:
-            # compose: vertex → root → contracted root (left join: roots
-            # untouched by the extra round keep their label).
-            # DEDUPE the map to one row per vertex first: the forest
-            # emits a vertex once per partition it appears in (that
-            # duplication is what lets _root_graph discover bridges),
-            # so joining the raw forest multiplies labels rows per
-            # round — exponential growth over many residual rounds
-            # (measured: 244M rows by round 15 on the hostile-layout
-            # fixture). Taking the MIN root per vertex is exact: the
-            # dropped alternative roots are still bridged to the kept
-            # one through _root_graph's edges (which read the full
-            # duplicated forest), so every label still reaches its
-            # component minimum through later maps or the driver
-            # union-find; the join becomes 1:1 and labels stay
-            # |forest|-sized for any number of rounds.
-            m = f2.groupBy("src").agg(F.min("dst").alias("_c")).select(
-                F.col("src").alias("_r"), F.col("_c")
-            )
-            labels = (
-                labels.join(m, labels.dst == m._r, "left")
-                .select(
-                    "src",
-                    F.coalesce(F.col("_c"), F.col("dst")).alias("dst"),
+        mapping = from_rows(
+            spark, [(v, find(v)) for v in parent], "vertex long, component long"
+        )
+        if not forests:
+            # the residual was the whole edge list: the map covers every
+            # vertex and IS the answer
+            out = mapping
+        else:
+            labels = forests[0]
+            for f2 in forests[1:]:
+                # compose: vertex → root → contracted root (left join:
+                # roots untouched by the extra round keep their label).
+                # DEDUPE the map to one row per vertex first: the forest
+                # emits a vertex once per partition it appears in (that
+                # duplication is what lets _root_graph discover bridges),
+                # so joining the raw forest multiplies labels rows per
+                # round — exponential growth over many residual rounds
+                # (measured: 244M rows by round 15 on the hostile-layout
+                # fixture). Taking the MIN root per vertex is exact: the
+                # dropped alternative roots are still bridged to the kept
+                # one through _root_graph's edges (which read the full
+                # duplicated forest), so every label still reaches its
+                # component minimum through later maps or the driver
+                # union-find; the join becomes 1:1 and labels stay
+                # |forest|-sized for any number of rounds.
+                m = f2.groupBy("src").agg(F.min("dst").alias("_c")).select(
+                    F.col("src").alias("_r"), F.col("_c")
                 )
-            )
-        if mapping:
-            mdf = spark.createDataFrame(mapping, "_r long, _c long")
-            labels = (
-                labels.join(F.broadcast(mdf), labels.dst == mdf._r, "left")
-                .select(
+                labels = labels.join(m, labels.dst == m._r, "left").select(
                     "src", F.coalesce(F.col("_c"), F.col("dst")).alias("dst")
                 )
+            if parent:
+                labels = labels.join(
+                    F.broadcast(mapping), labels.dst == mapping.vertex, "left"
+                ).select(
+                    "src", F.coalesce(F.col("component"), F.col("dst")).alias("dst")
+                )
+            out = (
+                labels.groupBy("src")
+                .agg(F.min("dst").alias("component"))
+                .select(F.col("src").alias("vertex"), "component")
+                .localCheckpoint(eager=True)
             )
-        out = (
-            labels.groupBy("src")
-            .agg(F.min("dst").alias("component"))
-            .select(F.col("src").alias("vertex"), "component")
-        )
-        out = out.localCheckpoint(eager=True)
-    forest.unpersist()
-    for f2 in extra:
+    for f2 in forests:
         f2.unpersist()
     return out
 
@@ -915,18 +925,25 @@ def pagerank_standard(
         if loop_partitions:
             verts = verts.repartition(loop_partitions, "v")
         verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
-        n = verts.count()
+        n = max(1, verts.count())  # an edgeless graph ranks nothing
 
+        # edges co-partitioned on src like verts on v: the degree
+        # aggregate, the weighting join and the dangling anti-join plan
+        # without exchanges and without broadcast jobs (hints: see sssp)
+        if loop_partitions:
+            edges = edges.repartition(loop_partitions, "src")
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("dg"))
         dst_t = dict(edges.dtypes)["dst"]
         weighted = (
-            edges.join(deg, "src")
+            edges.join(deg.hint("shuffle_hash"), "src")
             .select("src", "dst", (F.lit(1.0) / F.col("dg")).alias("w"))
             .unionByName(
                 # dangling v → ⊥ sink, weight 1: its whole rank lands in
                 # the NULL group of the mass aggregation
                 verts.join(
-                    deg.select(F.col("src").alias("v")), "v", "left_anti"
+                    deg.select(F.col("src").alias("v")).hint("shuffle_hash"),
+                    "v",
+                    "left_anti",
                 ).select(
                     F.col("v").alias("src"),
                     F.lit(None).cast(dst_t).alias("dst"),
@@ -942,15 +959,16 @@ def pagerank_standard(
         prev = None
         try:
             for i in range(iterations):
+                r = ranks.hint("shuffle_hash")  # see the join-hint note in sssp
                 mass = (
-                    weighted.join(ranks, weighted.src == ranks.v)
+                    weighted.join(r, weighted.src == r.v)
                     .groupBy(weighted.dst.alias("v"))
                     .agg(F.sum(F.col("r") * F.col("w")).alias("m"))
                     .persist(StorageLevel.MEMORY_AND_DISK)
                 )
                 drow = mass.where(F.col("v").isNull()).select("m").collect()
                 dangling = float(drow[0]["m"]) if drow else 0.0
-                new_ranks = verts.join(mass, "v", "left").select(
+                new_ranks = verts.join(mass.hint("shuffle_hash"), "v", "left").select(
                     "v",
                     (
                         F.lit((1.0 - damping) / n)
@@ -962,7 +980,12 @@ def pagerank_standard(
                     ).alias("r"),
                 )
                 if (i + 1) % 4 == 0 or i == iterations - 1:
-                    new_ranks = new_ranks.localCheckpoint(eager=True)
+                    # truncate lineage; mid-loop lazily, so the next
+                    # iteration's mass collect writes the checkpoint in
+                    # its own job while this mass is still cached
+                    new_ranks = new_ranks.localCheckpoint(
+                        eager=i == iterations - 1
+                    )
                 if prev is not None:
                     prev.unpersist()
                 prev = mass

@@ -28,10 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..sources.io import from_rows
 
-def seed_centroids(points: DataFrame, value_col: str, k: int) -> list[float]:
+
+def seed_centroids(mx: float, k: int) -> list[float]:
     """Evenly spaced seeds: max/k · j (K-means/.../CountFollowers.java:224-236)."""
-    mx = points.agg(F.max(value_col)).first()[0]
     first = mx / k
     return [first * j for j in range(1, k + 1)]
 
@@ -69,54 +70,57 @@ def kmeans_1d(
     list is exactly stable, like the reference's file comparison
     (K-means/.../CountFollowers.java:192-197).
     """
-    from ..plans.iterate import loop_conf
-
     weighted = (
         points.select(F.col(value_col).cast("double").alias("x"))
         .groupBy("x")
         .agg(F.count(F.lit(1)).alias("w"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    centroids = {
-        j + 1: c for j, c in enumerate(seed_centroids(weighted, "x", k))
-    }
+    # one job loads the cache and reads the seed's max and the table size
+    mx, n = weighted.agg(F.max("x"), F.count(F.lit(1))).first()
+    centroids = {j + 1: c for j, c in enumerate(seed_centroids(mx, k))}
+    # Size the round scans to the distinct-value table (≈1 partition per
+    # 250k rows, the loop_width rule without its floor of 4): at fixture
+    # scale one partition, so every round's k-group aggregate and the
+    # final one plan with no Exchange — plan-local, where a scoped
+    # shuffle-width conf would flip the shared session. Not a fixed 1:
+    # the distinct table grows with scale (kmeans_centroids clusters
+    # o_totalprice).
+    table = weighted.coalesce(max(1, n // 250_000))
 
     rounds = fixed_iterations if fixed_iterations is not None else max_iter
-    # loop width 4 (r15): the per-round aggregate collapses to k rows,
-    # so the shuffle width only amortizes fixed stage cost — the same
-    # state-size sizing as the graph loops (graph.pagerank_chain's note;
-    # ABBA kmeans_centroids 0.90×, kmeans_followers wash)
-    with loop_conf(points.sparkSession, 4):
-        for _ in range(rounds):
-            updated = (
-                weighted.select("x", "w", _assign_expr(centroids).alias("cid"))
-                .groupBy("cid")
-                .agg((F.sum(F.col("x") * F.col("w")) / F.sum("w")).alias("c"))
-                .collect()
+    for _ in range(rounds):
+        updated = (
+            table.select("x", "w", _assign_expr(centroids).alias("cid"))
+            .groupBy("cid")
+            .agg((F.sum(F.col("x") * F.col("w")) / F.sum("w")).alias("c"))
+            .collect()
+        )
+        new_centroids = {
+            int(r["cid"]): (
+                float(r["c"]) if not compat_truncate else float(int(r["c"]))
             )
-            new_centroids = {
-                int(r["cid"]): (
-                    float(r["c"]) if not compat_truncate else float(int(r["c"]))
-                )
-                for r in updated
-            }
-            if fixed_iterations is None and new_centroids == centroids:
-                break
-            centroids = new_centroids
+            for r in updated
+        }
+        if fixed_iterations is None and new_centroids == centroids:
+            break
+        centroids = new_centroids
 
-    final = (
-        weighted.select("x", "w", _assign_expr(centroids).alias("cid"))
+    # the final assignment is k rows too: read it while the table is
+    # cached and hand back a local table, instead of a lazy plan whose
+    # action would rebuild the unpersisted distinct-value table
+    sizes = (
+        table.select("w", _assign_expr(centroids).alias("cid"))
         .groupBy("cid")
         .agg(F.sum("w").alias("n_points"))
-    )
-    expr = F.lit(None).cast("double")
-    for cid, c in centroids.items():
-        expr = F.when(F.col("cid") == cid, F.lit(c)).otherwise(expr)
-    out = final.select(
-        F.col("cid").alias("cluster_id"), expr.alias("centroid"), "n_points"
+        .collect()
     )
     weighted.unpersist()
-    return out
+    return from_rows(
+        points.sparkSession,
+        [(cid, centroids[cid], n) for cid, n in sizes],
+        "cluster_id long, centroid double, n_points long",
+    )
 
 
 def kmeans_sse(points: DataFrame, value_col: str, centroids: list[float]) -> float:

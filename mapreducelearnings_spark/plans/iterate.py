@@ -8,8 +8,10 @@ iterations through the file system
 (K-means/src/main/java/wc/CountFollowers.java:177-200). This runner
 replaces both with persist + periodic ``localCheckpoint`` discipline:
 
-- every iteration's state is persisted and materialized, so the next
-  iteration reads cached partitions instead of recomputing the chain;
+- every iteration's state is persisted and loaded by the next check or
+  checkpoint job, so later iterations read cached partitions instead of
+  recomputing the chain; no cache is released before its successor is
+  loaded;
 - every ``checkpoint_every`` iterations the lineage is truncated, so the
   logical plan stays O(checkpoint_every) deep no matter how many
   iterations run — at 100 TB an unbounded plan is a driver OOM and an
@@ -35,9 +37,12 @@ def iterate(
     """Run ``step`` until ``converged`` or ``max_iter``.
 
     ``step(state, i)`` returns the next state; ``converged(old, new)``
-    (optional) is evaluated after each step — it may run Spark actions
-    (e.g. a diff-count join, SingleSourceShortestPathRDD/.../
-    FollowerCount.scala:42-44).
+    (optional) may run Spark actions (e.g. a diff-count join,
+    SingleSourceShortestPathRDD/.../FollowerCount.scala:42-44). It is
+    evaluated after every ``check_every``-th step, but NEVER after the
+    final iteration: the loop ends there regardless, so a diff-count job
+    would be pure waste. A side-effecting ``converged`` therefore misses
+    the last iteration.
 
     ``check_every`` (r14, guide §1.2 "per-task work" → fewer control
     jobs): evaluate ``converged`` only every N-th iteration. Correct
@@ -48,31 +53,48 @@ def iterate(
     which on small-state graphs are pure job-scheduling overhead.
     Callers whose ``converged`` has side effects or whose step is not
     idempotent at the fixpoint must keep the default 1.
+
+    Every state is persisted; the unchecked, uncheckpointed ones stay
+    lazy and are materialized by the next check or checkpoint job, which
+    caches the whole pending chain at once. A state's cache is released
+    only after that job has run: unpersisting a parent whose child is
+    still an unloaded lazy persist makes Spark re-plan the child without
+    the parent's cache, and the next action recomputes the chain back to
+    the last materialized state. When ``max_iter`` ends on such a lazy
+    step, one count job loads it before its ancestors are released.
     """
     state = state.persist(StorageLevel.MEMORY_AND_DISK)
+    pending = [state]  # persisted states whose successor is not loaded yet
     for i in range(max_iter):
         new = step(state, i)
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        checkpoint_now = checkpoint_every and (i + 1) % checkpoint_every == 0
+        if checkpoint_now:
             new = new.localCheckpoint(eager=True)  # truncate lineage (one job)
         else:
-            # lazy persist: materialized by the convergence action below,
-            # or — in fixed-iteration loops — by the checkpoint/final
-            # action, which caches every intermediate marker in ONE job
-            # instead of one job per iteration.
             new = new.persist(StorageLevel.MEMORY_AND_DISK)
-        # no check on the final iteration (r15, ADVICE r14): the loop
-        # ends regardless, so a diff-count job there is pure waste —
-        # exactly the control job check_every exists to save.
         check_now = (
             converged is not None
             and i != max_iter - 1
             and (i + 1) % max(1, check_every) == 0
         )
         done = bool(check_now and converged(state, new))
-        state.unpersist()
+        if checkpoint_now or check_now:
+            # ``new`` is loaded now, so no lazy plan still needs its
+            # ancestors' caches
+            for s in pending:
+                s.unpersist()
+            pending = []
+        pending.append(new)
         state = new
         if done:
             break
+    if len(pending) > 1:
+        # max_iter ran out on an unchecked, uncheckpointed step: load it
+        # (the caller's action then reads the cache) before releasing
+        # the ancestors its lazy plan still reads
+        state.count()
+        for s in pending[:-1]:
+            s.unpersist()
     return state
 
 

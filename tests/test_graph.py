@@ -467,3 +467,176 @@ def test_cc_fused_residual_matches_unfused(spark):
     # the observability contract is unchanged: residual_edges is the
     # exact residual size either way
     assert fused_stats["residual_edges"] == unfused_stats["residual_edges"]
+
+
+# --- Spark job budgets of the loop operators ---------------------------------
+
+
+def _jobs_of(spark, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the number
+    of Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def action_plans(monkeypatch):
+    """Executed plan of every collect/count/localCheckpoint a test runs."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    for name in ("collect", "count", "localCheckpoint"):
+        real = getattr(DataFrame, name)
+
+        def spy(self, *a, _real=real, **k):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    return plans
+
+
+def test_pagerank_standard_job_budget(spark, action_plans):
+    """10 iterations = 1 vertex count + 10 dangling-mass collects + the
+    final checkpoint (the two mid-loop checkpoints are lazy and ride the
+    next collect). Every join in the loop (and in the edge weighting) is
+    a co-partitioned shuffled hash join: a BroadcastExchange would add
+    one job per join per iteration."""
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3)], "src: long, dst: long"
+    )
+    _, jobs = _jobs_of(
+        spark, lambda: G.pagerank_standard(spark, edges, iterations=10)
+    )
+    assert jobs == 12
+    assert len(action_plans) == 14  # 3 localCheckpoint calls
+    assert all("BroadcastExchange" not in p for p in action_plans)
+    assert any("ShuffledHashJoin" in p for p in action_plans)
+
+
+def test_sssp_job_budget(spark, micro_graph, action_plans):
+    """The micro-graph converges at iteration 3: one diff-count at
+    iteration 1, then the checkpoint and the diff-count at iteration 3.
+    No loop join is broadcast."""
+    _, jobs = _jobs_of(spark, lambda: G.sssp(spark, micro_graph, 1))
+    assert jobs == 3
+    assert all("BroadcastExchange" not in p for p in action_plans)
+    assert any("ShuffledHashJoin" in p for p in action_plans)
+
+
+def test_connected_components_under_cap_runs_zero_rounds(spark):
+    """A graph within driver_edge_cap goes straight to the driver
+    union-find: one bounded read, no contraction round, and the labels
+    come back as a local table (no job, no Python worker)."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8), (9, 9)], "src: long, dst: long"
+    )
+    out, jobs = _jobs_of(spark, lambda: G.connected_components(spark, edges))
+    assert jobs == 1
+    assert G.CC_LAST_STATS["rounds"] == 0
+    assert G.CC_LAST_STATS["star_rounds"] == 0
+    assert G.CC_LAST_STATS["residual_edges"] == 4
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+    got, jobs = _jobs_of(spark, out.collect)
+    assert jobs == 0
+    assert dict(map(tuple, got)) == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 9}
+
+
+# --- degenerate inputs -------------------------------------------------------
+
+
+def test_connected_components_empty_edge_list(spark):
+    edges = spark.createDataFrame([], "src: long, dst: long")
+    for kwargs in ({}, {"driver_edge_cap": 0}):
+        out = G.connected_components(spark, edges, **kwargs)
+        assert out.schema.simpleString() == "struct<vertex:bigint,component:bigint>"
+        assert out.collect() == []
+
+
+@pytest.mark.parametrize(
+    "rows, want",
+    [
+        # self-loops only: every vertex is its own component
+        ([(3, 3), (5, 5), (5, 5)], {3: 3, 5: 5}),
+        # duplicate and reversed edges merge nothing extra
+        (
+            [(1, 2), (1, 2), (2, 1), (4, 5), (4, 5), (5, 5)],
+            {1: 1, 2: 1, 4: 4, 5: 4},
+        ),
+    ],
+)
+def test_connected_components_self_loops_and_duplicates(spark, rows, want):
+    edges = spark.createDataFrame(rows, "src: long, dst: long")
+    # under the cap (driver union-find only) and with contraction rounds
+    for kwargs in ({}, {"driver_edge_cap": 1}):
+        got = dict(map(tuple, G.connected_components(spark, edges, **kwargs).collect()))
+        assert got == want
+
+
+def test_sssp_absent_source_is_all_unreachable(spark, micro_graph):
+    dist = dict(map(tuple, G.sssp(spark, micro_graph, 99).collect()))
+    assert set(dist) == {1, 2, 3, 4, 5, 6}
+    assert all(d == G.INF for d in dist.values())
+
+
+def test_pagerank_standard_edgeless_graph(spark):
+    """No edges: every vertex is dangling and there is nothing to rank."""
+    edges = spark.createDataFrame([], "src: long, dst: long")
+    ranks = G.pagerank_standard(spark, edges, iterations=3)
+    assert ranks.columns == ["vertex", "rank"]
+    assert ranks.collect() == []
+
+
+def test_pagerank_standard_all_mass_through_dangling_sink(spark):
+    """Star into one sink: 1→0, 2→0, 3→0. Vertex 0 is dangling, so every
+    iteration's whole mass passes through the dangling share; the result
+    must match the textbook recurrence computed in plain Python."""
+    edges = spark.createDataFrame([(1, 0), (2, 0), (3, 0)], "src: long, dst: long")
+    d, n, its = 0.85, 4, 6
+    r = dict.fromkeys(range(n), 1.0 / n)
+    for _ in range(its):
+        m = {0: r[1] + r[2] + r[3], 1: 0.0, 2: 0.0, 3: 0.0}
+        r = {v: (1 - d) / n + d * (m[v] + r[0] / n) for v in range(n)}
+    got = dict(map(tuple, G.pagerank_standard(spark, edges, iterations=its).collect()))
+    assert got.keys() == r.keys()
+    assert all(abs(got[v] - r[v]) < 1e-12 for v in r)
+    assert abs(sum(got.values()) - 1.0) < 1e-12
+
+
+def test_iterate_checkpoint_reuses_materialized_states(spark):
+    """iterate(check_every=2, checkpoint_every=4): iteration 2 is neither
+    checked nor checkpointed, so its state is still an unloaded lazy
+    persist when the loop moves on. Its parent's cache must survive
+    until the iteration-3 checkpoint has run, or that job recomputes the
+    whole chain. The step counts the rows it evaluates: 4 steps over n
+    rows must evaluate exactly 4·n rows."""
+    from mapreducelearnings_spark.plans.iterate import iterate
+
+    n = 50
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count_and_bump(v):
+        evaluated.add(1)
+        return v + 1
+
+    bump = F.udf(count_and_bump, "long")
+
+    state = spark.range(n).select("id", F.col("id").alias("v"))
+    out = iterate(
+        state,
+        lambda s, _i: s.select("id", bump("v").alias("v")),
+        converged=lambda old, new: new.count() < 0,  # never converges
+        max_iter=4,
+        checkpoint_every=4,
+        check_every=2,
+    )
+    assert sorted(r["v"] for r in out.collect()) == [i + 4 for i in range(n)]
+    assert evaluated.value == 4 * n

@@ -2,7 +2,7 @@
 # One-shot verification ladder (what a round's end-state must pass):
 #  1. driver-mimic oracle sweep at sf0.01 (exact compare, all queries)
 #  2. every query under a PLAIN SparkSession (the driver's convention)
-#  3. full pytest suite
+#  3. full pytest suite, then the benchmark's own self-tests (no Spark)
 #  4. bench (sf0.1, min-of-3 cold; run ALONE — CPU contention skews it)
 # Optional: MULT=3 scale smoke + full sweep against the scaled dir.
 set -euo pipefail
@@ -26,6 +26,7 @@ PY
 
 echo "== 3/4 pytest (incl. coverage-index lint) =="
 python -m pytest tests/ -q
+python -m pytest perfbench/tests -q
 
 echo "== 4/4 bench (alone!) =="
 python bench.py
