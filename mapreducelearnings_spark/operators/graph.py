@@ -20,10 +20,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.iterate import iterate, loop_conf, loop_width
-from ..sources.io import from_rows
+from ..sources.io import from_columns, from_rows, to_driver
 
 INF = float("inf")
 
@@ -46,6 +47,59 @@ _loop_shuffle_partitions = loop_conf
 # The r2 exponential-plan warning in pagerank's docstring therefore
 # holds even with per-iteration caching; the collect IS the optimum: it
 # pins the plan linear AND materializes the cache in the same job.
+
+
+# ---------------------------------------------------------------------------
+# Driver-side finish for small graphs: pagerank_standard and sssp read an
+# edge list of at most io.DRIVER_STATE_CAP rows once (io.to_driver) and
+# run their loop in numpy. The per-iteration Spark jobs of the distributed
+# loop are almost all driver overhead at that size (PERFORMANCE.md
+# lesson 29); above the cap the distributed loop is the only path.
+# ---------------------------------------------------------------------------
+
+
+def _driver_graph(edges: DataFrame):
+    """An edge list within the cap, read once and densely indexed:
+    (field, ids, si, di, has_null), else ``None``. ``field`` is the
+    distributed path's ``vertex`` field (the src ∪ dst union's widened
+    type and nullability, from analysis alone), ``ids`` the sorted
+    distinct non-NULL endpoints as an Arrow array, ``si``/``di`` each
+    edge's endpoint positions in ``ids`` (−1 for NULL) and ``has_null``
+    whether a NULL endpoint exists — the distributed union keeps NULL as
+    one vertex that no equi-join reaches."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    local = to_driver(edges.select("src", "dst"))
+    if local is None:
+        return None
+    field = (
+        edges.select(F.col("src").alias("vertex"))
+        .unionByName(edges.select(F.col("dst").alias("vertex")))
+        .schema["vertex"]
+    )
+    at = to_arrow_type(field.dataType)
+    src, dst = local.column("src").cast(at), local.column("dst").cast(at)
+    both = pa.chunked_array(src.chunks + dst.chunks, type=at)
+    ids = pc.unique(both.drop_null())
+    ids = ids.take(pc.sort_indices(ids))
+
+    def pos(col):
+        return pc.index_in(col, value_set=ids).fill_null(-1).to_numpy()
+
+    return field, ids, pos(src), pos(dst), both.null_count > 0
+
+
+def _local_result(spark, graph, values, value_field: T.StructField) -> DataFrame:
+    """(vertex, value) local table over ``graph``'s ids; ``values`` has
+    one more entry, last, for the NULL vertex if there is one."""
+    import pyarrow as pa
+
+    field, ids, _, _, has_null = graph
+    if has_null:
+        ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
+    return from_columns(spark, [ids, values], T.StructType([field, value_field]))
 
 
 # ---------------------------------------------------------------------------
@@ -234,7 +288,17 @@ def sssp(
     pagerank_chain's sizing note: 8→4 measured 0.84×/0.87× on the two
     sssp entries, width 2 regressed the path unroll); big-graph callers
     pass their own ∝|V| width or None to inherit the session's.
+
+    An edge list of at most ``io.DRIVER_STATE_CAP`` rows finishes on the
+    driver: one bounded read, then a level-synchronous BFS bounded by
+    ``max_iter`` in numpy, returned as a local table. Both paths return
+    the same schema and the same distances (hop counts are exact in
+    either); only graphs above the cap run the distributed loop.
     """
+    graph = _driver_graph(edges)
+    if graph is not None:
+        return _sssp_local(spark, graph, source, max_iter)
+
     # Every per-iteration join hints shuffle_hash on its loop-state side.
     # Both sides are already hash-partitioned on the key at the loop
     # width, so the hinted join plans with no exchange; without the hint
@@ -297,6 +361,35 @@ def sssp(
     edges.unpersist()
     vertices.unpersist()
     return out
+
+
+def _sssp_local(spark, graph, source, max_iter):
+    """:func:`sssp` on a driver-side graph. Synchronous min-relaxation
+    leaves d(v) = BFS depth when it is at most the number of steps run,
+    so a BFS cut at ``max_iter`` levels is the distributed fixpoint
+    (or its state when ``max_iter`` runs out first)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    _, ids, si, di, has_null = graph
+    live = (si >= 0) & (di >= 0)  # a NULL endpoint joins nothing
+    s, d = si[live], di[live]
+    dist = np.full(len(ids) + has_null, INF)
+    at = pc.index(ids, source).as_py()
+    if at >= 0:
+        dist[at] = 0.0
+        frontier = np.zeros(len(dist), dtype=bool)
+        frontier[at] = True
+        for level in range(1, max_iter + 1):
+            reached = np.zeros(len(dist), dtype=bool)
+            reached[d[frontier[s]]] = True
+            frontier = reached & (dist == INF)
+            if not frontier.any():
+                break
+            dist[frontier] = float(level)
+    return _local_result(
+        spark, graph, dist, T.StructField("dist", T.DoubleType(), False)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -526,30 +619,26 @@ def _root_graph(forest: DataFrame) -> DataFrame:
     )
 
 
-# r15 (guide §1.2 / VERDICT r14 Next #4): fuse connected_components'
-# per-round residual-size count() and the final residual collect() into
-# ONE bounded take per round. Toggle exists for A/B measurement only.
-_CC_FUSED_RESIDUAL = True
+def _union_find(local) -> list[tuple]:
+    """Driver union-find over a residual edge table (small by
+    construction; a k-row control read like the centroid collect):
+    (vertex, min vertex of its component) for every endpoint."""
+    parent: dict[int, int] = {}
 
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-def _residual_rows(g: DataFrame, cap: int) -> list:
-    """ONE control job instead of count()-then-collect() (r15, guide
-    §1.2 / VERDICT r14 Next #4): read ``cap + 1`` rows of the residual
-    — ≤ cap rows means the list IS the complete residual (feed it
-    straight to the driver union-find), cap + 1 means "still too big,
-    contract another round" and the rows are discarded. The driver
-    never holds more than cap + 1 narrow rows, exactly the bound the
-    old count-guarded collect enforced.
-
-    The limit sits UNDER a single-partition exchange: every partition
-    stops after cap + 1 rows, and one job reads them all. A plain
-    ``take`` plans ``CollectLimit``, which scans 1 → 4 → … partitions in
-    escalating jobs unless the session-global
-    ``spark.sql.limit.initialNumPartitions`` is raised around it."""
-    if not _CC_FUSED_RESIDUAL:
-        n = g.count()
-        return g.collect() if n <= cap else [None] * (cap + 1)
-    return g.limit(cap + 1).repartition(1).collect()
+    for a, b in zip(local.column("src").to_pylist(), local.column("dst").to_pylist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return [(v, find(v)) for v in parent]
 
 
 def connected_components(
@@ -557,7 +646,7 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 8,
     loop_partitions: int | None = 8,
-    driver_edge_cap: int = 100_000,
+    driver_edge_cap: int | None = None,
     star_budget: int = 12,
     label_partitions: int | None = 4,
 ) -> DataFrame:
@@ -567,7 +656,9 @@ def connected_components(
     Two-phase distributed union-find, NOT a min-label fixpoint loop
     (O(diameter) shuffle rounds; measured 33 s on a 1 k-vertex sf0.1
     graph purely in per-round job overhead). The raw edge list is round
-    0's RESIDUAL; while a residual exceeds ``driver_edge_cap`` rows:
+    0's RESIDUAL; while a residual exceeds ``driver_edge_cap`` rows
+    (default ``io.DRIVER_STATE_CAP``, read at call time; 0 contracts
+    until the round budget runs out):
 
     1. a ``mapInPandas`` pass runs union-find per partition and emits
        the local spanning forest (vertex → local min root) — exact
@@ -583,15 +674,17 @@ def connected_components(
        rounds preserve both components and the vertex set, so the
        (root → contracted-root) composition below is unchanged.
 
-    The residual handed to the driver-side union-find is therefore
-    bounded by ``driver_edge_cap`` REGARDLESS of partition layout (up to
-    the star budget, which converges in O(log²) rounds per the paper) —
-    a k-row control read like the centroid collect. A graph with at most
-    ``driver_edge_cap`` edges runs ZERO contraction rounds: one bounded
-    read, the driver union-find, and the labels come back as a local
-    table — no Python worker starts (lesson 28 in PERFORMANCE.md).
-    Otherwise one broadcast join + min-agg maps every vertex to its
-    component. ``CC_LAST_STATS`` reports the rounds run.
+    Every residual is read through ``io.to_driver``, so the driver never
+    holds more than ``driver_edge_cap`` + 1 of its rows, and the
+    residual handed to the driver-side union-find is bounded by the cap
+    REGARDLESS of partition layout (up to the star budget, which
+    converges in O(log²) rounds per the paper). A graph with at most
+    ``driver_edge_cap`` edges runs ZERO contraction rounds and never
+    enters ``loop_conf``: one bounded read, the driver union-find, and
+    the labels come back as a local table — no Python worker starts
+    (lesson 28 in PERFORMANCE.md). Otherwise one broadcast join +
+    min-agg maps every vertex to its component. ``CC_LAST_STATS``
+    reports the rounds run. Both paths give the same labels.
 
     Returns (vertex, component) with component = min vertex id in the
     component (union-by-min keeps every local root the minimum of its
@@ -600,6 +693,13 @@ def connected_components(
     touches only boundary vertices, the labelling is one shuffle on
     (vertex) — no O(diameter) loop ever runs.
     """
+    g = edges.select("src", "dst")
+    local = to_driver(g, driver_edge_cap)
+    if local is not None:
+        # the residual is the whole edge list: its map covers every
+        # vertex and IS the answer
+        CC_LAST_STATS.update(residual_edges=local.num_rows, rounds=0, star_rounds=0)
+        return from_rows(spark, _union_find(local), "vertex long, component long")
     # Two widths for two concerns (r15): ``loop_partitions`` keeps the
     # CONTRACTION width (it gates the per-partition Python union-find's
     # parallelism over edge rows — compute-bound, wants cores), while
@@ -610,11 +710,9 @@ def connected_components(
     # contraction width left at 8, vs mixed results when the
     # contraction width was shrunk too).
     with _loop_shuffle_partitions(spark, label_partitions):
-        g = edges.select("src", "dst")
         forests = []  # (vertex → root) map of every contraction round
-        rows = _residual_rows(g, driver_edge_cap)
         budget = 1 + max_iter + star_budget
-        while len(rows) > driver_edge_cap and len(forests) < budget:
+        while local is None and len(forests) < budget:
             rounds = len(forests)
             src = g
             if rounds > max_iter:
@@ -630,78 +728,51 @@ def connected_components(
             f = _forest_contract(src.repartition(loop_partitions or 8, "src"))
             forests.append(f.persist(StorageLevel.MEMORY_AND_DISK))
             g = _root_graph(forests[-1])
-            rows = _residual_rows(g, driver_edge_cap)
-        if len(rows) > driver_edge_cap:
+            local = to_driver(g, driver_edge_cap)
+        if local is None:
             # round budget exhausted while still above the cap
-            # (adversarial layouts only): the truncated take is NOT the
-            # full residual — fall back to the exact full collect the
-            # pre-fusion code always did.
-            rows = g.collect()
-        CC_LAST_STATS["residual_edges"] = len(rows)
+            # (adversarial layouts only): read the full residual
+            local = g.toArrow()
+        CC_LAST_STATS["residual_edges"] = local.num_rows
         CC_LAST_STATS["rounds"] = len(forests)
         CC_LAST_STATS["star_rounds"] = max(0, len(forests) - 1 - max_iter)
 
-        # driver union-find over the residual (small by construction; a
-        # k-row control read like the centroid collect). Rows unpack as
-        # tuples: Row attribute access is 4× slower.
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in rows:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        mapping = from_rows(
-            spark, [(v, find(v)) for v in parent], "vertex long, component long"
-        )
-        if not forests:
-            # the residual was the whole edge list: the map covers every
-            # vertex and IS the answer
-            out = mapping
-        else:
-            labels = forests[0]
-            for f2 in forests[1:]:
-                # compose: vertex → root → contracted root (left join:
-                # roots untouched by the extra round keep their label).
-                # DEDUPE the map to one row per vertex first: the forest
-                # emits a vertex once per partition it appears in (that
-                # duplication is what lets _root_graph discover bridges),
-                # so joining the raw forest multiplies labels rows per
-                # round — exponential growth over many residual rounds
-                # (measured: 244M rows by round 15 on the hostile-layout
-                # fixture). Taking the MIN root per vertex is exact: the
-                # dropped alternative roots are still bridged to the kept
-                # one through _root_graph's edges (which read the full
-                # duplicated forest), so every label still reaches its
-                # component minimum through later maps or the driver
-                # union-find; the join becomes 1:1 and labels stay
-                # |forest|-sized for any number of rounds.
-                m = f2.groupBy("src").agg(F.min("dst").alias("_c")).select(
-                    F.col("src").alias("_r"), F.col("_c")
-                )
-                labels = labels.join(m, labels.dst == m._r, "left").select(
-                    "src", F.coalesce(F.col("_c"), F.col("dst")).alias("dst")
-                )
-            if parent:
-                labels = labels.join(
-                    F.broadcast(mapping), labels.dst == mapping.vertex, "left"
-                ).select(
-                    "src", F.coalesce(F.col("component"), F.col("dst")).alias("dst")
-                )
-            out = (
-                labels.groupBy("src")
-                .agg(F.min("dst").alias("component"))
-                .select(F.col("src").alias("vertex"), "component")
-                .localCheckpoint(eager=True)
+        mapping = from_rows(spark, _union_find(local), "vertex long, component long")
+        labels = forests[0]
+        for f2 in forests[1:]:
+            # compose: vertex → root → contracted root (left join:
+            # roots untouched by the extra round keep their label).
+            # DEDUPE the map to one row per vertex first: the forest
+            # emits a vertex once per partition it appears in (that
+            # duplication is what lets _root_graph discover bridges),
+            # so joining the raw forest multiplies labels rows per
+            # round — exponential growth over many residual rounds
+            # (measured: 244M rows by round 15 on the hostile-layout
+            # fixture). Taking the MIN root per vertex is exact: the
+            # dropped alternative roots are still bridged to the kept
+            # one through _root_graph's edges (which read the full
+            # duplicated forest), so every label still reaches its
+            # component minimum through later maps or the driver
+            # union-find; the join becomes 1:1 and labels stay
+            # |forest|-sized for any number of rounds.
+            m = f2.groupBy("src").agg(F.min("dst").alias("_c")).select(
+                F.col("src").alias("_r"), F.col("_c")
             )
+            labels = labels.join(m, labels.dst == m._r, "left").select(
+                "src", F.coalesce(F.col("_c"), F.col("dst")).alias("dst")
+            )
+        if local.num_rows:
+            labels = labels.join(
+                F.broadcast(mapping), labels.dst == mapping.vertex, "left"
+            ).select(
+                "src", F.coalesce(F.col("component"), F.col("dst")).alias("dst")
+            )
+        out = (
+            labels.groupBy("src")
+            .agg(F.min("dst").alias("component"))
+            .select(F.col("src").alias("vertex"), "component")
+            .localCheckpoint(eager=True)
+        )
     for f2 in forests:
         f2.unpersist()
     return out
@@ -912,10 +983,19 @@ def pagerank_standard(
     per-iteration job count vs a separate left_anti aggregation.
     ``loop_partitions`` defaults to the state-sized width 4 (r15, ABBA
     0.85× — pagerank_chain's sizing note has the derivation).
+
+    An edge list of at most ``io.DRIVER_STATE_CAP`` rows finishes on the
+    driver: one bounded read, then the same recurrence as a ``bincount``
+    mat-vec in numpy, returned as a local table. Both paths return the
+    same schema and the same ranks up to summation order (relative
+    1e-12); only graphs above the cap run the distributed loop.
     """
     # a genuine NULL dst in unclean input would otherwise be folded into
     # the synthetic NULL-sink group and silently counted as dangling mass
     edges = edges.where(F.col("dst").isNotNull())
+    graph = _driver_graph(edges)
+    if graph is not None:
+        return _pagerank_local(spark, graph, iterations, damping)
     with _loop_shuffle_partitions(spark, loop_partitions):
         verts = (
             edges.select(F.col("src").alias("v"))
@@ -995,3 +1075,28 @@ def pagerank_standard(
                 if df is not None:
                     df.unpersist()
     return ranks.select(F.col("v").alias("vertex"), F.col("r").alias("rank"))
+
+
+def _pagerank_local(spark, graph, iterations, damping):
+    """:func:`pagerank_standard` on a driver-side graph (NULL dst
+    already dropped). A NULL src is a vertex no join reaches: it counts
+    in N and receives the base and dangling shares, but its out-edges
+    and its own rank never propagate — as in the distributed plan."""
+    import numpy as np
+
+    _, ids, si, di, has_null = graph
+    v = len(ids)
+    n = max(1, v + has_null)  # an edgeless graph ranks nothing
+    live = si >= 0
+    s, d = si[live], di[live]
+    deg = np.bincount(s, minlength=v)
+    w = 1.0 / deg[s]
+    dangling = deg == 0
+    r = np.full(v + has_null, 1.0 / n)
+    for _ in range(iterations):
+        mass = np.bincount(d, weights=r[s] * w, minlength=v + has_null)
+        share = r[:v][dangling].sum() / n
+        r = (1.0 - damping) / n + damping * (mass + share)
+    return _local_result(
+        spark, graph, r, T.StructField("rank", T.DoubleType(), False)
+    )

@@ -28,7 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..sources.io import from_rows
+from ..sources.io import from_rows, to_driver
+
+_SCHEMA = "cluster_id long, centroid double, n_points long"
 
 
 def seed_centroids(mx: float, k: int) -> list[float]:
@@ -69,13 +71,28 @@ def kmeans_1d(
     unrolls the same rounds). Otherwise: stop early when the centroid
     list is exactly stable, like the reference's file comparison
     (K-means/.../CountFollowers.java:192-197).
+
+    A distinct-value table of at most ``io.DRIVER_STATE_CAP`` rows
+    finishes on the driver: one bounded read, then the same rounds in
+    numpy (argmin with the lowest-cid tie-break over the same stable
+    cluster ids), returned as a local table. Both paths return the same
+    schema and result (exactly, whenever the weighted sums are exact —
+    integer values such as follower counts); only larger tables run the
+    distributed rounds.
     """
     weighted = (
         points.select(F.col(value_col).cast("double").alias("x"))
         .groupBy("x")
         .agg(F.count(F.lit(1)).alias("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    rounds = fixed_iterations if fixed_iterations is not None else max_iter
+    local = to_driver(weighted)
+    if local is not None:
+        rows = _kmeans_local(
+            local, k, rounds, fixed_iterations is None, compat_truncate
+        )
+        return from_rows(points.sparkSession, rows, _SCHEMA)
+    weighted = weighted.persist(StorageLevel.MEMORY_AND_DISK)
     # one job loads the cache and reads the seed's max and the table size
     mx, n = weighted.agg(F.max("x"), F.count(F.lit(1))).first()
     centroids = {j + 1: c for j, c in enumerate(seed_centroids(mx, k))}
@@ -88,7 +105,6 @@ def kmeans_1d(
     # o_totalprice).
     table = weighted.coalesce(max(1, n // 250_000))
 
-    rounds = fixed_iterations if fixed_iterations is not None else max_iter
     for _ in range(rounds):
         updated = (
             table.select("x", "w", _assign_expr(centroids).alias("cid"))
@@ -119,8 +135,46 @@ def kmeans_1d(
     return from_rows(
         points.sparkSession,
         [(cid, centroids[cid], n) for cid, n in sizes],
-        "cluster_id long, centroid double, n_points long",
+        _SCHEMA,
     )
+
+
+def _kmeans_local(local, k, rounds, converge, compat_truncate) -> list[tuple]:
+    """:func:`kmeans_1d`'s rounds over a driver-side (x, w) table. A NULL
+    x joins the lowest cid (its distance struct ties every centroid) and
+    adds its weight to that cluster's count but nothing to its sum, as
+    Spark's ``sum`` skips the NULL product."""
+    import numpy as np
+
+    xcol = local.column("x")
+    null = xcol.is_null().to_numpy(zero_copy_only=False)
+    x = xcol.fill_null(0.0).to_numpy()
+    w = local.column("w").to_numpy().astype(np.float64)
+    xw = np.where(null, 0.0, x * w)
+    mx = float(x[~null].max()) if (~null).any() else None
+    centroids = {j + 1: c for j, c in enumerate(seed_centroids(mx, k))}
+
+    def assign(cents):
+        """(cid of each cluster that has members, member weight, weighted
+        sum of x) — argmin takes the first of tied distances, and the
+        cids are sorted, so ties go to the lowest cid."""
+        cids = sorted(cents)
+        dist = np.abs(x[:, None] - np.array([cents[c] for c in cids]))
+        at = dist.argmin(axis=1)
+        at[null] = 0
+        hit = np.flatnonzero(np.bincount(at, minlength=len(cids)))
+        den = np.bincount(at, weights=w, minlength=len(cids))
+        num = np.bincount(at, weights=xw, minlength=len(cids))
+        return [(cids[j], den[j], num[j]) for j in hit]
+
+    for _ in range(rounds):
+        new = {cid: float(s / n) for cid, n, s in assign(centroids)}
+        if compat_truncate:
+            new = {cid: float(int(c)) for cid, c in new.items()}
+        if converge and new == centroids:
+            break
+        centroids = new
+    return [(cid, centroids[cid], int(n)) for cid, n, _ in assign(centroids)]
 
 
 def kmeans_sse(points: DataFrame, value_col: str, centroids: list[float]) -> float:

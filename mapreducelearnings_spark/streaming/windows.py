@@ -42,8 +42,14 @@ def _drain_partitions(default: int = 8) -> int:
     handful to a few thousand keys of state). Production deployments
     size it to arrival volume via $SPARK_GRAFT_STREAM_SHUFFLE; the
     state-store count is pinned at checkpoint creation, so this is a
-    per-stream design constant, not a host tunable."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", str(default)))
+    per-stream design constant, not a host tunable. A malformed value or
+    one below 1 falls back to ``default``, as session.default_cpus does
+    for its knob."""
+    try:
+        width = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", ""))
+    except ValueError:
+        return default
+    return width if width >= 1 else default
 
 # Raw schema the file-stream source reads events.parquet with. NOTE the
 # unit asymmetry with the batch path: the parquet column is

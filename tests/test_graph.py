@@ -9,7 +9,9 @@ from pyspark.sql import functions as F
 
 from mapreducelearnings_spark.operators import graph as G
 from mapreducelearnings_spark.operators import kmeans as KM
+from mapreducelearnings_spark.operators import relational as R
 from mapreducelearnings_spark.catalog import graph_edges, load_table
+from mapreducelearnings_spark.sources import io
 
 
 # --- PageRank ---------------------------------------------------------------
@@ -418,55 +420,52 @@ def test_incremental_components_folds_over_batches(spark):
     )
 
 
+def _python_components(rows):
+    """vertex → min vertex of its undirected component, plain Python."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
 def test_cc_fused_residual_matches_unfused(spark):
-    """r15 fusion (VERDICT r14 Next #4): the residual root graph's
-    size-check count() and final collect() are fused into one bounded
-    take. Labels must be identical under both control paths, including
-    when the cap forces extra contraction rounds (the loop path the
-    fused take's cap+1 sentinel drives)."""
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(60)] + [(200, 201), (300, 300)],
-        "src: long, dst: long",
+    """Every residual is read through the one bounded io.to_driver read.
+    Labels and CC_LAST_STATS must match a plain-Python union-find both
+    under the cap (the raw edge list is the residual: zero rounds) and
+    when a tiny cap forces contraction rounds until the round budget
+    runs out and the full residual is read."""
+    rows = [(i, i + 1) for i in range(60)] + [(200, 201), (300, 300)]
+    edges = spark.createDataFrame(rows, "src: long, dst: long")
+    want = sorted(_python_components(rows).items())
+
+    under = sorted(map(tuple, G.connected_components(spark, edges).collect()))
+    under_stats = dict(G.CC_LAST_STATS)
+    # tiny cap: every round's residual exceeds it, so the loop keeps
+    # contracting until the budget (1 + max_iter + star_budget) is spent
+    # and finishes through the full residual read
+    capped = sorted(
+        map(
+            tuple,
+            G.connected_components(
+                spark, edges, driver_edge_cap=2, max_iter=2, star_budget=2,
+            ).collect(),
+        )
     )
-    try:
-        G._CC_FUSED_RESIDUAL = True
-        fused = sorted(
-            map(tuple, G.connected_components(spark, edges).collect())
-        )
-        fused_stats = dict(G.CC_LAST_STATS)
-        # tiny cap: every round's residual exceeds it, so the fused path
-        # must keep contracting on the cap+1 sentinel and finish through
-        # the exact fallback collect
-        fused_capped = sorted(
-            map(
-                tuple,
-                G.connected_components(
-                    spark, edges, driver_edge_cap=2, max_iter=2,
-                    star_budget=2,
-                ).collect(),
-            )
-        )
-        G._CC_FUSED_RESIDUAL = False
-        unfused = sorted(
-            map(tuple, G.connected_components(spark, edges).collect())
-        )
-        unfused_stats = dict(G.CC_LAST_STATS)
-        unfused_capped = sorted(
-            map(
-                tuple,
-                G.connected_components(
-                    spark, edges, driver_edge_cap=2, max_iter=2,
-                    star_budget=2,
-                ).collect(),
-            )
-        )
-    finally:
-        G._CC_FUSED_RESIDUAL = True
-    assert fused == unfused
-    assert fused_capped == unfused_capped
-    # the observability contract is unchanged: residual_edges is the
-    # exact residual size either way
-    assert fused_stats["residual_edges"] == unfused_stats["residual_edges"]
+    capped_stats = dict(G.CC_LAST_STATS)
+    assert under == want
+    assert capped == want
+    # residual_edges is the exact size of the residual the driver read
+    assert under_stats == {"residual_edges": len(rows), "rounds": 0, "star_rounds": 0}
+    assert capped_stats["rounds"] == 1 + 2 + 2
+    assert capped_stats["star_rounds"] == 2
+    assert capped_stats["residual_edges"] > 2
 
 
 # --- Spark job budgets of the loop operators ---------------------------------
@@ -504,12 +503,19 @@ def action_plans(monkeypatch):
     return plans
 
 
-def test_pagerank_standard_job_budget(spark, action_plans):
-    """10 iterations = 1 vertex count + 10 dangling-mass collects + the
-    final checkpoint (the two mid-loop checkpoints are lazy and ride the
-    next collect). Every join in the loop (and in the edge weighting) is
-    a co-partitioned shuffled hash join: a BroadcastExchange would add
-    one job per join per iteration."""
+@pytest.fixture
+def distributed(monkeypatch):
+    """Cap 0: the loop operators skip the driver path and read nothing."""
+    monkeypatch.setattr(io, "DRIVER_STATE_CAP", 0)
+
+
+def test_pagerank_standard_job_budget(spark, action_plans, distributed):
+    """Distributed path: 10 iterations = 1 vertex count + 10
+    dangling-mass collects + the final checkpoint (the two mid-loop
+    checkpoints are lazy and ride the next collect). Every join in the
+    loop (and in the edge weighting) is a co-partitioned shuffled hash
+    join: a BroadcastExchange would add one job per join per
+    iteration."""
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3)], "src: long, dst: long"
     )
@@ -522,10 +528,10 @@ def test_pagerank_standard_job_budget(spark, action_plans):
     assert any("ShuffledHashJoin" in p for p in action_plans)
 
 
-def test_sssp_job_budget(spark, micro_graph, action_plans):
-    """The micro-graph converges at iteration 3: one diff-count at
-    iteration 1, then the checkpoint and the diff-count at iteration 3.
-    No loop join is broadcast."""
+def test_sssp_job_budget(spark, micro_graph, action_plans, distributed):
+    """Distributed path: the micro-graph converges at iteration 3: one
+    diff-count at iteration 1, then the checkpoint and the diff-count at
+    iteration 3. No loop join is broadcast."""
     _, jobs = _jobs_of(spark, lambda: G.sssp(spark, micro_graph, 1))
     assert jobs == 3
     assert all("BroadcastExchange" not in p for p in action_plans)
@@ -640,3 +646,183 @@ def test_iterate_checkpoint_reuses_materialized_states(spark):
     )
     assert sorted(r["v"] for r in out.collect()) == [i + 4 for i in range(n)]
     assert evaluated.value == 4 * n
+
+
+# --- driver path vs distributed path ------------------------------------------
+
+GRAPHS = {
+    "micro": [(1, 2), (2, 3), (1, 4), (4, 3), (3, 1), (5, 6)],
+    "empty": [],
+    "self_loop": [(7, 7)],
+    "duplicates": [(1, 2), (1, 2), (2, 1), (2, 3), (2, 3)],
+    "dangling_star": [(1, 0), (2, 0), (3, 0)],
+    "disconnected": [(1, 2), (2, 1), (10, 11), (11, 12), (20, 20)],
+    "null_endpoints": [(1, 2), (2, None), (None, 3), (3, 4), (4, None)],
+    "long_path": [(i, i + 1) for i in range(12)],
+}
+
+
+def _on_both_paths(monkeypatch, run):
+    """``run()`` on the driver path (default cap) and on the distributed
+    path (cap 0); each result's (schema, (rows, jobs of the collect)).
+    The driver result must plan a LocalTableScan."""
+    local = run()
+    assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
+    with monkeypatch.context() as m:
+        m.setattr(io, "DRIVER_STATE_CAP", 0)
+        dist = run()
+    return (
+        (local.schema, _jobs_of(local.sparkSession, local.collect)),
+        (dist.schema, (dist.collect(), 0)),
+    )
+
+
+def test_to_driver_is_one_bounded_read(spark, monkeypatch):
+    """At most cap rows: the whole frame as one Arrow table, read by one
+    job even over several partitions. Above the cap: None. A cap of 0
+    reads nothing."""
+    df = spark.range(0, 40, 1, 4).select(F.col("id").alias("src"))
+    table, jobs = _jobs_of(spark, lambda: io.to_driver(df, 40))
+    assert jobs == 1 and sorted(table.column("src").to_pylist()) == list(range(40))
+    assert io.to_driver(df, 39) is None
+    monkeypatch.setattr(io, "DRIVER_STATE_CAP", 0)
+    assert _jobs_of(spark, lambda: io.to_driver(df)) == (None, 0)
+
+
+def _edges(spark, name):
+    return spark.createDataFrame(GRAPHS[name], "src: long, dst: long")
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_pagerank_standard_driver_path_matches_distributed(spark, monkeypatch, name):
+    edges = _edges(spark, name)
+    (ls, (lrows, ljobs)), (ds, (drows, _)) = _on_both_paths(
+        monkeypatch, lambda: G.pagerank_standard(spark, edges, iterations=7)
+    )
+    assert ljobs == 0
+    assert ls == ds
+    got, want = dict(map(tuple, lrows)), dict(map(tuple, drows))
+    assert got.keys() == want.keys()
+    assert all(got[v] == pytest.approx(want[v], rel=1e-12, abs=0) for v in want)
+
+
+@pytest.mark.parametrize(
+    "name, source, max_iter",
+    [(name, 1, 64) for name in sorted(GRAPHS)]
+    + [
+        ("micro", 99, 64),  # absent source: all unreachable
+        ("long_path", 0, 5),  # path longer than max_iter
+        ("long_path", 0, 0),
+    ],
+)
+def test_sssp_driver_path_matches_distributed(
+    spark, monkeypatch, name, source, max_iter
+):
+    edges = _edges(spark, name)
+    (ls, (lrows, ljobs)), (ds, (drows, _)) = _on_both_paths(
+        monkeypatch, lambda: G.sssp(spark, edges, source, max_iter=max_iter)
+    )
+    assert ljobs == 0
+    assert ls == ds
+    assert sorted(map(tuple, lrows), key=repr) == sorted(map(tuple, drows), key=repr)
+    if name == "long_path" and source == 0:
+        got = dict(map(tuple, lrows))
+        assert got[max_iter] == float(max_iter) and got[max_iter + 1] == G.INF
+
+
+def test_loop_operators_keep_non_nullable_vertex_schema(spark, monkeypatch):
+    """Edges with non-nullable ids (a ring built from spark.range): the
+    driver path's vertex field must carry the same nullability."""
+    nxt = F.when(F.col("id") == 5, F.lit(0)).otherwise(F.col("id") + 1)
+    ring = spark.range(6).select(F.col("id").alias("src"), nxt.alias("dst"))
+    for run in (
+        lambda: G.pagerank_standard(spark, ring, iterations=3),
+        lambda: G.sssp(spark, ring, 0),
+    ):
+        (ls, (lrows, _)), (ds, (drows, _)) = _on_both_paths(monkeypatch, run)
+        assert ls == ds and not ls["vertex"].nullable
+        assert sorted(lrows) == pytest.approx(sorted(drows), rel=1e-12)
+
+
+@pytest.mark.parametrize(
+    "values, k, kwargs",
+    [
+        ([3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9], 4, {"fixed_iterations": 5}),
+        ([3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9], 3, {"max_iter": 10}),
+        ([5, 5, 5, 2], 4, {"fixed_iterations": 3}),  # k above the distinct values
+        ([1, 2, 9, 10], 3, {"fixed_iterations": 2}),  # the middle cluster empties
+        ([1.5, 2.5, 7.25, 8.0, 100.5], 2, {"max_iter": 6, "compat_truncate": True}),
+        ([4, None, 1, 9, None], 2, {"fixed_iterations": 2}),  # NULL values
+    ],
+)
+def test_kmeans_1d_driver_path_matches_distributed(
+    spark, monkeypatch, values, k, kwargs
+):
+    points = spark.createDataFrame(
+        [(None if v is None else float(v),) for v in values], "v double"
+    )
+    (ls, (lrows, ljobs)), (ds, (drows, _)) = _on_both_paths(
+        monkeypatch, lambda: KM.kmeans_1d(points, "v", k=k, **kwargs)
+    )
+    assert ljobs == 0
+    assert ls == ds
+    assert sorted(map(tuple, lrows)) == sorted(map(tuple, drows))
+    assert sum(r["n_points"] for r in lrows) == len(values)
+
+
+@pytest.fixture(scope="module")
+def follower_parquet(spark, tmp_path_factory):
+    """A 5k-vertex / 50k-edge power-law follower graph in one parquet
+    file — the benchmark's graph shape (FIXTURES.md §1)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(1)
+    ids = rng.permutation(np.arange(1, 50_001))[:5_000]
+    src = ids[rng.zipf(1.6, 50_000) % 5_000]
+    dst = ids[rng.zipf(1.3, 50_000) % 5_000]
+    path = str(tmp_path_factory.mktemp("follower") / "edges.parquet")
+    pq.write_table(pa.table({"src": src, "dst": dst}), path)
+    return path
+
+
+def test_loop_operators_under_cap_run_only_the_bounded_read(spark, follower_parquet):
+    """Under the cap each operator's only jobs are its bounded read's: one
+    for the single-file edge list, three for k-means' distinct-value
+    table (the follower-count and distinct-value aggregates each run as
+    an AQE stage first). The result is a local table: its collect runs
+    no job."""
+    edges = spark.read.parquet(follower_parquet)
+    source = edges.first()["src"]
+    cases = [
+        (lambda: G.pagerank_standard(spark, edges, iterations=10), 1),
+        (lambda: G.sssp(spark, edges, source), 1),
+        (lambda: G.connected_components(spark, edges), 1),
+        (
+            lambda: KM.kmeans_1d(
+                R.follower_count(edges), "cnt", k=4, fixed_iterations=6
+            ),
+            3,
+        ),
+    ]
+    for run, budget in cases:
+        out, jobs = _jobs_of(spark, run)
+        assert jobs == budget
+        assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+        rows, jobs = _jobs_of(spark, out.collect)
+        assert jobs == 0 and rows
+
+
+def test_loop_operators_under_cap_leave_session_conf_alone(spark, micro_graph):
+    """Under the cap no operator enters loop_conf: the session's conf is
+    identical before and after each call."""
+    points = spark.createDataFrame([(1.0,), (2.0,), (9.0,)], "v double")
+    for run in (
+        lambda: G.pagerank_standard(spark, micro_graph),
+        lambda: G.sssp(spark, micro_graph, 1),
+        lambda: KM.kmeans_1d(points, "v", k=2),
+    ):
+        before = spark.conf.getAll
+        run().collect()
+        assert spark.conf.getAll == before

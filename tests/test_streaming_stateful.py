@@ -2,11 +2,27 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducelearnings_spark.catalog import load_table
 from mapreducelearnings_spark.sources import io as IO
 from mapreducelearnings_spark.streaming import windows as SW
+
+
+@pytest.mark.parametrize(
+    "raw, want",
+    [(None, 8), ("16", 16), ("1", 1), ("0", 8), ("-3", 8), ("", 8), ("wide", 8), ("2.5", 8)],
+)
+def test_drain_partitions_env_knob(monkeypatch, raw, want):
+    """$SPARK_GRAFT_STREAM_SHUFFLE sets the drain width; a malformed value
+    or one below 1 falls back to the default instead of failing the
+    stream or setting an invalid shuffle width."""
+    if raw is None:
+        monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", raw)
+    assert SW._drain_partitions() == want
 
 
 def test_partitioned_write_prunes_directories(spark, sf_dir, tmp_path):
