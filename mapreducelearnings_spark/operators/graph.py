@@ -658,7 +658,7 @@ def connected_components(
     graph purely in per-round job overhead). The raw edge list is round
     0's RESIDUAL; while a residual exceeds ``driver_edge_cap`` rows
     (default ``io.DRIVER_STATE_CAP``, read at call time; 0 contracts
-    until the round budget runs out):
+    until the residual is empty):
 
     1. a ``mapInPandas`` pass runs union-find per partition and emits
        the local spanning forest (vertex → local min root) — exact

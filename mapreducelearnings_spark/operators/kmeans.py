@@ -84,16 +84,20 @@ def kmeans_1d(
         points.select(F.col(value_col).cast("double").alias("x"))
         .groupBy("x")
         .agg(F.count(F.lit(1)).alias("w"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     rounds = fixed_iterations if fixed_iterations is not None else max_iter
+    # the bounded read loads the cache (a cached partition is stored
+    # whole, however few of its rows the limit takes), so above the cap
+    # the distinct-value aggregate is not run a second time
     local = to_driver(weighted)
     if local is not None:
+        weighted.unpersist()
         rows = _kmeans_local(
             local, k, rounds, fixed_iterations is None, compat_truncate
         )
         return from_rows(points.sparkSession, rows, _SCHEMA)
-    weighted = weighted.persist(StorageLevel.MEMORY_AND_DISK)
-    # one job loads the cache and reads the seed's max and the table size
+    # one job over the cache reads the seed's max and the table size
     mx, n = weighted.agg(F.max("x"), F.count(F.lit(1))).first()
     centroids = {j + 1: c for j, c in enumerate(seed_centroids(mx, k))}
     # Size the round scans to the distinct-value table (≈1 partition per
@@ -143,7 +147,9 @@ def _kmeans_local(local, k, rounds, converge, compat_truncate) -> list[tuple]:
     """:func:`kmeans_1d`'s rounds over a driver-side (x, w) table. A NULL
     x joins the lowest cid (its distance struct ties every centroid) and
     adds its weight to that cluster's count but nothing to its sum, as
-    Spark's ``sum`` skips the NULL product."""
+    Spark's ``sum`` skips the NULL product. A round whose cluster holds
+    only NULLs has no mean for it and raises ``TypeError``, as the
+    distributed round does on its NULL centroid."""
     import numpy as np
 
     xcol = local.column("x")
@@ -165,16 +171,22 @@ def _kmeans_local(local, k, rounds, converge, compat_truncate) -> list[tuple]:
         hit = np.flatnonzero(np.bincount(at, minlength=len(cids)))
         den = np.bincount(at, weights=w, minlength=len(cids))
         num = np.bincount(at, weights=xw, minlength=len(cids))
-        return [(cids[j], den[j], num[j]) for j in hit]
+        known = np.bincount(at[~null], minlength=len(cids))
+        return [(cids[j], den[j], num[j], known[j] > 0) for j in hit]
+
+    def mean(cid, n, s, known):
+        if not known:
+            raise TypeError(f"k-means cluster {cid} holds only NULL values")
+        return float(s / n)
 
     for _ in range(rounds):
-        new = {cid: float(s / n) for cid, n, s in assign(centroids)}
+        new = {cid: mean(cid, *rest) for cid, *rest in assign(centroids)}
         if compat_truncate:
             new = {cid: float(int(c)) for cid, c in new.items()}
         if converge and new == centroids:
             break
         centroids = new
-    return [(cid, centroids[cid], int(n)) for cid, n, _ in assign(centroids)]
+    return [(cid, centroids[cid], int(n)) for cid, n, _, _ in assign(centroids)]
 
 
 def kmeans_sse(points: DataFrame, value_col: str, centroids: list[float]) -> float:

@@ -100,7 +100,10 @@ def from_columns(
 
 
 #: Row bound of :func:`to_driver`: loop state this small finishes on the
-#: driver instead of in per-iteration Spark jobs. Read at call time.
+#: driver instead of in per-iteration Spark jobs. Read at call time. Not
+#: a speed crossover (every driver path measured faster up to 8× this,
+#: PERFORMANCE.md lesson 30): it bounds the rows the driver holds and the
+#: rows an input above it moves through the read.
 DRIVER_STATE_CAP = 100_000
 
 
@@ -115,10 +118,11 @@ def to_driver(df: DataFrame, cap: int | None = None):
     than cap + 1 rows, and the exchange moves at most partitions ×
     (cap + 1). (``collect``/``take`` on the same plan scan 1 → 4 → …
     partitions in escalating jobs; an explicit ``repartition(1)`` under
-    the limit costs two more jobs under AQE.) A cap below 1 turns the
-    driver path off and reads nothing."""
+    the limit costs two more jobs under AQE.) A cap of 0 still reads, so
+    an empty frame comes back as an empty table; a negative cap turns
+    the driver path off and reads nothing."""
     cap = DRIVER_STATE_CAP if cap is None else cap
-    if cap < 1:
+    if cap < 0:
         return None
     table = df.limit(cap + 1).toArrow()
     return table if table.num_rows <= cap else None

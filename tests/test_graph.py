@@ -505,8 +505,9 @@ def action_plans(monkeypatch):
 
 @pytest.fixture
 def distributed(monkeypatch):
-    """Cap 0: the loop operators skip the driver path and read nothing."""
-    monkeypatch.setattr(io, "DRIVER_STATE_CAP", 0)
+    """A negative cap: the loop operators skip the driver path and read
+    nothing."""
+    monkeypatch.setattr(io, "DRIVER_STATE_CAP", -1)
 
 
 def test_pagerank_standard_job_budget(spark, action_plans, distributed):
@@ -664,12 +665,12 @@ GRAPHS = {
 
 def _on_both_paths(monkeypatch, run):
     """``run()`` on the driver path (default cap) and on the distributed
-    path (cap 0); each result's (schema, (rows, jobs of the collect)).
-    The driver result must plan a LocalTableScan."""
+    path (a negative cap); each result's (schema, (rows, jobs of the
+    collect)). The driver result must plan a LocalTableScan."""
     local = run()
     assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
     with monkeypatch.context() as m:
-        m.setattr(io, "DRIVER_STATE_CAP", 0)
+        m.setattr(io, "DRIVER_STATE_CAP", -1)
         dist = run()
     return (
         (local.schema, _jobs_of(local.sparkSession, local.collect)),
@@ -680,12 +681,17 @@ def _on_both_paths(monkeypatch, run):
 def test_to_driver_is_one_bounded_read(spark, monkeypatch):
     """At most cap rows: the whole frame as one Arrow table, read by one
     job even over several partitions. Above the cap: None. A cap of 0
+    still reads, so an empty frame is an empty table; a negative cap
     reads nothing."""
     df = spark.range(0, 40, 1, 4).select(F.col("id").alias("src"))
     table, jobs = _jobs_of(spark, lambda: io.to_driver(df, 40))
     assert jobs == 1 and sorted(table.column("src").to_pylist()) == list(range(40))
     assert io.to_driver(df, 39) is None
-    monkeypatch.setattr(io, "DRIVER_STATE_CAP", 0)
+    assert _jobs_of(spark, lambda: io.to_driver(df, 0)) == (None, 1)
+    empty = df.where(F.col("src") < 0)
+    table, jobs = _jobs_of(spark, lambda: io.to_driver(empty, 0))
+    assert jobs == 1 and table.num_rows == 0
+    monkeypatch.setattr(io, "DRIVER_STATE_CAP", -1)
     assert _jobs_of(spark, lambda: io.to_driver(df)) == (None, 0)
 
 
@@ -744,30 +750,63 @@ def test_loop_operators_keep_non_nullable_vertex_schema(spark, monkeypatch):
         assert sorted(lrows) == pytest.approx(sorted(drows), rel=1e-12)
 
 
+_DIGITS = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9]
+
+
 @pytest.mark.parametrize(
-    "values, k, kwargs",
+    "values, k, kwargs, raises",
     [
-        ([3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9], 4, {"fixed_iterations": 5}),
-        ([3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9], 3, {"max_iter": 10}),
-        ([5, 5, 5, 2], 4, {"fixed_iterations": 3}),  # k above the distinct values
-        ([1, 2, 9, 10], 3, {"fixed_iterations": 2}),  # the middle cluster empties
-        ([1.5, 2.5, 7.25, 8.0, 100.5], 2, {"max_iter": 6, "compat_truncate": True}),
-        ([4, None, 1, 9, None], 2, {"fixed_iterations": 2}),  # NULL values
+        (_DIGITS, 4, {"fixed_iterations": 5}, None),
+        (_DIGITS, 3, {"max_iter": 10}, None),
+        ([5, 5, 5, 2], 4, {"fixed_iterations": 3}, None),  # k above the distinct values
+        ([1, 2, 9, 10], 3, {"fixed_iterations": 2}, None),  # the middle cluster empties
+        (
+            [1.5, 2.5, 7.25, 8.0, 100.5], 2,
+            {"max_iter": 6, "compat_truncate": True}, None,
+        ),
+        ([4, None, 1, 9, None], 2, {"fixed_iterations": 2}, None),  # NULL values
+        # cluster 1 holds only the NULL: it has no mean on either path
+        ([None, 10, 10], 2, {"fixed_iterations": 1}, TypeError),
     ],
 )
 def test_kmeans_1d_driver_path_matches_distributed(
-    spark, monkeypatch, values, k, kwargs
+    spark, monkeypatch, values, k, kwargs, raises
 ):
     points = spark.createDataFrame(
         [(None if v is None else float(v),) for v in values], "v double"
     )
-    (ls, (lrows, ljobs)), (ds, (drows, _)) = _on_both_paths(
-        monkeypatch, lambda: KM.kmeans_1d(points, "v", k=k, **kwargs)
-    )
+    run = lambda: KM.kmeans_1d(points, "v", k=k, **kwargs)  # noqa: E731
+    if raises:
+        for cap in (io.DRIVER_STATE_CAP, -1):
+            monkeypatch.setattr(io, "DRIVER_STATE_CAP", cap)
+            with pytest.raises(raises):
+                run()
+        return
+    (ls, (lrows, ljobs)), (ds, (drows, _)) = _on_both_paths(monkeypatch, run)
     assert ljobs == 0
     assert ls == ds
     assert sorted(map(tuple, lrows)) == sorted(map(tuple, drows))
     assert sum(r["n_points"] for r in lrows) == len(values)
+
+
+def test_kmeans_1d_above_cap_aggregates_the_points_once(spark, monkeypatch):
+    """Above the cap the bounded read loads the cached distinct-value
+    table, so the rounds reuse it: every point is evaluated once, not
+    once for the read and again for the rounds."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count(v):
+        evaluated.add(1)
+        return v
+
+    values = [1.0, 2.0, 2.0, 3.0, 8.0, 9.0, 9.0, 10.0]
+    points = spark.createDataFrame([(v,) for v in values], "v double").select(
+        F.udf(count, "double")("v").alias("v")
+    )
+    monkeypatch.setattr(io, "DRIVER_STATE_CAP", 2)  # 6 distinct values
+    out = KM.kmeans_1d(points, "v", k=2, fixed_iterations=3).collect()
+    assert evaluated.value == len(values)
+    assert sorted((r["centroid"], r["n_points"]) for r in out) == [(2.0, 4), (9.0, 4)]
 
 
 @pytest.fixture(scope="module")
@@ -789,10 +828,11 @@ def follower_parquet(spark, tmp_path_factory):
 
 def test_loop_operators_under_cap_run_only_the_bounded_read(spark, follower_parquet):
     """Under the cap each operator's only jobs are its bounded read's: one
-    for the single-file edge list, three for k-means' distinct-value
+    for the single-file edge list, four for k-means' distinct-value
     table (the follower-count and distinct-value aggregates each run as
-    an AQE stage first). The result is a local table: its collect runs
-    no job."""
+    an AQE stage while the table is cached, and the cached table's
+    partitions reach the limit through a single-partition exchange). The
+    result is a local table: its collect runs no job."""
     edges = spark.read.parquet(follower_parquet)
     source = edges.first()["src"]
     cases = [
@@ -803,7 +843,7 @@ def test_loop_operators_under_cap_run_only_the_bounded_read(spark, follower_parq
             lambda: KM.kmeans_1d(
                 R.follower_count(edges), "cnt", k=4, fixed_iterations=6
             ),
-            3,
+            4,
         ),
     ]
     for run, budget in cases:
