@@ -775,7 +775,9 @@ def test_kmeans_1d_driver_path_matches_distributed(
     points = spark.createDataFrame(
         [(None if v is None else float(v),) for v in values], "v double"
     )
-    run = lambda: KM.kmeans_1d(points, "v", k=k, **kwargs)  # noqa: E731
+    def run():
+        return KM.kmeans_1d(points, "v", k=k, **kwargs)
+
     if raises:
         for cap in (io.DRIVER_STATE_CAP, -1):
             monkeypatch.setattr(io, "DRIVER_STATE_CAP", cap)
