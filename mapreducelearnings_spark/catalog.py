@@ -18,9 +18,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Schemas of the driver-generated fixtures (TESTDATA.md). Parquet is
-# self-describing; these are the declared contract used for validation
-# and for the CSV ingestion path (sources/).
+from .sources.io import read_parquet
+
+# Column types of the fixture tables as TESTDATA.md documents them. They
+# serve as the table-name list (load_table's name check, TABLE_NAMES,
+# register_views' default) and as package exports. Nothing validates
+# against them: a read takes the file's own footer schema
+# (io.read_parquet), and files may differ from this list, e.g. the
+# perfbench tables store timestamp_ntz where it says timestamp.
 TABLE_SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -119,10 +124,12 @@ TABLE_NAMES = tuple(TABLE_SCHEMAS)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Parquet scan → full pushdown support."""
+    """Load one fixture table: a parquet scan (full pushdown support)
+    whose schema is read from the file's footer on the driver, so the
+    load runs no Spark job."""
     if name not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLE_SCHEMAS)}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as long nanos (see session.py); convert to
         # microsecond TimestampType, truncating toward zero like the writer.
@@ -175,9 +182,11 @@ def graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e1.unionByName(e2).where(F.col("src") != F.col("dst")).distinct()
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose the catalog as temp views so users can query in pure SQL
-    (``spark.sql``) — the engine's SQL surface over the same tables the
-    DataFrame API uses."""
-    for name in TABLE_NAMES:
+def register_views(
+    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
+) -> None:
+    """Expose catalog tables (all of them by default) as temp views so
+    users can query in pure SQL (``spark.sql``) — the engine's SQL
+    surface over the same tables the DataFrame API uses."""
+    for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..sources.io import read_parquet
 
 N_PLANES = 8
 DIMS = 64
@@ -1960,7 +1961,7 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
     itself sees exactly the build path's per-row work — broadcast
     argmax assign, one partial-agg encode shuffle, map-side sign
     packing — so append cost is ∝|batch|, never ∝|index|."""
-    stored = spark.read.parquet(path).select("vec_id", "ne")
+    stored = read_parquet(spark, path).select("vec_id", "ne")
     stored_max = stored.agg(F.max("vec_id")).first()[0]
     if stored_max is None:
         raise ValueError(f"empty or missing index at {path}; build first")
@@ -1980,7 +1981,7 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
     cb = codebooks_from_normed(stored)
     # residual quantizer, also from the stored rows alone: residual of
     # each seed row against its STORED cell centroid
-    stored_cells = spark.read.parquet(path).select("vec_id", "ne", "cell")
+    stored_cells = read_parquet(spark, path).select("vec_id", "ne", "cell")
     cent_cells = cent.select(F.col("cid").alias("cell"), "ce")
     rcb = _residual_codebooks(stored_cells, cent_cells)
     # Same persist discipline as the full build, batch-sided only: the
@@ -2005,13 +2006,13 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
             assigned.unpersist()
         newn.unpersist()
     # The memoized corpus count is keyed by semanticHash, and the hash
-    # of spark.read.parquet(path) is UNCHANGED after files are appended
+    # of ``read_parquet(spark, path)`` is UNCHANGED after files are appended
     # at that path (ADVICE r9, verified empirically) — so a session that
     # queried the index before the append would compute its auto rerank
     # budget from the stale pre-append count, silently shrinking recall.
     # Drop the entry so the next ann_index_topk re-counts the grown index.
     try:
-        _CORPUS_SIZE_CACHE.pop(spark.read.parquet(path).semanticHash(), None)
+        _CORPUS_SIZE_CACHE.pop(read_parquet(spark, path).semanticHash(), None)
     except Exception:  # pragma: no cover - plan not hashable (connect etc.)
         _CORPUS_SIZE_CACHE.clear()
 
@@ -2055,7 +2056,7 @@ def ann_index_compact(spark, path: str, target_bytes: int | None = None) -> None
     # The rewrite does not change the count, but semanticHash keying is
     # path-plan based and cheap to refresh defensively alongside.
     try:
-        _CORPUS_SIZE_CACHE.pop(spark.read.parquet(path).semanticHash(), None)
+        _CORPUS_SIZE_CACHE.pop(read_parquet(spark, path).semanticHash(), None)
     except Exception:  # pragma: no cover - plan not hashable (connect etc.)
         _CORPUS_SIZE_CACHE.clear()
 
@@ -2138,7 +2139,7 @@ def _index_exact_topk(
     (the tested default) the two are bit-identical."""
     embn = _emb_normed(embeddings)
     cent = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .where(F.col("vec_id") < n_cells)
         .select(F.col("vec_id").alias("cid"), F.col("ne").alias("ce"))
     )
@@ -2161,7 +2162,7 @@ def _index_exact_topk(
         # column pruning keeps the vectors untouched — and the
         # widened per-query cell set still partition-prunes the
         # scoring scan below
-        stored_cells = spark.read.parquet(path).select("vec_id", "cell")
+        stored_cells = read_parquet(spark, path).select("vec_id", "cell")
         qprobe = _widened_probe(
             ranked, stored_cells, keep,
             n_queries, _widen_target(k, widen_to), n_cells, n_probes,
@@ -2178,7 +2179,7 @@ def _index_exact_topk(
     _rows = qprobe.collect()
     qprobe = spark.createDataFrame(_rows, qprobe.schema)
     probe_cells = sorted({r["cell"] for r in _rows})
-    idx = spark.read.parquet(path).where(F.col("cell").isin(probe_cells))
+    idx = read_parquet(spark, path).where(F.col("cell").isin(probe_cells))
     candidates = idx.select("vec_id", "cell", "ne")
     if keep is not None:
         # metadata filter COMPOSED with partition pruning: the semi
@@ -2293,7 +2294,7 @@ def ann_index_topk(
         rerank_rows = None
         if recall_sla > SLA_COMPRESSED_FLOOR:
             rerank_rows = sla_rerank_rows(
-                corpus_size(spark.read.parquet(path)), k
+                corpus_size(read_parquet(spark, path)), k
             )
         return ann_index_residual_topk(
             spark,
@@ -2306,7 +2307,7 @@ def ann_index_topk(
             rerank_rows=rerank_rows,
         )
     if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(spark.read.parquet(path)))
+        rerank_mult = hamming_auto_mult(corpus_size(read_parquet(spark, path)))
     embn = _emb_normed(embeddings)
     cent = embn.where(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
@@ -2329,7 +2330,7 @@ def ann_index_topk(
     qprobe = spark.createDataFrame(_rows, qprobe.schema)
     probe_cells = sorted({r["cell"] for r in _rows})
     cb = pq_codebooks(embeddings)
-    idx = spark.read.parquet(path).where(F.col("cell").isin(probe_cells))
+    idx = read_parquet(spark, path).where(F.col("cell").isin(probe_cells))
     part = (
         idx.select(
             "vec_id",
@@ -2411,11 +2412,11 @@ def ann_index_residual_topk(
     per-query row count — the SLA-fraction hook (see
     :func:`sla_rerank_rows`)."""
     if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(spark.read.parquet(path)))
+        rerank_mult = hamming_auto_mult(corpus_size(read_parquet(spark, path)))
     if rerank_rows is None:
         rerank_rows = k * rerank_mult
     dsub = DIMS // pq_m
-    stored = spark.read.parquet(path)
+    stored = read_parquet(spark, path)
     cent = stored.where(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
     )

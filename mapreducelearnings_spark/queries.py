@@ -2765,7 +2765,9 @@ _REVENUE_BY_NATION_SQL = """
 def q_sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .catalog import register_views
 
-    register_views(spark, sf_dir)
+    register_views(
+        spark, sf_dir, ("customer", "orders", "lineitem", "supplier", "nation")
+    )
     return spark.sql(_REVENUE_BY_NATION_SQL)
 
 

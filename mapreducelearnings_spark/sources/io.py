@@ -21,6 +21,9 @@ engine's durable answer to the reference's HashPartitioner co-partitioning
 
 from __future__ import annotations
 
+import functools
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,7 +53,112 @@ def read_json(
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The package's one parquet reader: ``spark.read.parquet(path)``
+    with the schema resolved on the driver first.
+
+    Without a schema Spark infers one by launching a one-task job that
+    reads a single footer (``ParquetUtils.inferSchema``), 0.07–0.11 s
+    warm on every load (PERFORMANCE.md lesson 31). Here the driver
+    reads the same footer itself — the first data file by path, as
+    Spark picks it — and converts it with Spark's own
+    ``readSchemaFromFooter``, so the schema is the one Spark would
+    infer under the session's confs at call time, and the read runs no
+    job. Layouts where Spark's inference does more than read one data
+    footer take the plain read unchanged: see :func:`_footer_schema`."""
+    schema = _footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    jdf = (
+        spark._jsparkSession.read()
+        .schema(schema)
+        .parquet(spark._jvm.PythonUtils.toSeq([path]))
+    )
+    return DataFrame(jdf, spark)
+
+
+#: Hadoop glob metacharacters (``SparkHadoopUtil.isGlobPath``).
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+@functools.lru_cache(maxsize=4)
+def _footer_jvm(jvm):
+    """The JVM classes the footer read calls, looked up once per gateway:
+    every package step of ``jvm.org.apache....`` is a py4j round trip,
+    and the lookups cost more than the listing and footer read
+    together (12 of 18 ms per read, 4-vCPU host)."""
+    parquet = jvm.org.apache.parquet
+    fmt = jvm.org.apache.spark.sql.execution.datasources.parquet
+    return SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        read_footer=parquet.hadoop.ParquetFileReader.readFooter,
+        SKIP_ROW_GROUPS=(
+            parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+        ),
+        Footer=parquet.hadoop.Footer,
+        read_schema=fmt.ParquetFileFormat.readSchemaFromFooter,
+        Converter=fmt.ParquetToSparkSchemaConverter,
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The JVM ``StructType`` Spark would infer for ``path``, read from
+    one footer on the driver; ``None`` where Spark's inference does
+    more than that, and the caller reads without a schema:
+
+    - a glob, a ``spark.sql.parquet.mergeSchema=true`` (or
+      ``ignoreVariantAnnotation=true``) session, any
+      visible sub-directory (hive partition discovery), a ``_metadata``
+      or ``_common_metadata`` summary file (inference prefers it), or a
+      ``_spark_metadata`` stream-sink log (Spark then reads only the
+      committed files);
+    - no data file, or any JVM error on the way (missing path, corrupt
+      footer): Spark then raises its own error.
+
+    Listing mirrors ``InMemoryFileIndex``: names starting with ``.``,
+    or with ``_`` and holding no ``=``, and ``._COPYING_`` files are
+    skipped; of the rest Spark sorts by path and reads the first."""
+    from py4j.protocol import Py4JError
+    from pyspark.errors.exceptions.captured import CapturedException
+
+    if _GLOB_CHARS & set(path):
+        return None
+    try:
+        j = _footer_jvm(spark._jvm)
+        state = spark._jsparkSession.sessionState()
+        sql_conf = state.conf()
+        # inference passes the constructor default for the variant flag,
+        # the session-conf converter below the session's value
+        if (
+            sql_conf.isParquetSchemaMergingEnabled()
+            or sql_conf.parquetIgnoreVariantAnnotation()
+        ):
+            return None
+        conf = state.newHadoopConf()
+        jpath = j.Path(path)
+        first_name, first = None, None
+        for st in jpath.getFileSystem(conf).listStatus(jpath):
+            p = st.getPath()
+            name = p.getName()
+            if name == "_spark_metadata" or name.startswith(
+                ("_metadata", "_common_metadata")
+            ):
+                return None
+            if (
+                name.startswith(".")
+                or (name.startswith("_") and "=" not in name)
+                or name.endswith("._COPYING_")
+            ):
+                continue
+            if st.isDirectory():
+                return None
+            if first is None or name < first_name:
+                first_name, first = name, p
+        if first is None:
+            return None
+        footer = j.read_footer(conf, first, j.SKIP_ROW_GROUPS)
+        return j.read_schema(j.Footer(first, footer), j.Converter(sql_conf))
+    except (Py4JError, CapturedException):
+        return None
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -288,7 +396,7 @@ def compact_parquet(
     new_p = jvm.org.apache.hadoop.fs.Path(new_path)
     old_p = jvm.org.apache.hadoop.fs.Path(old_path)
     fs.delete(new_p, True)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     records_per_file = None
     if target_bytes is not None:
         # measured bytes/row from the CURRENT layout: total file bytes

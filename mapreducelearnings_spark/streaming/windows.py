@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from ..functions.sketch import KMV_K
 from ..plans.iterate import loop_conf
+from ..sources.io import read_parquet
 
 
 def _drain_partitions(default: int = 8) -> int:
@@ -263,7 +264,7 @@ def read_user_totals(spark: SparkSession, out_path: str) -> DataFrame:
     (round-of-rounded-partial-sums drifts from round(total) across many
     microbatches), so presentation rounding happens exactly once,
     here."""
-    return spark.read.parquet(out_path).select(
+    return read_parquet(spark, out_path).select(
         "user_id",
         "n_events",
         F.round("sum_value", 4).alias("sum_value"),
@@ -319,7 +320,7 @@ def run_user_totals_upsert_stream(
             # Existence is checked explicitly; any OTHER failure below
             # (corrupt footer, transient FS error) propagates and aborts
             # the batch rather than silently truncating the table.
-            existing = spark.read.parquet(out_path)
+            existing = read_parquet(spark, out_path)
             merged_max = existing.agg(
                 F.max("_max_batch_id").alias("m")
             ).first()["m"]
@@ -523,7 +524,7 @@ def run_streaming_lsh_to_memory(
 
     from ..plans.iterate import loop_conf
 
-    src_df = spark.read.parquet(f"{src_dir}/{glob}")
+    src_df = read_parquet(spark, f"{src_dir}/{glob}")
     if shuffle_partitions is None:
         n_docs = src_df.count()
         shuffle_partitions = max(8, min(32, n_docs // 2000))
@@ -1074,7 +1075,7 @@ def run_incident_counts_stream_to_memory(
     foreachBatch upsert. Same shape at 100 TB: the band explode keeps
     the static side ≤2 rows per incident, and no micro-batch ever
     nested-loops against the incident table."""
-    ev_batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev_batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     inc = (
         ev_batch.where(F.col("event_type") == "error")
         .select(

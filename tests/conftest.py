@@ -88,6 +88,21 @@ def assert_driver_hashable(rows, colnames):
         ) from None
 
 
+def jobs_of(spark, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the number
+    of Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_matches_oracle(sdf, duck, sql):
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]

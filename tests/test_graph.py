@@ -13,6 +13,8 @@ from mapreducelearnings_spark.operators import relational as R
 from mapreducelearnings_spark.catalog import graph_edges, load_table
 from mapreducelearnings_spark.sources import io
 
+from .conftest import jobs_of
+
 
 # --- PageRank ---------------------------------------------------------------
 
@@ -471,21 +473,6 @@ def test_cc_fused_residual_matches_unfused(spark):
 # --- Spark job budgets of the loop operators ---------------------------------
 
 
-def _jobs_of(spark, fn):
-    """Run ``fn`` under a fresh job group; return (its result, the number
-    of Spark jobs it started)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture
 def action_plans(monkeypatch):
     """Executed plan of every collect/count/localCheckpoint a test runs."""
@@ -520,7 +507,7 @@ def test_pagerank_standard_job_budget(spark, action_plans, distributed):
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3)], "src: long, dst: long"
     )
-    _, jobs = _jobs_of(
+    _, jobs = jobs_of(
         spark, lambda: G.pagerank_standard(spark, edges, iterations=10)
     )
     assert jobs == 12
@@ -533,7 +520,7 @@ def test_sssp_job_budget(spark, micro_graph, action_plans, distributed):
     """Distributed path: the micro-graph converges at iteration 3: one
     diff-count at iteration 1, then the checkpoint and the diff-count at
     iteration 3. No loop join is broadcast."""
-    _, jobs = _jobs_of(spark, lambda: G.sssp(spark, micro_graph, 1))
+    _, jobs = jobs_of(spark, lambda: G.sssp(spark, micro_graph, 1))
     assert jobs == 3
     assert all("BroadcastExchange" not in p for p in action_plans)
     assert any("ShuffledHashJoin" in p for p in action_plans)
@@ -546,13 +533,13 @@ def test_connected_components_under_cap_runs_zero_rounds(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8), (9, 9)], "src: long, dst: long"
     )
-    out, jobs = _jobs_of(spark, lambda: G.connected_components(spark, edges))
+    out, jobs = jobs_of(spark, lambda: G.connected_components(spark, edges))
     assert jobs == 1
     assert G.CC_LAST_STATS["rounds"] == 0
     assert G.CC_LAST_STATS["star_rounds"] == 0
     assert G.CC_LAST_STATS["residual_edges"] == 4
     assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
-    got, jobs = _jobs_of(spark, out.collect)
+    got, jobs = jobs_of(spark, out.collect)
     assert jobs == 0
     assert dict(map(tuple, got)) == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 9}
 
@@ -673,7 +660,7 @@ def _on_both_paths(monkeypatch, run):
         m.setattr(io, "DRIVER_STATE_CAP", -1)
         dist = run()
     return (
-        (local.schema, _jobs_of(local.sparkSession, local.collect)),
+        (local.schema, jobs_of(local.sparkSession, local.collect)),
         (dist.schema, (dist.collect(), 0)),
     )
 
@@ -684,15 +671,15 @@ def test_to_driver_is_one_bounded_read(spark, monkeypatch):
     still reads, so an empty frame is an empty table; a negative cap
     reads nothing."""
     df = spark.range(0, 40, 1, 4).select(F.col("id").alias("src"))
-    table, jobs = _jobs_of(spark, lambda: io.to_driver(df, 40))
+    table, jobs = jobs_of(spark, lambda: io.to_driver(df, 40))
     assert jobs == 1 and sorted(table.column("src").to_pylist()) == list(range(40))
     assert io.to_driver(df, 39) is None
-    assert _jobs_of(spark, lambda: io.to_driver(df, 0)) == (None, 1)
+    assert jobs_of(spark, lambda: io.to_driver(df, 0)) == (None, 1)
     empty = df.where(F.col("src") < 0)
-    table, jobs = _jobs_of(spark, lambda: io.to_driver(empty, 0))
+    table, jobs = jobs_of(spark, lambda: io.to_driver(empty, 0))
     assert jobs == 1 and table.num_rows == 0
     monkeypatch.setattr(io, "DRIVER_STATE_CAP", -1)
-    assert _jobs_of(spark, lambda: io.to_driver(df)) == (None, 0)
+    assert jobs_of(spark, lambda: io.to_driver(df)) == (None, 0)
 
 
 def _edges(spark, name):
@@ -849,10 +836,10 @@ def test_loop_operators_under_cap_run_only_the_bounded_read(spark, follower_parq
         ),
     ]
     for run, budget in cases:
-        out, jobs = _jobs_of(spark, run)
+        out, jobs = jobs_of(spark, run)
         assert jobs == budget
         assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
-        rows, jobs = _jobs_of(spark, out.collect)
+        rows, jobs = jobs_of(spark, out.collect)
         assert jobs == 0 and rows
 
 
