@@ -158,24 +158,10 @@ HEADLINE = [
     # with zero code change — VERDICT r03 "What's wrong #3"). Running it
     # after every narrow query removes that contamination channel.
     "similarity_topk",
-    # ann_lsh_topk_single_baseline (r8), ann_lsh_topk_multi (r10),
-    # ann_hamming_topk + ann_pq_adc_topk (r11), and
-    # ann_lsh_topk_multiprobe + ann_pq_trained_topk (r12) are retired
-    # from the registry: superseded ladder rungs strictly below the
-    # IVF/residual/SLA entries. Their recall@5 is still reported in the
-    # "recall" block below via direct simsearch calls, they just no
-    # longer occupy timed headline slots or driver correctness slots.
     "ann_ivf_topk",
     # r12: filtered vector search (metadata predicate during the probe)
     "ann_ivf_filtered_topk",
     "ann_ivf_trained_topk",
-    # r14: ann_ivf_hamming_topk retired (its probe→compressed-pre-rank
-    # →rerank composition keeps a slot via ann_ivf_pq64_residual_topk;
-    # recall still measured below) — its headline slot goes to the
-    # directional-overlap sketch
-    # r13: ann_ivf_pq_topk retired (superseded by the residual rung;
-    # recall still measured below) — its headline slot goes to the
-    # corpus-overlap sketch
     "distinct_kmv_jaccard",
     "distinct_kmv_containment",
     "similarity_topk_q8",
@@ -191,9 +177,7 @@ HEADLINE = [
     "dedup_embedding_nearest",
     "semdedup_keep",
     # round-10: FAISS-IVFPQ residual encoding and the on-disk index
-    # build→append→query ingest chain (the 64-bit absolute-code rung
-    # ann_pq64_adc_topk was retired r13 — superseded by residual+SLA;
-    # its recall stays measured in the recall block below)
+    # build→append→query ingest chain
     "ann_ivf_pq64_residual_topk",
     "ann_index_append_topk",
     # round-13: the maintenance pass — build→append→COMPACT→query;
@@ -302,9 +286,11 @@ def _calibration_probe_wide(workers: int = _WIDE_WORKERS) -> float:
 
 
 def _ann_recall_at_k(spark, sf_dir: str) -> dict[str, float]:
-    """recall@5 of both ANN paths against the brute-force ground truth —
-    reported next to the timings so speed is never quoted without its
-    accuracy cost (3 collects of ≤40 rows each)."""
+    """recall@5 of the ANN top-k paths against the brute-force ground
+    truth — reported next to the timings so speed is
+    never quoted without its accuracy cost (one collect of ≤40 rows
+    per path). Each path runs with its library-default budget, the one
+    its timed registry entry uses."""
     from mapreducelearnings_spark.catalog import load_table
     from mapreducelearnings_spark.pipeline import simsearch as SS
     from mapreducelearnings_spark.queries import REGISTRY
@@ -323,70 +309,18 @@ def _ann_recall_at_k(spark, sf_dir: str) -> dict[str, float]:
         return round(hits / n_truth, 4)
 
     return {
-        "ann_lsh_topk_single_baseline": recall(
-            SS.lsh_ann_topk(emb, n_queries=8, k=5).collect()
-        ),
-        "ann_lsh_topk_multi": recall(
-            SS.lsh_ann_topk_multi(emb, n_queries=8, k=5).collect()
-        ),
-        "ann_lsh_topk_multiprobe": recall(
-            SS.lsh_ann_topk_multiprobe(emb, n_queries=8, k=5).collect()
-        ),
         "ann_ivf_topk": recall(SS.ivf_topk(emb, n_queries=8, k=5).collect()),
         "ann_ivf_trained_topk": recall(
             SS.ivf_topk_trained(emb, n_queries=8, k=5).collect()
         ),
-        "ann_hamming_topk": recall(
-            SS.hamming_ann_topk(emb, n_queries=8, k=5).collect()
-        ),
-        # The four PQ/composition rows below use the library-default
-        # AUTO-scaled rerank budget — the SAME default the timed
-        # registry queries use since the r9 oracle migration, so the
-        # recall printed next to a timing describes that timing (and
-        # the budget that holds recall at 10x where a fixed one
-        # collapses, PERFORMANCE.md "10x recall"). The *_fixed rows
-        # keep the historical pinned-constant budget for comparison.
-        "ann_pq_adc_topk": recall(
-            SS.pq_adc_topk(emb, n_queries=8, k=5).collect()
-        ),
-        # round-10: 8-bit codebooks (64-bit codes) — the code-resolution
-        # lever past the 32-bit ceiling measured at 30x
-        "ann_pq64_adc_topk": recall(
-            SS.pq_adc_topk(emb, n_queries=8, k=5, pq_k=SS.PQ_K64).collect()
-        ),
         "ann_ivf_pq64_residual_topk": recall(
             SS.ivf_pq_residual_topk(emb, n_queries=8, k=5).collect()
         ),
-        # round-11: the SLA-configured on-disk read path (residual
-        # pre-rank, max(auto, SLA_RERANK_FRACTION·n) budget) — recall next to
-        # its headline timing so the SLA claim is measured, not quoted
+        # the SLA-configured on-disk read path (residual pre-rank,
+        # max(auto, SLA_RERANK_FRACTION·n) budget) — recall next to its
+        # headline timing so the SLA claim is measured, not quoted
         "ann_index_sla_topk": recall(
             REGISTRY["ann_index_sla_topk"].spark(spark, sf_dir).collect()
-        ),
-        "ann_ivf_hamming_topk": recall(
-            SS.ivf_hamming_topk(emb, n_queries=8, k=5).collect()
-        ),
-        "ann_ivf_pq_topk": recall(
-            SS.ivf_pq_topk(emb, n_queries=8, k=5).collect()
-        ),
-        "ann_pq_trained_topk": recall(
-            SS.pq_adc_topk(
-                emb,
-                n_queries=8,
-                k=5,
-                trained_rounds=SS.PQ_LLOYD_ROUNDS,
-                train_sample_mod=4,
-            ).collect()
-        ),
-        "ann_pq_adc_topk_fixed": recall(
-            SS.pq_adc_topk(
-                emb, n_queries=8, k=5, rerank_mult=SS.PQ_RERANK_MULT
-            ).collect()
-        ),
-        "ann_ivf_pq_topk_fixed": recall(
-            SS.ivf_pq_topk(
-                emb, n_queries=8, k=5, rerank_mult=SS.PQ_RERANK_MULT
-            ).collect()
         ),
     }
 

@@ -1,17 +1,33 @@
 """Similarity search over embedding columns (SURVEY.md §2.11 — NEW
-layer). Two strategies:
+layer). Every path returns (query_id, neighbor_id, cos, rank) rows with
+the same deterministic tiebreaks, so each approximate result is
+oracle-checked exactly against DuckDB. The paths:
 
-- **brute-force cosine top-k** — the exactness baseline: broadcast the
-  (small) query set against the candidate corpus, cosine as a codegen
-  fold, per-query top-k via window row_number. At 100 TB the candidate
-  scan is embarrassingly parallel and the only shuffle is the final
-  per-query k-row reduction.
-- **LSH-bucketed ANN** — the scale path: random-hyperplane signatures
-  (planes derived deterministically from md5, embedded as literals in
-  BOTH the Spark plan and the SQL oracle), candidates restricted to the
-  query's bucket. Trades recall for a bucket-local search; identical
-  bucketing in both engines makes even the approximate result
-  oracle-checkable.
+- **exact cosine** (:func:`cosine_topk`) — the ground truth: broadcast
+  the (small) query set against the corpus, cosine as a codegen fold,
+  per-query top-k via window row_number.
+- **int8 scan** (:func:`cosine_topk_q8`) — the same scan over
+  quantized unit vectors with exact integer dots.
+- **IVF** (:func:`ivf_topk`) — sampled centroid cells; a query exactly
+  scores the rows of its ``n_probes`` nearest cells. ``keep=`` adds a
+  metadata filter with an adaptively widened probe.
+- **trained IVF** (:func:`ivf_topk_trained`) — the same read over
+  Lloyd-refined centroids.
+- **IVF × residual PQ** (:func:`ivf_pq_residual_topk`) — cell pruning,
+  an ADC pre-rank over PQ codes of each vector's residual to its cell
+  centroid, then an exact rerank of the top R.
+- **on-disk index** (:func:`ann_index_write` / :func:`ann_index_append`
+  / :func:`ann_index_compact`, read by :func:`ann_index_topk`) — the
+  IVF × PQ layout stored partitioned by cell, so the probe becomes
+  partition pruning; ``recall_sla=`` picks the residual pre-rank budget
+  or the exact read.
+- **LSH near-dup** (:func:`embedding_nearest_lsh`,
+  :func:`embedding_near_dup_pairs_lsh`) — multi-table random-hyperplane
+  buckets (md5-derived planes embedded as literals in both the Spark
+  plan and the SQL oracle); candidates are (table, bucket) collisions.
+
+The quadratic :func:`embedding_near_dup_pairs` is the exact ground
+truth of the LSH near-dup paths in tests.
 """
 
 from __future__ import annotations
@@ -22,41 +38,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from ..sources.io import read_parquet
+from ..sources.io import read_parquet_as
 
-N_PLANES = 8
 DIMS = 64
-# Multi-table config: MORE tables of FEWER planes than the single-table
-# path. This corpus's neighbors sit at wide angles (max cos ≈ 0.51 →
-# collision prob/plane ≈ 0.63), so per-table selectivity must drop for
-# any table to catch them: measured recall@5 0.68–0.75 at 8×4 vs
-# 0.03–0.05 for the single 8-plane table, on ~40% of the corpus as
-# candidates. At 100 TB raise planes_per_table with log₂(n) to keep
+# LSH near-dup tables: many tables of few planes. This corpus's
+# neighbors sit at wide angles (max cos ≈ 0.51 → collision prob/plane
+# ≈ 0.63), so per-table selectivity must stay low for any table to
+# catch them. At 100 TB raise planes_per_table with log₂(n) to keep
 # bucket population bounded; tighter thresholds need fewer tables.
 N_TABLES = 8
 MULTI_PLANES = 4
 
 
-def hyperplanes(n_planes: int = N_PLANES, dims: int = DIMS) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes in [−1, 1): component
-    (p, d) = md5-60bit("p:d") / 2⁶⁰ · 2 − 1. Pure-Python md5 so the same
-    literal values can be embedded in the SQL oracle."""
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for d in range(dims):
-            h = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:15], 16)
-            row.append(h / float(1 << 60) * 2.0 - 1.0)
-        planes.append(row)
-    return planes
-
-
 def hyperplanes_table(
-    table: int, n_planes: int = N_PLANES, dims: int = DIMS
+    table: int, n_planes: int = MULTI_PLANES, dims: int = DIMS
 ) -> list[list[float]]:
-    """Hyperplanes for LSH table ``table`` — independent of each other
-    and of the legacy single-table :func:`hyperplanes` family (seed
-    "t{table}:{p}:{d}")."""
+    """Deterministic pseudo-random hyperplanes in [−1, 1) for LSH table
+    ``table``: component (p, d) = md5-60bit("t{table}:{p}:{d}") / 2⁶⁰ ·
+    2 − 1. Pure-Python md5 so the same literal values can be embedded in
+    the SQL oracle."""
     planes = []
     for p in range(n_planes):
         row = []
@@ -268,49 +268,6 @@ def _bucket_expr_planes(emb_col, planes):
     for b in bits[1:]:
         out = out + b
     return out.cast("long")
-
-
-def _bucket_expr(emb_col):
-    """LSH bucket id over the legacy single-table plane family."""
-    return _bucket_expr_planes(emb_col, hyperplanes())
-
-
-def lsh_ann_topk(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's hyperplane
-    bucket. Equi-join on bucket replaces the full cross product — the
-    100 TB path (bucket count scales 2^planes; skewed buckets split by
-    AQE)."""
-    emb = _pin(
-        _emb_normed(embeddings).withColumn("bucket", _bucket_expr(F.col("ne")))
-    )
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qemb"), "bucket"
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"), "bucket"
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qemb"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
 
 
 def cosine_topk_q8(
@@ -853,13 +810,13 @@ def ivf_topk_trained(
     )
 
 
+# The shared exact-rerank budget rule of every compressed pre-rank:
+# R = k·mult, mult = base at ≤ N0 vectors, +base per corpus doubling
+# past N0, so the reranked FRACTION shrinks while recall holds. Tuned
+# on the since-deleted sign-Hamming pre-rank (measured curve:
+# PERFORMANCE.md "Hamming ANN rerank budget auto-scaling"); the names
+# keep that origin.
 HAMMING_RERANK_MULT = 16
-# Corpus size at which the base rerank budget was tuned (recall@5 0.8
-# there); hamming_auto_mult doubles down log2-style as the corpus
-# outgrows it, keeping the reranked FRACTION shrinking while recall
-# holds. Measured curve at the 2 000-vector sf0.1 corpus (R = 5·mult):
-# mult 16→0.575, 24→0.650, 32→0.675, 48→0.775 (the auto value),
-# 64→0.875, 96→0.975 — published in PERFORMANCE.md.
 HAMMING_RERANK_N0 = 500
 
 
@@ -901,113 +858,6 @@ def corpus_size(embeddings: DataFrame) -> int:
     return n
 
 
-def _sign_sig_cols(ne_col, dims: int = DIMS):
-    """64-bit sign signature packed as TWO 32-bit words (lo = dims 0–31,
-    hi = dims 32–63): bit i = [ne_i ≥ 0]. Two words instead of one
-    64-bit value keeps every partial sum positive — bit 63 of a BIGINT
-    is the sign bit, and building it by addition would overflow."""
-    def word(lo_bit: int, hi_bit: int):
-        acc = None
-        for i in range(lo_bit, hi_bit):
-            t = F.when(
-                ne_col.getItem(i) >= 0, F.lit(1 << (i - lo_bit))
-            ).otherwise(F.lit(0))
-            acc = t if acc is None else acc + t
-        return acc.cast("long")
-
-    return word(0, dims // 2), word(dims // 2, dims)
-
-
-def hamming_ann_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    rerank_mult: int | None = None,
-) -> DataFrame:
-    """Binary-signature ANN: 64-bit sign signatures (16 bytes/vector —
-    64× smaller than the raw float64 vectors, 16× smaller than float32
-    storage) are scanned with XOR+popcount Hamming distance to pre-rank
-    candidates, then only the per-query top ``k·rerank_mult`` are
-    exactly re-scored with the full-precision cosine. Sign-bit Hamming
-    approximates angular distance (each agreeing bit is one hyperplane
-    — the coordinate plane — both vectors fall on the same side of), so
-    the pre-rank is the 1-bit-per-dim limit of quantization:
-    cheaper-but-coarser than the int8 scan, with the same
-    compose-with-IVF/LSH pruning story.
-
-    Scale shape: the signature scan is linear, integer-only and reads
-    16 bytes/row; the Hamming pre-rank carries IDS ONLY through the
-    top-R window; exact scoring touches R = k·rerank_mult rows per
-    query. Deterministic both engines (ties broken by neighbor_id at
-    both ranks), hence fully oracle-checked despite being approximate.
-
-    An ABSOLUTE rerank budget decays as the corpus outgrows it (R=80:
-    recall 0.8 at a 500-vector corpus, 0.575 at 2 000 — 1 bit/dim blurs
-    wide-angle neighbors). ``rerank_mult=None`` therefore auto-scales
-    via :func:`hamming_auto_mult` — +16 per corpus doubling past 500
-    (one count() control read; the oracle computes the identical rule in
-    SQL) — which restores recall 0.775 at 2 000 vectors (full measured
-    curve at the constant above / PERFORMANCE.md) while the reranked
-    FRACTION still shrinks log-linearly. Pass an explicit int for a
-    fixed budget, or compose with IVF cell pruning (ivf_hamming_topk)
-    when even the signature scan must prune. Reported in bench next to
-    every other ANN path."""
-    if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(embeddings))
-    emb = _pin(_emb_normed(embeddings))
-    lo, hi = _sign_sig_cols(F.col("ne"))
-    sig = emb.select("vec_id", lo.alias("slo"), hi.alias("shi"))
-    qs = sig.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("slo").alias("qlo"),
-        F.col("shi").alias("qhi"),
-    )
-    ham = (
-        sig.crossJoin(F.broadcast(qs))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                F.bit_count(F.col("slo").bitwiseXOR(F.col("qlo")))
-                + F.bit_count(F.col("shi").bitwiseXOR(F.col("qhi")))
-            ).cast("long").alias("ham"),
-        )
-    )
-    wh = Window.partitionBy("query_id").orderBy(
-        F.asc("ham"), F.asc("neighbor_id")
-    )
-    cand = (
-        ham.withColumn("hr", F.row_number().over(wh))
-        .where(F.col("hr") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qemb")
-    )
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qemb"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
 PQ_M = 8          # subspaces
 PQ_DSUB = DIMS // PQ_M
 PQ_K = 16         # codes per subspace (4 bits) → 8×4 = 32-bit PQ code
@@ -1017,7 +867,6 @@ PQ_K = 16         # codes per subspace (4 bits) → 8×4 = 32-bit PQ code
 # needs R ≈ cluster size; more bits re-separate the cluster interior
 # while the rerank budget stays log-n).
 PQ_K64 = 256
-PQ_RERANK_MULT = 16
 
 
 def pq_codebooks(
@@ -1025,8 +874,7 @@ def pq_codebooks(
 ) -> DataFrame:
     """(m, code, ce): per-subspace codebooks, sampled deterministically
     (subvectors of the first ``pq_k`` vec_ids — the same
-    reproducible-init convention as the IVF quantizer; Lloyd refinement
-    per subspace plugs in via lloyd_train on the sliced columns).
+    reproducible-init convention as the IVF quantizer).
     PQ_M·pq_k tiny rows (128 at the 4-bit default, 2 048 at the 8-bit
     :data:`PQ_K64`) collected through the k-row control channel and
     broadcast."""
@@ -1106,271 +954,6 @@ def pq_encode(
             ).alias("code")
         )
         .select("vec_id", "m", F.col("code").cast("long").alias("code"))
-    )
-
-
-PQ_LLOYD_ROUNDS = 1
-
-
-def pq_train(
-    embeddings: DataFrame,
-    rounds: int = PQ_LLOYD_ROUNDS,
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """Lloyd-trained PQ codebooks: init = the deterministic sample
-    (:func:`pq_codebooks`), then ``rounds`` iterations of per-subspace
-    assign → component-wise mean. Means are ROUNDed to 9 dp — the one
-    order-dependent float reduction — so both engines derive
-    bit-identical codebooks (the lloyd_train convention). Codes whose
-    cell empties drop out identically on both engines. Everything is
-    relational: assignment is the same partial-agg argmin as encoding,
-    the mean is one 128-row groupBy per round — training cost is
-    rounds × one corpus scan; at 100 TB train on a bounded sample and
-    encode the full corpus once at ingest. ``sample_mod`` makes that
-    production shape the registered one (same convention as
-    :func:`lloyd_train`): the Lloyd rounds assign/mean only the
-    deterministic ``vec_id % sample_mod == 0`` slice, cutting training
-    cost by the sample factor while the final encode still covers the
-    full corpus."""
-    emb = _emb_normed(embeddings)
-    train = (
-        emb.where(F.col("vec_id") % sample_mod == 0)
-        if sample_mod is not None
-        else emb
-    )
-    subs = _pq_subvectors(train)
-    cb = pq_codebooks(embeddings)
-    for _ in range(rounds):
-        enc = pq_encode(train, cb)
-        cb = (
-            enc.join(subs, ["vec_id", "m"])
-            .groupBy("m", "code")
-            .agg(
-                F.array(
-                    *[
-                        F.round(F.avg(F.col("sub").getItem(j)), 9)
-                        for j in range(PQ_DSUB)
-                    ]
-                ).alias("ce")
-            )
-            .select("m", "code", "ce")
-        )
-    return cb
-
-
-def pq_adc_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    rerank_mult: int | None = None,
-    trained_rounds: int = 0,
-    train_sample_mod: int | None = None,
-    pq_k: int = PQ_K,
-    pq_m: int = PQ_M,
-) -> DataFrame:
-    """Product-quantization ANN with Asymmetric Distance Computation:
-    the corpus is stored as 32-bit PQ codes (8 subspaces × 4 bits —
-    16× smaller than float32, 64× smaller than the float64 vectors),
-    queries stay full-precision, and the approximate score is
-    Σ_m ⟨q_m, codebook_m[code_m(v)]⟩ — the ADC estimator of the cosine.
-    The per-query top k·rerank_mult by ADC score are re-scored exactly.
-
-    Completes the compressed-scan family: int8 (8 bit/dim, near-exact),
-    PQ-ADC (0.5 bit/dim, codebook-adaptive), sign-Hamming (1 bit/dim,
-    data-blind). At the same R=80 rerank budget on the sf0.1 corpus,
-    PQ-ADC recalls 0.825 vs sign-Hamming's 0.575 — the codebook adapts
-    to the corpus where sign bits cannot. Scale shape: codebooks are 128 broadcast rows; encoding
-    runs once at ingest (one partial-agg shuffle); the ADC scan is an
-    equi-join on (m, code) + one (query, vec) partial-agg sum — in
-    production the 8 LUT lookups fuse into one scan over the code
-    column, which this relational form's broadcast join approximates.
-    ADC sums are rounded 6 dp before ranking (the engine's standard
-    accumulation-noise kill), so the approximate result is fully
-    oracle-checked. ``trained_rounds`` > 0 swaps in the Lloyd-trained
-    codebooks (:func:`pq_train`) with identical plumbing downstream.
-
-    ``rerank_mult=None`` auto-scales the rerank budget with corpus size
-    via :func:`hamming_auto_mult` (the shared compressed-scan budget
-    rule): the round-8 10× recall sweep measured the FIXED R=80 budget
-    collapsing 0.825 → 0.40 recall@5 at a 20 000-vector corpus while
-    the auto-scaled Hamming path held — an absolute budget decays for
-    ADC exactly as it did for sign bits. Since the r9 oracle migration
-    the registry entries run this auto path, with the oracle computing
-    the identical rule as a scalar subquery.
-
-    ``pq_k`` sets the codes per subspace — the CODE-RESOLUTION lever
-    (PERFORMANCE.md "30× recall"): the 4-bit default (:data:`PQ_K`,
-    32-bit codes) hits a measured recall ceiling once a single cluster
-    outgrows the rerank budget; :data:`PQ_K64` (8 bits, 64-bit codes)
-    re-separates cluster interiors at 2× the stored bits while the
-    codebook stays a 2 048-row broadcast and every downstream plan
-    shape is unchanged."""
-    if trained_rounds and (pq_k != PQ_K or pq_m != PQ_M):
-        raise ValueError(
-            "trained_rounds uses the PQ_K/PQ_M default geometry; "
-            "pq_k/pq_m apply to the sampled-codebook path only"
-        )
-    if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(embeddings))
-    emb = _pin(_emb_normed(embeddings))
-    cb = (
-        pq_train(embeddings, trained_rounds, sample_mod=train_sample_mod)
-        if trained_rounds
-        else pq_codebooks(embeddings, pq_k, pq_m)
-    )
-    ec = pq_encode(emb, cb, pq_m)
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qe")
-    )
-    part = (
-        ec.join(F.broadcast(cb), ["m", "code"])
-        .crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            V.dot_fixed(
-                F.slice(
-                    F.col("qe"),
-                    F.col("m") * (DIMS // pq_m) + 1,
-                    F.lit(DIMS // pq_m),
-                ),
-                F.col("ce"),
-                DIMS // pq_m,
-            ).alias("ps"),
-        )
-    )
-    approx = part.groupBy("query_id", "neighbor_id").agg(
-        F.round(F.sum("ps"), 6).alias("adc")
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    cand = (
-        approx.withColumn("ar", F.row_number().over(wa))
-        .where(F.col("ar") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qe"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
-def ivf_hamming_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    n_cells: int = IVF_CELLS,
-    n_probes: int = IVF_PROBES,
-    rerank_mult: int | None = None,
-) -> DataFrame:
-    """IVF × compressed-scan COMPOSITION — the claim the quantized scans
-    make ("composes with IVF cell pruning") made real: candidates are
-    first pruned to the query's ``n_probes`` nearest cells (reading
-    n_probes/n_cells of the corpus), then the surviving candidates are
-    pre-ranked by sign-bit Hamming (16-byte signatures, XOR+popcount)
-    and only the per-query top R = k·rerank_mult re-scored exactly.
-
-    At 100 TB this is the production read path: the corpus is stored
-    bucketed by IVF cell with the signature column alongside, a query
-    reads 3/16 of the buckets, scans signatures (16 B/row), and touches
-    full vectors for R rows. Same R as the flat Hamming scan but over a
-    pruned candidate set — recall is bounded by the IVF probe recall
-    and typically HIGHER than flat Hamming at equal R because the
-    rerank budget concentrates on plausible cells — measured at sf0.1:
-    0.75 composed vs 0.575 flat at R = 80.
-
-    ``rerank_mult=None`` auto-scales R with corpus size (shared
-    :func:`hamming_auto_mult` rule — the fixed R=80 composition
-    measured 0.75 -> 0.35 recall@5 at the 10x corpus); since the r9
-    oracle migration the registry entry runs this auto path, with the
-    oracle computing the identical rule as a scalar subquery."""
-    if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(embeddings))
-    emb = _pin(ivf_assign(embeddings, n_cells))  # (vec_id, cell, ne)
-    lo, hi = _sign_sig_cols(F.col("ne"))
-    sig = emb.select(
-        "vec_id", "cell", lo.alias("slo"), hi.alias("shi"), "ne"
-    )
-    cent = _emb_normed(embeddings).where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-    )
-    q = sig.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("ne").alias("qemb"),
-        F.col("slo").alias("qlo"),
-        F.col("shi").alias("qhi"),
-    )
-    qs = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "qemb", "qlo", "qhi", "cid",
-        V.dot(F.col("qemb"), F.col("ce")).alias("cs"),
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    qprobe = (
-        qs.withColumn("pr", F.row_number().over(wprobe))
-        .where(F.col("pr") <= n_probes)
-        .select(
-            "query_id", "qemb", "qlo", "qhi",
-            F.col("cid").cast("long").alias("cell"),
-        )
-    )
-    ham = (
-        sig.join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                F.bit_count(F.col("slo").bitwiseXOR(F.col("qlo")))
-                + F.bit_count(F.col("shi").bitwiseXOR(F.col("qhi")))
-            ).cast("long").alias("ham"),
-        )
-    )
-    wh = Window.partitionBy("query_id").orderBy(F.asc("ham"), F.asc("neighbor_id"))
-    cand = (
-        ham.withColumn("hr", F.row_number().over(wh))
-        .where(F.col("hr") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
-    qv = q.select("query_id", "qemb")
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qemb"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
     )
 
 
@@ -1526,163 +1109,6 @@ def embedding_nearest_lsh(
     )
 
 
-def lsh_ann_topk_multi(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    n_tables: int = N_TABLES,
-    planes_per_table: int = MULTI_PLANES,
-) -> DataFrame:
-    """Approximate top-k with L independent hyperplane tables: a single
-    8-plane table (:func:`lsh_ann_topk`) misses neighbors that land one
-    hyperplane away; unioning L tables' buckets recovers them
-    (recall 1−(1−r)^L for per-table recall r). Candidates are the union
-    of the query's bucket in every table, deduped BEFORE scoring (a
-    (query, neighbor) pair colliding in several tables is scored once,
-    not L times), then exactly scored via the wide codegen dot — still
-    an equi-join on (table, bucket), never a cross product."""
-    wide = _pin(_emb_wide(embeddings))
-    tagged = _pin(
-        _multi_table_tagged_ids(
-            _emb_normed(embeddings), n_tables, planes_per_table
-        )
-    )
-    q = tagged.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), "t", "b"
-    )
-    cand = (
-        tagged.join(F.broadcast(q), ["t", "b"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()  # same pair may collide in several tables
-    )
-    scored = (
-        cand.join(_rename_wide(wide, "query_id", "q"), "query_id")
-        .join(_rename_wide(wide, "neighbor_id", "c"), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot_wide("q", "c"), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    n_cells: int = IVF_CELLS,
-    n_probes: int = IVF_PROBES,
-    rerank_mult: int | None = None,
-    pq_k: int = PQ_K,
-) -> DataFrame:
-    """IVF × PQ-ADC COMPOSITION — the FAISS ``IVFPQ`` read path, the
-    standard billion-scale ANN index shape: candidates are pruned to
-    the query's ``n_probes`` nearest coarse cells, the survivors are
-    pre-ranked by the ADC estimate over their 32-bit PQ codes, and only
-    the per-query top R = k·rerank_mult touch full vectors for exact
-    rerank.
-
-    vs :func:`ivf_hamming_topk` (the sign-bit sibling): same cell
-    pruning, but the in-cell scan reads 4 B/row of corpus-adaptive
-    codes instead of 16 B/row of data-blind sign bits — at equal R the
-    codebook recalls more of the wide-angle neighbors this corpus hides
-    (measured in bench next to the rest of the ANN ladder).
-
-    Scale shape: at 100 TB the corpus is stored bucketed by IVF cell
-    with the code column alongside (both assigned once at ingest); a
-    query reads n_probes/n_cells of the buckets, the ADC scan is an
-    equi-join on (m, code) against 128 broadcast codebook rows plus one
-    (query, vec) partial-agg sum, and exact math touches R rows per
-    query. ADC sums are rounded 6 dp before ranking (the engine's
-    accumulation-noise kill), so the composed approximate result is
-    fully oracle-checked like every other ANN entry.
-
-    ``rerank_mult=None`` auto-scales R with corpus size (shared
-    :func:`hamming_auto_mult` rule — fixed R=80 measured 0.95 -> 0.40
-    recall@5 at the 10x corpus); since the r9 oracle migration the
-    registry entry runs this auto path, with the oracle computing the
-    identical rule as a scalar subquery."""
-    if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(embeddings))
-    embn = _pin(_emb_normed(embeddings))
-    assigned = _pin(ivf_assign(embeddings, n_cells))  # (vec_id, cell, ne)
-    cb = pq_codebooks(embeddings, pq_k)
-    codes = pq_encode(embn, cb).join(
-        assigned.select("vec_id", "cell"), "vec_id"
-    )  # (vec_id, m, code, cell)
-    cent = embn.where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-    )
-    q = embn.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qe")
-    )
-    qs = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "qe", "cid", V.dot(F.col("qe"), F.col("ce")).alias("cs")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    qprobe = (
-        qs.withColumn("pr", F.row_number().over(wprobe))
-        .where(F.col("pr") <= n_probes)
-        .select("query_id", "qe", F.col("cid").cast("long").alias("cell"))
-    )
-    part = (
-        codes.join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(cb), ["m", "code"])
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            V.dot_fixed(
-                F.slice(F.col("qe"), F.col("m") * PQ_DSUB + 1, F.lit(PQ_DSUB)),
-                F.col("ce"),
-                PQ_DSUB,
-            ).alias("ps"),
-        )
-    )
-    approx = part.groupBy("query_id", "neighbor_id").agg(
-        F.round(F.sum("ps"), 6).alias("adc")
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        approx.withColumn("ar", F.row_number().over(wa))
-        .where(F.col("ar") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    c = embn.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qe"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
 def ivf_pq_residual_topk(
     embeddings: DataFrame,
     n_queries: int = 8,
@@ -1712,15 +1138,13 @@ def ivf_pq_residual_topk(
     residual upgrade costs ONE extra broadcast join at encode time and
     nothing at scan time.
 
-    Scale shape: identical to :func:`ivf_pq_topk` — centroids and
-    codebooks are broadcast control rows, encoding is one partial-agg
-    argmin at ingest, the scan reads n_probes/n_cells of a
-    cell-bucketed corpus and exact math touches R rows per query.
-    ``rerank_mult=None`` auto-scales R with corpus size (shared
-    :func:`hamming_auto_mult` rule); residuals subtract in IEEE order
-    identically in both engines and ADC sums are rounded 6 dp before
-    ranking, so the result is fully oracle-checked like the rest of
-    the ANN ladder."""
+    Scale shape: centroids and codebooks are broadcast control rows,
+    encoding is one partial-agg argmin at ingest, the scan reads
+    n_probes/n_cells of a cell-bucketed corpus and exact math touches R
+    rows per query. ``rerank_mult=None`` auto-scales R with corpus size
+    (shared :func:`hamming_auto_mult` rule); residuals subtract in IEEE
+    order identically in both engines and ADC sums are rounded 6 dp
+    before ranking, so the result is fully oracle-checked."""
     if rerank_mult is None:
         rerank_mult = hamming_auto_mult(corpus_size(embeddings))
     dsub = DIMS // pq_m
@@ -1827,16 +1251,35 @@ def ivf_pq_residual_topk(
 # bucketed by cell" claim the ANN docstrings make, materialized.
 # ---------------------------------------------------------------------------
 
+#: The stored index row schema, fixed by :func:`_index_rows`. ``cell``
+#: is the partition column, typed INT as Spark infers it from the
+#: ``cell=<n>`` directory names, so a read under this schema plans
+#: exactly like an inferring read (same ``semanticHash``, which keys
+#: the corpus-size cache) but runs no inference job.
+_INDEX_SCHEMA = (
+    "vec_id BIGINT, ne ARRAY<DOUBLE>, pq_code ARRAY<BIGINT>, "
+    "rq_code ARRAY<BIGINT>, cell INT"
+)
+
+
+def _read_index(spark, path: str) -> DataFrame:
+    """The on-disk index at ``path`` under :data:`_INDEX_SCHEMA`: an
+    index built from an empty corpus has no data file and reads as 0
+    rows instead of failing schema inference."""
+    return read_parquet_as(spark, path, _INDEX_SCHEMA)
+
+
 
 def ann_index_write(embeddings: DataFrame, path: str) -> None:
     """Materialize the production ANN index on disk: one parquet
     dataset partitioned by IVF cell, each row carrying the unit vector
-    (exact rerank), its 8×4-bit PQ code array (ADC pre-rank), its
-    RESIDUAL 8×8-bit PQ code array (the round-10 production default —
-    PERFORMANCE.md "30× recall, revisited": residual codes beat every
-    absolute-code width at equal budget) and its 64-bit sign signature
-    (Hamming pre-rank) — every compressed representation the query
-    ladder needs, computed ONCE at ingest.
+    (exact rerank), its 8×4-bit PQ code array (the default
+    :func:`ann_index_topk` ADC pre-rank) and its RESIDUAL 8×8-bit PQ
+    code array (the ``recall_sla`` pre-rank — PERFORMANCE.md "30×
+    recall, revisited": residual codes beat every absolute-code width
+    at equal budget), both computed ONCE at ingest. The rows always
+    have the schema the index readers pass back (:func:`_read_index`),
+    so an index built from an empty corpus reads as 0 rows.
 
     At 100 TB this is the ingest job: assignment is the broadcast
     argmax (one partial-agg shuffle), encoding one more, and the
@@ -1915,8 +1358,8 @@ def _index_rows(
     cent: DataFrame,
     rcb: DataFrame,
 ) -> DataFrame:
-    """The stored row shape (vec_id, ne, pq_code, rq_code, slo, shi,
-    cell) from a normalized frame, its cell assignment and both
+    """The stored row shape (vec_id, ne, pq_code, rq_code, cell) from a
+    normalized frame, its cell assignment and both
     codebooks (absolute 8×16 and residual 8×256) — shared by the full
     build and the incremental append so both write bit-identical
     rows."""
@@ -1924,14 +1367,11 @@ def _index_rows(
     rcodes = _pack_codes(
         pq_encode(_residual_frame(assigned, cent), rcb), "rq_code"
     )
-    lo, hi = _sign_sig_cols(F.col("ne"))
     return assigned.join(codes, "vec_id").join(rcodes, "vec_id").select(
-        "vec_id",
+        F.col("vec_id").cast("long").alias("vec_id"),
         "ne",
         "pq_code",
         "rq_code",
-        lo.alias("slo"),
-        hi.alias("shi"),
         "cell",
     )
 
@@ -1947,7 +1387,7 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
     subvectors of vec_id < PQ_K — the same deterministic seed rows a
     full rebuild over base ∪ batch would sample, PROVIDED the batch's
     ids all exceed the stored max (validated; the daily-append id
-    pattern). New rows are assigned, encoded and sign-packed by the
+    pattern). New rows are assigned and encoded by the
     shared :func:`_index_rows` builder and appended with a partitioned
     append-mode write: each new file lands inside its cell's existing
     directory, so partition pruning, the probe filter and every stored
@@ -1959,9 +1399,9 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
     Scale shape: one metadata-only count + two k-row control reads
     (centroids, codebook seeds) against the stored index; the batch
     itself sees exactly the build path's per-row work — broadcast
-    argmax assign, one partial-agg encode shuffle, map-side sign
-    packing — so append cost is ∝|batch|, never ∝|index|."""
-    stored = read_parquet(spark, path).select("vec_id", "ne")
+    argmax assign, one partial-agg encode shuffle — so append cost is
+    ∝|batch|, never ∝|index|."""
+    stored = _read_index(spark, path).select("vec_id", "ne")
     stored_max = stored.agg(F.max("vec_id")).first()[0]
     if stored_max is None:
         raise ValueError(f"empty or missing index at {path}; build first")
@@ -1981,7 +1421,7 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
     cb = codebooks_from_normed(stored)
     # residual quantizer, also from the stored rows alone: residual of
     # each seed row against its STORED cell centroid
-    stored_cells = read_parquet(spark, path).select("vec_id", "ne", "cell")
+    stored_cells = _read_index(spark, path).select("vec_id", "ne", "cell")
     cent_cells = cent.select(F.col("cid").alias("cell"), "ce")
     rcb = _residual_codebooks(stored_cells, cent_cells)
     # Same persist discipline as the full build, batch-sided only: the
@@ -2006,13 +1446,13 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
             assigned.unpersist()
         newn.unpersist()
     # The memoized corpus count is keyed by semanticHash, and the hash
-    # of ``read_parquet(spark, path)`` is UNCHANGED after files are appended
+    # of ``_read_index(spark, path)`` is UNCHANGED after files are appended
     # at that path (ADVICE r9, verified empirically) — so a session that
     # queried the index before the append would compute its auto rerank
     # budget from the stale pre-append count, silently shrinking recall.
     # Drop the entry so the next ann_index_topk re-counts the grown index.
     try:
-        _CORPUS_SIZE_CACHE.pop(read_parquet(spark, path).semanticHash(), None)
+        _CORPUS_SIZE_CACHE.pop(_read_index(spark, path).semanticHash(), None)
     except Exception:  # pragma: no cover - plan not hashable (connect etc.)
         _CORPUS_SIZE_CACHE.clear()
 
@@ -2056,7 +1496,7 @@ def ann_index_compact(spark, path: str, target_bytes: int | None = None) -> None
     # The rewrite does not change the count, but semanticHash keying is
     # path-plan based and cheap to refresh defensively alongside.
     try:
-        _CORPUS_SIZE_CACHE.pop(read_parquet(spark, path).semanticHash(), None)
+        _CORPUS_SIZE_CACHE.pop(_read_index(spark, path).semanticHash(), None)
     except Exception:  # pragma: no cover - plan not hashable (connect etc.)
         _CORPUS_SIZE_CACHE.clear()
 
@@ -2139,7 +1579,7 @@ def _index_exact_topk(
     (the tested default) the two are bit-identical."""
     embn = _emb_normed(embeddings)
     cent = (
-        read_parquet(spark, path)
+        _read_index(spark, path)
         .where(F.col("vec_id") < n_cells)
         .select(F.col("vec_id").alias("cid"), F.col("ne").alias("ce"))
     )
@@ -2162,7 +1602,7 @@ def _index_exact_topk(
         # column pruning keeps the vectors untouched — and the
         # widened per-query cell set still partition-prunes the
         # scoring scan below
-        stored_cells = read_parquet(spark, path).select("vec_id", "cell")
+        stored_cells = _read_index(spark, path).select("vec_id", "cell")
         qprobe = _widened_probe(
             ranked, stored_cells, keep,
             n_queries, _widen_target(k, widen_to), n_cells, n_probes,
@@ -2179,7 +1619,7 @@ def _index_exact_topk(
     _rows = qprobe.collect()
     qprobe = spark.createDataFrame(_rows, qprobe.schema)
     probe_cells = sorted({r["cell"] for r in _rows})
-    idx = read_parquet(spark, path).where(F.col("cell").isin(probe_cells))
+    idx = _read_index(spark, path).where(F.col("cell").isin(probe_cells))
     candidates = idx.select("vec_id", "cell", "ne")
     if keep is not None:
         # metadata filter COMPOSED with partition pruning: the semi
@@ -2266,8 +1706,8 @@ def ann_index_topk(
     parquet partition pruning turns into "open only those cell
     directories". ADC pre-rank runs over the stored code arrays against
     broadcast codebooks, exact rerank over the stored unit vectors —
-    bit-identical results to the in-memory :func:`ivf_pq_topk` (tested),
-    while reading n_probes/n_cells of the dataset.
+    bit-identical to the DuckDB IVF×PQ oracle (``queries._ivf_pq_oracle``,
+    tested), while reading n_probes/n_cells of the dataset.
 
     ``rerank_mult=None`` auto-scales R with the STORED corpus size —
     counted from the index at ``path`` (a parquet metadata-only count,
@@ -2275,7 +1715,7 @@ def ann_index_topk(
     the budget is right even when the query vectors come from a
     different or subset frame than the one the index was built from
     (ADVICE r8). When the two frames match — the tested default —
-    this keeps bit-parity with :func:`ivf_pq_topk` under defaults.
+    this keeps bit-parity with that oracle under defaults.
 
     ``recall_sla`` (VERDICT r10 Next #2) picks the pre-rank column and
     budget from the stored index's own stats per the measured ladder
@@ -2294,7 +1734,7 @@ def ann_index_topk(
         rerank_rows = None
         if recall_sla > SLA_COMPRESSED_FLOOR:
             rerank_rows = sla_rerank_rows(
-                corpus_size(read_parquet(spark, path)), k
+                corpus_size(_read_index(spark, path)), k
             )
         return ann_index_residual_topk(
             spark,
@@ -2307,7 +1747,7 @@ def ann_index_topk(
             rerank_rows=rerank_rows,
         )
     if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(read_parquet(spark, path)))
+        rerank_mult = hamming_auto_mult(corpus_size(_read_index(spark, path)))
     embn = _emb_normed(embeddings)
     cent = embn.where(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
@@ -2330,7 +1770,7 @@ def ann_index_topk(
     qprobe = spark.createDataFrame(_rows, qprobe.schema)
     probe_cells = sorted({r["cell"] for r in _rows})
     cb = pq_codebooks(embeddings)
-    idx = read_parquet(spark, path).where(F.col("cell").isin(probe_cells))
+    idx = _read_index(spark, path).where(F.col("cell").isin(probe_cells))
     part = (
         idx.select(
             "vec_id",
@@ -2412,11 +1852,11 @@ def ann_index_residual_topk(
     per-query row count — the SLA-fraction hook (see
     :func:`sla_rerank_rows`)."""
     if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(read_parquet(spark, path)))
+        rerank_mult = hamming_auto_mult(corpus_size(_read_index(spark, path)))
     if rerank_rows is None:
         rerank_rows = k * rerank_mult
     dsub = DIMS // pq_m
-    stored = read_parquet(spark, path)
+    stored = _read_index(spark, path)
     cent = stored.where(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
     )
@@ -2497,90 +1937,6 @@ def ann_index_residual_topk(
             "query_id",
             "neighbor_id",
             F.round(V.dot(F.col("qe"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
-def lsh_ann_topk_multiprobe(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    n_tables: int = N_TABLES,
-    planes_per_table: int = MULTI_PLANES,
-) -> DataFrame:
-    """MULTI-PROBE multi-table ANN (Lv et al., VLDB'07): each query
-    probes its home bucket in every table PLUS the bucket reached by
-    flipping the sign bit with the smallest |margin| — the hyperplane
-    the query sits closest to, hence the perturbation most likely to
-    hold its missed neighbors. Trades extra probes for extra tables:
-    2L probes from L tables approach the recall of 2L tables at HALF
-    the index memory/ingest cost — the standard knob when the table
-    count (storage) is the binding constraint, not query fan-out.
-
-    Corpus side is untouched (same tagged (vec_id, t, b) index as
-    :func:`lsh_ann_topk_multi`); only the tiny query side computes
-    margins, so the plan stays an equi-join on (t, b) with ids-only
-    amplification. Probe buckets are derived from the same bit-exact
-    dot folds as the bucket bits, so the candidate set — and therefore
-    the approximate result — is fully oracle-checkable."""
-    wide = _pin(_emb_wide(embeddings))
-    emb = _pin(_emb_normed(embeddings))
-    tagged = _pin(_multi_table_tagged_ids(emb, n_tables, planes_per_table))
-    qn = emb.where(F.col("vec_id") < n_queries)
-    probe_structs = []
-    for t in range(n_tables):
-        planes = hyperplanes_table(t, planes_per_table)
-        margins, bits = [], []
-        for p, row in enumerate(planes):
-            plane_lit = F.array(*[F.lit(x) for x in row])
-            d = V.dot(F.col("ne"), plane_lit)
-            margins.append(F.abs(d))
-            bits.append(F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        b = bits[0]
-        for x in bits[1:]:
-            b = b + x
-        b = b.cast("long")
-        absm = F.array(*margins)
-        # 1-based index of the FIRST minimum — ties to the smallest p,
-        # matching the oracle's ROW_NUMBER(ABS(d) ASC, p ASC)
-        amin = F.array_position(absm, F.array_min(absm))
-        flip = F.pow(F.lit(2.0), (amin - 1).cast("double")).cast("long")
-        probe_structs.append(F.struct(F.lit(t).alias("t"), b.alias("b")))
-        probe_structs.append(
-            F.struct(F.lit(t).alias("t"), b.bitwiseXOR(flip).alias("b"))
-        )
-    probes = (
-        qn.select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(F.array(*probe_structs)).alias("tb"),
-        )
-        .select("query_id", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
-        .distinct()
-    )
-    cand = (
-        tagged.join(F.broadcast(probes), ["t", "b"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    scored = (
-        cand.join(_rename_wide(wide, "query_id", "q"), "query_id")
-        .join(_rename_wide(wide, "neighbor_id", "c"), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot_wide("q", "c"), 6).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))

@@ -76,6 +76,18 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return DataFrame(jdf, spark)
 
 
+def read_parquet_as(
+    spark: SparkSession, path: str, schema: T.StructType | str
+) -> DataFrame:
+    """Parquet scan under the schema the dataset's writer fixed: no
+    inference at all, so no job, and a dataset written from an empty
+    frame (no data file, only ``_SUCCESS``) reads as 0 rows where
+    inference fails with ``UNABLE_TO_INFER_SCHEMA``. Pass the schema
+    Spark would infer (partition columns included) and the plan is the
+    plain read's — same ``semanticHash``."""
+    return spark.read.schema(schema).parquet(path)
+
+
 #: Hadoop glob metacharacters (``SparkHadoopUtil.isGlobPath``).
 _GLOB_CHARS = frozenset("{}[]*?\\")
 

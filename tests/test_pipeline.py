@@ -59,20 +59,6 @@ def test_exact_dedup_no_dups_at_this_sf(spark, sf_dir):
 # --- similarity search ------------------------------------------------------
 
 
-def test_ann_results_subset_of_bruteforce_scores(spark, sf_dir):
-    """Every ANN hit must carry the same cosine the brute-force path
-    computes for that pair (ANN restricts candidates, never rescores)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    bf = {
-        (r["query_id"], r["neighbor_id"]): r["cos"]
-        for r in SS.cosine_topk(emb, n_queries=8, k=500).collect()
-    }
-    ann = SS.lsh_ann_topk(emb, n_queries=8, k=5).collect()
-    assert ann
-    for r in ann:
-        assert bf[(r["query_id"], r["neighbor_id"])] == r["cos"]
-
-
 def test_embedding_lsh_near_dup_subset_and_recall(spark, sf_dir):
     """The registered multi-table LSH near-dup query must (a) never
     invent a pair — every emitted pair is exactly-scored, so LSH output
@@ -103,51 +89,6 @@ def _recall_at_k(truth_rows, ann_rows) -> float:
         got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     hits = sum(len(truth[q] & got.get(q, set())) for q in truth)
     return hits / sum(len(v) for v in truth.values())
-
-
-def test_multi_table_ann_recall_geq_single_table(spark, sf_dir):
-    """Recall@5 of the 4-table ANN must dominate the single-table path
-    (the union of 4 independent bucket families can only add candidates)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = SS.cosine_topk(emb, n_queries=8, k=5).collect()
-    single = _recall_at_k(truth, SS.lsh_ann_topk(emb, n_queries=8, k=5).collect())
-    multi = _recall_at_k(
-        truth, SS.lsh_ann_topk_multi(emb, n_queries=8, k=5).collect()
-    )
-    assert multi >= max(single, 0.5), (multi, single)
-
-
-def test_lsh_single_table_is_the_recall_floor(spark, sf_dir):
-    """Pin for the ann_lsh_topk_single_baseline retirement (r8): the
-    single-table path exists only as the measured recall FLOOR of the
-    ANN family — it must stay strictly below the multi-table path
-    (which dominates it by construction) while remaining deterministic
-    and cartesian-free (plan asserted in test_plans). If this floor
-    ever rises to parity, the baseline has stopped earning its keep in
-    bench.py's recall report."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = SS.cosine_topk(emb, n_queries=8, k=5).collect()
-    single = _recall_at_k(truth, SS.lsh_ann_topk(emb, n_queries=8, k=5).collect())
-    multi = _recall_at_k(
-        truth, SS.lsh_ann_topk_multi(emb, n_queries=8, k=5).collect()
-    )
-    assert single <= multi
-    assert single < 0.5, f"recall floor unexpectedly high: {single:.3f}"
-
-
-def test_multiprobe_ann_recall_geq_single_probe(spark, sf_dir):
-    """Multi-probe (home bucket + lowest-margin flip per table) can only
-    ADD candidates over the single-probe multi-table path, so its
-    recall@5 must dominate — and its candidate set must be a superset."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = SS.cosine_topk(emb, n_queries=8, k=5).collect()
-    single = _recall_at_k(
-        truth, SS.lsh_ann_topk_multi(emb, n_queries=8, k=5).collect()
-    )
-    multip = _recall_at_k(
-        truth, SS.lsh_ann_topk_multiprobe(emb, n_queries=8, k=5).collect()
-    )
-    assert multip >= single, (multip, single)
 
 
 def test_ivf_filtered_topk_respects_predicate(spark, sf_dir):
@@ -442,62 +383,17 @@ def test_ivf_lloyd_trained_quantizer(spark, sf_dir):
     assert _recall_at_k(truth, got) >= 0.8
 
 
-def test_hamming_ann_recall_beats_single_lsh_floor(spark, sf_dir):
-    """The 1-bit signature pre-rank + exact rerank must recall far more
-    than the single-table LSH floor and at least half the truth at any
-    corpus size — the default budget AUTO-SCALES with the corpus since
-    round 7 (hamming_auto_mult: R=80 at ≤500 vectors → recall 0.8,
-    R=240 at the 2 000-vector sf0.1 corpus → 0.775; the old fixed R=80
-    decayed to 0.575 there) — and every returned cos must be exact (it
-    is re-scored full precision)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = SS.cosine_topk(emb, n_queries=8, k=5).collect()
-    got = SS.hamming_ann_topk(emb, n_queries=8, k=5).collect()
-    single = SS.lsh_ann_topk(emb, n_queries=8, k=5).collect()
-    r_got = _recall_at_k(truth, got)
-    assert r_got >= 0.5
-    assert r_got >= _recall_at_k(truth, single)
-    exact = {(r["query_id"], r["neighbor_id"]): r["cos"] for r in truth}
-    for r in got:
-        key = (r["query_id"], r["neighbor_id"])
-        if key in exact:
-            assert r["cos"] == exact[key]
-
-
 def test_pq_adc_recall_and_exact_rerank(spark, sf_dir):
-    """PQ-ADC at the R=80 rerank budget: high recall at this corpus
-    size (≥0.9; at sf0.1 it holds 0.825 vs 0.575 for sign-Hamming at
-    the same FIXED R=80 — the codebook adapts where sign bits can't;
-    the flat Hamming default auto-scales its budget since round 7, so
-    bench now compares them at different budgets), and every returned
-    cos is exact (full-precision rerank)."""
+    """The IVF × residual-PQ path (ADC pre-rank over residual codes,
+    auto rerank budget R=80 at this corpus size): high recall (≥0.9;
+    1.0 at sf0.1 in bench's recall block), and every returned cos is
+    exact (full-precision rerank)."""
     emb = load_table(spark, sf_dir, "embeddings")
     truth = SS.cosine_topk(emb, n_queries=8, k=5).collect()
-    pq = SS.pq_adc_topk(emb, n_queries=8, k=5).collect()
+    pq = SS.ivf_pq_residual_topk(emb, n_queries=8, k=5).collect()
     assert _recall_at_k(truth, pq) >= 0.9
     exact = {(r["query_id"], r["neighbor_id"]): r["cos"] for r in truth}
     for r in pq:
-        key = (r["query_id"], r["neighbor_id"])
-        if key in exact:
-            assert r["cos"] == exact[key]
-
-
-def test_ivf_hamming_composition_recall(spark, sf_dir):
-    """The IVF×Hamming composition must stay within 0.1 recall of the
-    flat Hamming scan, with exact cos values on returned truth pairs.
-    NOTE the budgets differ since round 7: the composition keeps the
-    fixed R=80 (cell pruning already concentrates it — 0.75 at sf0.1
-    vs the old flat 0.575 at the same R), while the flat scan
-    auto-scales its budget (0.775 at sf0.1 with R=240); the 0.1 margin
-    absorbs that asymmetry."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = SS.cosine_topk(emb, n_queries=8, k=5).collect()
-    comp = SS.ivf_hamming_topk(emb, n_queries=8, k=5).collect()
-    flat = SS.hamming_ann_topk(emb, n_queries=8, k=5).collect()
-    assert _recall_at_k(truth, comp) >= _recall_at_k(truth, flat) - 0.1
-    assert _recall_at_k(truth, comp) >= 0.5
-    exact = {(r["query_id"], r["neighbor_id"]): r["cos"] for r in truth}
-    for r in comp:
         key = (r["query_id"], r["neighbor_id"])
         if key in exact:
             assert r["cos"] == exact[key]
@@ -905,24 +801,25 @@ def test_rowwise_band_signatures_match_groupby(spark, sf_dir):
     assert rowwise == grouped
 
 
-def test_ann_index_roundtrip_matches_in_memory(spark, sf_dir, tmp_path):
+def test_ann_index_roundtrip_matches_in_memory(
+    spark, duck, sf_dir, tmp_path
+):
     """The on-disk cell-partitioned index must return BIT-IDENTICAL
-    top-k to the in-memory IVF×PQ composition — same centroids, codes,
-    rounding — while reading only probed cells."""
+    top-k to the IVF×PQ composition computed from the raw corpus — the
+    DuckDB reference the registered index chains are checked against,
+    with the same centroids, codes and rounding — while reading only
+    probed cells."""
     from mapreducelearnings_spark.pipeline import simsearch as SS
+    from mapreducelearnings_spark.queries import _ivf_pq_oracle
+
+    from .conftest import assert_matches_oracle
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ann_index")
     SS.ann_index_write(emb, path)
-    on_disk = {
-        tuple(r)
-        for r in SS.ann_index_topk(spark, path, emb, n_queries=4, k=5).collect()
-    }
-    in_mem = {
-        tuple(r) for r in SS.ivf_pq_topk(emb, n_queries=4, k=5).collect()
-    }
-    assert on_disk == in_mem
-    assert len(on_disk) > 0
+    on_disk = SS.ann_index_topk(spark, path, emb, n_queries=4, k=5)
+    assert on_disk.count() > 0
+    assert_matches_oracle(on_disk, duck, _ivf_pq_oracle(n_queries=4))
 
 
 def test_ann_index_append_matches_rebuild(spark, sf_dir, tmp_path):
@@ -954,8 +851,6 @@ def test_ann_index_append_matches_rebuild(spark, sf_dir, tmp_path):
                 tuple(r["ne"]),
                 tuple(r["pq_code"]),
                 tuple(r["rq_code"]),
-                r["slo"],
-                r["shi"],
                 r["cell"],
             )
             for r in spark.read.parquet(p).collect()
@@ -1323,6 +1218,27 @@ def test_ann_index_query_prunes_partitions(spark, sf_dir, tmp_path):
                 spark, path, emb, n_queries=2, k=3, recall_sla=sla
             )
         )
+
+
+def test_ann_index_empty_and_tiny_corpus(spark, sf_dir, tmp_path):
+    """Degenerate corpora through the on-disk index, in both
+    ann_index_topk modes (default ADC pre-rank, recall_sla=0.9): an
+    empty corpus writes an index with no data file, and the query
+    returns 0 rows with the normal result schema instead of failing
+    schema inference; a 3-vector corpus (fewer vectors than k and than
+    IVF_CELLS) probes every cell and reranks every candidate, so it
+    returns exactly the brute-force top-k (2 neighbors per query)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    empty, tiny = emb.where(F.col("vec_id") < 0), emb.where(F.col("vec_id") < 3)
+    truth = {tuple(r) for r in SS.cosine_topk(tiny, n_queries=8, k=5).collect()}
+    assert len(truth) == 6
+    for name, corpus, want in (("empty", empty, set()), ("tiny", tiny, truth)):
+        path = str(tmp_path / name)
+        SS.ann_index_write(corpus, path)
+        for sla in (None, 0.9):
+            got = SS.ann_index_topk(spark, path, corpus, recall_sla=sla)
+            assert got.schema == SS.cosine_topk(tiny).schema, (name, sla)
+            assert {tuple(r) for r in got.collect()} == want, (name, sla)
 
 
 def test_streaming_session_windows_match_closed_batch_sessions(spark, sf_dir):
@@ -2023,7 +1939,7 @@ def test_cooccurrence_stripes_twin_matches_pairs(spark, sf_dir):
 
 
 def test_pq_rerank_budget_autoscales_with_corpus(spark, sf_dir):
-    """The PQ/composition paths default to the shared auto-budget rule
+    """The residual-PQ path defaults to the shared auto-budget rule
     (hamming_auto_mult): at this fixture (n=500 = N0) auto equals the
     fixed base, and the physical plan's rank filter carries the
     k*mult literal — so the budget actually reaches the plan. A bigger
@@ -2031,8 +1947,8 @@ def test_pq_rerank_budget_autoscales_with_corpus(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     base_mult = SS.hamming_auto_mult(n)
-    assert base_mult == SS.PQ_RERANK_MULT  # N0 fixture: auto == fixed
-    plan = SS.pq_adc_topk(emb, k=5)._jdf.queryExecution().toString()
+    assert base_mult == SS.HAMMING_RERANK_MULT  # N0 fixture: auto == fixed
+    plan = SS.ivf_pq_residual_topk(emb, k=5)._jdf.queryExecution().toString()
     assert f"<= {5 * base_mult}" in plan
     # 8x the corpus => +3 doublings => mult grows by 3*base
-    assert SS.hamming_auto_mult(8 * n) == SS.PQ_RERANK_MULT * 4
+    assert SS.hamming_auto_mult(8 * n) == SS.HAMMING_RERANK_MULT * 4

@@ -95,8 +95,9 @@ def test_asof_join_is_single_shuffle(spark, sf_dir):
 
 
 def test_ann_lsh_avoids_cartesian(spark, sf_dir):
-    """The ANN path must join on the bucket, not cross the corpus."""
-    plan = plan_of(spark, sf_dir, "ann_lsh_topk_single_baseline")
+    """The registered LSH nearest-neighbor path must join on (table,
+    bucket), not cross the corpus."""
+    plan = plan_of(spark, sf_dir, "dedup_embedding_nearest")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

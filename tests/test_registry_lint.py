@@ -25,11 +25,14 @@ Two static rules, both learned from real driver reds:
 
 from __future__ import annotations
 
+import importlib.util
+import pathlib
+
 import pytest
 
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from mapreducelearnings_spark.queries import REGISTRY
+from mapreducelearnings_spark.queries import REGISTRY, RETIRED
 from mapreducelearnings_spark.typelint import type_mismatches
 
 from .conftest import SF_SMOKE
@@ -151,3 +154,35 @@ def test_sweep_record_merge_semantics(tmp_path, monkeypatch):
     mod.record_sweep({"q": True}, "/tmp/scale_smoke/sf0.3")
     log = json.load(open(mod.SWEEPS_PATH))
     assert log["q"]["sf_dir"].endswith("sf0.30")
+
+
+def _load_script(relpath: str):
+    path = pathlib.Path(__file__).resolve().parent.parent / relpath
+    spec = importlib.util.spec_from_file_location(path.stem, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_script_query_lists_name_known_entries():
+    """Every query name the bench and the audit tools list is a
+    registered or retired entry: a stale name (a deleted or renamed
+    spec) would otherwise surface only as a KeyError in a manual run."""
+    bench = _load_script("bench.py")
+    smoke = _load_script("tools/scale_smoke.py")
+    audit = _load_script("tools/plan_audit.py")
+    lists = {
+        "bench.HEADLINE": bench.HEADLINE,
+        "bench.SURFACE_TWINS": bench.SURFACE_TWINS,
+        "scale_smoke.HEAVY": smoke.HEAVY,
+        "plan_audit.QUADRATIC_ALLOWLIST": audit.QUADRATIC_ALLOWLIST,
+        "plan_audit.BNLJ_BOUNDED_ALLOWLIST": audit.BNLJ_BOUNDED_ALLOWLIST,
+        "plan_audit.PYTHON_EXEC_EXPECTED": audit.PYTHON_EXEC_EXPECTED,
+    }
+    known = set(REGISTRY) | set(RETIRED)
+    stale = {
+        where: sorted(set(names) - known)
+        for where, names in lists.items()
+        if set(names) - known
+    }
+    assert stale == {}, stale

@@ -2,20 +2,17 @@
 
 The per-round recall block in bench.py is pinned to the bench dir
 (sf0.1); this probe re-measures chosen paths at the scale-smoke dirs,
-where the round-9 measurement found the 32-bit PQ code's resolution
-ceiling (PERFORMANCE.md "30x recall": recall@5 0.325 at n=60k under the
-auto budget). It exists to measure the code-resolution lever (pq_k)
-against that boundary without re-running the full bench ladder.
+where density-concentrated clusters stress the compressed pre-ranks
+(PERFORMANCE.md "30x recall, revisited").
 
 Usage: python tools/ann_recall_probe.py [sf_dir] [path ...]
-Paths: pq (4-bit ADC), pq64 (8-bit ADC), ivf_pq, ivf_pq64, hamming,
-ivf (exact rerank), filtered (recall-vs-selectivity sweep of the
-r13 adaptive widened filtered probe vs the pre-r13 fixed probe, at
-vec_id%m residue selectivities), index_sla (on-disk index, recall_sla=0.9 →
-residual pre-rank + max(auto, ceil(SLA_RERANK_FRACTION·n)) budget,
-4% per the two-density calibration), index_sla_exact
-(recall_sla=1.0 → exact scoring of probed cells). Default: pq pq64
-ivf_pq64.
+Paths: ivf (exact rerank), ivf_pq64_residual (residual-PQ pre-rank),
+filtered (recall-vs-selectivity sweep of the r13 adaptive widened
+filtered probe vs the pre-r13 fixed probe, at vec_id%m residue
+selectivities), index_sla (on-disk index, recall_sla=0.9 → residual
+pre-rank + max(auto, ceil(SLA_RERANK_FRACTION·n)) budget, 4% per the
+two-density calibration), index_sla_exact (recall_sla=1.0 → exact
+scoring of probed cells). Default: ivf ivf_pq64_residual index_sla.
 """
 
 from __future__ import annotations
@@ -34,7 +31,7 @@ def main() -> int:
     from mapreducelearnings_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_smoke/sf0.30"
-    wanted = sys.argv[2:] or ["pq", "pq64", "ivf_pq64"]
+    wanted = sys.argv[2:] or ["ivf", "ivf_pq64_residual", "index_sla"]
 
     spark = get_spark("ann-recall-probe")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -59,28 +56,6 @@ def main() -> int:
         return Q._session_index(spark, sf_dir)
 
     paths = {
-        "pq": lambda: SS.pq_adc_topk(emb, n_queries=8, k=5),
-        "pq64": lambda: SS.pq_adc_topk(emb, n_queries=8, k=5, pq_k=SS.PQ_K64),
-        "ivf_pq": lambda: SS.ivf_pq_topk(emb, n_queries=8, k=5),
-        "ivf_pq64": lambda: SS.ivf_pq_topk(
-            emb, n_queries=8, k=5, pq_k=SS.PQ_K64
-        ),
-        "hamming": lambda: SS.hamming_ann_topk(emb, n_queries=8, k=5),
-        # retired-from-registry ladder rungs (r12): recall role stays
-        # measured here and in bench's recall block — multiprobe is the
-        # half-memory/2L-probes LSH point (Lv et al. VLDB'07), trained
-        # PQ the Lloyd-refined-codebook point (MIPS-vs-L2 caveat on its
-        # old @retire doc)
-        "lsh_multiprobe": lambda: SS.lsh_ann_topk_multiprobe(
-            emb, n_queries=8, k=5
-        ),
-        "pq_trained": lambda: SS.pq_adc_topk(
-            emb,
-            n_queries=8,
-            k=5,
-            trained_rounds=SS.PQ_LLOYD_ROUNDS,
-            train_sample_mod=4,
-        ),
         "ivf": lambda: SS.ivf_topk(emb, n_queries=8, k=5),
         "ivf_pq64_residual": lambda: SS.ivf_pq_residual_topk(
             emb, n_queries=8, k=5

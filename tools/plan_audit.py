@@ -51,7 +51,7 @@ BNLJ_BOUNDED_ALLOWLIST = frozenset(
         "cooccurrence_pmi",        # 1-row (Nw, Np) totals for the lift
         # k-row (<=8) query/probe sides broadcast into the corpus scan
         "similarity_topk", "similarity_topk_q8",
-        "ann_ivf_topk", "ann_ivf_trained_topk", "ann_hamming_topk",
+        "ann_ivf_topk", "ann_ivf_trained_topk",
         # r12: filtered vector search — same 8-row probe cross join;
         # the metadata filter itself is an equi semi join, not BNLJ
         "ann_ivf_filtered_topk",
@@ -64,10 +64,8 @@ BNLJ_BOUNDED_ALLOWLIST = frozenset(
         # cross join (<=64-row reference sketch x <=5 group values);
         # the per-side estimates join back by equi keys
         "distinct_kmv_containment",
-        "ann_pq_adc_topk", "ann_pq_trained_topk", "ann_ivf_hamming_topk",
-        "ann_ivf_pq_topk",
         # round-10: same k-row broadcast probe/centroid idiom
-        "ann_pq64_adc_topk", "ann_ivf_pq64_residual_topk",
+        "ann_ivf_pq64_residual_topk",
         "ann_index_append_topk",
         # round-11: the SLA read path — same k-row broadcast probe into
         # the partition-pruned stored index

@@ -55,10 +55,6 @@ HEAVY = [
     "dedup_embedding_cosine",
     "ann_ivf_topk",
     "ann_ivf_trained_topk",
-    "ann_hamming_topk",
-    "ann_pq_adc_topk",
-    "ann_ivf_hamming_topk",
-    "ann_ivf_pq_topk",
     "semdedup_keep",
     "incident_event_counts",
     # fixed-size arrival batch: time must stay ~flat as the corpus
@@ -71,9 +67,8 @@ HEAVY = [
     # Θ(n) output) + the batched BPE trainer
     "dedup_embedding_nearest",
     "bpe_merges_batched",
-    # round-10 adds: 8-bit PQ codebooks (code-resolution lever) + the
-    # on-disk index build→append→query ingest chain
-    "ann_pq64_adc_topk",
+    # round-10 adds: residual PQ + the on-disk index
+    # build→append→query ingest chain
     "ann_ivf_pq64_residual_topk",
     "ann_index_append_topk",
     # round-11: the sublinear-by-design family measured one decade
