@@ -1230,14 +1230,15 @@ def test_ann_index_empty_and_tiny_corpus(spark, sf_dir, tmp_path):
     returns exactly the brute-force top-k (2 neighbors per query)."""
     emb = load_table(spark, sf_dir, "embeddings")
     empty, tiny = emb.where(F.col("vec_id") < 0), emb.where(F.col("vec_id") < 3)
-    truth = {tuple(r) for r in SS.cosine_topk(tiny, n_queries=8, k=5).collect()}
+    exact = SS.cosine_topk(tiny, n_queries=8, k=5)
+    truth = {tuple(r) for r in exact.collect()}
     assert len(truth) == 6
     for name, corpus, want in (("empty", empty, set()), ("tiny", tiny, truth)):
         path = str(tmp_path / name)
         SS.ann_index_write(corpus, path)
         for sla in (None, 0.9):
             got = SS.ann_index_topk(spark, path, corpus, recall_sla=sla)
-            assert got.schema == SS.cosine_topk(tiny).schema, (name, sla)
+            assert got.schema == exact.schema, (name, sla)
             assert {tuple(r) for r in got.collect()} == want, (name, sla)
 
 
