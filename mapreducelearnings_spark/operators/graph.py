@@ -14,6 +14,12 @@ Reference parity cites (behavior studied, no code taken):
 - triangle counting, shuffle and broadcast variants:
   ReduceSideJoin/src/main/java/wc/CountFollowers.java:79-164;
   RepJoin/src/main/java/wc/CountFollowers.java:92-122 (count/3 at :119).
+
+An input within ``io.DRIVER_STATE_CAP`` rows is read once and finished
+on the driver in numpy (see the section below). For the triangle counts
+that read happens at call time, so under the cap they are eager, and
+``triangle_count``'s ``broadcast_probe`` only picks the join plan that
+runs above the cap.
 """
 
 from __future__ import annotations
@@ -50,11 +56,12 @@ _loop_shuffle_partitions = loop_conf
 
 
 # ---------------------------------------------------------------------------
-# Driver-side finish for small graphs: pagerank_standard and sssp read an
-# edge list of at most io.DRIVER_STATE_CAP rows once (io.to_driver) and
-# run their loop in numpy. The per-iteration Spark jobs of the distributed
-# loop are almost all driver overhead at that size (PERFORMANCE.md
-# lesson 29); above the cap the distributed loop is the only path.
+# Driver-side finish for small graphs: pagerank_standard, sssp and the
+# triangle counts read an edge list of at most io.DRIVER_STATE_CAP rows
+# once (io.to_driver) and finish in numpy. The Spark jobs of the
+# distributed plans are almost all driver overhead at that size
+# (PERFORMANCE.md lessons 29 and 32); above the cap the distributed plan
+# is the only path.
 # ---------------------------------------------------------------------------
 
 
@@ -397,17 +404,107 @@ def _sssp_local(spark, graph, source, max_iter):
 # ---------------------------------------------------------------------------
 
 
+#: Wedges the driver kernel expands per step: the driver holds a fixed
+#: amount of wedge state whatever the graph's shape.
+_WEDGE_CHUNK = 1 << 18
+
+
+def _triangle_counts(edges: DataFrame):
+    """(cycles, loop_walks) of an edge list within the cap, read once;
+    ``None`` above it, or when an id column is not integral (the join
+    plans then count). ``cycles`` is :func:`triangle_count_ordered`'s
+    count and ``cycles + loop_walks div 3`` is :func:`triangle_count`'s.
+
+    Both plans count edge-row triples, so duplicate edges count with
+    their multiplicity m(u, v), and a NULL endpoint joins nothing (it
+    still adds to the other endpoint's degree, as in the ordered plan's
+    degree table). The kernel replays the ordered plan on the distinct
+    edges: rank(v) = (degree(v), v); edge u→v is an anchor→b edge when v
+    out-ranks u, else (self-loops too) a c→anchor edge of anchor v;
+    each anchor's wedges (anchor→b, c→anchor) close on the edge b→c.
+    That counts every 3-cycle of distinct vertices once and every
+    2-cycle u⇄v once per self-loop on u or v. The plain plan counts
+    each of those three times (once per starting edge) and, beyond
+    them, the pure self-loop walks v→v→v→v: loop_walks = Σ m(v, v)³.
+    Wedges are expanded ``_WEDGE_CHUNK`` at a time; the degree order
+    bounds them by O(|E|^1.5), so a hub costs no more than its edges."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if not all(
+        isinstance(edges.schema[c].dataType, T.IntegralType) for c in ("src", "dst")
+    ):
+        return None
+    local = to_driver(edges.select("src", "dst"))
+    if local is None:
+        return None
+    ends, valid = [], []
+    for name in ("src", "dst"):
+        col = local.column(name)
+        ends.append(pc.fill_null(col, 0).to_numpy().astype(np.int64))
+        valid.append(pc.is_valid(col).to_numpy())
+    ids, deg = np.unique(
+        np.concatenate([ends[0][valid[0]], ends[1][valid[1]]]), return_counts=True
+    )
+    n = len(ids)
+    rank = np.empty(n, np.int64)
+    rank[np.argsort(deg, kind="stable")] = np.arange(n)  # ties: ids ascend
+    both = valid[0] & valid[1]
+    u = np.searchsorted(ids, ends[0][both])
+    v = np.searchsorted(ids, ends[1][both])
+    keys, mult = np.unique(u * n + v, return_counts=True)  # sorted by (u, v)
+    u, v = np.divmod(keys, n)
+    loop_walks = int(np.sum(mult[u == v] ** 3))
+
+    up = rank[v] > rank[u]
+    ab_anchor, ab_b, ab_m = u[up], v[up], mult[up]  # already sorted by u
+    order = np.argsort(v[~up], kind="stable")
+    ca_anchor, ca_c, ca_m = v[~up][order], u[~up][order], mult[~up][order]
+    na = np.bincount(ab_anchor, minlength=n)
+    nc = np.bincount(ca_anchor, minlength=n)
+    ab_start = np.cumsum(na) - na
+    ca_start = np.cumsum(nc) - nc
+    offsets = np.concatenate([[0], np.cumsum(na * nc)])
+    cycles = 0
+    for lo in range(0, int(offsets[-1]), _WEDGE_CHUNK):
+        wid = np.arange(lo, min(lo + _WEDGE_CHUNK, offsets[-1]))
+        x = np.searchsorted(offsets, wid, side="right") - 1
+        i, j = np.divmod(wid - offsets[x], nc[x])
+        ai, ci = ab_start[x] + i, ca_start[x] + j
+        close = ab_b[ai] * n + ca_c[ci]
+        pos = np.minimum(np.searchsorted(keys, close), len(keys) - 1)
+        hit = keys[pos] == close
+        cycles += int(np.sum(ab_m[ai][hit] * ca_m[ci][hit] * mult[pos[hit]]))
+    return cycles, loop_walks
+
+
+def _count_table(spark, count: int, nullable: bool) -> DataFrame:
+    """The one-row ``triangles`` local table of a driver-path count."""
+    field = T.StructField("triangles", T.LongType(), nullable)
+    return from_rows(spark, [(count,)], T.StructType([field]))
+
+
 def triangle_count(edges: DataFrame, broadcast_probe: bool = False) -> DataFrame:
     """Count directed 3-cycles and divide by 3 — each cycle is found once
     per starting vertex (RepJoin/.../CountFollowers.java:119 divides by 3;
     ReduceSideJoin runs the same two-join plan shuffle-side).
 
-    ``broadcast_probe=True`` replicates the closing edge set to every
-    task (RepJoin's distributed-cache hash map); False lets the joins
-    shuffle (ReduceSideJoin). Same result, two physical strategies —
-    the reference's own cross-implementation test oracle (SURVEY.md §5).
-    Input must be self-loop-free and deduplicated.
+    An edge list within ``io.DRIVER_STATE_CAP`` rows (integral ids) is
+    read once at call time and counted on the driver in numpy
+    (:func:`_triangle_counts`); the result is a one-row local table with
+    the join plan's schema, so under the cap the call is eager. Above
+    the cap the join plan below runs, and ``broadcast_probe`` picks it:
+    True replicates the closing edge set to every task (RepJoin's
+    distributed-cache hash map); False lets the joins shuffle
+    (ReduceSideJoin). Same result, two physical strategies — the
+    reference's own cross-implementation test oracle (SURVEY.md §5).
+    Every edge row counts, so input with duplicates or self-loops counts
+    closed walks, not triangles: deduplicate and drop self-loops first.
     """
+    counts = _triangle_counts(edges)
+    if counts is not None:
+        cycles, loop_walks = counts
+        return _count_table(edges.sparkSession, cycles + loop_walks // 3, True)
     a, b, c = edges.alias("a"), edges.alias("b"), edges.alias("c")
     if broadcast_probe:
         b, c = F.broadcast(b), F.broadcast(c)
@@ -441,7 +538,15 @@ def triangle_count_ordered(edges: DataFrame) -> DataFrame:
     7 ReusedExchange in the adaptive plan at sf0.01), so callers need
     not pre-materialize; persist ``edges`` anyway when it is itself an
     expensive derivation and AQE is off.
+
+    Under ``io.DRIVER_STATE_CAP`` the same anchoring runs on the driver
+    (:func:`_triangle_counts`), eagerly, into a one-row local table with
+    this plan's schema. It differs from :func:`triangle_count` only on
+    self-loops: the pure self-loop walks v→v→v→v are never anchored.
     """
+    counts = _triangle_counts(edges)
+    if counts is not None:
+        return _count_table(edges.sparkSession, counts[0], False)
     deg = (
         edges.select(F.col("src").alias("v"))
         .unionAll(edges.select(F.col("dst").alias("v")))

@@ -938,7 +938,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Triangle count, broadcast-probe plan (RepJoin/.../CountFollowers."
     "java:92-122) — same result as triangle_count by construction; the "
     "pair reproduces the reference's cross-implementation oracle "
-    "(SURVEY.md §5).",
+    "(SURVEY.md §5). The probe choice applies above io.DRIVER_STATE_CAP "
+    "only: under it both entries count on the driver in one kernel.",
 )
 def q_triangle_count_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return G.triangle_count(graph_edges(spark, sf_dir), broadcast_probe=True)

@@ -395,7 +395,10 @@ def compact_parquet(
     (dropped after the shuffle); reads stay bit-identical to
     pre-compaction (pytest-pinned), only the file layout changes.
     Unpartitioned datasets get the same treatment with a global file
-    count. ``target_bytes=None`` keeps the r13 behavior exactly."""
+    count. ``target_bytes=None`` keeps the r13 behavior exactly.
+
+    A dataset with no data file (one written from an empty frame holds
+    only ``_SUCCESS``) is left as it is: there is nothing to rewrite."""
     import math
 
     from pyspark.sql import functions as F
@@ -408,23 +411,30 @@ def compact_parquet(
     new_p = jvm.org.apache.hadoop.fs.Path(new_path)
     old_p = jvm.org.apache.hadoop.fs.Path(old_path)
     fs.delete(new_p, True)
+    # one driver-side FS listing (metadata, bounded by file count): the
+    # data bytes, and whether there is any data file at all — a dataset
+    # written from an empty frame has none, so nothing to compact and
+    # no schema to infer (a missing path still fails in the read)
+    total_bytes, n_files = 0, 0
+    exists = fs.exists(jpath)
+    stack = [jpath] if exists else []
+    while stack:
+        for st in fs.listStatus(stack.pop()):
+            name = st.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                stack.append(st.getPath())
+            else:
+                total_bytes += st.getLen()
+                n_files += 1
+    if exists and n_files == 0:
+        return
     df = read_parquet(spark, path)
     records_per_file = None
     if target_bytes is not None:
         # measured bytes/row from the CURRENT layout: total file bytes
-        # (one driver-side FS listing — metadata, bounded by file
-        # count) over the footer-served row count
-        total_bytes = 0
-        stack = [jpath]
-        while stack:
-            for st in fs.listStatus(stack.pop()):
-                name = st.getPath().getName()
-                if name.startswith(("_", ".")):
-                    continue
-                if st.isDirectory():
-                    stack.append(st.getPath())
-                else:
-                    total_bytes += st.getLen()
+        # over the footer-served row count
         total_rows = df.count()
         if total_rows > 0 and total_bytes > 0:
             records_per_file = max(

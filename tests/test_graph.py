@@ -95,10 +95,11 @@ def test_sssp_triangle_inequality(spark, sf_dir):
 # --- Triangles --------------------------------------------------------------
 
 
-def test_triangle_cross_implementation_equivalence(spark, sf_dir):
+def test_triangle_cross_implementation_equivalence(spark, sf_dir, distributed):
     """All three physical strategies must agree — the reference's own
     RepJoin vs ReduceSideJoin redundancy (SURVEY.md §5), extended with
-    the degree-ordered skew-safe plan."""
+    the degree-ordered skew-safe plan. Run above the cap, so each call
+    plans its joins."""
     e = graph_edges(spark, sf_dir)
     a = G.triangle_count(e, broadcast_probe=False).first()["triangles"]
     b = G.triangle_count(e, broadcast_probe=True).first()["triangles"]
@@ -106,7 +107,7 @@ def test_triangle_cross_implementation_equivalence(spark, sf_dir):
     assert a == b == c
 
 
-def test_triangle_known_micro_graph(spark):
+def test_triangle_known_micro_graph(spark, distributed):
     # one directed 3-cycle + noise edges
     rows = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]
     e = spark.createDataFrame(rows, "src: long, dst: long")
@@ -114,12 +115,12 @@ def test_triangle_known_micro_graph(spark):
     assert G.triangle_count_ordered(e).first()["triangles"] == 1
 
 
-def test_triangle_ordered_hub_graph(spark):
+def test_triangle_ordered_hub_graph(spark, monkeypatch):
     """A star hub plus satellite cycles — the shape where the unoriented
     wedge join blows up quadratically in hub degree. The ordered plan
     must still agree with the reference-faithful plan, including cycles
     THROUGH the hub (where the hub is never the anchor) and degree-tie
-    cycles (id tiebreak)."""
+    cycles (id tiebreak); so must the driver path of both."""
     rows = []
     # hub 0 with 40 out- and 40 in-edges (degree 80)
     for i in range(1, 41):
@@ -133,9 +134,25 @@ def test_triangle_ordered_hub_graph(spark):
         a, b, c = 200 + 3 * j, 201 + 3 * j, 202 + 3 * j
         rows += [(a, b), (b, c), (c, a)]
     e = spark.createDataFrame(rows, "src: long, dst: long").distinct()
-    ref = G.triangle_count(e).first()["triangles"]
-    ordered = G.triangle_count_ordered(e).first()["triangles"]
-    assert ref == ordered == 15
+    for run in (lambda: G.triangle_count(e), lambda: G.triangle_count_ordered(e)):
+        (_, (lrows, _)), (_, (drows, _)) = _on_both_paths(monkeypatch, run)
+        assert lrows == drows == [(15,)]
+
+
+def test_triangle_star_hub_exact_on_the_driver(spark, monkeypatch):
+    """Hub 0 with in- and out-degree 2 000: 4 M wedges i→0→j for the
+    plain join, but the degree order anchors only at the spokes. 37
+    spokes close a cycle 0→i→2000+i→0. The count is exact with the
+    default wedge chunk and with chunks smaller than the wedge count."""
+    k = 37
+    rows = [(0, i) for i in range(1, 2001)] + [(2000 + i, 0) for i in range(1, 2001)]
+    rows += [(i, 2000 + i) for i in range(1, k + 1)]
+    e = spark.createDataFrame(rows, "src: long, dst: long")
+    for chunk in (G._WEDGE_CHUNK, 5):
+        monkeypatch.setattr(G, "_WEDGE_CHUNK", chunk)
+        for fn in (G.triangle_count, G.triangle_count_ordered):
+            out, jobs = jobs_of(spark, lambda: fn(e).collect())
+            assert out == [(k,)] and jobs == 1
 
 
 # --- k-means ----------------------------------------------------------------
@@ -723,6 +740,39 @@ def test_sssp_driver_path_matches_distributed(
         assert got[max_iter] == float(max_iter) and got[max_iter + 1] == G.INF
 
 
+TRIANGLE_GRAPHS = {
+    **GRAPHS,
+    "loop_x3": [(5, 5)] * 3,
+    "loops_and_2cycle": [(1, 1), (1, 1), (1, 2), (2, 1), (2, 1)],
+}
+
+
+@pytest.mark.parametrize(
+    "fn", [G.triangle_count, G.triangle_count_ordered], ids=["plain", "ordered"]
+)
+@pytest.mark.parametrize("name", sorted(TRIANGLE_GRAPHS))
+def test_triangle_driver_path_matches_distributed(spark, monkeypatch, fn, name):
+    edges = spark.createDataFrame(TRIANGLE_GRAPHS[name], "src: long, dst: long")
+    (ls, (lrows, ljobs)), (ds, (drows, _)) = _on_both_paths(
+        monkeypatch, lambda: fn(edges)
+    )
+    assert ljobs == 0
+    assert ls == ds
+    assert lrows == drows
+
+
+@pytest.mark.parametrize(
+    "name, plain, ordered", [("loop_x3", 9, 0), ("loops_and_2cycle", 6, 4)]
+)
+def test_triangle_plans_differ_only_on_self_loop_walks(spark, name, plain, ordered):
+    """Only the plain plan counts the pure self-loop walks v→v→v→v: 27
+    for a triple loop (div 3: 9), 8 for a double loop (div 3: 2, added
+    to the 4 loop-weighted 2-cycles 1⇄2 that both plans count)."""
+    edges = spark.createDataFrame(TRIANGLE_GRAPHS[name], "src: long, dst: long")
+    assert G.triangle_count(edges).collect() == [(plain,)]
+    assert G.triangle_count_ordered(edges).collect() == [(ordered,)]
+
+
 def test_loop_operators_keep_non_nullable_vertex_schema(spark, monkeypatch):
     """Edges with non-nullable ids (a ring built from spark.range): the
     driver path's vertex field must carry the same nullability."""
@@ -834,6 +884,8 @@ def test_loop_operators_under_cap_run_only_the_bounded_read(spark, follower_parq
             ),
             4,
         ),
+        (lambda: G.triangle_count(edges), 1),
+        (lambda: G.triangle_count_ordered(edges), 1),
     ]
     for run, budget in cases:
         out, jobs = jobs_of(spark, run)
@@ -851,6 +903,8 @@ def test_loop_operators_under_cap_leave_session_conf_alone(spark, micro_graph):
         lambda: G.pagerank_standard(spark, micro_graph),
         lambda: G.sssp(spark, micro_graph, 1),
         lambda: KM.kmeans_1d(points, "v", k=2),
+        lambda: G.triangle_count(micro_graph),
+        lambda: G.triangle_count_ordered(micro_graph),
     ):
         before = spark.conf.getAll
         run().collect()

@@ -1227,7 +1227,9 @@ def test_ann_index_empty_and_tiny_corpus(spark, sf_dir, tmp_path):
     returns 0 rows with the normal result schema instead of failing
     schema inference; a 3-vector corpus (fewer vectors than k and than
     IVF_CELLS) probes every cell and reranks every candidate, so it
-    returns exactly the brute-force top-k (2 neighbors per query)."""
+    returns exactly the brute-force top-k (2 neighbors per query). Both
+    indexes answer the same after ann_index_compact (a no-op on the
+    empty one, which has no data file to rewrite)."""
     emb = load_table(spark, sf_dir, "embeddings")
     empty, tiny = emb.where(F.col("vec_id") < 0), emb.where(F.col("vec_id") < 3)
     exact = SS.cosine_topk(tiny, n_queries=8, k=5)
@@ -1236,10 +1238,15 @@ def test_ann_index_empty_and_tiny_corpus(spark, sf_dir, tmp_path):
     for name, corpus, want in (("empty", empty, set()), ("tiny", tiny, truth)):
         path = str(tmp_path / name)
         SS.ann_index_write(corpus, path)
-        for sla in (None, 0.9):
-            got = SS.ann_index_topk(spark, path, corpus, recall_sla=sla)
-            assert got.schema == exact.schema, (name, sla)
-            assert {tuple(r) for r in got.collect()} == want, (name, sla)
+        for compacted in (False, True):
+            if compacted:
+                SS.ann_index_compact(spark, path)
+            for sla in (None, 0.9):
+                got = SS.ann_index_topk(spark, path, corpus, recall_sla=sla)
+                assert got.schema == exact.schema, (name, compacted, sla)
+                assert {tuple(r) for r in got.collect()} == want, (
+                    name, compacted, sla,
+                )
 
 
 def test_streaming_session_windows_match_closed_batch_sessions(spark, sf_dir):

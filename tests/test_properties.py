@@ -5,12 +5,14 @@ showed that one data distribution is not enough.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from mapreducelearnings_spark.functions import skew as SK
 from mapreducelearnings_spark.operators import graph as G
 from mapreducelearnings_spark.operators import relational as R
 from mapreducelearnings_spark.operators.asof import asof_join
+from mapreducelearnings_spark.sources import io
 
 edge_lists = st.lists(
     st.tuples(st.integers(0, 15), st.integers(0, 15)), min_size=1, max_size=40
@@ -29,6 +31,7 @@ def test_salted_count_equals_direct_on_random_edges(spark, edges):
 @settings(max_examples=6, deadline=None)
 @given(edges=edge_lists)
 def test_triangle_plans_agree_on_random_graphs(spark, edges):
+    """The three join plans, forced by a negative driver cap."""
     df = (
         spark.createDataFrame(edges, "src: long, dst: long")
         .where("src <> dst")
@@ -36,10 +39,32 @@ def test_triangle_plans_agree_on_random_graphs(spark, edges):
     )
     if df.count() == 0:
         return
-    a = G.triangle_count(df, broadcast_probe=False).first()["triangles"]
-    b = G.triangle_count(df, broadcast_probe=True).first()["triangles"]
-    c = G.triangle_count_ordered(df).first()["triangles"]
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(io, "DRIVER_STATE_CAP", -1)
+        a = G.triangle_count(df, broadcast_probe=False).first()["triangles"]
+        b = G.triangle_count(df, broadcast_probe=True).first()["triangles"]
+        c = G.triangle_count_ordered(df).first()["triangles"]
     assert a == b == c
+
+
+multigraphs = st.lists(
+    st.tuples(st.none() | st.integers(0, 6), st.none() | st.integers(0, 6)),
+    max_size=30,
+)
+
+
+@settings(max_examples=6, deadline=None)
+@given(edges=multigraphs)
+def test_triangle_driver_kernel_matches_join_plans(spark, edges):
+    """Raw multigraphs — duplicates, self-loops, NULL endpoints — with
+    wedge chunks of 3: the driver kernel gives each plan's exact count."""
+    df = spark.createDataFrame(edges, "src: long, dst: long")
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(G, "_WEDGE_CHUNK", 3)
+        local = [G.triangle_count(df).first(), G.triangle_count_ordered(df).first()]
+        m.setattr(io, "DRIVER_STATE_CAP", -1)
+        dist = [G.triangle_count(df).first(), G.triangle_count_ordered(df).first()]
+    assert local == dist
 
 
 @settings(max_examples=6, deadline=None)

@@ -6,10 +6,11 @@ For each size it writes a follower graph with ``size`` edges over
 shape, FIXTURES.md §1), then times warm calls of every loop operator
 (call + collect, median of ``--reps``):
 
-- ``driver_s``: the driver path, forced by a cap above ``size``;
+- ``driver_s``: the driver path, forced by a cap above ``rows`` (the
+  operator's input rows);
 - ``distributed_s``: the distributed path alone (cap −1, no read);
 - ``probed_s``: the distributed path after a bounded read that finds
-  the input above the cap (cap ``size // 2``: the read takes half the
+  the input above the cap (cap ``rows // 2``: the read takes half the
   rows, then gives up) — what a graph just above the cap pays.
 
 ``connected_components`` gets its cap as ``driver_edge_cap``; it has no
@@ -19,13 +20,17 @@ of the residual.
 
 ``kmeans_1d`` runs over ``size`` distinct doubles instead (a table like
 ``kmeans_centroids``' o_totalprice; follower counts have only a few
-hundred distinct values at any of these sizes). ``read_s`` times the
-bounded read alone on the edge file and on the same edges behind a
-shuffle (``repartition(8)``), whose upstream the read evaluates once
-more. Prints one JSON line per (size, operator).
+hundred distinct values at any of these sizes). ``triangle_count``
+runs over the graph's distinct, self-loop-free edges, written to a file
+of their own: ``rows`` is a seventh to a quarter of ``size`` there,
+since the power-law endpoints repeat; for every other operator it is
+``size``. ``read_s`` times the bounded read alone on the edge file and
+on the same edges behind a shuffle (``repartition(8)``), whose upstream
+the read evaluates once more. Prints one JSON line per (size,
+operator).
 
 Usage: python tools/driver_cap_sweep.py [--sizes 50000,100000,...]
-           [--reps 3] [--out DIR]
+           [--reps 3] [--ops triangle_count,...] [--out DIR]
 Run it alone on the machine: a concurrent Spark job skews every timing.
 """
 
@@ -51,13 +56,18 @@ from mapreducelearnings_spark.session import get_spark  # noqa: E402
 from mapreducelearnings_spark.sources import io  # noqa: E402
 
 
-def write_graph(path: str, size: int, seed: int = 1) -> None:
+def write_graph(path: str, simple_path: str, size: int, seed: int = 1) -> int:
+    """The follower graph to ``path``, its distinct self-loop-free edges
+    to ``simple_path``; returns how many of those there are."""
     rng = np.random.default_rng(seed)
     nv = max(1, size // 10)
     ids = rng.permutation(np.arange(1, 10 * nv + 1))[:nv]
     src = ids[rng.zipf(1.6, size) % nv]
     dst = ids[rng.zipf(1.3, size) % nv]
     pq.write_table(pa.table({"src": src, "dst": dst}), path)
+    simple = np.unique(np.stack([src, dst], 1)[src != dst], axis=0)
+    pq.write_table(pa.table({"src": simple[:, 0], "dst": simple[:, 1]}), simple_path)
+    return len(simple)
 
 
 def write_points(path: str, size: int, seed: int = 1) -> None:
@@ -93,6 +103,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sizes", default="50000,100000,200000,400000,800000")
     ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--ops", default=None, help="comma list; default all")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
     out = args.out or tempfile.mkdtemp(prefix="driver_cap_sweep_")
@@ -101,30 +112,37 @@ def main() -> None:
 
     for size in map(int, args.sizes.split(",")):
         gpath = os.path.join(out, f"edges_{size}.parquet")
+        spath = os.path.join(out, f"simple_{size}.parquet")
         ppath = os.path.join(out, f"points_{size}.parquet")
-        write_graph(gpath, size)
+        n_simple = write_graph(gpath, spath, size)
         write_points(ppath, size)
         edges = spark.read.parquet(gpath)
+        simple = spark.read.parquet(spath)
         points = spark.read.parquet(ppath)
         hub = (
             edges.groupBy("src").count().orderBy("count", ascending=False).first()
         )["src"]
+        # op -> (run, rows of its input)
         ops = {
-            "pagerank_standard": lambda cap: G.pagerank_standard(spark, edges),
-            "sssp": lambda cap: G.sssp(spark, edges, hub),
-            "connected_components": lambda cap: G.connected_components(
-                spark, edges, driver_edge_cap=cap
+            "pagerank_standard": (lambda cap: G.pagerank_standard(spark, edges), size),
+            "sssp": (lambda cap: G.sssp(spark, edges, hub), size),
+            "connected_components": (
+                lambda cap: G.connected_components(spark, edges, driver_edge_cap=cap),
+                size,
             ),
-            "kmeans_1d": lambda cap: KM.kmeans_1d(
-                points, "v", k=4, fixed_iterations=6
+            "kmeans_1d": (
+                lambda cap: KM.kmeans_1d(points, "v", k=4, fixed_iterations=6),
+                size,
             ),
+            "triangle_count": (lambda cap: G.triangle_count(simple), n_simple),
         }
-        for name, run in ops.items():
-            row = {"size": size, "op": name}
-            row["driver_s"] = timed(with_cap(10 * size, run), args.reps)
+        for name in args.ops.split(",") if args.ops else ops:
+            run, rows = ops[name]
+            row = {"size": size, "op": name, "rows": rows}
+            row["driver_s"] = timed(with_cap(10 * rows, run), args.reps)
             if name != "connected_components":
                 row["distributed_s"] = timed(with_cap(-1, run), args.reps)
-            row["probed_s"] = timed(with_cap(size // 2, run), args.reps)
+            row["probed_s"] = timed(with_cap(rows // 2, run), args.reps)
             print(json.dumps(row), flush=True)
         shuffled = edges.repartition(8)
         for label, df in (("file", edges), ("shuffled", shuffled)):
