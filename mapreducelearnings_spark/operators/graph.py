@@ -65,37 +65,50 @@ _loop_shuffle_partitions = loop_conf
 # ---------------------------------------------------------------------------
 
 
-def _driver_graph(edges: DataFrame):
-    """An edge list within the cap, read once and densely indexed:
-    (field, ids, si, di, has_null), else ``None``. ``field`` is the
-    distributed path's ``vertex`` field (the src ∪ dst union's widened
-    type and nullability, from analysis alone), ``ids`` the sorted
-    distinct non-NULL endpoints as an Arrow array, ``si``/``di`` each
-    edge's endpoint positions in ``ids`` (−1 for NULL) and ``has_null``
-    whether a NULL endpoint exists — the distributed union keeps NULL as
-    one vertex that no equi-join reaches."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    local = to_driver(edges.select("src", "dst"))
-    if local is None:
-        return None
-    field = (
+def _vertex_field(edges: DataFrame) -> T.StructField:
+    """The distributed path's ``vertex`` field: the src ∪ dst union's
+    widened type and nullability, from analysis alone."""
+    return (
         edges.select(F.col("src").alias("vertex"))
         .unionByName(edges.select(F.col("dst").alias("vertex")))
         .schema["vertex"]
     )
-    at = to_arrow_type(field.dataType)
-    src, dst = local.column("src").cast(at), local.column("dst").cast(at)
-    both = pa.chunked_array(src.chunks + dst.chunks, type=at)
+
+
+def _dense_ids(src, dst):
+    """(ids, si, di) of two Arrow columns of one type: ``ids`` the sorted
+    distinct non-NULL endpoints, ``si``/``di`` each edge's endpoint
+    positions in ``ids`` (−1 for NULL)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    both = pa.chunked_array(src.chunks + dst.chunks, type=src.type)
     ids = pc.unique(both.drop_null())
     ids = ids.take(pc.sort_indices(ids))
 
     def pos(col):
         return pc.index_in(col, value_set=ids).fill_null(-1).to_numpy()
 
-    return field, ids, pos(src), pos(dst), both.null_count > 0
+    return ids, pos(src), pos(dst)
+
+
+def _driver_graph(edges: DataFrame):
+    """An edge list within the cap, read once and densely indexed:
+    (field, ids, si, di, has_null), else ``None``. ``field`` is
+    :func:`_vertex_field`, ``ids``/``si``/``di`` are :func:`_dense_ids`
+    of the endpoints cast to its type, and ``has_null`` whether a NULL
+    endpoint exists — the distributed union keeps NULL as one vertex
+    that no equi-join reaches."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    local = to_driver(edges.select("src", "dst"))
+    if local is None:
+        return None
+    field = _vertex_field(edges)
+    at = to_arrow_type(field.dataType)
+    src, dst = local.column("src").cast(at), local.column("dst").cast(at)
+    ids, si, di = _dense_ids(src, dst)
+    return field, ids, si, di, src.null_count + dst.null_count > 0
 
 
 def _local_result(spark, graph, values, value_field: T.StructField) -> DataFrame:
@@ -411,48 +424,47 @@ _WEDGE_CHUNK = 1 << 18
 
 def _triangle_counts(edges: DataFrame):
     """(cycles, loop_walks) of an edge list within the cap, read once;
-    ``None`` above it, or when an id column is not integral (the join
-    plans then count). ``cycles`` is :func:`triangle_count_ordered`'s
+    ``None`` above it. ``cycles`` is :func:`triangle_count_ordered`'s
     count and ``cycles + loop_walks div 3`` is :func:`triangle_count`'s.
 
     Both plans count edge-row triples, so duplicate edges count with
     their multiplicity m(u, v), and a NULL endpoint joins nothing (it
     still adds to the other endpoint's degree, as in the ordered plan's
-    degree table). The kernel replays the ordered plan on the distinct
-    edges: rank(v) = (degree(v), v); edge u→v is an anchor→b edge when v
-    out-ranks u, else (self-loops too) a c→anchor edge of anchor v;
-    each anchor's wedges (anchor→b, c→anchor) close on the edge b→c.
-    That counts every 3-cycle of distinct vertices once and every
-    2-cycle u⇄v once per self-loop on u or v. The plain plan counts
-    each of those three times (once per starting edge) and, beyond
-    them, the pure self-loop walks v→v→v→v: loop_walks = Σ m(v, v)³.
+    degree table). Ids of any atomic type compare as the joins compare
+    them: -0.0 equals 0.0, NaN equals NaN, and columns of two types
+    compare as their widened type (only that case pays
+    :func:`_vertex_field`'s analysis). The kernel replays the ordered
+    plan on the distinct edges: rank(v) = (degree(v), v); edge u→v is
+    an anchor→b edge when v out-ranks u, else (self-loops too) a
+    c→anchor edge of anchor v; each anchor's wedges (anchor→b, c→anchor)
+    close on the edge b→c. That counts every 3-cycle of distinct
+    vertices once and every 2-cycle u⇄v once per self-loop on u or v.
+    The plain plan counts each of those three times (once per starting
+    edge) and, beyond them, the pure self-loop walks v→v→v→v:
+    loop_walks = Σ m(v, v)³.
     Wedges are expanded ``_WEDGE_CHUNK`` at a time; the degree order
     bounds them by O(|E|^1.5), so a hub costs no more than its edges."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    if not all(
-        isinstance(edges.schema[c].dataType, T.IntegralType) for c in ("src", "dst")
-    ):
-        return None
     local = to_driver(edges.select("src", "dst"))
     if local is None:
         return None
-    ends, valid = [], []
-    for name in ("src", "dst"):
-        col = local.column(name)
-        ends.append(pc.fill_null(col, 0).to_numpy().astype(np.int64))
-        valid.append(pc.is_valid(col).to_numpy())
-    ids, deg = np.unique(
-        np.concatenate([ends[0][valid[0]], ends[1][valid[1]]]), return_counts=True
-    )
-    n = len(ids)
+    src, dst = local.column("src"), local.column("dst")
+    if src.type != dst.type:  # the joins compare the widened type
+        at = to_arrow_type(_vertex_field(edges).dataType)
+        src, dst = src.cast(at), dst.cast(at)
+    if pa.types.is_floating(src.type):  # joins equate -0.0 and 0.0
+        src, dst = pc.add(src, 0.0), pc.add(dst, 0.0)
+    ids, s, d = _dense_ids(src, dst)
+    s, d, n = s.astype(np.int64), d.astype(np.int64), len(ids)
+    deg = np.bincount(np.concatenate([s, d]) + 1, minlength=n + 1)[1:]
     rank = np.empty(n, np.int64)
     rank[np.argsort(deg, kind="stable")] = np.arange(n)  # ties: ids ascend
-    both = valid[0] & valid[1]
-    u = np.searchsorted(ids, ends[0][both])
-    v = np.searchsorted(ids, ends[1][both])
-    keys, mult = np.unique(u * n + v, return_counts=True)  # sorted by (u, v)
+    both = (s >= 0) & (d >= 0)
+    keys, mult = np.unique(s[both] * n + d[both], return_counts=True)
     u, v = np.divmod(keys, n)
     loop_walks = int(np.sum(mult[u == v] ** 3))
 
@@ -489,8 +501,8 @@ def triangle_count(edges: DataFrame, broadcast_probe: bool = False) -> DataFrame
     per starting vertex (RepJoin/.../CountFollowers.java:119 divides by 3;
     ReduceSideJoin runs the same two-join plan shuffle-side).
 
-    An edge list within ``io.DRIVER_STATE_CAP`` rows (integral ids) is
-    read once at call time and counted on the driver in numpy
+    An edge list within ``io.DRIVER_STATE_CAP`` rows is read once at
+    call time and counted on the driver in numpy
     (:func:`_triangle_counts`); the result is a one-row local table with
     the join plan's schema, so under the cap the call is eager. Above
     the cap the join plan below runs, and ``broadcast_probe`` picks it:

@@ -30,7 +30,7 @@ the read evaluates once more. Prints one JSON line per (size,
 operator).
 
 Usage: python tools/driver_cap_sweep.py [--sizes 50000,100000,...]
-           [--reps 3] [--ops triangle_count,...] [--out DIR]
+           [--reps 3] [--out DIR]
 Run it alone on the machine: a concurrent Spark job skews every timing.
 """
 
@@ -103,7 +103,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sizes", default="50000,100000,200000,400000,800000")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--ops", default=None, help="comma list; default all")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
     out = args.out or tempfile.mkdtemp(prefix="driver_cap_sweep_")
@@ -136,8 +135,7 @@ def main() -> None:
             ),
             "triangle_count": (lambda cap: G.triangle_count(simple), n_simple),
         }
-        for name in args.ops.split(",") if args.ops else ops:
-            run, rows = ops[name]
+        for name, (run, rows) in ops.items():
             row = {"size": size, "op": name, "rows": rows}
             row["driver_s"] = timed(with_cap(10 * rows, run), args.reps)
             if name != "connected_components":
