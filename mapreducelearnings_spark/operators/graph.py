@@ -56,18 +56,25 @@ _loop_shuffle_partitions = loop_conf
 
 
 # ---------------------------------------------------------------------------
-# Driver-side finish for small graphs: pagerank_standard, sssp and the
-# triangle counts read an edge list of at most io.DRIVER_STATE_CAP rows
-# once (io.to_driver) and finish in numpy. The Spark jobs of the
-# distributed plans are almost all driver overhead at that size
-# (PERFORMANCE.md lessons 29 and 32); above the cap the distributed plan
-# is the only path.
+# Driver-side finish for small graphs: pagerank_standard, sssp,
+# connected_components and the triangle counts read an edge list of at
+# most io.DRIVER_STATE_CAP rows once (io.to_driver) and finish in numpy.
+# A bare parquet scan is read from its files with no Spark job, and above
+# the cap it is not read at all (its footers count the rows). The Spark
+# jobs of the distributed plans are almost all driver overhead at that
+# size (PERFORMANCE.md lessons 29, 32 and 33); above the cap the
+# distributed plan is the only path.
 # ---------------------------------------------------------------------------
 
 
 def _vertex_field(edges: DataFrame) -> T.StructField:
     """The distributed path's ``vertex`` field: the src ∪ dst union's
-    widened type and nullability, from analysis alone."""
+    widened type and nullability. Columns of one type need no union
+    analysis (0.035–0.09 s a call, PERFORMANCE.md lesson 32): the union
+    keeps the type, and a column of it is nullable if either side is."""
+    s, d = edges.schema["src"], edges.schema["dst"]
+    if s.dataType == d.dataType:
+        return T.StructField("vertex", s.dataType, s.nullable or d.nullable)
     return (
         edges.select(F.col("src").alias("vertex"))
         .unionByName(edges.select(F.col("dst").alias("vertex")))
@@ -92,18 +99,24 @@ def _dense_ids(src, dst):
     return ids, pos(src), pos(dst)
 
 
-def _driver_graph(edges: DataFrame):
+def _driver_graph(edges: DataFrame, drop_null_dst: bool = False):
     """An edge list within the cap, read once and densely indexed:
     (field, ids, si, di, has_null), else ``None``. ``field`` is
     :func:`_vertex_field`, ``ids``/``si``/``di`` are :func:`_dense_ids`
     of the endpoints cast to its type, and ``has_null`` whether a NULL
     endpoint exists — the distributed union keeps NULL as one vertex
-    that no equi-join reaches."""
+    that no equi-join reaches. ``drop_null_dst`` drops the rows with a
+    NULL dst after the read, so a bare scan keeps its file read; the
+    field is the same as the filtered plan's, since a filter keeps its
+    input's columns."""
+    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_type
 
     local = to_driver(edges.select("src", "dst"))
     if local is None:
         return None
+    if drop_null_dst:
+        local = local.filter(pc.is_valid(local.column("dst")))
     field = _vertex_field(edges)
     at = to_arrow_type(field.dataType)
     src, dst = local.column("src").cast(at), local.column("dst").cast(at)
@@ -678,7 +691,7 @@ def sssp_with_paths(
 
 # Diagnostics from the most recent connected_components call (driver-side
 # observability for tests and ops: how big was the residual the driver
-# union-find actually read, and how many extra/star rounds fired).
+# finish actually read, and how many extra/star rounds fired).
 CC_LAST_STATS: dict[str, int] = {}
 
 
@@ -736,26 +749,35 @@ def _root_graph(forest: DataFrame) -> DataFrame:
     )
 
 
-def _union_find(local) -> list[tuple]:
-    """Driver union-find over a residual edge table (small by
-    construction; a k-row control read like the centroid collect):
-    (vertex, min vertex of its component) for every endpoint."""
-    parent: dict[int, int] = {}
+_CC_SCHEMA = T.StructType(
+    [T.StructField("vertex", T.LongType()), T.StructField("component", T.LongType())]
+)
 
-    def find(x: int) -> int:
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
 
-    for a, b in zip(local.column("src").to_pylist(), local.column("dst").to_pylist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    return [(v, find(v)) for v in parent]
+def _components_local(spark, local) -> DataFrame:
+    """(vertex, component) local table of a driver-side edge table: every
+    endpoint of a row without a NULL, labelled with the smallest id of
+    its component. Each round hooks every root onto the smallest root
+    across its edges, then pointer-jumps until every vertex points at
+    its root. Over :func:`_dense_ids` positions the smallest position is
+    the smallest id, and a parent is never above its child, so a
+    component's root is its minimum."""
+    import numpy as np
+    import pyarrow as pa
+
+    local = local.drop_null()  # a NULL endpoint adds no vertex, no link
+    ids, s, d = _dense_ids(
+        local.column("src").cast(pa.int64()), local.column("dst").cast(pa.int64())
+    )
+    parent = np.arange(len(ids))
+    while True:
+        while not np.array_equal(up := parent[parent], parent):
+            parent = up
+        ps, pd = parent[s], parent[d]
+        if np.array_equal(ps, pd):
+            break
+        np.minimum.at(parent, np.maximum(ps, pd), np.minimum(ps, pd))
+    return from_columns(spark, [ids, ids.take(parent)], _CC_SCHEMA)
 
 
 def connected_components(
@@ -793,15 +815,17 @@ def connected_components(
 
     Every residual is read through ``io.to_driver``, so the driver never
     holds more than ``driver_edge_cap`` + 1 of its rows, and the
-    residual handed to the driver-side union-find is bounded by the cap
-    REGARDLESS of partition layout (up to the star budget, which
-    converges in O(log²) rounds per the paper). A graph with at most
-    ``driver_edge_cap`` edges runs ZERO contraction rounds and never
-    enters ``loop_conf``: one bounded read, the driver union-find, and
-    the labels come back as a local table — no Python worker starts
+    residual handed to the driver finish (:func:`_components_local`,
+    numpy) is bounded by the cap REGARDLESS of partition layout (up to
+    the star budget, which converges in O(log²) rounds per the paper).
+    A graph with at most ``driver_edge_cap`` edges runs ZERO contraction
+    rounds and never enters ``loop_conf``: one bounded read (none at all
+    from a bare parquet scan, read from its files), the driver finish,
+    and the labels come back as a local table — no Python worker starts
     (lesson 28 in PERFORMANCE.md). Otherwise one broadcast join +
     min-agg maps every vertex to its component. ``CC_LAST_STATS``
-    reports the rounds run. Both paths give the same labels.
+    reports the rounds run. Both paths give the same labels. An edge
+    with a NULL endpoint adds no vertex and no link on either path.
 
     Returns (vertex, component) with component = min vertex id in the
     component (union-by-min keeps every local root the minimum of its
@@ -816,7 +840,9 @@ def connected_components(
         # the residual is the whole edge list: its map covers every
         # vertex and IS the answer
         CC_LAST_STATS.update(residual_edges=local.num_rows, rounds=0, star_rounds=0)
-        return from_rows(spark, _union_find(local), "vertex long, component long")
+        return _components_local(spark, local)
+    # an edge with a NULL endpoint adds no vertex and no link
+    g = g.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     # Two widths for two concerns (r15): ``loop_partitions`` keeps the
     # CONTRACTION width (it gates the per-partition Python union-find's
     # parallelism over edge rows — compute-bound, wants cores), while
@@ -854,7 +880,7 @@ def connected_components(
         CC_LAST_STATS["rounds"] = len(forests)
         CC_LAST_STATS["star_rounds"] = max(0, len(forests) - 1 - max_iter)
 
-        mapping = from_rows(spark, _union_find(local), "vertex long, component long")
+        mapping = _components_local(spark, local)
         labels = forests[0]
         for f2 in forests[1:]:
             # compose: vertex → root → contracted root (left join:
@@ -1109,10 +1135,10 @@ def pagerank_standard(
     """
     # a genuine NULL dst in unclean input would otherwise be folded into
     # the synthetic NULL-sink group and silently counted as dangling mass
-    edges = edges.where(F.col("dst").isNotNull())
-    graph = _driver_graph(edges)
+    graph = _driver_graph(edges, drop_null_dst=True)
     if graph is not None:
         return _pagerank_local(spark, graph, iterations, damping)
+    edges = edges.where(F.col("dst").isNotNull())
     with _loop_shuffle_partitions(spark, loop_partitions):
         verts = (
             edges.select(F.col("src").alias("v"))

@@ -21,6 +21,7 @@ engine's durable answer to the reference's HashPartitioner co-partitioning
 
 from __future__ import annotations
 
+import contextlib
 import functools
 from types import SimpleNamespace
 
@@ -223,7 +224,9 @@ def from_columns(
 #: driver instead of in per-iteration Spark jobs. Read at call time. Not
 #: a speed crossover (every driver path measured faster up to 8× this,
 #: PERFORMANCE.md lesson 30): it bounds the rows the driver holds and the
-#: rows an input above it moves through the read.
+#: rows an input above it moves through the read. A bare parquet scan
+#: above it is not read at all: its footers give the row count. A
+#: negative value turns the driver path off.
 DRIVER_STATE_CAP = 100_000
 
 
@@ -231,21 +234,161 @@ def to_driver(df: DataFrame, cap: int | None = None):
     """The whole of ``df`` as a pyarrow table when it has at most ``cap``
     rows (default :data:`DRIVER_STATE_CAP`), else ``None``.
 
-    One bounded read: ``limit(cap + 1)`` collected through Arrow. The
-    Arrow collect executes the ``CollectLimit`` plan as one job — every
-    partition stops after cap + 1 rows and a single-partition exchange
-    inside the same job gathers them — so the driver never holds more
-    than cap + 1 rows, and the exchange moves at most partitions ×
-    (cap + 1). (``collect``/``take`` on the same plan scan 1 → 4 → …
-    partitions in escalating jobs; an explicit ``repartition(1)`` under
-    the limit costs two more jobs under AQE.) A cap of 0 still reads, so
-    an empty frame comes back as an empty table; a negative cap turns
-    the driver path off and reads nothing."""
+    A bare parquet scan (:func:`_parquet_scan`) is read from its files
+    with pyarrow, in no Spark job: the footers' row counts are added up
+    first, and above the cap nothing more is read. The table is cast to
+    the schema Spark's own Arrow collect gives the frame. Any pyarrow
+    error on the way takes the Spark read below instead.
+
+    Anything else is one bounded read: ``limit(cap + 1)`` collected
+    through Arrow. The Arrow collect executes the ``CollectLimit`` plan
+    as one job — every partition stops after cap + 1 rows and a
+    single-partition exchange inside the same job gathers them — so the
+    driver never holds more than cap + 1 rows, and the exchange moves at
+    most partitions × (cap + 1). (``collect``/``take`` on the same plan
+    scan 1 → 4 → … partitions in escalating jobs; an explicit
+    ``repartition(1)`` under the limit costs two more jobs under AQE.)
+
+    A cap of 0 still reads, so an empty frame comes back as an empty
+    table; a negative cap turns the driver path off and reads nothing."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     cap = DRIVER_STATE_CAP if cap is None else cap
     if cap < 0:
         return None
+    scan = _parquet_scan(df)
+    if scan is not None:
+        # the schema DataFrame.toArrow casts to
+        schema = to_arrow_schema(
+            df.schema,
+            error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+        )
+        try:
+            return _read_parquet_files(*scan, schema, cap)
+        except (OSError, KeyError, pa.ArrowException):
+            pass  # Spark reads what pyarrow cannot, or raises its own error
     table = df.limit(cap + 1).toArrow()
     return table if table.num_rows <= cap else None
+
+
+#: Spark types whose parquet values pyarrow reads as Spark does.
+#: Dates, timestamps, decimals and nested types are left out: Spark
+#: rebases legacy dates, reads INT96 and applies ``nanosAsLong``.
+_FILE_READ_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType, T.BinaryType,
+)
+
+_PROJECT = "org.apache.spark.sql.catalyst.plans.logical.Project"
+_ATTRIBUTE = "org.apache.spark.sql.catalyst.expressions.AttributeReference"
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_HADOOP_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PARQUET_FORMAT = (
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
+)
+
+
+def _parquet_scan(df: DataFrame):
+    """(local file paths, parquet column per output column) of a bare
+    parquet scan, else ``None``. Bare: the analyzed plan the frame
+    already holds is zero or more ``Project``\\ s of plain attributes
+    over the ``LogicalRelation`` of an unpartitioned parquet
+    ``HadoopFsRelation`` on ``file:`` paths, and every column is of a
+    :data:`_FILE_READ_TYPES` type with no parquet field id. The files
+    are Spark's own listing of the relation."""
+    from py4j.protocol import Py4JError
+
+    if not all(
+        isinstance(f.dataType, _FILE_READ_TYPES)
+        and "parquet.field.id" not in f.metadata
+        for f in df.schema.fields
+    ):
+        return None
+    try:
+        return _scan_of_plan(df._jdf.queryExecution().analyzed())
+    except Py4JError:
+        return None
+
+
+def _scan_of_plan(plan):
+    """:func:`_parquet_scan` of a JVM analyzed plan."""
+    from urllib.parse import urlsplit
+    from urllib.request import url2pathname
+
+    top = None
+    while plan.getClass().getName() == _PROJECT:
+        exprs = plan.projectList()
+        exprs = [exprs.apply(i) for i in range(exprs.size())]
+        if any(e.getClass().getName() != _ATTRIBUTE for e in exprs):
+            return None
+        top = exprs if top is None else top
+        plan = plan.child()
+    if plan.getClass().getName() != _LOGICAL_RELATION:
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getName() != _HADOOP_FS_RELATION
+        or rel.fileFormat().getClass().getName() != _PARQUET_FORMAT
+        or rel.partitionSchema().length() > 0
+    ):
+        return None
+    out = plan.output()
+    out = [out.apply(i) for i in range(out.size())]
+    # a projected attribute keeps its exprId, not always its name's case
+    names = {a.exprId().id(): a.name() for a in out}
+    columns = [names.get(a.exprId().id()) for a in (out if top is None else top)]
+    if not columns or None in columns:
+        return None
+    paths = []
+    for uri in rel.location().inputFiles():
+        parts = urlsplit(uri)
+        if parts.scheme != "file" or parts.netloc:
+            return None
+        paths.append(url2pathname(parts.path))
+    return paths, columns
+
+
+def _read_parquet_files(paths, columns, schema, cap):
+    """``columns`` of the parquet files ``paths`` as one table of the
+    Arrow ``schema`` (one field per column), or ``None`` when the
+    footers count more than ``cap`` rows; then no data is read. A file
+    whose column is not stored as the schema's type raises
+    ``ArrowTypeError``: Spark may convert it, pyarrow would not."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    with contextlib.ExitStack() as stack:
+        files = [stack.enter_context(pq.ParquetFile(p)) for p in paths]
+        if sum(f.metadata.num_rows for f in files) > cap:
+            return None
+        parts = []
+        for f in files:
+            stored = f.schema_arrow
+            for c, field in zip(columns, schema):
+                if _value_kind(stored.field(c).type) != _value_kind(field.type):
+                    raise pa.ArrowTypeError(f"{c} is stored as another type")
+            t = f.read(columns=list(dict.fromkeys(columns)))
+            parts.append(
+                pa.Table.from_arrays(
+                    [t.column(c).cast(fd.type) for c, fd in zip(columns, schema)],
+                    schema=schema,
+                )
+            )
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
+def _value_kind(t):
+    """An Arrow type, with the large string and binary types folded onto
+    the plain ones: the values cast between them unchanged."""
+    import pyarrow as pa
+
+    if pa.types.is_large_string(t):
+        return pa.string()
+    if pa.types.is_large_binary(t):
+        return pa.binary()
+    return t
 
 
 def parse_edge_lines(lines: DataFrame, sep: str = ",") -> DataFrame:

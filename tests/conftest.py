@@ -1,12 +1,14 @@
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout that holds this conftest, so each checkout tests its own tree
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreducelearnings_spark.session import get_spark  # noqa: E402
 

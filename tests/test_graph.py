@@ -305,7 +305,7 @@ def test_connected_components_survives_capped_residual_rounds(spark):
     per-partition forests contract almost nothing and the root graph
     stays large; with a tiny driver_edge_cap the extra contraction
     rounds must fire (several of them) and the residual handed to the
-    driver union-find must be under the cap — while the labels stay
+    driver kernel must be under the cap — while the labels stay
     exactly right. This is the one CC path the fixture graphs never
     forced (VERDICT r04 Next #6)."""
     n_paths, plen = 4, 250
@@ -336,7 +336,7 @@ def test_connected_components_survives_capped_residual_rounds(spark):
         for i in range(plen)
     }
     assert got == want
-    # the residual handed to the driver union-find is under the cap —
+    # the residual handed to the driver kernel is under the cap —
     # the star fallback guarantees this even when forest rounds stall
     assert G.CC_LAST_STATS["residual_edges"] <= cap
 
@@ -545,7 +545,7 @@ def test_sssp_job_budget(spark, micro_graph, action_plans, distributed):
 
 def test_connected_components_under_cap_runs_zero_rounds(spark):
     """A graph within driver_edge_cap goes straight to the driver
-    union-find: one bounded read, no contraction round, and the labels
+    kernel: one bounded read, no contraction round, and the labels
     come back as a local table (no job, no Python worker)."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8), (9, 9)], "src: long, dst: long"
@@ -586,7 +586,7 @@ def test_connected_components_empty_edge_list(spark):
 )
 def test_connected_components_self_loops_and_duplicates(spark, rows, want):
     edges = spark.createDataFrame(rows, "src: long, dst: long")
-    # under the cap (driver union-find only) and with contraction rounds
+    # under the cap (driver kernel only) and with contraction rounds
     for kwargs in ({}, {"driver_edge_cap": 1}):
         got = dict(map(tuple, G.connected_components(spark, edges, **kwargs).collect()))
         assert got == want
@@ -738,6 +738,26 @@ def test_sssp_driver_path_matches_distributed(
     if name == "long_path" and source == 0:
         got = dict(map(tuple, lrows))
         assert got[max_iter] == float(max_iter) and got[max_iter + 1] == G.INF
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_connected_components_driver_path_matches_distributed(spark, name):
+    """The driver kernel and the contraction rounds give the same labels.
+    ``driver_edge_cap=0`` contracts until the residual is empty (a cap
+    of −1 would spend the whole round budget first); an empty graph is
+    already an empty residual. An edge with a NULL endpoint adds no
+    vertex and no link on either path."""
+    edges = _edges(spark, name)
+    local = G.connected_components(spark, edges)
+    assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
+    lrows, ljobs = jobs_of(spark, local.collect)
+    dist = G.connected_components(spark, edges, driver_edge_cap=0)
+    assert G.CC_LAST_STATS["rounds"] >= (name != "empty")
+    assert ljobs == 0
+    assert local.schema == dist.schema
+    assert sorted(map(tuple, lrows)) == sorted(map(tuple, dist.collect()))
+    if name == "null_endpoints":
+        assert dict(map(tuple, lrows)) == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
 LONG_IDS = "src: long, dst: long"
@@ -897,26 +917,27 @@ def follower_parquet(spark, tmp_path_factory):
 
 
 def test_loop_operators_under_cap_run_only_the_bounded_read(spark, follower_parquet):
-    """Under the cap each operator's only jobs are its bounded read's: one
-    for the single-file edge list, four for k-means' distinct-value
-    table (the follower-count and distinct-value aggregates each run as
-    an AQE stage while the table is cached, and the cached table's
-    partitions reach the limit through a single-partition exchange). The
-    result is a local table: its collect runs no job."""
+    """Under the cap each operator's only jobs are its bounded read's:
+    none for the single-file edge list, a bare parquet scan that pyarrow
+    reads from the file; four for k-means' distinct-value table (the
+    follower-count and distinct-value aggregates each run as an AQE
+    stage while the table is cached, and the cached table's partitions
+    reach the limit through a single-partition exchange). The result is
+    a local table: its collect runs no job."""
     edges = spark.read.parquet(follower_parquet)
     source = edges.first()["src"]
     cases = [
-        (lambda: G.pagerank_standard(spark, edges, iterations=10), 1),
-        (lambda: G.sssp(spark, edges, source), 1),
-        (lambda: G.connected_components(spark, edges), 1),
+        (lambda: G.pagerank_standard(spark, edges, iterations=10), 0),
+        (lambda: G.sssp(spark, edges, source), 0),
+        (lambda: G.connected_components(spark, edges), 0),
         (
             lambda: KM.kmeans_1d(
                 R.follower_count(edges), "cnt", k=4, fixed_iterations=6
             ),
             4,
         ),
-        (lambda: G.triangle_count(edges), 1),
-        (lambda: G.triangle_count_ordered(edges), 1),
+        (lambda: G.triangle_count(edges), 0),
+        (lambda: G.triangle_count_ordered(edges), 0),
     ]
     for run, budget in cases:
         out, jobs = jobs_of(spark, run)

@@ -9,6 +9,9 @@ Spark infer it in a one-task job. Pinned here:
   one data footer gives exactly the plain read;
 - job budgets: a table load, a flat-file read and building the SQL
   revenue query run no Spark job;
+- ``io.to_driver`` of a bare parquet scan: pyarrow reads the files in
+  no job and gives Spark's Arrow collect exactly; any other plan or
+  type takes the one-job Spark read;
 - the one-reader rule: no other package module calls ``.read.parquet(``.
 """
 
@@ -240,6 +243,145 @@ def test_sql_revenue_by_nation_builds_without_jobs(spark):
     spec = REGISTRY["sql_revenue_by_nation"]
     _, jobs = jobs_of(spark, lambda: spec.spark(spark, SF_DRIVER))
     assert jobs == 0
+
+
+# --- io.to_driver of a bare parquet scan ---------------------------------------
+
+#: One column of every type the file read takes.
+FILE_READ_SCHEMA = (
+    "b boolean, y tinyint, h smallint, i int, l bigint, f float, d double, "
+    "s string, x binary"
+)
+NAN = float("nan")
+FILE_READ_ROWS = [
+    (True, 1, 300, 70_000, 1 << 40, 1.5, 2.25, "plain", b"\x00\xff"),
+    (False, -128, -32768, -(1 << 31), -(1 << 63), NAN, NAN, "", b""),
+    (None, None, None, None, None, None, None, None, None),
+    (True, 127, 32767, (1 << 31) - 1, (1 << 63) - 1, -0.0, -0.0, "żółw ☃ 北", b"a"),
+    (False, 0, 0, 0, 0, float("inf"), float("-inf"), "x" * 300, bytes(range(256))),
+]
+
+
+def sorted_rows(table):
+    """Rows of a pyarrow table in a canonical order; ``repr`` tells NaN,
+    -0.0 and NULL apart."""
+    return sorted(map(repr, table.to_pylist()))
+
+
+def assert_file_read(spark, df, cap=100):
+    """``io.to_driver(df, cap)`` reads the files in no job and equals
+    Spark's bounded Arrow collect: same schema, same rows."""
+    assert IO._parquet_scan(df) is not None
+    got, jobs = jobs_of(spark, lambda: IO.to_driver(df, cap))
+    assert jobs == 0
+    want = df.limit(cap + 1).toArrow()
+    assert got.schema == want.schema
+    assert sorted_rows(got) == sorted_rows(want)
+    return got
+
+
+@pytest.fixture
+def typed_dir(spark, tmp_path):
+    """Every file-read type in a three-file Spark-written directory
+    (with ``_SUCCESS`` and ``.crc`` files)."""
+    path = str(tmp_path / "typed")
+    df = spark.createDataFrame(FILE_READ_ROWS, FILE_READ_SCHEMA)
+    IO.write_parquet(df.repartition(3), path)
+    assert "_SUCCESS" in os.listdir(path)
+    return path
+
+
+def test_to_driver_reads_a_parquet_scan_from_its_files(spark, typed_dir):
+    scan = IO.read_parquet(spark, typed_dir)
+    assert len(scan.inputFiles()) == 3
+    got = assert_file_read(spark, scan)
+    assert got.num_rows == len(FILE_READ_ROWS)
+    # projections of plain attributes, renamed by case or repeated
+    assert_file_read(spark, scan.select("s", "i"))
+    assert_file_read(spark, scan.select("D", "x").select("x", "D", "x"))
+    assert_file_read(spark, spark.read.parquet(typed_dir).select("l"))
+
+
+def test_to_driver_file_read_takes_pyarrow_written_large_strings(spark, tmp_path):
+    path = tmp_path / "large.parquet"
+    strings = pa.array(["a", None, "żółw"], pa.large_string())
+    pq.write_table(pa.table({"s": strings, "n": [1, 2, None]}), path)
+    got = assert_file_read(spark, IO.read_parquet(spark, str(path)))
+    assert got.schema.field("s").type == pa.string()
+
+
+def test_to_driver_file_read_stops_at_the_footers_above_the_cap(
+    spark, typed_dir, tmp_path
+):
+    """Above the cap the footers' row counts give ``None`` with no job
+    and no data read; at exactly the cap the rows come back. A directory
+    with no data file is an empty table, even at a cap of 0."""
+    scan = IO.read_parquet(spark, typed_dir)
+    n = len(FILE_READ_ROWS)
+    assert jobs_of(spark, lambda: IO.to_driver(scan, n - 1)) == (None, 0)
+    assert_file_read(spark, scan, cap=n)
+    empty = str(tmp_path / "empty")
+    IO.write_parquet(spark.createDataFrame([], FILE_READ_SCHEMA), empty)
+    scan = IO.read_parquet_as(spark, empty, FILE_READ_SCHEMA)
+    assert assert_file_read(spark, scan, cap=0).num_rows == 0
+
+
+def _spark_read(spark, df):
+    """``io.to_driver(df)`` took the one-job Spark read."""
+    assert IO._parquet_scan(df) is None
+    got, jobs = jobs_of(spark, lambda: IO.to_driver(df, 100))
+    assert jobs == 1
+    want = df.limit(101).toArrow()
+    assert got.schema == want.schema and sorted_rows(got) == sorted_rows(want)
+
+
+@pytest.mark.parametrize(
+    "expr",
+    [
+        "TIMESTAMP'2024-01-02 03:04:05' AS c",
+        "CAST(1.25 AS DECIMAL(10, 2)) AS c",
+        "DATE'1500-01-01' AS c",
+        "array(1, 2) AS c",
+    ],
+)
+def test_to_driver_other_types_take_the_spark_read(spark, tmp_path, expr):
+    path = str(tmp_path / "other")
+    IO.write_parquet(spark.range(3).selectExpr("id", expr), path)
+    _spark_read(spark, IO.read_parquet(spark, path))
+
+
+def test_to_driver_other_plans_take_the_spark_read(spark, typed_dir, tmp_path):
+    from pyspark.sql import functions as F
+
+    scan = IO.read_parquet(spark, typed_dir)
+    _spark_read(spark, scan.where(F.col("i") > 0))
+    _spark_read(spark, scan.select(F.col("i").alias("j")))
+    hive = str(tmp_path / "hive")
+    spark.range(6).selectExpr("id", "id % 2 AS cell").write.partitionBy(
+        "cell"
+    ).parquet(hive)
+    _spark_read(spark, IO.read_parquet(spark, hive).select("id"))
+
+
+def test_to_driver_file_read_error_takes_the_spark_read(spark, tmp_path):
+    """A file missing a column fails in pyarrow (Spark reads it as
+    NULLs), and so does a column stored as another type than the read
+    schema's (Spark widens an int32 to a long)."""
+    path = tmp_path / "missing"
+    path.mkdir()
+    pq.write_table(pa.table({"a": [1, 2], "b": [3, 4]}), path / "part-0.parquet")
+    pq.write_table(pa.table({"a": [5]}), path / "part-1.parquet")
+    scan = IO.read_parquet_as(spark, str(path), "a long, b long")
+    got, jobs = jobs_of(spark, lambda: IO.to_driver(scan, 10))
+    assert jobs == 1
+    assert sorted(got.column("b").to_pylist(), key=repr) == [3, 4, None]
+    narrow = tmp_path / "int32.parquet"
+    pq.write_table(pa.table({"a": pa.array([7, None], pa.int32())}), narrow)
+    scan = IO.read_parquet_as(spark, str(narrow), "a long")
+    got, jobs = jobs_of(spark, lambda: IO.to_driver(scan, 10))
+    assert jobs == 1
+    assert got.column("a").type == pa.int64()
+    assert sorted(got.column("a").to_pylist(), key=repr) == [7, None]
 
 
 # --- the one-reader rule ------------------------------------------------------

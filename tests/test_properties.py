@@ -67,6 +67,29 @@ def test_triangle_driver_kernel_matches_join_plans(spark, edges):
     assert local == dist
 
 
+@settings(max_examples=8, deadline=None)
+@given(edges=multigraphs)
+def test_cc_driver_kernel_matches_python_union_find(spark, edges):
+    """Raw multigraphs — duplicates, self-loops, NULL endpoints: the
+    driver kernel labels every vertex of a NULL-free edge with its
+    component's minimum, like a plain-Python union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    df = spark.createDataFrame(edges, "src: long, dst: long")
+    got = dict(map(tuple, G.connected_components(spark, df).collect()))
+    assert G.CC_LAST_STATS["rounds"] == 0
+    assert got == {v: find(v) for v in list(parent)}
+
+
 @settings(max_examples=6, deadline=None)
 @given(edges=edge_lists)
 def test_star_cc_agrees_with_union_find_on_random_graphs(spark, edges):

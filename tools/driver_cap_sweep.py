@@ -10,8 +10,10 @@ shape, FIXTURES.md §1), then times warm calls of every loop operator
   operator's input rows);
 - ``distributed_s``: the distributed path alone (cap −1, no read);
 - ``probed_s``: the distributed path after a bounded read that finds
-  the input above the cap (cap ``rows // 2``: the read takes half the
-  rows, then gives up) — what a graph just above the cap pays.
+  the input above the cap (cap ``rows // 2``) — what a graph just above
+  the cap pays. On a parquet file ``io.to_driver`` reads only the
+  footers to find that; on any other input the read takes half the
+  rows, then gives up.
 
 ``connected_components`` gets its cap as ``driver_edge_cap``; it has no
 ``distributed_s`` (without a read it contracts until its round budget
@@ -24,10 +26,10 @@ hundred distinct values at any of these sizes). ``triangle_count``
 runs over the graph's distinct, self-loop-free edges, written to a file
 of their own: ``rows`` is a seventh to a quarter of ``size`` there,
 since the power-law endpoints repeat; for every other operator it is
-``size``. ``read_s`` times the bounded read alone on the edge file and
-on the same edges behind a shuffle (``repartition(8)``), whose upstream
-the read evaluates once more. Prints one JSON line per (size,
-operator).
+``size``. ``read_s`` times the bounded read alone on the edge file (its
+footers) and on the same edges behind a shuffle (``repartition(8)``),
+whose upstream the read evaluates once more. Prints one JSON line per
+(size, operator).
 
 Usage: python tools/driver_cap_sweep.py [--sizes 50000,100000,...]
            [--reps 3] [--out DIR]
