@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.iterate import iterate, loop_conf, loop_width
+from ..sources import io
 from ..sources.io import from_columns, from_rows, to_driver
 
 INF = float("inf")
@@ -797,7 +798,8 @@ def connected_components(
     graph purely in per-round job overhead). The raw edge list is round
     0's RESIDUAL; while a residual exceeds ``driver_edge_cap`` rows
     (default ``io.DRIVER_STATE_CAP``, read at call time; 0 contracts
-    until the residual is empty):
+    until the residual is empty; a negative cap skips the read of the
+    edge list and then reads each later residual as a cap of 0 would):
 
     1. a ``mapInPandas`` pass runs union-find per partition and emits
        the local spanning forest (vertex → local min root) — exact
@@ -843,6 +845,11 @@ def connected_components(
         return _components_local(spark, local)
     # an edge with a NULL endpoint adds no vertex and no link
     g = g.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    # a negative cap reads no residual at all, which would spend the
+    # whole round budget: floored at 0, contraction stops at the first
+    # empty residual
+    cap = io.DRIVER_STATE_CAP if driver_edge_cap is None else driver_edge_cap
+    residual_cap = max(cap, 0)
     # Two widths for two concerns (r15): ``loop_partitions`` keeps the
     # CONTRACTION width (it gates the per-partition Python union-find's
     # parallelism over edge rows — compute-bound, wants cores), while
@@ -871,7 +878,7 @@ def connected_components(
             f = _forest_contract(src.repartition(loop_partitions or 8, "src"))
             forests.append(f.persist(StorageLevel.MEMORY_AND_DISK))
             g = _root_graph(forests[-1])
-            local = to_driver(g, driver_edge_cap)
+            local = to_driver(g, residual_cap)
         if local is None:
             # round budget exhausted while still above the cap
             # (adversarial layouts only): read the full residual

@@ -25,27 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import graph as G
+from ..plans.iterate import _pin
 from . import dedup as DD
 from . import textstats as TS
-
-# r14 optimization (guide §2.4/§5, same pattern as simsearch._pin):
-# the three curation stages each feed TWO consumers (the gate: id join
-# + final stats join; the gated narrow rows: hash dedup + exact-unique
-# join), and Catalyst shares no subtrees across branches, so the
-# unpinned plan replayed the quality gate ~3x and the md5 dedup twice.
-# Toggle exists for A/B measurement only.
-_PIN_REUSED = True
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """See simsearch._pin — including the library-consumer note on
-    releasing accumulated pinned blocks in long-lived sessions
-    (ADVICE r14)."""
-    if not _PIN_REUSED:
-        return df
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def curate_corpus(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -56,6 +38,10 @@ def curate_corpus(spark: SparkSession, docs: DataFrame) -> DataFrame:
     survives (deterministic, and the component label of the union-find
     is already the min member, so near-dup survivors are exactly the
     rows where vertex == component)."""
+    # each stage feeds two consumers (the gate: id join + final stats
+    # join; the gated rows: hash dedup + exact-unique join); pinned, the
+    # quality gate and the md5 dedup run once per action, not 3× and 2×
+    # (r14)
     kept = _pin(TS.quality_filter(docs))
     # narrow the gated rows to what downstream reads (doc_id, text) —
     # the near-dup stage shingles text, the survivor joins use ids only

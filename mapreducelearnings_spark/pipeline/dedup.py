@@ -25,26 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as X
-
-# r14 optimization (guide §2.4/§5, same pattern as simsearch._pin):
-# the LSH band self-join and the shingle self-join reference the SAME
-# derived frame from both sides, and Catalyst shares no subtrees
-# across branches — unpinned, the full tokenize→shingle→md5→minhash
-# pipeline ran once per side. Pinning the narrow derived frame
-# (ids + band signatures / ids + shingles) computes it once per
-# action. Toggle exists for A/B measurement only.
-_PIN_REUSED = True
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """See simsearch._pin — including the library-consumer note on
-    releasing accumulated pinned blocks in long-lived sessions
-    (ADVICE r14)."""
-    if not _PIN_REUSED:
-        return df
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+from ..plans.iterate import _pin
 
 NUM_HASHES = 16
 BANDS = 4
@@ -160,6 +141,8 @@ def ngram_jaccard_pairs(
     |A∩B| via the shingle self-join, |A| and |B| via per-doc counts:
     J = inter / (|A| + |B| − inter).
     """
+    # both sides of the self-join read the shingles: pinned, they are
+    # computed once per action (r14)
     sh = _pin(shingle_table(docs, text_col, n))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")

@@ -1,26 +1,44 @@
 """Similarity search over embedding columns (SURVEY.md §2.11 — NEW
-layer). Every path returns (query_id, neighbor_id, cos, rank) rows with
-the same deterministic tiebreaks, so each approximate result is
-oracle-checked exactly against DuckDB. The paths:
+layer). Every top-k path returns (query_id, neighbor_id, cos, rank)
+rows with the same deterministic tiebreaks, so each approximate result
+is oracle-checked exactly against DuckDB.
+
+Every top-k path is one composition — probe → optional ADC pre-rank →
+exact rank (REPOSE's partition-pruned top-k, ICDE 2021) — of these
+private stages, all over unit vectors ``ne``:
+
+- :func:`_queries` (query_id, qe) and :func:`_centroids` (cid, ce): the
+  first ``n_queries`` / ``n_cells`` vec_ids of a corpus or stored index;
+- :func:`_probe` (query_id, qe, cell, cs): each query's ``n_probes``
+  most similar cells, cs = ⟨qe, ce⟩; with ``keep=`` the prefix widens
+  until enough matching rows are reachable (:func:`_widened_probe`);
+- :func:`_local_probe`: the on-disk reads collect that bounded probe
+  once, for the scoring join and for the cell list partition pruning
+  opens;
+- :func:`_semi`: the optional ``keep`` metadata filter (left semi join);
+- :func:`_exact_in_cells`: exact cosine of every probed row, or
+  :func:`_adc_rerank`: an ADC pre-rank over PQ codes (absolute, or
+  residual to the cell centroid) and an exact rerank of the top R;
+- :func:`_rank` / :func:`_top`: per-query row_number over (score DESC,
+  tiebreak ASC), cut at k, scores rounded to 4 dp.
+
+The paths (each function's docstring says only what differs):
 
 - **exact cosine** (:func:`cosine_topk`) — the ground truth: broadcast
-  the (small) query set against the corpus, cosine as a codegen fold,
-  per-query top-k via window row_number.
+  the (small) query set against the corpus, no probe.
 - **int8 scan** (:func:`cosine_topk_q8`) — the same scan over
   quantized unit vectors with exact integer dots.
-- **IVF** (:func:`ivf_topk`) — sampled centroid cells; a query exactly
-  scores the rows of its ``n_probes`` nearest cells. ``keep=`` adds a
-  metadata filter with an adaptively widened probe.
-- **trained IVF** (:func:`ivf_topk_trained`) — the same read over
+- **IVF** (:func:`ivf_topk`) — sampled centroids, probe → exact.
+- **trained IVF** (:func:`ivf_topk_trained`) — the same over
   Lloyd-refined centroids.
-- **IVF × residual PQ** (:func:`ivf_pq_residual_topk`) — cell pruning,
-  an ADC pre-rank over PQ codes of each vector's residual to its cell
-  centroid, then an exact rerank of the top R.
+- **IVF × residual PQ** (:func:`ivf_pq_residual_topk`) — probe →
+  residual ADC → exact rerank.
 - **on-disk index** (:func:`ann_index_write` / :func:`ann_index_append`
-  / :func:`ann_index_compact`, read by :func:`ann_index_topk`) — the
-  IVF × PQ layout stored partitioned by cell, so the probe becomes
-  partition pruning; ``recall_sla=`` picks the residual pre-rank budget
-  or the exact read.
+  / :func:`ann_index_compact`) — the IVF × PQ layout stored partitioned
+  by cell, so the probe becomes partition pruning. Read by
+  :func:`ann_index_topk` (absolute ADC; ``recall_sla=`` picks the
+  residual read :func:`ann_index_residual_topk` or the exact read
+  :func:`ann_index_filtered_topk`).
 - **LSH near-dup** (:func:`embedding_nearest_lsh`,
   :func:`embedding_near_dup_pairs_lsh`) — multi-table random-hyperplane
   buckets (md5-derived planes embedded as literals in both the Spark
@@ -38,6 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..plans.iterate import _pin
 from ..sources.io import read_parquet_as
 
 DIMS = 64
@@ -48,6 +67,16 @@ DIMS = 64
 # bucket population bounded; tighter thresholds need fewer tables.
 N_TABLES = 8
 MULTI_PLANES = 4
+
+PQ_M = 8          # subspaces
+PQ_DSUB = DIMS // PQ_M
+PQ_K = 16         # codes per subspace (4 bits) → 8×4 = 32-bit PQ code
+# 8 bits per subspace → 8×8 = 64-bit codes: the CODE-RESOLUTION lever
+# the round-9 30× recall measurement named (PERFORMANCE.md "30× recall":
+# a 32-bit code cannot order within a ~3 000-member cluster, so recall
+# needs R ≈ cluster size; more bits re-separate the cluster interior
+# while the rerank budget stays log-n).
+PQ_K64 = 256
 
 
 def hyperplanes_table(
@@ -158,102 +187,182 @@ def _emb_normed(df: DataFrame) -> DataFrame:
     )
 
 
-# r14 optimization (guide §2.4 "remove shuffles outright" / §5 caching):
-# the multi-stage ANN compositions reference the same small derived
-# frames — the cell ASSIGNMENT (the thing a production deployment
-# materializes as the index) and the normalized corpus — from several
-# plan branches. Catalyst does not share common subtrees across
-# branches, so without a pin the residual rung recomputed the
-# scan→normalize→assign pipeline up to 4× per query (10 parquet scans
-# of the embeddings table in one plan, zero ReusedExchange —
-# plans/r14/ann_ivf_pq64_residual_topk_before.txt). A lazy persist()
-# computes each pinned frame once per action and serves every other
-# branch from storage; bench.py drops all RDD blocks between repeats so
-# every timed run still pays the full cold computation. Toggle exists
-# for A/B measurement only.
-_PIN_REUSED = True
+def _queries(embn: DataFrame, n_queries: int) -> DataFrame:
+    """(query_id, qe): the first ``n_queries`` rows of a (vec_id, ne)
+    frame."""
+    return embn.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("ne").alias("qe")
+    )
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Persist a small reused subtree (lazy; computed at most once per
-    action, reused by every plan branch that references it).
+def _centroids(embn: DataFrame, n_cells: int) -> DataFrame:
+    """(cid, ce): the sampled coarse quantizer, the first ``n_cells``
+    rows of a (vec_id, ne) frame (a corpus or a stored index)."""
+    return embn.where(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
+    )
 
-    LIBRARY-CONSUMER NOTE (ADVICE r14): pinned frames are registered
-    with the session's CacheManager and are NOT unpersisted by the
-    query functions — the returned DataFrame still references them, so
-    there is no safe point inside the function to release them. In a
-    long-lived session that calls these functions repeatedly, drop the
-    accumulated blocks between logical units of work the way bench.py
-    and tools/ab_harness.py do::
 
-        spark.catalog.clearCache()          # SQL cache
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(True)             # checkpoint/persist blocks
+def _cos(a: str, b: str):
+    """Exact cosine of two unit-vector columns, rounded to 6 dp for
+    ranking."""
+    return F.round(V.dot(F.col(a), F.col(b)), 6).alias("cos")
 
-    (The on-disk ingest paths — ann_index_write/append — persist scoped
-    frames and DO release them in try/finally, because there the
-    consumer is the write inside the same call.) MEMORY_AND_DISK keeps
-    an evicted pin correct: overflow spills instead of silently
-    recomputing a frame the plan assumed shared."""
-    if not _PIN_REUSED:
+
+def _rank(
+    df: DataFrame, score: str, tie: str = "neighbor_id", name: str = "rank"
+) -> DataFrame:
+    """``df`` plus ``name``: the per-query row_number over (``score``
+    DESC, ``tie`` ASC)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn(name, F.row_number().over(w))
+
+
+def _top(scored: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """(query_id, neighbor_id, score, rank): each query's ``k`` best
+    scored rows, the score rounded to 4 dp."""
+    return (
+        _rank(scored, score)
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(score, 4).alias(score),
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
+def _semi(df: DataFrame, keep: DataFrame | None) -> DataFrame:
+    """The rows of ``df`` whose vec_id is in ``keep`` (one ``keep_id``
+    column); ``keep=None`` keeps them all."""
+    if keep is None:
         return df
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    return df.join(keep, df["vec_id"] == keep["keep_id"], "left_semi")
 
 
-# r14: hash-distribute index rows by cell before the partitioned write
-# (guide §6, the write.distribution-mode=hash idea): without it every
-# shuffle task writes one file into every cell directory it touches —
-# measured 795 files for a 1 500-row sf0.1 build, 397 more per 500-row
-# append (tasks × cells, the small-files tax at ingest). One exchange
-# clusters each cell onto one writer: n_cells files per write. Toggle
-# exists for A/B measurement only.
-_WRITE_HASH_DISTRIBUTE = True
+def _probe(
+    q: DataFrame,
+    cent: DataFrame,
+    n_queries: int,
+    k: int,
+    n_cells: int,
+    n_probes: int,
+    keep: DataFrame | None = None,
+    widen_to: int | None = None,
+    cells: DataFrame | None = None,
+) -> DataFrame:
+    """(query_id, qe, cell, cs): each query's ``n_probes`` most similar
+    centroid cells (cs = ⟨qe, ce⟩, ties to the smaller cid). With
+    ``keep``, the prefix is :func:`_widened_probe`'s, counted over the
+    (vec_id, cell) assignment ``cells``."""
+    ranked = _rank(
+        q.crossJoin(F.broadcast(cent)).select(
+            "query_id", "qe", "cid", V.dot(F.col("qe"), F.col("ce")).alias("cs")
+        ),
+        "cs", "cid", "pr",
+    )
+    if keep is None:
+        ranked = ranked.where(F.col("pr") <= n_probes)
+    else:
+        ranked = _widened_probe(
+            ranked, cells, keep,
+            n_queries, _widen_target(k, widen_to), n_cells, n_probes,
+        )
+    return ranked.select(
+        "query_id", "qe", F.col("cid").cast("long").alias("cell"), "cs"
+    )
 
 
-def _distribute_for_write(df: DataFrame) -> DataFrame:
-    if not _WRITE_HASH_DISTRIBUTE:
-        return df
-    return df.repartition("cell")
+def _local_probe(probe: DataFrame) -> tuple[DataFrame, list[int]]:
+    """Evaluate a probe once — it is bounded (n_queries × ≤ n_cells
+    rows, the k-row control-channel convention) — and return a local
+    frame of its rows for the scoring join plus the sorted cell list
+    the index read prunes to. One probe job instead of two (probe →
+    broadcast, probe → cell list), and on the keep path the
+    match-count pass runs once."""
+    rows = probe.collect()
+    local = probe.sparkSession.createDataFrame(rows, probe.schema)
+    return local, sorted({r["cell"] for r in rows})
+
+
+def _exact_in_cells(rows: DataFrame, probe: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos): every (vec_id, cell, ne) row scored
+    exactly against each query that probes its cell, the query itself
+    excluded."""
+    return (
+        rows.join(F.broadcast(probe), "cell")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _cos("qe", "ne"))
+    )
+
+
+def _adc_rerank(
+    codes: DataFrame,
+    probe: DataFrame,
+    cb: DataFrame,
+    vectors: DataFrame,
+    q: DataFrame,
+    budget: int,
+    residual: bool,
+    pq_m: int = PQ_M,
+) -> DataFrame:
+    """(query_id, neighbor_id, cos): ADC pre-rank, then exact rerank.
+    Each (vec_id, cell, m, code) row of a probed cell scores
+    ⟨qe_m, cb[m, code]⟩; per (query, neighbor) the sum — plus the
+    probe's ⟨qe, ce_cell⟩ when the codes are ``residual`` to the cell
+    centroid — is rounded to 6 dp, and each query's top ``budget`` are
+    rescored exactly against their unit vectors in ``vectors``
+    (vec_id, ne)."""
+    dsub = DIMS // pq_m
+    part = (
+        codes.join(F.broadcast(probe), "cell")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(cb), ["m", "code"])
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "cs",
+            V.dot_fixed(
+                F.slice(F.col("qe"), F.col("m") * dsub + 1, F.lit(dsub)),
+                F.col("ce"),
+                dsub,
+            ).alias("ps"),
+        )
+    )
+    # cs is constant within a (query, neighbor) group (one cell per
+    # vector); MAX picks it deterministically without widening the key
+    adc = F.max("cs") + F.sum("ps") if residual else F.sum("ps")
+    approx = part.groupBy("query_id", "neighbor_id").agg(
+        F.round(adc, 6).alias("adc")
+    )
+    cand = (
+        _rank(approx, "adc", name="ar")
+        .where(F.col("ar") <= budget)
+        .select("query_id", "neighbor_id")
+    )
+    c = vectors.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
+    return (
+        cand.join(c, "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "neighbor_id", _cos("qe", "cemb"))
+    )
 
 
 def cosine_topk(
     embeddings: DataFrame, n_queries: int = 8, k: int = 5
 ) -> DataFrame:
     """Exact top-k neighbors for the first ``n_queries`` vectors
-    (vec_id < n_queries) against the whole corpus (excluding self).
-
-    Returns (query_id, neighbor_id, cos, rank); ordering tiebreak on
-    neighbor_id keeps the row set deterministic under rounded ties.
-    """
+    (vec_id < n_queries) against the whole corpus (excluding self): no
+    probe, every (query, vector) pair is scored."""
     emb = _pin(_emb_normed(embeddings))
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qemb")
-    )
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
     scored = (
-        c.crossJoin(F.broadcast(q))
+        c.crossJoin(F.broadcast(_queries(emb, n_queries)))
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qemb"), F.col("cemb")), 6).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", _cos("qe", "cemb"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top(scored, k)
 
 
 def _bucket_expr_planes(emb_col, planes):
@@ -316,19 +425,7 @@ def cosine_topk_q8(
             ).alias("cos_q8"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_q8"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_q8", 4).alias("cos_q8"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top(scored, k, "cos_q8")
 
 
 IVF_CELLS = 16
@@ -355,17 +452,15 @@ def ivf_assign(
     bucketed by cell, so queries read n_probes/n_cells of the data.
     """
     emb = _emb_normed(embeddings)
-    cent = emb.where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-    )
-    return _assign_cells(emb, cent)
+    return _assign_cells(emb, _centroids(emb, n_cells))
 
 
 def _assign_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """:func:`ivf_assign`'s broadcast argmax against EXPLICIT centroid
-    rows (cid, ce) — shared with :func:`ann_index_append`, which reads
-    its centroids back out of the stored index instead of re-deriving
-    them from a corpus frame."""
+    rows (cid, ce) — shared with Lloyd training and the trained read,
+    and with :func:`ann_index_append`, which reads its centroids back
+    out of the stored index instead of re-deriving them from a corpus
+    frame."""
     return (
         emb.crossJoin(F.broadcast(cent))
         .select(
@@ -421,14 +516,12 @@ def _widened_probe(
     k: int,
     n_cells: int,
     n_probes: int,
-    qemb_col: str = "qemb",
-    extra_cols: tuple = (),
 ) -> DataFrame:
     """Adaptive per-query probe set for FILTERED search (r13, VERDICT
     r12 Next #2 — the under-fill defense): given the per-query
-    similarity-ranked cell list ``ranked`` (query_id, qemb, cid, cs,
-    pr) and the corpus cell assignment ``cells`` (vec_id, cell),
-    return (query_id, qemb, cell) rows covering, per query, the
+    similarity-ranked cell list ``ranked`` (query_id, qe, cid, cs, pr)
+    and the corpus cell assignment ``cells`` (vec_id, cell), keep the
+    ``ranked`` rows covering, per query, the
     smallest rank-prefix whose cumulative count of MATCHING candidates
     (in ``keep``, excluding the query itself) reaches ``k`` — floored
     at ``n_probes`` (a permissive predicate probes exactly what the
@@ -444,10 +537,9 @@ def _widened_probe(
     the n_queries × n_cells ranked frame, metadata-sized by
     construction. Deterministic given (corpus, keep), so the DuckDB
     oracle reproduces it value-for-value; bit-shared between the
-    in-memory path (:func:`ivf_topk`) and the on-disk read
-    (:func:`_index_exact_topk`), which feeds it the STORED
+    in-memory paths and the on-disk reads, which feed it the STORED
     assignment."""
-    matched = cells.join(keep, cells["vec_id"] == keep["keep_id"], "left_semi")
+    matched = _semi(cells, keep)
     cellcnt = matched.groupBy("cell").agg(F.count("*").alias("mc"))
     qself = (
         matched.where(F.col("vec_id") < n_queries)
@@ -484,11 +576,6 @@ def _widened_probe(
         <= F.greatest(
             F.lit(n_probes), F.coalesce(F.col("need"), F.lit(n_cells))
         )
-    ).select(
-        "query_id",
-        qemb_col,
-        F.col("cid").cast("long").alias("cell"),
-        *extra_cols,
     )
 
 
@@ -506,140 +593,55 @@ def ivf_topk(
     cell-partitioned alternative to hyperplane LSH (candidates bounded
     by n_probes/n_cells of the corpus instead of bucket collisions; no
     DISTINCT needed since every vector lives in exactly one cell).
-    Returns (query_id, neighbor_id, cos, rank).
 
     ``keep`` (optional, single ``keep_id`` column) is a METADATA
     FILTER — the retrieval-with-filters production shape ("nearest
-    docs in language X"): candidates are LEFT-SEMI joined against it
-    AFTER the cell probe and BEFORE scoring, so the filter cost rides
-    the already-bounded candidate stream, never the corpus
-    (pre-filtering the whole index would re-scan everything;
-    post-filtering the top-k would under-fill it). The index —
+    docs in language X"). The assigned rows are LEFT-SEMI joined
+    against it before the probe join and scoring (Catalyst plans the
+    same tree when the semi join is written after the probe join: it
+    pushes the semi join down to the corpus side either way).
+    Post-filtering the top-k would under-fill it. The index —
     centroids and cell assignment — stays UNFILTERED, so one index
     serves every predicate.
 
     The filtered probe is ADAPTIVE (r13, closing the classic
     filtered-IVF under-fill: a fixed n_probes silently returns < k
-    rows whenever the probed cells hold < k matching candidates —
-    exactly what selective predicates do). Per query, the probe takes
-    the smallest prefix of the similarity-ranked cell list whose
-    cumulative MATCHING-candidate count reaches the widening target
-    (default 3×k since r14 — see ``widen_to`` below), floored at
-    ``n_probes`` and capped at ``n_cells`` (if the whole corpus has
-    < k matches, all cells are probed and the result is honestly
-    short). The per-cell match counts are one column-pruned aggregate
-    (vec_id + cell only, semi-joined against keep, grouped to
-    n_cells rows — broadcastable metadata, never the vectors), and
-    the per-query widening math runs over the tiny
-    n_queries × n_cells ranked-cell frame. So a permissive predicate
-    pays the unfiltered plan plus one narrow count, while a selective
-    one widens exactly as far as the target requires — deterministic,
-    hence fully value-checkable by the DuckDB oracle. At 100 TB the
-    keep set is ∝ corpus (not broadcastable in general); the count
-    pass reads two narrow columns and the semi join shuffles only the
-    probed candidates against it.
+    rows whenever the probed cells hold < k matching candidates).
+    :func:`_widened_probe` takes, per query, the smallest prefix of the
+    ranked cell list whose MATCHING-candidate count reaches the
+    widening target, floored at ``n_probes`` and capped at ``n_cells``
+    (if the whole corpus has fewer matches, every cell is probed and
+    the result is honestly short). A permissive predicate pays the
+    unfiltered plan plus one narrow count.
 
-    ``widen_to`` sets the widening TARGET: how many matching
-    candidates the probe escalates to make reachable. The default
-    (None) over-provisions to ``FILTERED_WIDEN_MULT × k`` = 3×k —
-    recall-first, the production default since r14 (VERDICT r13 Next
-    #3): min-fill widening (target = k) guarantees a FULL result but
-    scores only the minimum matching set, so under selective
-    predicates recall vs the global filtered truth is capped by how
-    few cells that minimum spans (measured: 0.55 at 0.8% selectivity
-    on the sf0.1 fixture, vs 0.975 at 3×k — the curve is in
-    PERFORMANCE.md "filtered recall vs selectivity"). Pass
-    ``widen_to=k`` to opt OUT back to min-fill (cheapest full
-    result), or higher (e.g. 6×k) to buy more recall at
-    proportionally more probed cells — the filtered analogue of the
-    unfiltered ladder's rerank-budget lever. Permissive predicates
-    are unaffected either way: the probe floors at ``n_probes``, so
-    whenever the fixed probe already reaches the target, the plan is
-    the unfiltered one plus one narrow count."""
+    ``widen_to`` sets that TARGET. The default (None) over-provisions
+    to ``FILTERED_WIDEN_MULT × k`` = 3×k — recall-first, the
+    production default since r14 (VERDICT r13 Next #3): min-fill
+    widening (target = k) guarantees a FULL result but scores only the
+    minimum matching set (measured recall 0.55 at 0.8% selectivity on
+    the sf0.1 fixture, vs 0.975 at 3×k — PERFORMANCE.md "filtered
+    recall vs selectivity"). Pass ``widen_to=k`` to opt OUT back to
+    min-fill, or higher (e.g. 6×k) to buy more recall at
+    proportionally more probed cells."""
     # NOT pinned (r14 A/B): keep=None reads every subtree once (pin was
     # a wash, 1.00×), and on the keep path pinning the 3-column
     # assignment REGRESSED 1.12× — the widened probe's match-count pass
     # deliberately reads only (vec_id, cell) via parquet column pruning,
     # which an InMemoryRelation of the wide (… ne) rows defeats.
+    # The probe is NOT collected to the driver either (r14 A/B): it
+    # feeds one broadcast join, so a collect round-trip just adds a job
+    # (measured 1.47× on the two-branch filtered entry).
     emb = _emb_normed(embeddings)
-    cent = emb.where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
+    cent = _centroids(emb, n_cells)
+    assigned = _assign_cells(emb, cent)
+    probe = _probe(
+        _queries(emb, n_queries), cent, n_queries, k, n_cells, n_probes,
+        keep, widen_to, assigned.select("vec_id", "cell"),
     )
-    assigned = ivf_assign(embeddings, n_cells)
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qemb")
-    )
-    qs = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "qemb", "cid", V.dot(F.col("qemb"), F.col("ce")).alias("cs")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    ranked = qs.withColumn("pr", F.row_number().over(wprobe))
-    if keep is None:
-        qprobe = ranked.where(F.col("pr") <= n_probes).select(
-            "query_id", "qemb", F.col("cid").cast("long").alias("cell")
-        )
-    else:
-        # NOT materialized through the driver (r14 A/B): unlike the
-        # on-disk twins — where the probe feeds TWO consumers (pruning
-        # cell set + broadcast join) — here it feeds only the broadcast,
-        # so a collect/createDataFrame round-trip just adds a job
-        # (measured 1.47× on the two-branch filtered entry).
-        qprobe = _widened_probe(
-            ranked, assigned.select("vec_id", "cell"), keep,
-            n_queries, _widen_target(k, widen_to), n_cells, n_probes,
-        )
-    candidates = assigned.join(F.broadcast(qprobe), "cell")
-    if keep is not None:
-        candidates = candidates.join(
-            keep, candidates["vec_id"] == keep["keep_id"], "left_semi"
-        )
-    scored = (
-        candidates.where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(V.dot(F.col("qemb"), F.col("ne")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top(_exact_in_cells(_semi(assigned, keep), probe), k)
 
 
 IVF_LLOYD_ROUNDS = 2
-
-
-def _assign_to_literal_centroids(emb: DataFrame, centroids) -> DataFrame:
-    """(vec_id, ne, cell): nearest-centroid assignment against a literal
-    (cid, vec) list — pure map-side codegen, NO shuffle and no join at
-    all (the centroids ride in the plan, the fleet-wide equivalent of a
-    broadcast). Argmax via array_max over struct(cs, -cid): highest
-    cosine, ties to the smallest cid — same order as the oracle's
-    ROW_NUMBER(cs DESC, cid ASC)."""
-    pairs = F.array(
-        *[
-            F.struct(
-                V.dot(
-                    F.col("ne"), F.array(*[F.lit(x) for x in vec])
-                ).alias("cs"),
-                F.lit(-cid).alias("nc"),
-            )
-            for cid, vec in centroids
-        ]
-    )
-    return emb.select(
-        "vec_id",
-        "ne",
-        (-F.array_max(pairs).getField("nc")).cast("long").alias("cell"),
-    )
 
 
 def lloyd_train(
@@ -663,8 +665,8 @@ def lloyd_train(
     from there. The SQL mirror unrolls the same rounds
     (queries._ivf_trained_oracle).
 
-    Scale shape: each round is one map-side literal-centroid argmax
-    (zero-shuffle assignment) + one 16-row partial-agg groupBy + a
+    Scale shape: each round is one broadcast argmax
+    (:func:`_assign_cells`) + one 16-row partial-agg groupBy + a
     k-row collect — the classic k-means control channel
     (operators/kmeans.py does the same in 1-D). Training cost is
     rounds × one scan of the TRAINING frame: with ``sample_mod=s`` the
@@ -681,37 +683,21 @@ def lloyd_train(
         if sample_mod is None
         else emb.where(F.col("vec_id") % sample_mod == 0)
     )
-    cent = [
-        (int(r["vec_id"]), [float(x) for x in r["ne"]])
-        for r in emb.where(F.col("vec_id") < n_cells)
-        .select("vec_id", "ne")
-        .collect()
-    ]
-    cent.sort()
+    cent = sorted(
+        (int(r["cid"]), [float(x) for x in r["ce"]])
+        for r in _centroids(emb, n_cells).collect()
+    )
     spark = embeddings.sparkSession
     for _ in range(rounds):
-        # Broadcast-join assignment, NOT _assign_to_literal_centroids:
-        # the literal form inlines n_cells x dims constants into one
-        # codegen expression, and at 16x64 the per-round analysis +
+        # Broadcast-join assignment, NOT the centroids inlined as
+        # literals: the literal form put n_cells x dims constants into
+        # one codegen expression, and at 16x64 the per-round analysis +
         # compile cost dominated the whole trained-IVF query (measured
         # ~7.6 s at sf0.1 with the scan nearly free). A 16-row broadcast
-        # + max_by argmax is the same zero-shuffle map-side work with a
-        # constant-size plan. Same float order, so bit-identical means.
-        cent_df = spark.createDataFrame(cent, "cid long, ce array<double>")
-        assigned = (
-            train.crossJoin(F.broadcast(cent_df))
-            .select(
-                "vec_id", "ne", "cid",
-                V.dot(F.col("ne"), F.col("ce")).alias("cs"),
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.col("cid"),
-                    F.struct(F.col("cs"), (-F.col("cid")).alias("nc")),
-                ).alias("cell"),
-                F.any_value(F.col("ne")).alias("ne"),
-            )
+        # + max_by argmax is the same map-side work with a constant-size
+        # plan. Same float order, so bit-identical means.
+        assigned = _assign_cells(
+            train, spark.createDataFrame(cent, "cid long, ce array<double>")
         )
         # ONE parsed SQL expression for the 9-dp means array and one for
         # the re-normalization — building these as 64 individual Column
@@ -758,56 +744,13 @@ def ivf_topk_trained(
     corpus's density skew; Lloyd iterates it away). ``sample_mod``
     bounds training cost by Lloyd-ing only the ``vec_id % s == 0``
     slice — the registered production shape."""
-    cent_rows = lloyd_train(embeddings, n_cells, rounds, sample_mod=sample_mod)
-    spark = embeddings.sparkSession
-    cent = spark.createDataFrame(
-        cent_rows, "cid long, ce array<double>"
+    cent = embeddings.sparkSession.createDataFrame(
+        lloyd_train(embeddings, n_cells, rounds, sample_mod=sample_mod),
+        "cid long, ce array<double>",
     )
     emb = _pin(_emb_normed(embeddings))
-    assigned = (
-        emb.crossJoin(F.broadcast(cent))
-        .select("vec_id", "ne", "cid", V.dot(F.col("ne"), F.col("ce")).alias("cs"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("cid"), F.struct(F.col("cs"), (-F.col("cid")).alias("nc"))
-            ).alias("cell"),
-            F.any_value(F.col("ne")).alias("ne"),
-        )
-        .select("vec_id", F.col("cell").cast("long").alias("cell"), "ne")
-    )
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qemb")
-    )
-    qs = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "qemb", "cid", V.dot(F.col("qemb"), F.col("ce")).alias("cs")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    qprobe = (
-        qs.withColumn("pr", F.row_number().over(wprobe))
-        .where(F.col("pr") <= n_probes)
-        .select("query_id", "qemb", F.col("cid").cast("long").alias("cell"))
-    )
-    scored = (
-        assigned.join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(V.dot(F.col("qemb"), F.col("ne")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    probe = _probe(_queries(emb, n_queries), cent, n_queries, k, n_cells, n_probes)
+    return _top(_exact_in_cells(_assign_cells(emb, cent), probe), k)
 
 
 # The shared exact-rerank budget rule of every compressed pre-rank:
@@ -856,17 +799,6 @@ def corpus_size(embeddings: DataFrame) -> int:
             _CORPUS_SIZE_CACHE.clear()
         n = _CORPUS_SIZE_CACHE[key] = embeddings.count()
     return n
-
-
-PQ_M = 8          # subspaces
-PQ_DSUB = DIMS // PQ_M
-PQ_K = 16         # codes per subspace (4 bits) → 8×4 = 32-bit PQ code
-# 8 bits per subspace → 8×8 = 64-bit codes: the CODE-RESOLUTION lever
-# the round-9 30× recall measurement named (PERFORMANCE.md "30× recall":
-# a 32-bit code cannot order within a ~3 000-member cluster, so recall
-# needs R ≈ cluster size; more bits re-separate the cluster interior
-# while the rerank budget stays log-n).
-PQ_K64 = 256
 
 
 def pq_codebooks(
@@ -1147,102 +1079,32 @@ def ivf_pq_residual_topk(
     before ranking, so the result is fully oracle-checked."""
     if rerank_mult is None:
         rerank_mult = hamming_auto_mult(corpus_size(embeddings))
-    dsub = DIMS // pq_m
     embn = _pin(_emb_normed(embeddings))
+    cent = _centroids(embn, n_cells)
     # the index a production deployment stores: computed once, read by
     # the residual encode, the code join and (keep path) the widened
     # probe — unpinned, each branch replayed scan→normalize→assign
-    assigned = _pin(ivf_assign(embeddings, n_cells))  # (vec_id, cell, ne)
-    cent = embn.where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell"), F.col("ne").alias("ce")
-    )
-    resid = assigned.join(F.broadcast(cent), "cell").select(
-        "vec_id",
-        "cell",
-        F.zip_with("ne", "ce", lambda a, b: a - b).alias("ne"),
-    )
-    cb = codebooks_from_normed(resid.select("vec_id", "ne"), pq_k, pq_m)
-    codes = pq_encode(resid.select("vec_id", "ne"), cb, pq_m).join(
+    assigned = _pin(_assign_cells(embn, cent))  # (vec_id, cell, ne)
+    resid = _residual_frame(assigned, cent)
+    cb = codebooks_from_normed(resid, pq_k, pq_m)
+    codes = pq_encode(resid, cb, pq_m).join(
         assigned.select("vec_id", "cell"), "vec_id"
     )
-    q = embn.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qe")
+    q = _queries(embn, n_queries)
+    # filtered x compressed (r13, VERDICT r12 Next #6): the semi join
+    # runs BEFORE the pre-rank, so the top-R budget counts MATCHING
+    # candidates (a budget that counts unfiltered candidates under-fills
+    # with matches under selective predicates). The probe feeds one
+    # broadcast, so it stays lazy, as in ivf_topk.
+    probe = _probe(
+        q, cent, n_queries, k, n_cells, n_probes,
+        keep, widen_to, assigned.select("vec_id", "cell"),
     )
-    qs = q.crossJoin(
-        F.broadcast(cent.select(F.col("cell").alias("cid"), "ce"))
-    ).select(
-        "query_id", "qe", "cid", V.dot(F.col("qe"), F.col("ce")).alias("cs")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    ranked = qs.withColumn("pr", F.row_number().over(wprobe))
-    if keep is None:
-        qprobe = ranked.where(F.col("pr") <= n_probes).select(
-            "query_id", "qe", F.col("cid").cast("long").alias("cell"), "cs"
-        )
-    else:
-        # filtered x compressed (r13, VERDICT r12 Next #6): the same
-        # adaptive widening the exact rung uses, here feeding the
-        # residual PRE-RANK — and the semi join below runs BEFORE the
-        # pre-rank, so the top-R budget counts MATCHING candidates
-        # (a budget that counts unfiltered candidates under-fills with
-        # matches under selective predicates — the failure mode that
-        # kept r12's filtered reads on the exact rung)
-        # single consumer (the pre-rank broadcast): left lazy, same
-        # rationale as ivf_topk's keep path above
-        qprobe = _widened_probe(
-            ranked, assigned.select("vec_id", "cell"), keep,
-            n_queries, _widen_target(k, widen_to), n_cells, n_probes,
-            qemb_col="qe", extra_cols=("cs",),
-        )
-        codes = codes.join(
-            keep, codes["vec_id"] == keep["keep_id"], "left_semi"
-        )
-    part = (
-        codes.join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(cb), ["m", "code"])
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cs",
-            V.dot_fixed(
-                F.slice(F.col("qe"), F.col("m") * dsub + 1, F.lit(dsub)),
-                F.col("ce"),
-                dsub,
-            ).alias("ps"),
-        )
-    )
-    # cs is constant within a (query, neighbor) group (one cell per
-    # vector); MAX picks it deterministically without widening the key
-    approx = part.groupBy("query_id", "neighbor_id").agg(
-        F.round(F.max("cs") + F.sum("ps"), 6).alias("adc")
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        approx.withColumn("ar", F.row_number().over(wa))
-        .where(F.col("ar") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    c = embn.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qe"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return _top(
+        _adc_rerank(
+            _semi(codes, keep), probe, cb, embn, q, k * rerank_mult, True, pq_m
+        ),
+        k,
     )
 
 
@@ -1304,15 +1166,12 @@ def ann_index_write(embeddings: DataFrame, path: str) -> None:
     assigned = None
     try:
         embn = embn.persist()
-        cent_cid = embn.where(F.col("vec_id") < IVF_CELLS).select(
-            F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-        )
-        assigned = _assign_cells(embn, cent_cid).persist()  # (vec_id, cell, ne)
+        cent = _centroids(embn, IVF_CELLS)
+        assigned = _assign_cells(embn, cent).persist()  # (vec_id, cell, ne)
         cb = codebooks_from_normed(embn)
-        cent = cent_cid.select(F.col("cid").alias("cell"), "ce")
         rcb = _residual_codebooks(assigned, cent)
         (
-            _distribute_for_write(_index_rows(embn, assigned, cb, cent, rcb))
+            _index_rows(embn, assigned, cb, cent, rcb)
             .write.mode("overwrite")
             .partitionBy("cell")
             .parquet(path)
@@ -1326,7 +1185,8 @@ def ann_index_write(embeddings: DataFrame, path: str) -> None:
 def _residual_frame(assigned: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, ne): each vector's residual against its cell centroid —
     the frame the residual codebook/encode pipeline consumes. ``cent``
-    is the (cell, ce) centroid frame (k rows, broadcast)."""
+    is the (cid, ce) centroid frame (k rows, broadcast)."""
+    cent = cent.select(F.col("cid").alias("cell"), "ce")
     return assigned.join(F.broadcast(cent), "cell").select(
         "vec_id", F.zip_with("ne", "ce", lambda a, b: a - b).alias("ne")
     )
@@ -1362,7 +1222,14 @@ def _index_rows(
     normalized frame, its cell assignment and both
     codebooks (absolute 8×16 and residual 8×256) — shared by the full
     build and the incremental append so both write bit-identical
-    rows."""
+    rows.
+
+    The rows are hash-distributed by cell (r14, guide §6's
+    write.distribution-mode=hash): without it every shuffle task
+    writes one file into every cell directory it touches — measured
+    795 files for a 1 500-row sf0.1 build, 397 more per 500-row append.
+    One exchange clusters each cell onto one writer: n_cells files per
+    write."""
     codes = _pack_codes(pq_encode(embn, cb), "pq_code")
     rcodes = _pack_codes(
         pq_encode(_residual_frame(assigned, cent), rcb), "rq_code"
@@ -1373,7 +1240,7 @@ def _index_rows(
         "pq_code",
         "rq_code",
         "cell",
-    )
+    ).repartition("cell")
 
 
 def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
@@ -1415,15 +1282,12 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
             "exceed the stored max (and the quantizer seed range) for "
             "the append to stay bit-identical to a rebuild"
         )
-    cent = stored.where(F.col("vec_id") < IVF_CELLS).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-    )
+    cent = _centroids(stored, IVF_CELLS)
     cb = codebooks_from_normed(stored)
     # residual quantizer, also from the stored rows alone: residual of
     # each seed row against its STORED cell centroid
     stored_cells = _read_index(spark, path).select("vec_id", "ne", "cell")
-    cent_cells = cent.select(F.col("cid").alias("cell"), "ce")
-    rcb = _residual_codebooks(stored_cells, cent_cells)
+    rcb = _residual_codebooks(stored_cells, cent)
     # Same persist discipline as the full build, batch-sided only: the
     # persisted frames are ∝|batch|, NEVER ∝|index| (the stored side
     # stays lazy parquet reads — at 100 TB persisting it would be the
@@ -1436,7 +1300,7 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
         newn = newn.persist()
         assigned = _assign_cells(newn, cent).persist()
         (
-            _distribute_for_write(_index_rows(newn, assigned, cb, cent_cells, rcb))
+            _index_rows(newn, assigned, cb, cent, rcb)
             .write.mode("append")
             .partitionBy("cell")
             .parquet(path)
@@ -1550,142 +1414,50 @@ def sla_rerank_rows(n_vectors: int, k: int = 5) -> int:
     )
 
 
-def _index_exact_topk(
-    spark,
-    path: str,
-    embeddings: DataFrame,
-    n_queries: int,
-    k: int,
-    n_cells: int,
-    n_probes: int,
-    keep: DataFrame | None = None,
-    widen_to: int | None = None,
-) -> DataFrame:
-    """Exact-rerank read of the on-disk index: every row of the probed
-    cells is cosine-scored against its queries — no compressed
-    pre-rank at all. This is the measured recall-1.0 path
-    (ann_ivf_topk's contract over the stored layout): it reads
-    n_probes/n_cells of the dataset via partition pruning and scores
-    what it reads, the right trade when the SLA outranks the scan
-    budget.
-
-    Centroids come from the STORED index rows, not from the passed
-    ``embeddings`` frame (ADVICE r11): the stored cells were assigned
-    against the BUILD frame's centroids, so probing with centroids
-    derived from a different query frame would rank cells that don't
-    match the stored partition layout and silently degrade the
-    "recall 1.0 within probed cells" contract. Same k-row pruned
-    derivation the residual read path uses; when the frames match
-    (the tested default) the two are bit-identical."""
-    embn = _emb_normed(embeddings)
-    cent = (
-        _read_index(spark, path)
-        .where(F.col("vec_id") < n_cells)
-        .select(F.col("vec_id").alias("cid"), F.col("ne").alias("ce"))
-    )
-    q = embn.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qe")
-    )
-    qs = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "qe", "cid", V.dot(F.col("qe"), F.col("ce")).alias("cs")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    ranked = qs.withColumn("pr", F.row_number().over(wprobe))
-    if keep is None:
-        qprobe = ranked.where(F.col("pr") <= n_probes).select(
-            "query_id", "qe", F.col("cid").cast("long").alias("cell")
-        )
-    else:
-        # adaptive widening against the STORED assignment (the on-disk
-        # twin of ivf_topk's filtered probe): the match-count pass
-        # reads only the index's (vec_id, cell) columns — parquet
-        # column pruning keeps the vectors untouched — and the
-        # widened per-query cell set still partition-prunes the
-        # scoring scan below
-        stored_cells = _read_index(spark, path).select("vec_id", "cell")
-        qprobe = _widened_probe(
-            ranked, stored_cells, keep,
-            n_queries, _widen_target(k, widen_to), n_cells, n_probes,
-            qemb_col="qe",
-        )
-    # evaluate the probe ONCE: it is bounded (n_queries × ≤ n_cells
-    # rows — the k-row control-channel convention), so collect it,
-    # rebuild a local frame for the scoring join, and derive the
-    # pruning cell set from the same rows. One probe job instead of
-    # three (probe → broadcast, probe → distinct-cells collect, and on
-    # the keep path the match-count pass replayed per reference —
-    # guide §2.4 / §5: the driver round-trip is the cheap side of a
-    # recomputed subtree).
-    _rows = qprobe.collect()
-    qprobe = spark.createDataFrame(_rows, qprobe.schema)
-    probe_cells = sorted({r["cell"] for r in _rows})
-    idx = _read_index(spark, path).where(F.col("cell").isin(probe_cells))
-    candidates = idx.select("vec_id", "cell", "ne")
-    if keep is not None:
-        # metadata filter COMPOSED with partition pruning: the semi
-        # join runs over only the probed cells' rows — the pruned scan
-        # bounds what the filter ever touches, the filter bounds what
-        # gets scored
-        candidates = candidates.join(
-            keep, candidates["vec_id"] == keep["keep_id"], "left_semi"
-        )
-    scored = (
-        candidates.join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(V.dot(F.col("qe"), F.col("ne")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
 def ann_index_filtered_topk(
     spark,
     path: str,
     embeddings: DataFrame,
-    keep: DataFrame,
+    keep: DataFrame | None = None,
     n_queries: int = 8,
     k: int = 5,
     n_cells: int = IVF_CELLS,
     n_probes: int = IVF_PROBES,
     widen_to: int | None = None,
 ) -> DataFrame:
-    """Filtered vector search over the ON-DISK index: the
-    retrieval-with-filters shape (:func:`ivf_topk` with ``keep``)
-    composed with the stored layout's partition pruning — the scan
-    opens only the probed cell directories, and the metadata semi join
-    runs over just those rows before exact scoring. This is the
-    production read for "nearest docs in language X" against a
-    persisted index: one unfiltered index serves every predicate, the
-    probe is ADAPTIVE (r13 — :func:`_widened_probe` sizes each query's
-    cell prefix so the probed cells hold ≥ k MATCHING rows whenever
-    the corpus has them; the match-count pass reads only the index's
-    (vec_id, cell) columns), and the exact rerank keeps results fully
-    deterministic. The filtered read deliberately uses the EXACT rung,
-    not a compressed pre-rank: a fixed pre-rank budget counts
-    unfiltered candidates, so under a selective predicate it can
-    under-fill with matching rows and silently crater recall — the
-    filtered analogue of the rerank-budget lesson the unfiltered
-    ladder already measured. When the query and build frames match,
-    results are bit-identical to ``ivf_topk(..., keep=keep)``
-    (pytest-pinned:
-    tests/test_pipeline.py::test_ann_index_filtered_matches_memory)."""
-    return _index_exact_topk(
-        spark, path, embeddings, n_queries, k, n_cells, n_probes,
-        keep=keep, widen_to=widen_to,
+    """Exact read of the on-disk index: every row of the probed cells
+    is cosine-scored against its queries — no compressed pre-rank. It
+    reads n_probes/n_cells of the dataset via partition pruning and
+    scores what it reads: recall 1.0 within the probed cells, the
+    :func:`ann_index_topk` ``recall_sla`` path above
+    :data:`SLA_FRACTION_RECALL`.
+
+    With ``keep`` it is the filtered read over the stored layout
+    (:func:`ivf_topk` with ``keep``): the widening's match-count pass
+    reads only the index's (vec_id, cell) columns, and the semi join
+    runs over just the pruned rows. Filtered reads stay on this exact
+    path on purpose: a fixed pre-rank budget counts unfiltered
+    candidates, so under a selective predicate it can under-fill with
+    matching rows. Results are bit-identical to ``ivf_topk(...,
+    keep=keep)`` when the query and build frames match (pytest-pinned:
+    tests/test_pipeline.py::test_ann_index_filtered_matches_memory).
+
+    Centroids come from the STORED index rows, not from the passed
+    ``embeddings`` frame (ADVICE r11): the stored cells were assigned
+    against the BUILD frame's centroids, so probing with centroids
+    derived from a different query frame would rank cells that don't
+    match the stored partition layout."""
+    stored = _read_index(spark, path)
+    probe, cells = _local_probe(
+        _probe(
+            _queries(_emb_normed(embeddings), n_queries),
+            _centroids(stored, n_cells),
+            n_queries, k, n_cells, n_probes,
+            keep, widen_to, stored.select("vec_id", "cell"),
+        )
     )
+    rows = stored.where(F.col("cell").isin(cells)).select("vec_id", "cell", "ne")
+    return _top(_exact_in_cells(_semi(rows, keep), probe), k)
 
 
 def ann_index_topk(
@@ -1699,15 +1471,14 @@ def ann_index_topk(
     rerank_mult: int | None = None,
     recall_sla: float | None = None,
 ) -> DataFrame:
-    """Query the on-disk index: per-query probe cells come from the
-    same broadcast-centroid ranking as :func:`ivf_topk`, their UNION
-    is collected (n_queries × n_probes rows — the k-row control-channel
-    convention) and pushed as a literal ``cell IN (...)`` filter, which
-    parquet partition pruning turns into "open only those cell
-    directories". ADC pre-rank runs over the stored code arrays against
-    broadcast codebooks, exact rerank over the stored unit vectors —
-    bit-identical to the DuckDB IVF×PQ oracle (``queries._ivf_pq_oracle``,
-    tested), while reading n_probes/n_cells of the dataset.
+    """Query the on-disk index: the collected probe's cell list is
+    pushed as a literal ``cell IN (...)`` filter, which parquet
+    partition pruning turns into "open only those cell directories".
+    ADC pre-rank runs over the stored absolute ``pq_code`` arrays
+    against codebooks sampled from ``embeddings``, exact rerank over
+    the stored unit vectors — bit-identical to the DuckDB IVF×PQ
+    oracle (``queries._ivf_pq_oracle``, tested), while reading
+    n_probes/n_cells of the dataset.
 
     ``rerank_mult=None`` auto-scales R with the STORED corpus size —
     counted from the index at ``path`` (a parquet metadata-only count,
@@ -1722,14 +1493,14 @@ def ann_index_topk(
     above: ≤ :data:`SLA_COMPRESSED_FLOOR` → residual ``rq_code``
     pre-rank under the auto budget; ≤ :data:`SLA_FRACTION_RECALL` →
     residual pre-rank with :func:`sla_rerank_rows`; above → the exact
-    path (:func:`_index_exact_topk`, recall 1.0 within probed cells).
-    Mutually exclusive with ``rerank_mult``."""
+    read (:func:`ann_index_filtered_topk` without ``keep``, recall 1.0
+    within probed cells). Mutually exclusive with ``rerank_mult``."""
     if recall_sla is not None:
         if rerank_mult is not None:
             raise ValueError("pass recall_sla OR rerank_mult, not both")
         if recall_sla > SLA_FRACTION_RECALL:
-            return _index_exact_topk(
-                spark, path, embeddings, n_queries, k, n_cells, n_probes
+            return ann_index_filtered_topk(
+                spark, path, embeddings, None, n_queries, k, n_cells, n_probes
             )
         rerank_rows = None
         if recall_sla > SLA_COMPRESSED_FLOOR:
@@ -1749,77 +1520,14 @@ def ann_index_topk(
     if rerank_mult is None:
         rerank_mult = hamming_auto_mult(corpus_size(_read_index(spark, path)))
     embn = _emb_normed(embeddings)
-    cent = embn.where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
+    q = _queries(embn, n_queries)
+    probe, cells = _local_probe(
+        _probe(q, _centroids(embn, n_cells), n_queries, k, n_cells, n_probes)
     )
-    q = embn.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qe")
-    )
-    qs = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "qe", "cid", V.dot(F.col("qe"), F.col("ce")).alias("cs")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    qprobe = (
-        qs.withColumn("pr", F.row_number().over(wprobe))
-        .where(F.col("pr") <= n_probes)
-        .select("query_id", "qe", F.col("cid").cast("long").alias("cell"))
-    )
-    # bounded probe: evaluate once, reuse rows for both the pruning
-    # cell set and the broadcast join (one probe job instead of two)
-    _rows = qprobe.collect()
-    qprobe = spark.createDataFrame(_rows, qprobe.schema)
-    probe_cells = sorted({r["cell"] for r in _rows})
     cb = pq_codebooks(embeddings)
-    idx = _read_index(spark, path).where(F.col("cell").isin(probe_cells))
-    part = (
-        idx.select(
-            "vec_id",
-            "cell",
-            F.posexplode("pq_code").alias("m", "code"),
-        )
-        .join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(cb), ["m", "code"])
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            V.dot_fixed(
-                F.slice(F.col("qe"), F.col("m") * PQ_DSUB + 1, F.lit(PQ_DSUB)),
-                F.col("ce"),
-                PQ_DSUB,
-            ).alias("ps"),
-        )
-    )
-    approx = part.groupBy("query_id", "neighbor_id").agg(
-        F.round(F.sum("ps"), 6).alias("adc")
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        approx.withColumn("ar", F.row_number().over(wa))
-        .where(F.col("ar") <= k * rerank_mult)
-        .select("query_id", "neighbor_id")
-    )
-    c = idx.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qe"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    idx = _read_index(spark, path).where(F.col("cell").isin(cells))
+    codes = idx.select("vec_id", "cell", F.posexplode("pq_code").alias("m", "code"))
+    return _top(_adc_rerank(codes, probe, cb, idx, q, k * rerank_mult, False), k)
 
 
 def ann_index_residual_topk(
@@ -1846,109 +1554,32 @@ def ann_index_residual_topk(
     :data:`PQ_K64` rows — the same reconstruction the append path
     performs, so build, append and query all agree bit-for-bit.
     Results are bit-identical to the in-memory
-    :func:`ivf_pq_residual_topk` (pytest-pinned) while reading
-    n_probes/n_cells of the dataset via partition pruning.
-    ``rerank_rows`` overrides the ``k × mult`` budget with an absolute
-    per-query row count — the SLA-fraction hook (see
-    :func:`sla_rerank_rows`)."""
+    :func:`ivf_pq_residual_topk` (pytest-pinned, ``keep`` included:
+    widening against the STORED assignment, semi join before the
+    pre-rank) while reading n_probes/n_cells of the dataset via
+    partition pruning. ``rerank_rows`` overrides the ``k × mult``
+    budget with an absolute per-query row count — the SLA-fraction
+    hook (see :func:`sla_rerank_rows`)."""
     if rerank_mult is None:
         rerank_mult = hamming_auto_mult(corpus_size(_read_index(spark, path)))
     if rerank_rows is None:
         rerank_rows = k * rerank_mult
-    dsub = DIMS // pq_m
     stored = _read_index(spark, path)
-    cent = stored.where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-    )
-    rcb = _residual_codebooks(
-        stored.select("vec_id", "ne", "cell"),
-        cent.select(F.col("cid").alias("cell"), "ce"),
-    )
-    embn = _emb_normed(embeddings)
-    q = embn.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("ne").alias("qe")
-    )
-    qs = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "qe", "cid", V.dot(F.col("qe"), F.col("ce")).alias("cs")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    ranked = qs.withColumn("pr", F.row_number().over(wprobe))
-    if keep is None:
-        qprobe = ranked.where(F.col("pr") <= n_probes).select(
-            "query_id", "qe", F.col("cid").cast("long").alias("cell"), "cs"
-        )
-    else:
-        # filtered x compressed over the stored layout: widening
-        # against the STORED assignment (column-pruned count pass),
-        # semi join before the pre-rank so the budget counts MATCHING
-        # candidates; the widened cell set still partition-prunes
-        qprobe = _widened_probe(
-            ranked, stored.select("vec_id", "cell"), keep,
-            n_queries, _widen_target(k, widen_to), n_cells, n_probes,
-            qemb_col="qe", extra_cols=("cs",),
-        )
-    # bounded probe (n_queries × ≤ n_cells rows): evaluate it once,
-    # rebuild a local frame for the pre-rank join and derive the
-    # pruning cell set from the same rows — one probe job instead of
-    # two (and on the keep path the match-count pass runs exactly once)
-    _rows = qprobe.collect()
-    qprobe = spark.createDataFrame(_rows, qprobe.schema)
-    probe_cells = sorted({r["cell"] for r in _rows})
-    idx = stored.where(F.col("cell").isin(probe_cells))
-    cand_rows = idx
-    if keep is not None:
-        cand_rows = idx.join(
-            keep, idx["vec_id"] == keep["keep_id"], "left_semi"
-        )
-    part = (
-        cand_rows.select(
-            "vec_id",
-            "cell",
-            F.posexplode("rq_code").alias("m", "code"),
-        )
-        .join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(rcb), ["m", "code"])
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cs",
-            V.dot_fixed(
-                F.slice(F.col("qe"), F.col("m") * dsub + 1, F.lit(dsub)),
-                F.col("ce"),
-                dsub,
-            ).alias("ps"),
+    cent = _centroids(stored, n_cells)
+    rcb = _residual_codebooks(stored, cent)
+    q = _queries(_emb_normed(embeddings), n_queries)
+    probe, cells = _local_probe(
+        _probe(
+            q, cent, n_queries, k, n_cells, n_probes,
+            keep, widen_to, stored.select("vec_id", "cell"),
         )
     )
-    approx = part.groupBy("query_id", "neighbor_id").agg(
-        F.round(F.max("cs") + F.sum("ps"), 6).alias("adc")
+    idx = stored.where(F.col("cell").isin(cells))
+    codes = _semi(idx, keep).select(
+        "vec_id", "cell", F.posexplode("rq_code").alias("m", "code")
     )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        approx.withColumn("ar", F.row_number().over(wa))
-        .where(F.col("ar") <= rerank_rows)
-        .select("query_id", "neighbor_id")
-    )
-    c = idx.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("cemb"))
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("qe"), F.col("cemb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cos"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return _top(
+        _adc_rerank(codes, probe, rcb, idx, q, rerank_rows, True, pq_m), k
     )
 
 

@@ -142,3 +142,32 @@ def loop_conf(spark: SparkSession, partitions: int | None = 8):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def _pin(df: DataFrame) -> DataFrame:
+    """Persist a small reused subtree (lazy; computed at most once per
+    action, reused by every plan branch that references it). Catalyst
+    shares no common subtree across plan branches, so a derived frame
+    read by several branches — the ANN cell assignment, a dedup
+    signature table, a curation gate — is otherwise recomputed once
+    per branch (r14: up to 4× per ANN query, 10 parquet scans of the
+    embeddings table in one plan).
+
+    LIBRARY-CONSUMER NOTE (ADVICE r14): pinned frames are registered
+    with the session's CacheManager and are NOT unpersisted by the
+    query functions — the returned DataFrame still references them, so
+    there is no safe point inside the function to release them. In a
+    long-lived session that calls these functions repeatedly, drop the
+    accumulated blocks between logical units of work the way bench.py
+    and tools/ab_harness.py do::
+
+        spark.catalog.clearCache()          # SQL cache
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist(True)             # checkpoint/persist blocks
+
+    (The on-disk ANN ingest paths — ann_index_write/append — persist
+    scoped frames and DO release them in try/finally, because there the
+    consumer is the write inside the same call.) MEMORY_AND_DISK keeps
+    an evicted pin correct: overflow spills instead of silently
+    recomputing a frame the plan assumed shared."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK)

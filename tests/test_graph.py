@@ -744,9 +744,9 @@ def test_sssp_driver_path_matches_distributed(
 def test_connected_components_driver_path_matches_distributed(spark, name):
     """The driver kernel and the contraction rounds give the same labels.
     ``driver_edge_cap=0`` contracts until the residual is empty (a cap
-    of −1 would spend the whole round budget first); an empty graph is
-    already an empty residual. An edge with a NULL endpoint adds no
-    vertex and no link on either path."""
+    of −1 also contracts round 0, then stops the same way); an empty
+    graph is already an empty residual. An edge with a NULL endpoint
+    adds no vertex and no link on either path."""
     edges = _edges(spark, name)
     local = G.connected_components(spark, edges)
     assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
@@ -758,6 +758,20 @@ def test_connected_components_driver_path_matches_distributed(spark, name):
     assert sorted(map(tuple, lrows)) == sorted(map(tuple, dist.collect()))
     if name == "null_endpoints":
         assert dict(map(tuple, lrows)) == {1: 1, 2: 1, 3: 3, 4: 3}
+
+
+def test_connected_components_negative_cap_stops_at_empty_residual(
+    spark, distributed
+):
+    """Under a negative cap the edge list is contracted without being
+    read, and each later residual is read with the cap floored at 0:
+    a 3-edge graph stops after the residual empties instead of running
+    all 1 + max_iter + star_budget rounds."""
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "src: long, dst: long")
+    got = sorted(map(tuple, G.connected_components(spark, edges).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)]
+    assert 1 <= G.CC_LAST_STATS["rounds"] <= 2
+    assert G.CC_LAST_STATS["star_rounds"] == 0
 
 
 LONG_IDS = "src: long, dst: long"

@@ -17,6 +17,8 @@ from mapreducelearnings_spark.pipeline import textstats as TS
 from mapreducelearnings_spark.queries import REGISTRY, RETIRED
 from mapreducelearnings_spark.streaming import windows as SW
 
+from .conftest import jobs_of
+
 
 # --- dedup ------------------------------------------------------------------
 
@@ -316,6 +318,37 @@ def test_quality_filter_is_conjunction_of_stats(spark, sf_dir):
         assert r["quality_score"] == stats[r["doc_id"]]["quality_score"]
 
 
+#: Spark jobs one registered ANN entry runs to build and collect its
+#: result at sf0.001, every cache cold (the on-disk session index
+#: already built). A change of one means a read, broadcast or collect
+#: was added or removed.
+ANN_ENTRY_JOBS = {
+    "ann_index_append_topk": 50,
+    "ann_index_compact_topk": 53,
+    "ann_index_sla_topk": 14,
+    "ann_ivf_filtered_topk": 23,
+    "ann_ivf_pq64_residual_topk": 20,
+    "ann_ivf_topk": 6,
+    "ann_ivf_trained_topk": 15,
+    "dedup_embedding_nearest": 11,
+    "semdedup_keep": 7,
+    "similarity_topk": 5,
+    "similarity_topk_q8": 5,
+}
+
+
+def test_ann_entry_job_counts(spark, sf_dir):
+    REGISTRY["ann_index_sla_topk"].spark(spark, sf_dir).collect()
+    got = {}
+    for name in ANN_ENTRY_JOBS:
+        spark.catalog.clearCache()
+        SS._CORPUS_SIZE_CACHE.clear()
+        got[name] = jobs_of(
+            spark, lambda: REGISTRY[name].spark(spark, sf_dir).collect()
+        )[1]
+    assert got == ANN_ENTRY_JOBS
+
+
 def test_ivf_assign_partitions_corpus(spark, sf_dir):
     """IVF assignment is a PARTITION: every vector lands in exactly one
     cell, cell ids are valid centroid ids, and each centroid vector is
@@ -370,7 +403,9 @@ def test_ivf_lloyd_trained_quantizer(spark, sf_dir):
         ("sampled", SS.ivf_assign(emb).groupBy("cell").count().collect()),
         (
             "trained",
-            SS._assign_to_literal_centroids(normed, cent)
+            SS._assign_cells(
+                normed, spark.createDataFrame(cent, "cid long, ce array<double>")
+            )
             .groupBy("cell")
             .count()
             .collect(),

@@ -77,14 +77,7 @@ def test_coverage_index_cites_every_query():
     convention) somewhere in COVERAGE.md, and no citation may name a
     query that no longer exists — the mechanical guarantee behind the
     generated cross-index (tools/coverage_index.py)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "coverage_index", "/root/repo/tools/coverage_index.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    _, problems = mod.build_table()
+    _, problems = _load_script("tools/coverage_index.py").build_table()
     assert problems == []
 
 
@@ -93,14 +86,9 @@ def test_sweep_record_merge_semantics(tmp_path, monkeypatch):
     deeper-scale pass supersedes a shallower pass and is NOT
     overwritten by one; a FAIL always overwrites (stale green evidence
     is worse than a visible red)."""
-    import importlib.util
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "check_oracles", "/root/repo/tools/check_oracles.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _load_script("tools/check_oracles.py")
     monkeypatch.setattr(mod, "SWEEPS_PATH", str(tmp_path / "SWEEPS.json"))
 
     mod.record_sweep({"q": True}, "/root/testdata/sf0.01")

@@ -23,9 +23,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout that holds this tool: its package, its SWEEPS.json
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SWEEPS_PATH = "/root/repo/SWEEPS.json"
+SWEEPS_PATH = os.path.join(REPO, "SWEEPS.json")
 
 
 def scale_of(d: str) -> float:

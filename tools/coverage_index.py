@@ -24,13 +24,16 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout that holds this tool: its package and its documents
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-COVERAGE_PATH = "/root/repo/COVERAGE.md"
-SWEEPS_PATH = "/root/repo/SWEEPS.json"
+COVERAGE_PATH = os.path.join(REPO, "COVERAGE.md")
+SWEEPS_PATH = os.path.join(REPO, "SWEEPS.json")
 BEGIN = "<!-- coverage-index:begin (generated by tools/coverage_index.py) -->"
 END = "<!-- coverage-index:end -->"
 
@@ -92,7 +95,7 @@ def expand_wildcards(cites: dict[str, set[str]], known: list[str]) -> dict[str, 
 def latest_driver_rows() -> dict[str, tuple[int, bool]]:
     """name -> (latest round with a driver row, green?)."""
     latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
         try:
             rows = json.load(open(path))

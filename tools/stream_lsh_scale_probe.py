@@ -23,17 +23,18 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BASE_SF = "/root/testdata/sf0.1"
 
 _CHILD = r"""
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from mapreducelearnings_spark.session import get_spark
 from mapreducelearnings_spark.queries import REGISTRY
 
-sf_dir, name = sys.argv[1], sys.argv[2]
+sf_dir, name = sys.argv[2], sys.argv[3]
 spark = get_spark("stream-lsh-probe", shuffle_partitions=32)
 t0 = time.perf_counter()
 n = REGISTRY[name].spark(spark, sf_dir).count()
@@ -45,7 +46,7 @@ spark.stop()
 
 def run_one(sf_dir: str, name: str) -> tuple[float, int]:
     out = subprocess.run(
-        [sys.executable, "-c", _CHILD, sf_dir, name],
+        [sys.executable, "-c", _CHILD, REPO, sf_dir, name],
         capture_output=True,
         text=True,
         check=True,
