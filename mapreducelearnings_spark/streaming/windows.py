@@ -16,14 +16,14 @@ replay history into a streaming pipeline.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.sketch import KMV_K
-from ..plans.iterate import loop_conf
+from ..functions.sketch import KMV_HASH_BASE, KMV_K
 from ..sources.io import read_parquet
 
 
@@ -45,12 +45,72 @@ def _drain_partitions(default: int = 8) -> int:
     state-store count is pinned at checkpoint creation, so this is a
     per-stream design constant, not a host tunable. A malformed value or
     one below 1 falls back to ``default``, as session.default_cpus does
-    for its knob."""
+    for its knob.
+
+    The width is captured when the query starts: :func:`_drain` sets it
+    on the caller's session only around ``start()``, and AQE is left as
+    the caller has it."""
     try:
         width = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", ""))
     except ValueError:
         return default
     return width if width >= 1 else default
+
+
+def _drain(
+    frame: DataFrame,
+    name: str | None = None,
+    mode: str = "append",
+    width: int | None = None,
+    batch=None,
+    checkpoint: str | None = None,
+):
+    """The one availableNow drain behind every ``run_*`` function: writes
+    ``frame`` to the memory sink ``name`` in output ``mode`` or, given a
+    ``batch`` function, through ``foreachBatch`` with ``checkpoint``;
+    blocks until the bounded source is drained and returns the
+    ``StreamingQuery``.
+
+    The shuffle width (``width``, else :func:`_drain_partitions`) is set
+    on the caller's session only around ``start()``. Spark runs the
+    query in a clone of the session taken at ``start()``, and the first
+    batch pins the state-store count from it, so the width lands while
+    the caller's session reads its own value for the whole run. AQE is
+    not touched: memory-sink micro-batches run with it forced off, and a
+    ``foreachBatch`` body sees the caller's setting."""
+    writer = frame.writeStream
+    if batch is None:
+        writer = writer.format("memory").queryName(name).outputMode(mode)
+    else:
+        writer = writer.foreachBatch(batch).option("checkpointLocation", checkpoint)
+    spark, key = frame.sparkSession, "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(width or _drain_partitions()))
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set(key, old)
+    q.awaitTermination()
+    return q
+
+
+def _kmv_est(sorted_hashes: list, k: int) -> float:
+    """KMV distinct estimate of a sorted sketch of at most k hashes,
+    float64-for-float64 the batch ``_estimate_expr``: every operand
+    exactly representable, one IEEE division, the cross-engine floor
+    quantization. Fewer than k hashes is an exact count."""
+    m = len(sorted_hashes)
+    if m < k:
+        return float(m)
+    return (
+        math.floor(
+            (float(k - 1) * float(KMV_HASH_BASE) / float(sorted_hashes[-1] + 1))
+            * 10000
+            + 0.5
+        )
+        / 10000
+    )
+
 
 # Raw schema the file-stream source reads events.parquet with. NOTE the
 # unit asymmetry with the batch path: the parquet column is
@@ -127,16 +187,7 @@ def run_stream_to_memory(
 ) -> None:
     """Backfill pattern: availableNow trigger drains the source, writes
     complete-mode window aggregates to an in-memory sink, terminates."""
-    agg = windowed_counts(stream_events(spark, sf_dir))
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(windowed_counts(stream_events(spark, sf_dir)), table_name, "complete")
 
 
 # NOTE: stream_documents (and DOCS_RAW_SCHEMA) are defined ONCE, in the
@@ -157,15 +208,7 @@ def run_quality_gate_stream_to_memory(
     downstream (dedup, embedding) sees only survivors."""
     from ..pipeline import textstats as TS
 
-    gated = TS.quality_filter(stream_documents(spark, sf_dir))
-    q = (
-        gated.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(TS.quality_filter(stream_documents(spark, sf_dir)), table_name)
 
 
 def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -183,16 +226,31 @@ def run_dedup_stream_to_memory(
 ) -> None:
     """Drain a (possibly duplicate-bearing) bounded events source through
     streaming dedup into an append-mode memory sink."""
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            dedup_stream(stream_events(spark, src_dir))
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    _drain(dedup_stream(stream_events(spark, src_dir)), table_name)
+
+
+def _followup_join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+    """The follow-up join body shared by :func:`followup_pairs` (inner)
+    and :func:`followup_pairs_outer` (left outer): each event of
+    ``left`` against the same user's events of ``right`` in the
+    following 10 minutes."""
+    a, b = (
+        side.select(
+            F.col("event_id").alias(f"{p}_id"),
+            F.col("user_id").alias(f"{p}_user"),
+            F.col("ts").alias(f"{p}_ts"),
+            F.col("event_type").alias(f"{p}_type"),
         )
-        q.awaitTermination()
+        for side, p in ((left, "a"), (right, "b"))
+    )
+    return a.join(
+        b,
+        (F.col("a_user") == F.col("b_user"))
+        & (F.col("b_ts") > F.col("a_ts"))
+        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES"))
+        & (F.col("a_id") != F.col("b_id")),
+        how,
+    ).select("a_id", "b_id", "a_user", "a_type", "b_type")
 
 
 def followup_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -204,25 +262,7 @@ def followup_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     watermark passes the interval, so a 100 TB/day funnel join holds
     minutes of state, not history. Works identically on two batch
     frames (the equivalence oracle in tests)."""
-    a = left.select(
-        F.col("event_id").alias("a_id"),
-        F.col("user_id").alias("a_user"),
-        F.col("ts").alias("a_ts"),
-        F.col("event_type").alias("a_type"),
-    )
-    b = right.select(
-        F.col("event_id").alias("b_id"),
-        F.col("user_id").alias("b_user"),
-        F.col("ts").alias("b_ts"),
-        F.col("event_type").alias("b_type"),
-    )
-    return a.join(
-        b,
-        (F.col("a_user") == F.col("b_user"))
-        & (F.col("b_ts") > F.col("a_ts"))
-        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("a_id") != F.col("b_id")),
-    ).select("a_id", "b_id", "a_user", "a_type", "b_type")
+    return _followup_join(left, right, "inner")
 
 
 def run_followup_join_stream_to_memory(
@@ -233,16 +273,7 @@ def run_followup_join_stream_to_memory(
     once when the watermark closes it."""
     left = stream_events(spark, sf_dir, watermark="30 minutes")
     right = stream_events(spark, sf_dir, watermark="30 minutes")
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            followup_pairs(left, right)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(followup_pairs(left, right), table_name)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -298,7 +329,13 @@ def run_user_totals_upsert_stream(
     requires of its sink logic. Sums are stored FULL-PRECISION and
     rounded only by :func:`read_user_totals`, so multi-batch rounding
     can't drift. A failed read of an existing table ABORTS the batch
-    (checkpoint will replay it) instead of being treated as empty."""
+    (checkpoint will replay it) instead of being treated as empty.
+
+    The existing table is read through the micro-batch's own session
+    (``batch_df.sparkSession``), so the whole merge — read, aggregate,
+    write — runs at the drain's shuffle width and under the AQE setting
+    the caller's session had at ``start()``; the caller's session conf
+    is not changed while the stream runs."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         totals = batch_df.groupBy("user_id").agg(
@@ -320,7 +357,7 @@ def run_user_totals_upsert_stream(
             # Existence is checked explicitly; any OTHER failure below
             # (corrupt footer, transient FS error) propagates and aborts
             # the batch rather than silently truncating the table.
-            existing = read_parquet(spark, out_path)
+            existing = read_parquet(batch_df.sparkSession, out_path)
             merged_max = existing.agg(
                 F.max("_max_batch_id").alias("m")
             ).first()["m"]
@@ -345,15 +382,9 @@ def run_user_totals_upsert_stream(
         fs.rename(new_p, cur)
         fs.delete(old_p, True)
 
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            stream_events(spark, src_dir, glob=glob)
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        stream_events(spark, src_dir, glob=glob), batch=upsert, checkpoint=checkpoint
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -498,20 +529,20 @@ def run_streaming_lsh_to_memory(
     """Drain the bounded documents source through the candidate stream
     into an append-mode memory sink (availableNow backfill pattern).
 
-    The drain runs under ``loop_conf``: a stream-stream join allocates
-    one state store per shuffle partition per micro-batch, so the
-    partition count trades fixed state-store overhead (dominates small
-    drains: 32 partitions measured ~3× slower than 8 at fixture scale)
-    against join/state parallelism (dominates big drains: the r8 10×
-    smoke pinned the drain at 8 partitions while the batch twin ran at
-    32, and the stream grew 6.05× where batch grew 0.84× — the only
+    The drain's shuffle width is a cost knob: a stream-stream join
+    allocates one state store per shuffle partition per micro-batch, so
+    the partition count trades fixed state-store overhead (dominates
+    small drains: 32 partitions measured ~3× slower than 8 at fixture
+    scale) against join/state parallelism (dominates big drains: the r8
+    10× smoke pinned the drain at 8 partitions while the batch twin ran
+    at 32, and the stream grew 6.05× where batch grew 0.84× — the only
     superlinear row that round). ``shuffle_partitions=None`` therefore
     sizes the knob from the source row count (a parquet metadata-only
     count): ~2 000 docs of state per store, clamped to [8, 32] — 8 at
     every driver/bench scale, 25 at the 10× smoke (re-measured ratio
     in PERFORMANCE.md r9). At real ingest volume the same rule scales
     with the arrival window's volume; nothing in the query shape
-    changes.
+    changes. :func:`_drain` applies the width at ``start()`` only.
 
     Returns the drain's per-microbatch progress list (each entry a
     parsed ``StreamingQueryProgress`` dict): ``stateOperators[*].
@@ -519,49 +550,43 @@ def run_streaming_lsh_to_memory(
     curve, which the eviction pytest and the 100× probe assert stays
     bounded by the watermark horizon — not by the corpus — once event
     time advances under the stream (VERDICT r11 Next #4). The default
-    single-batch drain returns one entry."""
-    import json as _json
+    single-batch drain returns one entry.
 
-    from ..plans.iterate import loop_conf
+    ``recentProgress`` keeps only the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` entries (default
+    100), so a long file-by-file drain would silently truncate the
+    returned curve — possibly dropping its true peak (ADVICE r12). The
+    retention is sized to the drain's micro-batch bound (with
+    ``max_files_per_trigger`` = m, ~ceil(n_files / m) batches plus slack
+    for availableNow's bookkeeping batches) and held on the caller's
+    session for the whole drain, then restored: Spark reads this conf
+    from the caller's live session on every progress update, not from
+    the clone taken at ``start()`` (set only around ``start()``, a
+    6-batch drain under a retention of 2 still returned 6 entries), so
+    it cannot move into :func:`_drain`'s ``start()`` window."""
+    import json as _json
 
     src_df = read_parquet(spark, f"{src_dir}/{glob}")
     if shuffle_partitions is None:
-        n_docs = src_df.count()
-        shuffle_partitions = max(8, min(32, n_docs // 2000))
+        shuffle_partitions = max(8, min(32, src_df.count() // 2000))
     _quiet_streaming_join_helper(spark)
-    # recentProgress retains only the LAST numRecentProgressUpdates
-    # entries (default 100), so a long file-by-file drain would
-    # silently truncate the returned occupancy curve — possibly
-    # dropping its true peak (ADVICE r12). Size the retention to the
-    # drain's microbatch bound up front: with maxFilesPerTrigger=m the
-    # drain runs ~ceil(n_files/m) batches (+ slack for availableNow's
-    # bookkeeping batches); inputFiles() is a metadata-only listing.
-    n_files = len(src_df.inputFiles())
+    n_files = len(src_df.inputFiles())  # a metadata-only listing
     batch_bound = n_files // max(1, max_files_per_trigger or n_files or 1) + 8
+    src = stream_documents(
+        spark,
+        src_dir,
+        watermark=watermark,
+        glob=glob,
+        arrival_period_s=arrival_period_s,
+        arrival_spread_s=arrival_spread_s,
+        max_files_per_trigger=max_files_per_trigger,
+    )
     prog_key = "spark.sql.streaming.numRecentProgressUpdates"
     prog_old = spark.conf.get(prog_key, None)
     spark.conf.set(prog_key, str(max(100, batch_bound)))
     try:
-        with loop_conf(spark, shuffle_partitions):
-            src = stream_documents(
-                spark,
-                src_dir,
-                watermark=watermark,
-                glob=glob,
-                arrival_period_s=arrival_period_s,
-                arrival_spread_s=arrival_spread_s,
-                max_files_per_trigger=max_files_per_trigger,
-            )
-            q = (
-                streaming_lsh_candidates(src)
-                .writeStream.format("memory")
-                .queryName(table_name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return [_json.loads(p.json) for p in q.recentProgress]
+        q = _drain(streaming_lsh_candidates(src), table_name, width=shuffle_partitions)
+        return [_json.loads(p.json) for p in q.recentProgress]
     finally:
         if prog_old is None:
             spark.conf.unset(prog_key)
@@ -625,15 +650,7 @@ def run_stateful_stream_to_memory(
     (availableNow) into a memory sink; the LAST update per user is the
     final running total."""
     agg = running_user_totals_stream(stream_events(spark, sf_dir))
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(agg, table_name, "update")
 
 
 def kmv_distinct_stream(events: DataFrame, k: int = KMV_K) -> DataFrame:
@@ -669,7 +686,6 @@ def kmv_distinct_stream(events: DataFrame, k: int = KMV_K) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from ..functions import text as X
-    from ..functions.sketch import KMV_HASH_BASE
 
     hashed = events.where(F.col("user_id").isNotNull()).select(
         "event_type",
@@ -682,8 +698,6 @@ def kmv_distinct_stream(events: DataFrame, k: int = KMV_K) -> DataFrame:
     state_schema = "hashes ARRAY<LONG>, rows_seen LONG"
 
     def update(key, pdfs, state: GroupState):
-        import math
-
         if state.exists:
             stored, seen = state.get
             hs = {int(x) for x in stored}
@@ -696,26 +710,11 @@ def kmv_distinct_stream(events: DataFrame, k: int = KMV_K) -> DataFrame:
                 hs = set(sorted(hs)[:k])  # merge-safe at any point
         sk = [int(x) for x in sorted(hs)[:k]]
         state.update((sk, seen))
-        m = len(sk)
-        if m < k:
-            est = float(m)
-        else:
-            # float64-for-float64 the batch _estimate_expr: every
-            # operand exactly representable, one IEEE division, the
-            # cross-engine floor quantization
-            est = (
-                math.floor(
-                    (float(k - 1) * float(KMV_HASH_BASE) / float(sk[-1] + 1))
-                    * 10000
-                    + 0.5
-                )
-                / 10000
-            )
         yield pd.DataFrame(
             {
                 "event_type": [key[0]],
-                "sketch_size": [m],
-                "est_distinct": [est],
+                "sketch_size": [len(sk)],
+                "est_distinct": [_kmv_est(sk, k)],
                 "rows_seen": [seen],
             }
         )
@@ -735,39 +734,23 @@ def run_kmv_distinct_stream_to_memory(
     table_name: str = "kmv_distinct",
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    shuffle_partitions: int = 8,
 ) -> None:
     """Drain the bounded events source through the streaming KMV
     sketch (availableNow) into a memory sink; ``max_files_per_trigger``
     + a multi-file source dir forces multiple microbatches, exercising
     the cross-batch state merge.
 
-    The drain runs under ``loop_conf`` at a SMALL partition count (the
+    The drain runs at the SMALL :func:`_drain_partitions` width (the
     stream-LSH drain's lesson, r8): a stateful operator allocates one
     state store per shuffle partition per microbatch, and the sketch
     keys on event_type — a handful of groups, each k longs of state —
     so 32 stores is pure fixed overhead; 8 covers any realistic group
     fan-out here while a wide deployment would size it like the LSH
     drain does (state volume / ~2k rows per store)."""
-    from ..plans.iterate import loop_conf
-
-    agg = kmv_distinct_stream(
-        stream_events(
-            spark,
-            sf_dir,
-            glob=glob,
-            max_files_per_trigger=max_files_per_trigger,
-        )
+    events = stream_events(
+        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
-    with loop_conf(spark, shuffle_partitions):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(kmv_distinct_stream(events), table_name, "update")
 
 
 def kmv_overlap_stream(
@@ -811,7 +794,6 @@ def kmv_overlap_stream(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from ..functions import text as X
-    from ..functions.sketch import KMV_HASH_BASE
 
     ref_rows = ref_sketch.select(
         *(["u", "k"] if "k" in ref_sketch.columns else ["u"])
@@ -826,21 +808,7 @@ def kmv_overlap_stream(
     if not ref:
         raise ValueError("kmv_overlap_stream: empty reference sketch")
     ref_set = set(ref)
-    # est_b: the reference side's estimate — float64-for-float64 the
-    # batch _estimate_expr, computed once
-    import math as _math
-
-    if len(ref) < k:
-        est_b = float(len(ref))
-    else:
-        est_b = (
-            _math.floor(
-                (float(k - 1) * float(KMV_HASH_BASE) / float(ref[-1] + 1))
-                * 10000
-                + 0.5
-            )
-            / 10000
-        )
+    est_b = _kmv_est(ref, k)  # the reference side's estimate, computed once
 
     hashed = events.where(F.col("user_id").isNotNull()).select(
         "event_type",
@@ -855,25 +823,6 @@ def kmv_overlap_stream(
     state_schema = "hashes ARRAY<LONG>, rows_seen LONG"
 
     def update(key, pdfs, state: GroupState):
-        import math
-
-        def est(sk_sorted: list) -> float:
-            m = len(sk_sorted)
-            if m < k:
-                return float(m)
-            return (
-                math.floor(
-                    (
-                        float(k - 1)
-                        * float(KMV_HASH_BASE)
-                        / float(sk_sorted[-1] + 1)
-                    )
-                    * 10000
-                    + 0.5
-                )
-                / 10000
-            )
-
         if state.exists:
             stored, seen = state.get
             hs = {int(x) for x in stored}
@@ -892,9 +841,9 @@ def kmv_overlap_stream(
         both = sum(1 for u in union if u in a_set and u in ref_set)
         # batch kmv_jaccard, float64-for-float64
         jacc = math.floor((float(both) / float(m)) * 10000 + 0.5) / 10000
-        est_union = est(union)
+        est_union = _kmv_est(union, k)
         inter = math.floor(jacc * est_union * 10000 + 0.5) / 10000
-        est_a = est(sk)
+        est_a = _kmv_est(sk, k)
         # batch kmv_containment incl. the ADVICE-r13 clamp
         c_a = (
             math.floor(
@@ -939,32 +888,15 @@ def run_kmv_overlap_stream_to_memory(
     table_name: str = "kmv_overlap",
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    shuffle_partitions: int = 8,
 ) -> None:
     """Drain the bounded events source through the streaming overlap
     monitor (availableNow) into a memory sink — the same drain shape
     (and the same small-partition state-store sizing rationale) as
     :func:`run_kmv_distinct_stream_to_memory`."""
-    from ..plans.iterate import loop_conf
-
-    agg = kmv_overlap_stream(
-        stream_events(
-            spark,
-            sf_dir,
-            glob=glob,
-            max_files_per_trigger=max_files_per_trigger,
-        ),
-        ref_sketch,
+    events = stream_events(
+        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
-    with loop_conf(spark, shuffle_partitions):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(kmv_overlap_stream(events, ref_sketch), table_name, "update")
 
 
 def enriched_segment_totals(events: DataFrame, customer: DataFrame) -> DataFrame:
@@ -996,15 +928,7 @@ def run_enriched_totals_to_memory(
     agg = enriched_segment_totals(
         stream_events(spark, sf_dir), load_table(spark, sf_dir, "customer")
     )
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(agg, table_name, "complete")
 
 
 def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -1044,15 +968,7 @@ def run_session_windows_stream_to_memory(
     input stay in state and are never emitted. The stream≡batch contract
     test mirrors that closure predicate on the batch twin."""
     agg = session_counts(stream_events(spark, sf_dir, watermark=watermark), gap)
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(agg, table_name)
 
 
 def run_incident_counts_stream_to_memory(
@@ -1105,15 +1021,7 @@ def run_incident_counts_stream_to_memory(
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(joined, table_name, "complete")
 
 
 def followup_pairs_outer(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -1127,26 +1035,7 @@ def followup_pairs_outer(left: DataFrame, right: DataFrame) -> DataFrame:
     here (Spark rejects an unbounded outer stream-stream join
     outright). Works identically on batch frames (the equivalence
     oracle in tests)."""
-    a = left.select(
-        F.col("event_id").alias("a_id"),
-        F.col("user_id").alias("a_user"),
-        F.col("ts").alias("a_ts"),
-        F.col("event_type").alias("a_type"),
-    )
-    b = right.select(
-        F.col("event_id").alias("b_id"),
-        F.col("user_id").alias("b_user"),
-        F.col("ts").alias("b_ts"),
-        F.col("event_type").alias("b_type"),
-    )
-    return a.join(
-        b,
-        (F.col("a_user") == F.col("b_user"))
-        & (F.col("b_ts") > F.col("a_ts"))
-        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("a_id") != F.col("b_id")),
-        "left_outer",
-    ).select("a_id", "b_id", "a_user", "a_type", "b_type")
+    return _followup_join(left, right, "left_outer")
 
 
 def run_followup_outer_join_stream_to_memory(
@@ -1157,13 +1046,4 @@ def run_followup_outer_join_stream_to_memory(
     emit when the watermark proves no partner can still arrive."""
     left = stream_events(spark, sf_dir, watermark="30 minutes")
     right = stream_events(spark, sf_dir, watermark="30 minutes")
-    with loop_conf(spark, _drain_partitions()):
-        q = (
-            followup_pairs_outer(left, right)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(followup_pairs_outer(left, right), table_name)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +25,51 @@ def test_drain_partitions_env_knob(monkeypatch, raw, want):
     else:
         monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", raw)
     assert SW._drain_partitions() == want
+
+
+def test_drain_leaves_caller_conf_alone_while_running(spark, sf_dir, tmp_path):
+    """A drain writes the caller's session conf only around start(): a
+    foreachBatch body polling the caller's conf while the query still
+    runs reads the caller's own shuffle width and AQE flag, not the
+    drain's width (3) or a flipped AQE. A scope held through
+    awaitTermination() would keep the poll from ever seeing them."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    want = tuple(spark.conf.get(k) for k in keys)
+    assert want[0] != "3"
+    seen = []
+
+    def body(batch_df, batch_id):
+        deadline = time.monotonic() + 10
+        got = tuple(spark.conf.get(k) for k in keys)
+        while got != want and time.monotonic() < deadline:
+            time.sleep(0.05)
+            got = tuple(spark.conf.get(k) for k in keys)
+        seen.append(got)
+
+    SW._drain(
+        SW.stream_events(spark, sf_dir),
+        width=3,
+        batch=body,
+        checkpoint=str(tmp_path / "ck"),
+    )
+    assert seen and all(got == want for got in seen)
+
+
+def test_drain_width_lands_at_start(spark, sf_dir, monkeypatch):
+    """The width set only around start() is the one the query runs at:
+    the stateful operator holds $SPARK_GRAFT_STREAM_SHUFFLE = 3 state
+    stores (the test session's own width is 8, the drain default), and
+    the caller's conf is unchanged afterwards."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
+    before = spark.conf.getAll
+    q = SW._drain(
+        SW.running_user_totals_stream(SW.stream_events(spark, sf_dir)),
+        "t_drain_width",
+        "update",
+    )
+    ops = q.lastProgress["stateOperators"]
+    assert [op["numStateStoreInstances"] for op in ops] == [3]
+    assert spark.conf.getAll == before
 
 
 def test_partitioned_write_prunes_directories(spark, sf_dir, tmp_path):
