@@ -17,6 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mapreducelearnings_spark.session import default_cpus  # noqa: E402
+
 # Headline set: one representative per workload family; grows with the
 # engine. Keep in sync with SURVEY.md §2 coverage.
 HEADLINE = [
@@ -165,28 +167,21 @@ HEADLINE = [
     "distinct_kmv_jaccard",
     "distinct_kmv_containment",
     "similarity_topk_q8",
-    # r12: the streaming KMV drain promoted to a registry row by the
-    # retirements above (VERDICT r11 Next #8)
+    # r12: the streaming KMV drain
     "distinct_kmv_stream",
-    # round-10: the two output-quadratic enumeration twins
-    # (dedup_embedding_cosine/_clusters) moved to RETIRED — still
-    # oracle-checked every pytest run, no longer headline slots.
-    # round-9: the bounded-output production near-dup (Θ(n) output,
-    # in-place collision scoring — the 100 TB form of the retired
-    # enumeration twins)
+    # round-9: the bounded-output near-dup (Θ(n) output, in-place
+    # collision scoring)
     "dedup_embedding_nearest",
     "semdedup_keep",
-    # round-10: FAISS-IVFPQ residual encoding and the on-disk index
-    # build→append→query ingest chain
+    # round-10: FAISS-IVFPQ residual encoding
     "ann_ivf_pq64_residual_topk",
-    "ann_index_append_topk",
     # round-13: the maintenance pass — build→append→COMPACT→query;
     # the headline counts its query phase (reads the compacted index),
     # build/append/compact itemized as ingest
     "ann_index_compact_topk",
     # round-11: the >=0.9-recall SLA read path over the session-scoped
     # on-disk index (build amortized; min-of-3 times the READ path —
-    # ingest is ann_index_append_topk's phase-timed chain)
+    # ingest is ann_index_compact_topk's phase-timed chain)
     "ann_index_sla_topk",
 ]
 
@@ -267,9 +262,7 @@ _CALIBRATION_WIDE_REF_SEC = float(
 # [$SPARK_GRAFT_CPUS] (the bench session's master), capped at the
 # host's real core count so the probe measures all-core throughput,
 # not oversubscription artifacts (ADVICE r7 — was hardcoded 32).
-_WIDE_WORKERS = min(
-    int(os.environ.get("SPARK_GRAFT_CPUS", "32")), os.cpu_count() or 32
-)
+_WIDE_WORKERS = min(default_cpus(), os.cpu_count() or 32)
 
 
 def _calibration_probe_wide(workers: int = _WIDE_WORKERS) -> float:
@@ -461,7 +454,7 @@ def main() -> None:
     # Read-path headline (VERDICT r11 Next #5): a chain entry's ingest
     # phases (build/append — one-time ∝-corpus I/O by its cost model)
     # must not read as query latency in the headline sum; ~82% of the
-    # 14 s ann_index_append_topk row was ingest inside a 127 s total.
+    # 14 s build→append→query chain row was ingest inside a 127 s total.
     # The headline counts only the query phase of phase-split entries;
     # the full chain time stays recorded per-query in `queries` and in
     # `full_total_sec`, the excluded ingest itemized alongside.

@@ -36,12 +36,6 @@ def follower_count(edges: DataFrame, dst_col: str = "dst") -> DataFrame:
     return edges.groupBy(dst_col).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def follower_sum(edges: DataFrame, dst_col: str, value_col: str) -> DataFrame:
-    """foldByKey/aggregateByKey twin: grouped SUM of a value column
-    (FoldByKey/src/main/scala/wc/FollowersCount.scala:27)."""
-    return edges.groupBy(dst_col).agg(F.sum(value_col).alias("val_sum"))
-
-
 def max_filter(edges: DataFrame, cap: int) -> DataFrame:
     """The reference's dataset down-sampling filter: keep edges whose
     endpoints are both <= cap (RepJoin/.../CountFollowers.java:55,90).

@@ -61,51 +61,3 @@ def weighted_avg_quantity(lineitem: DataFrame) -> DataFrame:
             "w_avg_qty"
         )
     )
-
-
-RUNNING_TOTALS_SCHEMA = (
-    "o_custkey bigint, o_orderkey bigint, "
-    "running_spend double, prev_price double"
-)
-
-
-def running_totals_pandas(orders: DataFrame, num_partitions: int = 32) -> DataFrame:
-    """GROUPED-MAP applyInPandas twin of the window-function
-    ``customer_running_totals`` query (same oracle): each customer's
-    order history arrives as ONE pandas frame; cumsum/shift reproduce
-    the running-spend + LAG analytics. Physical shape: one hash
-    shuffle on the group key, then per-group Arrow round-trips — the
-    slow-but-flexible member next to the window twin (which stays in
-    JVM codegen), kept with both for the same reason the rdd_parity
-    *ByKey twins exist. pandas' left-to-right cumsum matches the
-    window frame's accumulation order, so the twins agree bit-exactly
-    pre-round. Measured at sf0.1 (10k groups): ~20 s with AQE's
-    byte-based coalescing, 10 s cold / 4 s warm with the explicit
-    width — the remaining cost IS the 10k per-group Arrow round-trips
-    (window twin: 0.3 s), which is why the window path is the
-    registered hot path."""
-    import pandas as pd
-
-    def per_customer(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["o_orderdate", "o_orderkey"])
-        return pd.DataFrame(
-            {
-                "o_custkey": pdf["o_custkey"],
-                "o_orderkey": pdf["o_orderkey"],
-                "running_spend": pdf["o_totalprice"].cumsum().round(2),
-                "prev_price": pdf["o_totalprice"]
-                .shift(1)
-                .fillna(0.0)
-                .round(2),
-            }
-        )
-
-    return (
-        orders.select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        # lesson 16: AQE coalesces this exchange by BYTES, but the
-        # stage's cost is per GROUP (one Arrow round-trip each) — an
-        # explicit partition count keeps the pandas stage wide
-        .repartition(num_partitions, "o_custkey")
-        .groupBy("o_custkey")
-        .applyInPandas(per_customer, RUNNING_TOTALS_SCHEMA)
-    )

@@ -39,13 +39,10 @@ The paths (each function's docstring says only what differs):
   :func:`ann_index_topk` (absolute ADC; ``recall_sla=`` picks the
   residual read :func:`ann_index_residual_topk` or the exact read
   :func:`ann_index_filtered_topk`).
-- **LSH near-dup** (:func:`embedding_nearest_lsh`,
-  :func:`embedding_near_dup_pairs_lsh`) — multi-table random-hyperplane
-  buckets (md5-derived planes embedded as literals in both the Spark
-  plan and the SQL oracle); candidates are (table, bucket) collisions.
-
-The quadratic :func:`embedding_near_dup_pairs` is the exact ground
-truth of the LSH near-dup paths in tests.
+- **LSH near-dup** (:func:`embedding_nearest_lsh`) — multi-table
+  random-hyperplane buckets (md5-derived planes embedded as literals in
+  both the Spark plan and the SQL oracle); candidates are (table,
+  bucket) collisions.
 """
 
 from __future__ import annotations
@@ -889,103 +886,19 @@ def pq_encode(
     )
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.95
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cos ≥ t),
-    exhaustive O(n²) cross join.
-
-    TEST-ONLY recall oracle: this is the exhaustive ground truth the
-    LSH path (:func:`embedding_near_dup_pairs_lsh`, the registered
-    ``dedup_embedding_cosine`` query) is measured against in pytest.
-    Not registered as a query and never a production path — at 100 TB
-    the cross product never finishes."""
-    emb = _emb_normed(embeddings)
-    a = emb.select(F.col("vec_id").alias("vec_a"), F.col("ne").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("vec_b"), F.col("ne").alias("eb"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(V.dot(F.col("ea"), F.col("eb")), 4).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-
-
-def embedding_near_dup_pairs_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    n_tables: int = N_TABLES,
-    planes_per_table: int = MULTI_PLANES,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via multi-table hyperplane
-    LSH — the 100 TB path.
-
-    Candidate pairs come from an equi-join on (table, bucket): only
-    vectors sharing a bucket in at least one of the L tables are ever
-    compared, so the join touches collisions, not the n² cross product.
-    Recall is approximate but fully deterministic (md5-derived planes),
-    so the same bucketing mirrored in SQL keeps the result
-    oracle-checkable.
-
-    Scale shape: the bucket join carries vec_ids ONLY (narrow rows —
-    the L× LSH row amplification never ships vectors), candidates are
-    DISTINCT-ed before scoring (a pair colliding in several tables is
-    scored once, not L times), vectors are re-attached WIDE (one double
-    column per dimension) by two id equi-joins, and the exact cosine is
-    a codegen multiply-add chain — no HOF interpretation, no Python
-    worker, bit-exact with the SQL oracle's list_dot_product."""
-    wide = _pin(_emb_wide(embeddings))
-    tagged_ids = _pin(
-        _multi_table_tagged_ids(
-            _emb_normed(embeddings), n_tables, planes_per_table
-        )
-    )
-    # aliases l/r, NOT a/b: the bucket column is named "b" and a dataset
-    # alias "b" would shadow it in column resolution
-    cand = (
-        tagged_ids.alias("l")
-        .join(tagged_ids.alias("r"), ["t", "b"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.join(_rename_wide(wide, "vec_a", "a"), "vec_a")
-        .join(_rename_wide(wide, "vec_b", "b"), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(_dot_wide("a", "b"), 4).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-
-
 def embedding_nearest_lsh(
     embeddings: DataFrame,
     n_tables: int = N_TABLES,
     planes_per_table: int = MULTI_PLANES,
 ) -> DataFrame:
     """Per-vector nearest same-bucket LSH neighbor — the BOUNDED-OUTPUT
-    production form of embedding near-dup detection (VERDICT r8 Next
-    #3).
+    form of embedding near-dup detection. A full above-threshold pair
+    enumeration is Θ(n²/k) rows on clustered data at a low threshold; a
+    dedup pipeline only needs each document's BEST candidate (then
+    thresholds/links downstream), and that output is Θ(n) by
+    construction: one row per vector that collided with anything.
 
-    :func:`embedding_near_dup_pairs_lsh` materializes the full
-    above-threshold pair enumeration, which on clustered data is
-    Θ(n²/k) rows at a low threshold — fine as an oracle twin, fatal as
-    a 100 TB output. A dedup pipeline only needs each document's BEST
-    candidate (then thresholds/links downstream), and that output is
-    Θ(n) by construction: one row per vector that collided with
-    anything.
-
-    Scale shape: candidates are the same (table, bucket) equi-join
+    Scale shape: candidates are (table, bucket) equi-join
     collisions — but scored IN PLACE, with the unit vectors carried
     through the bucket join (Θ(n·L) wide rows shuffled once on the
     bucket key), and WITHOUT deduplicating cross-table repeat pairs

@@ -23,18 +23,49 @@ single engine-wide replacement.
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "mapreducelearnings-spark"
+#: the directory that holds this package, for the Python workers' path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_T = TypeVar("_T")
+
+
+def _env(name: str, parse: Callable[[str], _T], default: _T) -> _T:
+    """The one reader of the package's ``SPARK_GRAFT_*`` knobs: an unset
+    or malformed value (``parse`` raises ValueError) yields ``default``
+    instead of failing the session or the query that reads it."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        return parse(raw.strip())
+    except ValueError:
+        return default
+
+
+def _positive_int(raw: str) -> int:
+    value = int(raw)
+    if value < 1:
+        raise ValueError(raw)
+    return value
+
+
+def _jvm_size(raw: str) -> str:
+    """A JVM memory string as ``spark.driver.memory`` takes it (``512m``,
+    ``16g``; a bare number is MiB)."""
+    if not re.fullmatch(r"[1-9][0-9]*(?:[kmgtp]b?|b)?", raw, re.IGNORECASE):
+        raise ValueError(raw)
+    return raw
 
 
 def default_cpus() -> int:
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "")
-    try:
-        return max(1, int(raw))
-    except ValueError:
-        return os.cpu_count() or 4
+    return _env("SPARK_GRAFT_CPUS", _positive_int, os.cpu_count() or 4)
 
 
 def get_spark(
@@ -90,11 +121,18 @@ def get_spark(
         # --- Python interop is Arrow-batched, never row-at-a-time ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- local-mode driver is also the executor; give it room ---
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _env("SPARK_GRAFT_DRIVER_MEM", _jvm_size, "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.crossJoin.enabled", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Python workers import this package by name (UDFs, applyInPandas,
+    # foreachBatch bodies). A caller that put the checkout on sys.path and
+    # runs from another directory would leave them unable to, so the
+    # package's directory goes on their PYTHONPATH ahead of the caller's.
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (_PACKAGE_ROOT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -17,13 +17,13 @@ replay history into a streaming pipeline.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.sketch import KMV_HASH_BASE, KMV_K
+from ..session import _env, _positive_int
 from ..sources.io import read_parquet
 
 
@@ -44,17 +44,12 @@ def _drain_partitions(default: int = 8) -> int:
     size it to arrival volume via $SPARK_GRAFT_STREAM_SHUFFLE; the
     state-store count is pinned at checkpoint creation, so this is a
     per-stream design constant, not a host tunable. A malformed value or
-    one below 1 falls back to ``default``, as session.default_cpus does
-    for its knob.
+    one below 1 falls back to ``default`` (``session._env``).
 
     The width is captured when the query starts: :func:`_drain` sets it
     on the caller's session only around ``start()``, and AQE is left as
     the caller has it."""
-    try:
-        width = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", ""))
-    except ValueError:
-        return default
-    return width if width >= 1 else default
+    return _env("SPARK_GRAFT_STREAM_SHUFFLE", _positive_int, default)
 
 
 def _drain(

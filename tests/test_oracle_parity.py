@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from mapreducelearnings_spark.queries import REGISTRY, RETIRED
+from mapreducelearnings_spark.queries import REGISTRY
 
 from .conftest import assert_matches_oracle
 
@@ -20,33 +20,6 @@ ROWS_ONLY = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     spec = REGISTRY[name]
     assert_matches_oracle(spec.spark(spark, sf_dir), duck, spec.oracle)
-
-
-@pytest.mark.parametrize("name", sorted(RETIRED))
-def test_retired_query_matches_oracle(name, spark, duck, sf_dir):
-    """Specs retired from the driver rotation (r8 capacity work) keep
-    full local oracle coverage — retirement frees a driver slot, never
-    a correctness check."""
-    spec = RETIRED[name]
-    assert_matches_oracle(spec.spark(spark, sf_dir), duck, spec.oracle)
-
-
-def test_cube_is_grouping_sets_subset(spark, sf_dir):
-    """Equivalence pin for the sales_cube retirement: CUBE(a, b) over
-    the same table/measure must produce exactly grouping_sets_pricing's
-    rows minus the GROUPING() marker columns."""
-    cube = {
-        tuple(r)
-        for r in RETIRED["sales_cube"].spark(spark, sf_dir).collect()
-    }
-    gsets = {
-        tuple(r)
-        for r in REGISTRY["grouping_sets_pricing"]
-        .spark(spark, sf_dir)
-        .drop("g_flag", "g_status")
-        .collect()
-    }
-    assert cube == gsets
 
 
 def test_no_rows_only_queries():

@@ -14,7 +14,7 @@ from mapreducelearnings_spark.pipeline import dedup as DD
 from mapreducelearnings_spark.pipeline import multimodal as MM
 from mapreducelearnings_spark.pipeline import simsearch as SS
 from mapreducelearnings_spark.pipeline import textstats as TS
-from mapreducelearnings_spark.queries import REGISTRY, RETIRED
+from mapreducelearnings_spark.queries import REGISTRY
 from mapreducelearnings_spark.streaming import windows as SW
 
 from .conftest import jobs_of
@@ -59,28 +59,6 @@ def test_exact_dedup_no_dups_at_this_sf(spark, sf_dir):
 
 
 # --- similarity search ------------------------------------------------------
-
-
-def test_embedding_lsh_near_dup_subset_and_recall(spark, sf_dir):
-    """The registered multi-table LSH near-dup query must (a) never
-    invent a pair — every emitted pair is exactly-scored, so LSH output
-    ⊆ brute-force ground truth (precision 1.0) — and (b) recall most of
-    the truth at the registered (8 tables × 4 planes) config."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = {
-        (r["vec_a"], r["vec_b"])
-        for r in SS.embedding_near_dup_pairs(emb, threshold=0.4).collect()
-    }
-    got = {
-        (r["vec_a"], r["vec_b"])
-        for r in SS.embedding_near_dup_pairs_lsh(
-            emb, threshold=0.4, n_tables=8, planes_per_table=4
-        ).collect()
-    }
-    assert truth, "fixture should contain cos>=0.4 pairs"
-    assert got <= truth, f"LSH emitted non-pairs: {got - truth}"
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.6, f"multi-table LSH recall collapsed: {recall:.3f}"
 
 
 def _recall_at_k(truth_rows, ann_rows) -> float:
@@ -323,7 +301,6 @@ def test_quality_filter_is_conjunction_of_stats(spark, sf_dir):
 #: already built). A change of one means a read, broadcast or collect
 #: was added or removed.
 ANN_ENTRY_JOBS = {
-    "ann_index_append_topk": 50,
     "ann_index_compact_topk": 53,
     "ann_index_sla_topk": 14,
     "ann_ivf_filtered_topk": 23,
@@ -432,30 +409,6 @@ def test_pq_adc_recall_and_exact_rerank(spark, sf_dir):
         key = (r["query_id"], r["neighbor_id"])
         if key in exact:
             assert r["cos"] == exact[key]
-
-
-def test_embedding_clusters_group_every_pair(spark, sf_dir):
-    """Connected components over the LSH near-dup pairs: both ends of
-    every pair share a cluster, and each cluster id is its min member."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = SS.embedding_near_dup_pairs_lsh(
-        emb, threshold=0.4, n_tables=8, planes_per_table=4
-    ).collect()
-    assert pairs, "fixture should contain cos>=0.4 pairs"
-    cc = {
-        r["vec_id"]: r["cluster_id"]
-        for r in (REGISTRY.get("dedup_embedding_clusters")
-                  or RETIRED["dedup_embedding_clusters"])
-        .spark(spark, sf_dir)
-        .collect()
-    }
-    for r in pairs:
-        assert cc[r["vec_a"]] == cc[r["vec_b"]], (r["vec_a"], r["vec_b"])
-    members: dict[int, list[int]] = {}
-    for v, c in cc.items():
-        members.setdefault(c, []).append(v)
-    for c, vs in members.items():
-        assert c == min(vs)
 
 
 def test_approx_count_distinct_within_rsd(spark, sf_dir):
@@ -950,22 +903,24 @@ def test_ann_index_residual_roundtrip_matches_in_memory(
 def test_ann_index_append_chain_cleans_temp_and_reports_phases(
     spark, sf_dir
 ):
-    """The build→append→query chain query must leave NO temp index dirs
-    behind (VERDICT r10 Next #3 — bench min-of-3 × sweeps used to leak
-    gigabytes of dead indexes per session) and must record its
-    build/append/query phase split for bench.py's `phases` block."""
+    """The build→append→compact→query chain query must leave NO temp
+    index dirs behind (bench min-of-3 × sweeps used to leak gigabytes of
+    dead indexes per session) and must record its four-phase split for
+    bench.py's `phases` block."""
     import glob
     import tempfile
 
     from mapreducelearnings_spark.queries import PHASE_TIMES, REGISTRY
 
-    pattern = tempfile.gettempdir() + "/ann_index_append_q_*"
+    pattern = tempfile.gettempdir() + "/ann_index_compact_q_*"
     before = set(glob.glob(pattern))
-    df = REGISTRY["ann_index_append_topk"].spark(spark, sf_dir)
+    df = REGISTRY["ann_index_compact_topk"].spark(spark, sf_dir)
     assert df.count() > 0
     assert set(glob.glob(pattern)) == before, "chain leaked a temp index"
-    phases = PHASE_TIMES["ann_index_append_topk"]
-    assert set(phases) == {"build_sec", "append_sec", "query_sec"}
+    phases = PHASE_TIMES["ann_index_compact_topk"]
+    assert set(phases) == {
+        "build_sec", "append_sec", "compact_sec", "query_sec"
+    }
     assert all(v >= 0 for v in phases.values())
 
 

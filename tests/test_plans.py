@@ -7,11 +7,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreducelearnings_spark.queries import REGISTRY, RETIRED
+from mapreducelearnings_spark.queries import REGISTRY
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
-    spec = REGISTRY.get(name) or RETIRED[name]
+    spec = REGISTRY[name]
     df = spec.spark(spark, sf_dir)
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -113,7 +113,7 @@ def test_embedding_lsh_near_dup_avoids_cartesian(spark, sf_dir):
     """The registered near-dup query joins on (table, bucket) and
     re-attaches vectors by id — no cross product anywhere (the round-2
     scale-killer this path replaced)."""
-    plan = plan_of(spark, sf_dir, "dedup_embedding_cosine")
+    plan = plan_of(spark, sf_dir, "dedup_embedding_nearest")
     assert "CartesianProduct" not in plan
     # exact scoring is a wide codegen multiply-add chain — no Python
     # worker anywhere in the hot path
@@ -236,19 +236,16 @@ def test_doc_chunks_is_shuffle_free_expansion(spark, sf_dir):
 
 
 def test_q21_sql_twin_matches_dataframe_twin(spark, sf_dir):
-    """The dialect-portable SQL text and the hand-built DataFrame plan
+    """The dialect-portable SQL text (the entry's DuckDB oracle, run by
+    spark.sql over the catalog views) and the hand-built DataFrame plan
     must return identical rows — the semantics-preservation check on
     Catalyst's EXISTS/NOT-EXISTS decorrelation."""
-    a = {
-        tuple(r)
-        for r in REGISTRY["late_exclusive_suppliers"].spark(spark, sf_dir).collect()
-    }
-    b = {
-        tuple(r)
-        for r in RETIRED["late_exclusive_suppliers_sql"]
-        .spark(spark, sf_dir)
-        .collect()
-    }
+    from mapreducelearnings_spark.catalog import register_views
+
+    spec = REGISTRY["late_exclusive_suppliers"]
+    a = {tuple(r) for r in spec.spark(spark, sf_dir).collect()}
+    register_views(spark, sf_dir)
+    b = {tuple(r) for r in spark.sql(spec.oracle).collect()}
     assert a == b and len(a) > 0
 
 

@@ -32,7 +32,7 @@ import pytest
 
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from mapreducelearnings_spark.queries import REGISTRY, RETIRED
+from mapreducelearnings_spark.queries import REGISTRY
 from mapreducelearnings_spark.typelint import type_mismatches
 
 from .conftest import SF_SMOKE
@@ -73,7 +73,7 @@ def test_correctness_window_is_exactly_fifty():
 
 
 def test_coverage_index_cites_every_query():
-    """Every registry/retired entry must be cited (query:`name`
+    """Every registry entry must be cited (query:`name`
     convention) somewhere in COVERAGE.md, and no citation may name a
     query that no longer exists — the mechanical guarantee behind the
     generated cross-index (tools/coverage_index.py)."""
@@ -152,13 +152,27 @@ def _load_script(relpath: str):
     return mod
 
 
-def test_script_query_lists_name_known_entries():
-    """Every query name the bench and the audit tools list is a
-    registered or retired entry: a stale name (a deleted or renamed
-    spec) would otherwise surface only as a KeyError in a manual run."""
+def test_script_query_lists_name_known_entries(monkeypatch):
+    """Every query name the bench, the benchmark workloads and the audit
+    tools list is a registered entry: a stale name (a deleted or renamed
+    spec) would otherwise surface only as a KeyError in a manual run —
+    or, for the benchmark, in a failed benchmark run."""
+    import sys
+
     bench = _load_script("bench.py")
     smoke = _load_script("tools/scale_smoke.py")
     audit = _load_script("tools/plan_audit.py")
+    # perfbench's modules import each other by bare name
+    local = ("datagen", "gate", "reference", "workloads")
+    fresh = [m for m in local if m not in sys.modules]
+    monkeypatch.syspath_prepend(
+        str(pathlib.Path(__file__).resolve().parent.parent / "perfbench")
+    )
+    try:
+        work = importlib.import_module("workloads")
+    finally:
+        for m in fresh:
+            sys.modules.pop(m, None)
     lists = {
         "bench.HEADLINE": bench.HEADLINE,
         "bench.SURFACE_TWINS": bench.SURFACE_TWINS,
@@ -166,8 +180,12 @@ def test_script_query_lists_name_known_entries():
         "plan_audit.QUADRATIC_ALLOWLIST": audit.QUADRATIC_ALLOWLIST,
         "plan_audit.BNLJ_BOUNDED_ALLOWLIST": audit.BNLJ_BOUNDED_ALLOWLIST,
         "plan_audit.PYTHON_EXEC_EXPECTED": audit.PYTHON_EXEC_EXPECTED,
+        "workloads.RELATIONAL": work.RELATIONAL,
+        "workloads.TRACE_EXTRAS": [op.name for op in work.TRACE_EXTRAS],
+        "workloads.INDEX_CHAIN": [work.INDEX_CHAIN],
+        "workloads.EXACT_TOPK": [work.EXACT_TOPK],
     }
-    known = set(REGISTRY) | set(RETIRED)
+    known = set(REGISTRY)
     stale = {
         where: sorted(set(names) - known)
         for where, names in lists.items()

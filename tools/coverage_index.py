@@ -1,14 +1,14 @@
 """Mechanical registry → SURVEY §2 cross-index (VERDICT r08 Next #8).
 
 Builds the one table a judge needs to verify coverage claims without
-reading prose: for every registry (and retired) query —
+reading prose: for every registry query —
 
   query name → the COVERAGE.md §2 rows that cite it as evidence →
   latest driver round + verdict (CORRECTNESS_r*.json) →
   latest local oracle sweep (SWEEPS.json, written by check_oracles).
 
 The §2 mapping is parsed from COVERAGE.md itself (the `query:`name``
-/ `queries:`a`, `b`` / `retired-local:`name`` citation convention), so
+/ `queries:`a`, `b`` citation convention), so
 the index can never drift from the document it indexes. The tool also
 lints both directions: registry entries cited nowhere in a §2 row, and
 citations naming queries that no longer exist.
@@ -40,7 +40,7 @@ END = "<!-- coverage-index:end -->"
 # Citation tokens: everything backticked from the token up to the next
 # cell boundary / sentence break belongs to the citation.
 _CITE = re.compile(
-    r"(?:query|queries|retired-local):"
+    r"(?:query|queries):"
     r"((?:\s*`[a-z0-9_*]+`(?:\s*\([^)|]*\))?,?)+)"
 )
 _NAME = re.compile(r"`([a-z0-9_*]+)`")
@@ -121,9 +121,9 @@ def local_sweeps() -> dict[str, dict]:
 
 def build_table() -> tuple[str, list[str]]:
     import __spark_entry__  # noqa: F401  (populates the registries)
-    from mapreducelearnings_spark.queries import REGISTRY, RETIRED
+    from mapreducelearnings_spark.queries import REGISTRY
 
-    known = list(REGISTRY) + list(RETIRED)
+    known = list(REGISTRY)
     cites = expand_wildcards(parse_coverage_sections(), known)
     driver = latest_driver_rows()
     sweeps = local_sweeps()
@@ -141,16 +141,15 @@ def build_table() -> tuple[str, list[str]]:
         "",
         "## Registry → §2 cross-index (generated)",
         "",
-        "One row per registry/retired query: which §2 inventory rows cite",
+        "One row per registry query: which §2 inventory rows cite",
         "it, its latest driver CORRECTNESS round + verdict, and the latest",
         "local oracle sweep (scale + date, from SWEEPS.json). Regenerate:",
         "`python tools/coverage_index.py --write`.",
         "",
-        "| query | status | §2 rows citing it | latest driver row | latest local sweep |",
-        "|---|---|---|---|---|",
+        "| query | §2 rows citing it | latest driver row | latest local sweep |",
+        "|---|---|---|---|",
     ]
     for name in sorted(known):
-        status = "registry" if name in REGISTRY else "retired"
         secs = ", ".join(sorted(cites.get(name, set()))) or "—"
         if name in driver:
             rnd, green = driver[name]
@@ -163,7 +162,7 @@ def build_table() -> tuple[str, list[str]]:
             srow = f"{scale} {'ok' if sw['ok'] else 'FAIL'} ({sw['ts']})"
         else:
             srow = "—"
-        lines.append(f"| `{name}` | {status} | {secs} | {drow} | {srow} |")
+        lines.append(f"| `{name}` | {secs} | {drow} | {srow} |")
     lines += ["", END]
     return "\n".join(lines), problems
 

@@ -66,7 +66,6 @@ BNLJ_BOUNDED_ALLOWLIST = frozenset(
         "distinct_kmv_containment",
         # round-10: same k-row broadcast probe/centroid idiom
         "ann_ivf_pq64_residual_topk",
-        "ann_index_append_topk",
         # round-11: the SLA read path — same k-row broadcast probe into
         # the partition-pruned stored index
         "ann_index_sla_topk",

@@ -45,14 +45,6 @@ HEAVY = [
     "corpus_curation",
     "sequence_packing",
     "dedup_stream_lsh",
-    # clusters BEFORE cosine: both consume the quadratic pair graph at
-    # low theta, and the r8 10x run showed cosine's ~560 s scaled run
-    # leaves enough JVM heap residue to inflate whatever runs next in
-    # the same session (clusters' base read 89 s vs its ~8 s clean
-    # bench time). Running clusters first gives it a clean base row;
-    # cosine is last in the family so its residue taxes nothing.
-    "dedup_embedding_clusters",
-    "dedup_embedding_cosine",
     "ann_ivf_topk",
     "ann_ivf_trained_topk",
     "semdedup_keep",
@@ -67,10 +59,8 @@ HEAVY = [
     # Θ(n) output) + the batched BPE trainer
     "dedup_embedding_nearest",
     "bpe_merges_batched",
-    # round-10 adds: residual PQ + the on-disk index
-    # build→append→query ingest chain
+    # round-10 adds: residual PQ
     "ann_ivf_pq64_residual_topk",
-    "ann_index_append_topk",
     # round-11: the sublinear-by-design family measured one decade
     # deeper (VERDICT r10 Next #4) + the SLA read path
     "distinct_kmv_sketch",
@@ -180,14 +170,14 @@ def main() -> None:
     build_scaled_dir(scaled, mult)
 
     from mapreducelearnings_spark.session import get_spark
-    from mapreducelearnings_spark.queries import REGISTRY, RETIRED
+    from mapreducelearnings_spark.queries import REGISTRY
 
     spark = get_spark("scale_smoke", shuffle_partitions=32)
     results: dict[str, dict] = {}
     for name in HEAVY:
         if only and name not in only:
             continue
-        spec = REGISTRY.get(name) or RETIRED[name]
+        spec = REGISTRY[name]
         row = {}
         for label, sf_dir in (("base", BASE_SF), ("scaled", scaled)):
             spark.catalog.clearCache()

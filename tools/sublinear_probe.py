@@ -104,21 +104,6 @@ def main() -> int:
         flush=True,
     )
 
-    # on-disk index chain, phase-split: append must be ∝|batch|, the
-    # pruned read sublinear in the stored corpus
-    for label, sf_dir in (("base", BASE_SF), ("scaled", scaled)):
-        spark.catalog.clearCache()
-        Q.REGISTRY["ann_index_append_topk"].spark(spark, sf_dir).count()
-        results.setdefault("ann_index_chain_phases", {})[label] = dict(
-            Q.PHASE_TIMES["ann_index_append_topk"]
-        )
-    ph = results["ann_index_chain_phases"]
-    for phase in ("build_sec", "append_sec", "query_sec"):
-        ph[f"{phase}_ratio"] = round(
-            ph["scaled"][phase] / max(ph["base"][phase], 1e-9), 2
-        )
-    print(f"{'ann_index_chain_phases':32s} {json.dumps(ph)}", flush=True)
-
     # SLA read path: first call pays the session-index ingest, second
     # is the pure partition-pruned read
     row = {}
@@ -168,9 +153,9 @@ def main() -> int:
     results["ann_index_filtered_read"] = row
     print(f"{'ann_index_filtered_read':32s} {json.dumps(row)}", flush=True)
 
-    # r13: the maintenance chain, phase-split — compact must be ∝ index
-    # (honest linear, run in the maintenance window), and the query
-    # phase reads the compacted layout
+    # the on-disk index chain, phase-split: append must be ∝|batch|,
+    # compact ∝ index (run in the maintenance window), and the pruned
+    # read of the compacted layout sublinear in the stored corpus
     for label, sf_dir in (("base", BASE_SF), ("scaled", scaled)):
         spark.catalog.clearCache()
         Q.REGISTRY["ann_index_compact_topk"].spark(spark, sf_dir).count()
