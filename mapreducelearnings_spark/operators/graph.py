@@ -4,11 +4,11 @@ as DataFrame loop bodies under the :mod:`..plans.iterate` runner.
 
 Reference parity cites (behavior studied, no code taken):
 - chain-graph generator + PageRank w/ dummy-vertex dangling mass:
-  PageRankRDD/src/main/scala/wc/FollowerCount.scala:33-70 (the RDD
-  variant's semantics — vertex 0 pinned to rank 0 — are the
-  mathematically intended ones; the DF twin PageRankDataSet:70 has a
-  when/otherwise quirk that also credits vertex 0, documented not
-  reproduced, per SURVEY.md §4 item 2).
+  PageRankRDD/src/main/scala/wc/FollowerCount.scala:33-70, run as
+  ``pagerank_standard`` at damping 1 (vertex 0 pinned to rank 0; the DF
+  twin PageRankDataSet:70's when/otherwise quirk that also credits
+  vertex 0 is ``pagerank_chain(credit_dummy=True)``, SURVEY.md §4
+  item 2).
 - SSSP (parallel BFS with min-relaxation):
   SingleSourceShortestPathRDD/src/main/scala/wc/FollowerCount.scala:36-51.
 - triangle counting, shuffle and broadcast variants:
@@ -34,27 +34,6 @@ from ..sources import io
 from ..sources.io import from_columns, from_rows, to_driver
 
 INF = float("inf")
-
-# scoped small-state loop tuning (partitions + AQE); see plans.iterate
-_loop_shuffle_partitions = loop_conf
-
-# r15 NEGATIVE RESULT (VERDICT r14 Next #1, examined and REJECTED): the
-# PageRank dangling delta is read back per iteration with a 1-row
-# collect() — a driver barrier, one sequential job per iteration — and
-# the obvious fix (fold delta/N into the plan as a 1-row broadcast over
-# the SAME cached mass, keeping the loop lazy so each 4-iteration
-# checkpoint window materializes in one job) measured a 2.03–2.14×
-# REGRESSION on all three bench entries (ABBA min: idfilter 2.56→5.48 s,
-# general 2.65→5.36 s, df_quirk 2.51→5.30 s). Root cause: the share
-# branch embeds the mass subtree a SECOND time in the ANALYZED logical
-# plan, so plan size doubles per iteration within a checkpoint window
-# (2⁴ by the 4th) — per-iteration persist() dedupes EXECUTION (the
-# CacheManager substitutes InMemoryRelation at physical planning) but
-# not ANALYSIS, and analyzer/optimizer time dominates at small state.
-# The r2 exponential-plan warning in pagerank's docstring therefore
-# holds even with per-iteration caching; the collect IS the optimum: it
-# pins the plan linear AND materializes the cache in the same job.
-
 
 # ---------------------------------------------------------------------------
 # Driver-side finish for small graphs: pagerank_standard, sssp,
@@ -138,140 +117,22 @@ def _local_result(spark, graph, values, value_field: T.StructField) -> DataFrame
 
 # ---------------------------------------------------------------------------
 # Synthetic chain graph (distributed — the reference builds it in a
-# driver-side Map, capping k; spark.range scales to any k).
+# driver-side Map, capping k; spark.range scales to any k) and the
+# reference's PageRank over it.
 # ---------------------------------------------------------------------------
 
 
-def chain_graph(spark: SparkSession, k: int) -> tuple[DataFrame, DataFrame]:
-    """k linear chains of k vertices (ids 1..k²); chain tails link to the
-    dangling dummy vertex 0 (PageRankRDD/.../FollowerCount.scala:33-50).
-
-    Returns (edges(src,dst), ranks0(vertex, rank)) with rank 1/k² for
-    real vertices and 0.0 for the dummy.
-    """
-    n = k * k
-    verts = spark.range(1, n + 1).select(F.col("id").alias("v"))
-    edges = verts.select(
+def chain_graph(spark: SparkSession, k: int) -> DataFrame:
+    """Edges (src, dst) of k linear chains of k vertices (ids 1..k²);
+    chain tails link to the dangling dummy vertex 0
+    (PageRankRDD/.../FollowerCount.scala:33-50)."""
+    if k < 1:
+        raise ValueError(f"a chain graph needs k >= 1, got k={k}")
+    verts = spark.range(1, k * k + 1).select(F.col("id").alias("v"))
+    return verts.select(
         F.col("v").alias("src"),
         F.when(F.col("v") % k == 0, F.lit(0)).otherwise(F.col("v") + 1).alias("dst"),
     )
-    ranks0 = verts.select(
-        F.col("v").alias("vertex"), F.lit(1.0 / n).alias("rank")
-    ).unionByName(
-        spark.createDataFrame([(0, 0.0)], "vertex: long, rank: double")
-    )
-    return edges, ranks0
-
-
-# ---------------------------------------------------------------------------
-# PageRank
-# ---------------------------------------------------------------------------
-
-
-def pagerank(
-    spark: SparkSession,
-    edges: DataFrame,
-    ranks0: DataFrame,
-    n_vertices: int,
-    iterations: int = 10,
-    loop_partitions: int | None = None,
-    credit_dummy: bool = False,
-) -> DataFrame:
-    """PageRank with the reference's no-damping, dummy-vertex dangling-mass
-    semantics (PageRankRDD/.../FollowerCount.scala:58-70):
-
-    per iteration: mass(v) = Σ rank(u) over edges u→v  (join + group-sum);
-    delta = mass at dummy vertex 0; every real vertex gets
-    mass + delta/|V| (vertices without in-edges get 0 + delta/|V| via the
-    union-with-zeroed-ranks idiom, here a left join + coalesce); vertex 0
-    is pinned to 0.
-
-    Scale design: ``mass`` is persisted per iteration and the dangling
-    delta is a 1-row collect from that cache (the Spark-native form of
-    the reference's ``lookup(0)``) embedded back as a literal — a k-row
-    driver round-trip is negligible at any scale, and it keeps the
-    Catalyst plan LINEAR per iteration. (The tempting alternative — a
-    broadcast 1-row crossJoin — duplicates the mass subtree in the plan
-    each iteration, so plan size and optimizer time grow exponentially;
-    measured 26 s → 6 s on the k=100 bench when replaced with this in
-    r2, and RE-measured 2.1× worse in r15 even with the mass cached —
-    see the _PR_INPLAN_DELTA negative result above the function.)
-    Lineage is truncated by localCheckpoint every 4 iterations.
-
-    ``credit_dummy=True`` reproduces the DF variant's operator-precedence
-    quirk (PageRankDataSet/.../FollowerCount.scala:70): the
-    ``when(vertex===0, 0).otherwise(rank) + delta/N`` there binds the
-    ``+`` OUTSIDE the when/otherwise, so vertex 0 is zeroed and then
-    credited delta/N like everyone else (its rank never propagates — 0
-    has no out-edges — so that mass leaks each iteration and ranks no
-    longer sum to 1). Default False = the RDD variant's mathematically
-    intended pin-to-0 (SURVEY.md §4 item 2, now implemented both ways).
-    """
-    # scoped conf inside with: an exception mid-loop must still restore
-    # AQE + shuffle partitions for the shared session
-    with _loop_shuffle_partitions(spark, loop_partitions):
-        # co-partition the loop-invariant sides on their join keys at the
-        # loop width: every iteration's join then reuses the cached
-        # partitioning instead of re-exchanging the edge list (the durable
-        # form of the reference's partitionBy(HashPartitioner(3)).cache(),
-        # PageRankRDD/.../FollowerCount.scala:53-55; measured 9.7 s → 3.5 s
-        # on the k=100 bench).
-        if loop_partitions:
-            edges = edges.repartition(loop_partitions, "src")
-            vertices = ranks0.select("vertex").repartition(
-                loop_partitions, "vertex"
-            )
-        else:
-            vertices = ranks0.select("vertex")
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        vertices = vertices.persist(StorageLevel.MEMORY_AND_DISK)
-
-        ranks = ranks0
-        prev_mass = None
-        try:
-            for i in range(iterations):
-                r = ranks.hint("shuffle_hash")  # see the join-hint note in sssp
-                mass = (
-                    edges.join(r, edges.src == r.vertex)
-                    .groupBy(edges.dst.alias("vertex"))
-                    .agg(F.sum("rank").alias("mass"))
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
-                delta_row = (
-                    mass.where(F.col("vertex") == 0).select("mass").collect()
-                )  # materializes the cached mass; 1-row driver round-trip
-                delta = float(delta_row[0]["mass"]) if delta_row else 0.0
-                share = F.lit(delta / float(n_vertices))
-                zero_or_mass = F.when(F.col("vertex") == 0, 0.0).otherwise(
-                    F.coalesce(F.col("mass"), F.lit(0.0))
-                )
-                new_rank = (
-                    (zero_or_mass + share)  # quirk: + binds outside the when
-                    if credit_dummy
-                    else F.when(F.col("vertex") == 0, 0.0).otherwise(
-                        F.coalesce(F.col("mass"), F.lit(0.0)) + share
-                    )
-                )
-                new_ranks = vertices.join(
-                    mass.hint("shuffle_hash"), "vertex", "left"
-                ).select("vertex", new_rank.alias("rank"))
-                if (i + 1) % 4 == 0 or i == iterations - 1:
-                    # truncate lineage; mid-loop lazily, so the next
-                    # iteration's mass collect writes the checkpoint in
-                    # its own job while this mass is still cached
-                    new_ranks = new_ranks.localCheckpoint(
-                        eager=i == iterations - 1
-                    )
-                if prev_mass is not None:
-                    prev_mass.unpersist()
-                prev_mass = mass
-                ranks = new_ranks
-        finally:
-            if prev_mass is not None:
-                prev_mass.unpersist()
-            edges.unpersist()
-            vertices.unpersist()
-    return ranks
 
 
 def pagerank_chain(
@@ -280,21 +141,42 @@ def pagerank_chain(
     iterations: int = 10,
     credit_dummy: bool = False,
 ) -> DataFrame:
-    edges, ranks0 = chain_graph(spark, k)
-    # Size the loop shuffles to the STATE (guide §2.1: partitions ∝ data,
-    # not cluster): k² rank rows are ~16 B each, so even one partition
-    # holds fixture-scale state with orders of magnitude to spare — the
-    # width only buys parallelism for the per-stage fixed costs, which
-    # stop paying back almost immediately on k-row tables. r15 ABBA
-    # (order-balanced, min over 4): width 8→4 = 0.84–0.90× across every
-    # graph-loop entry; 4→2 bought little more and REGRESSED sssp_paths
-    # 1.11×, so 4 is the floor. The formula keeps the default
-    # scale-adaptive (≈1 partition per 250k state rows); callers with
-    # web-scale graphs pass their own pagerank(...) invocation with
-    # loop_partitions=None to inherit the session width.
-    return pagerank(
-        spark, edges, ranks0, n_vertices=k * k, iterations=iterations,
-        loop_partitions=loop_width(k * k), credit_dummy=credit_dummy,
+    """PageRank on :func:`chain_graph` with the reference's no-damping,
+    dummy-vertex dangling-mass semantics
+    (PageRankRDD/.../FollowerCount.scala:58-70): each iteration the
+    chain tails' rank flows to vertex 0, which spreads it as delta/k²
+    over the real vertices and is pinned to rank 0.
+
+    That is :func:`pagerank_standard` at damping 1 on the edges inside
+    the chains: the tails are its dangling vertices and its NULL sink
+    stands in for vertex 0, whose row is appended. ``loop_partitions``
+    follows the state size (:func:`..plans.iterate.loop_width`).
+
+    ``credit_dummy=True`` reproduces the DF variant's operator-precedence
+    quirk (PageRankDataSet/.../FollowerCount.scala:70): the
+    ``when(vertex===0, 0).otherwise(rank) + delta/N`` there binds the
+    ``+`` outside the when/otherwise, so vertex 0 is credited the last
+    delta/N like everyone else: the rank of vertex 1, a chain head that
+    receives only that share (the mass leaks, and ranks no longer sum
+    to 1). Default False = the RDD variant's pin to 0 (SURVEY.md §4
+    item 2).
+    """
+    edges = chain_graph(spark, k)
+    if k == 1:  # no edge inside the chain: the lone vertex keeps its rank
+        ranks = from_rows(spark, [(1, 1.0)], "vertex long, rank double not null")
+    else:
+        ranks = pagerank_standard(
+            spark, edges.where(F.col("dst") != 0), iterations, damping=1.0,
+            loop_partitions=loop_width(k * k),
+        )
+    # vertex 0's row, from vertex 1's; a CASE with no ELSE keeps the
+    # reference's nullable vertex column
+    zero = F.when(F.col("vertex") == 1, F.lit(0).cast("long"))
+    dummy = F.col("rank") if credit_dummy and iterations > 0 else F.lit(0.0)
+    return ranks.unionByName(
+        ranks.where(F.col("vertex") == 1).select(
+            zero.alias("vertex"), dummy.alias("rank")
+        )
     )
 
 
@@ -319,8 +201,8 @@ def sssp(
     reference's convergence test, :42-44).
 
     ``loop_partitions`` defaults to the state-sized width 4 (r15 — see
-    pagerank_chain's sizing note: 8→4 measured 0.84×/0.87× on the two
-    sssp entries, width 2 regressed the path unroll); big-graph callers
+    :func:`..plans.iterate.loop_width`: 8→4 measured 0.84×/0.87× on the
+    two sssp entries, width 2 regressed the path unroll); big-graph callers
     pass their own ∝|V| width or None to inherit the session's.
 
     An edge list of at most ``io.DRIVER_STATE_CAP`` rows finishes on the
@@ -369,10 +251,10 @@ def sssp(
     # the setup runs in the scope too: persist() plans the cached tree at
     # call time, and under the session's AQE each of its exchanges would
     # run as a job of its own
-    with _loop_shuffle_partitions(spark, loop_partitions):
+    with loop_conf(spark, loop_partitions):
         # co-partition the loop-invariant edge list AND the distance
         # state on the join key at loop width (same rationale as
-        # pagerank above)
+        # pagerank_standard)
         if loop_partitions:
             edges = edges.repartition(loop_partitions, "src")
         edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -656,7 +538,7 @@ def sssp_with_paths(
         "vertex", "dist", F.array(F.col("vertex")).alias("path")
     )
     frontier = paths
-    with _loop_shuffle_partitions(spark, loop_partitions):
+    with loop_conf(spark, loop_partitions):
         # pure-lazy unroll: depth is bounded by max_d (small for real
         # graphs' diameters), frontiers persist lazily, and the whole
         # forest materializes in ONE job at the caller's action — no
@@ -854,12 +736,12 @@ def connected_components(
     # CONTRACTION width (it gates the per-partition Python union-find's
     # parallelism over edge rows — compute-bound, wants cores), while
     # the root-graph groupBys and label joins are k-row shuffles that
-    # want the small state-sized width (``label_partitions``; the
-    # pagerank_chain sizing note and loop_width() carry the ABBA
-    # evidence — 0.93–0.94× on the dedup-clusters entries with the
+    # want the small state-sized width (``label_partitions``;
+    # loop_width() carries the ABBA evidence — 0.93–0.94× on the
+    # dedup-clusters entries with the
     # contraction width left at 8, vs mixed results when the
     # contraction width was shrunk too).
-    with _loop_shuffle_partitions(spark, label_partitions):
+    with loop_conf(spark, label_partitions):
         forests = []  # (vertex → root) map of every contraction round
         budget = 1 + max_iter + star_budget
         while local is None and len(forests) < budget:
@@ -1123,16 +1005,18 @@ def pagerank_standard(
     there); this operator handles arbitrary out-degrees and dangling
     vertices, which the engine needs for real graphs.
 
-    Scale shape identical to :func:`pagerank`: the edge list is
-    pre-weighted ONCE with 1/deg(src) (loop-invariant — the division
-    never re-runs inside the loop), co-partitioned on src, and the
+    Scale shape: the edge list is pre-weighted ONCE with 1/deg(src)
+    (loop-invariant — the division never re-runs inside the loop),
+    co-partitioned on src (the durable form of the reference's
+    ``partitionBy(HashPartitioner(3)).cache()``,
+    PageRankRDD/.../FollowerCount.scala:53-55), and the
     dangling scalar folds into the SAME mass aggregation: dangling
     vertices get one synthetic edge to a NULL sink, so each iteration is
     a single join+group-sum job whose NULL row IS the dangling mass
     (read back as a 1-row collect from the cached result) — halving the
     per-iteration job count vs a separate left_anti aggregation.
     ``loop_partitions`` defaults to the state-sized width 4 (r15, ABBA
-    0.85× — pagerank_chain's sizing note has the derivation).
+    0.85× — :func:`..plans.iterate.loop_width` has the derivation).
 
     An edge list of at most ``io.DRIVER_STATE_CAP`` rows finishes on the
     driver: one bounded read, then the same recurrence as a ``bincount``
@@ -1146,7 +1030,7 @@ def pagerank_standard(
     if graph is not None:
         return _pagerank_local(spark, graph, iterations, damping)
     edges = edges.where(F.col("dst").isNotNull())
-    with _loop_shuffle_partitions(spark, loop_partitions):
+    with loop_conf(spark, loop_partitions):
         verts = (
             edges.select(F.col("src").alias("v"))
             .unionByName(edges.select(F.col("dst").alias("v")))
@@ -1196,6 +1080,7 @@ def pagerank_standard(
                     .agg(F.sum(F.col("r") * F.col("w")).alias("m"))
                     .persist(StorageLevel.MEMORY_AND_DISK)
                 )
+                # the collect keeps the plan linear (OPTIMIZATION_r15.md, REJECTED 1)
                 drow = mass.where(F.col("v").isNull()).select("m").collect()
                 dangling = float(drow[0]["m"]) if drow else 0.0
                 new_ranks = verts.join(mass.hint("shuffle_hash"), "v", "left").select(

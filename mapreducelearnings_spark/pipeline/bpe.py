@@ -124,7 +124,7 @@ def train_merges(
     merges: list[tuple[int, str, str, int]] = []
     # state-sized loop width (r15): the per-round pair-count aggregate
     # shuffles a vocabulary-sized narrow table, so the width follows the
-    # graph loops' sizing rule (see graph.pagerank_chain's note; ABBA
+    # graph loops' sizing rule (see plans.iterate.loop_width; ABBA
     # bpe_merges below in OPTIMIZATION_r15.md). Counts are exact longs
     # and tiebreaks total, so the width cannot change a merge pick.
     with loop_conf(spark, _BPE_LOOP_PARTITIONS):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mapreducelearnings_spark.operators import graph as G
 from mapreducelearnings_spark.operators import kmeans as KM
@@ -31,8 +32,7 @@ def test_pagerank_k3_hand_computed(spark):
     """k=3 chain: 9 vertices in 3 chains 1→2→3→0, 4→5→6→0, 7→8→9→0.
     After 1 iteration: heads get only delta/9; delta = mass into 0 = 3/9.
     mass(2)=rank(1)=1/9, etc. So rank(head)=1/27, others 1/9+1/27."""
-    edges, ranks0 = G.chain_graph(spark, 3)
-    ranks = G.pagerank(spark, edges, ranks0, n_vertices=9, iterations=1)
+    ranks = G.pagerank_chain(spark, k=3, iterations=1)
     got = {r["vertex"]: r["rank"] for r in ranks.collect()}
     delta_share = (3 / 9) / 9
     assert got[0] == 0.0
@@ -45,6 +45,15 @@ def test_pagerank_k3_hand_computed(spark):
 def test_pagerank_dummy_vertex_pinned_to_zero(spark):
     ranks = G.pagerank_chain(spark, k=5, iterations=3)
     assert ranks.where(F.col("vertex") == 0).first()["rank"] == 0.0
+
+
+@pytest.mark.parametrize("fn", [G.chain_graph, G.pagerank_chain])
+@pytest.mark.parametrize("k", [0, -2])
+def test_chain_graph_rejects_k_below_one(spark, fn, k):
+    """k chains of k vertices need k >= 1; k = 0 would rank the dummy
+    vertex alone."""
+    with pytest.raises(ValueError, match=f"k={k}"):
+        fn(spark, k)
 
 
 # --- SSSP -------------------------------------------------------------------
@@ -308,6 +317,8 @@ def test_connected_components_survives_capped_residual_rounds(spark):
     driver kernel must be under the cap — while the labels stay
     exactly right. This is the one CC path the fixture graphs never
     forced (VERDICT r04 Next #6)."""
+    from mapreducelearnings_spark.plans.iterate import loop_conf
+
     n_paths, plen = 4, 250
     edges = []
     for p in range(n_paths):
@@ -318,7 +329,7 @@ def test_connected_components_survives_capped_residual_rounds(spark):
     cap = 16
     # the adversarial premise must hold: after one local contraction the
     # root graph still dwarfs the cap (otherwise this test proves nothing)
-    with G._loop_shuffle_partitions(spark, 8):
+    with loop_conf(spark, 8):
         forest = G._forest_contract(e.repartition(8, "src"))
         g0 = G._root_graph(forest)
         assert g0.count() > cap, "layout failed to stress the residual path"
@@ -716,6 +727,46 @@ def test_pagerank_standard_driver_path_matches_distributed(spark, monkeypatch, n
     assert all(got[v] == pytest.approx(want[v], rel=1e-12, abs=0) for v in want)
 
 
+#: pagerank_chain's schema: the reference loop's union with the dummy
+#: vertex's row left ``vertex`` nullable.
+CHAIN_RANKS = T.StructType(
+    [
+        T.StructField("vertex", T.LongType()),
+        T.StructField("rank", T.DoubleType(), False),
+    ]
+)
+
+
+@pytest.mark.parametrize("credit_dummy", [False, True])
+@pytest.mark.parametrize("k", [1, 2, 3, 10])
+def test_pagerank_chain_driver_path_matches_distributed(
+    spark, monkeypatch, k, credit_dummy
+):
+    """Both paths give the chain's schema and the same ranks; k = 1 has
+    no edge inside its chain, so vertex 1 keeps the whole mass and
+    vertex 0 gets it too under the DF variant's quirk."""
+    (ls, (lrows, _)), (ds, (drows, _)) = _on_both_paths(
+        monkeypatch,
+        lambda: G.pagerank_chain(spark, k, iterations=7, credit_dummy=credit_dummy),
+    )
+    assert ls == ds == CHAIN_RANKS
+    got, want = dict(map(tuple, lrows)), dict(map(tuple, drows))
+    assert got.keys() == want.keys() == set(range(k * k + 1))
+    assert all(got[v] == pytest.approx(want[v], rel=1e-12, abs=0) for v in want)
+    if k == 1:
+        assert want == {0: 1.0 if credit_dummy else 0.0, 1: 1.0}
+
+
+def test_pagerank_chain_under_cap_reads_once(spark):
+    """Under the cap the k=100 chain's edges are read in one job and
+    ranked on the driver; collecting the ranks with vertex 0's row
+    appended is one more job."""
+    out, jobs = jobs_of(spark, lambda: G.pagerank_chain(spark, k=100))
+    assert jobs == 1
+    rows, jobs = jobs_of(spark, out.collect)
+    assert jobs == 1 and len(rows) == 100 * 100 + 1
+
+
 @pytest.mark.parametrize(
     "name, source, max_iter",
     [(name, 1, 64) for name in sorted(GRAPHS)]
@@ -967,6 +1018,7 @@ def test_loop_operators_under_cap_leave_session_conf_alone(spark, micro_graph):
     points = spark.createDataFrame([(1.0,), (2.0,), (9.0,)], "v double")
     for run in (
         lambda: G.pagerank_standard(spark, micro_graph),
+        lambda: G.pagerank_chain(spark, k=10),
         lambda: G.sssp(spark, micro_graph, 1),
         lambda: KM.kmeans_1d(points, "v", k=2),
         lambda: G.triangle_count(micro_graph),

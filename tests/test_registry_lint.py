@@ -74,11 +74,30 @@ def test_correctness_window_is_exactly_fifty():
 
 def test_coverage_index_cites_every_query():
     """Every registry entry must be cited (query:`name`
-    convention) somewhere in COVERAGE.md, and no citation may name a
-    query that no longer exists — the mechanical guarantee behind the
+    convention) somewhere in COVERAGE.md, no citation may name a query
+    that no longer exists, and no `<pkg-dir>/<module>.<symbol>` citation
+    a symbol its module lacks — the mechanical guarantee behind the
     generated cross-index (tools/coverage_index.py)."""
     _, problems = _load_script("tools/coverage_index.py").build_table()
     assert problems == []
+
+
+def test_coverage_index_flags_stale_symbol_citations(tmp_path, monkeypatch):
+    """A `<pkg-dir>/<module>.<symbol>` citation must name an attribute
+    of that package module; `.py` file citations and paths outside the
+    package are not symbol citations."""
+    mod = _load_script("tools/coverage_index.py")
+    doc = tmp_path / "COVERAGE.md"
+    doc.write_text(
+        "| a | `operators/graph.pagerank_chain`, `operators/graph.py`, "
+        "`tools/verify_all.sh` |\n"
+        "| b | `operators/graph.pagerank`, `operators/nograph.sssp` |\n"
+    )
+    monkeypatch.setattr(mod, "COVERAGE_PATH", str(doc))
+    assert mod.stale_symbol_citations() == [
+        "COVERAGE.md cites unknown symbol `operators/graph.pagerank`",
+        "COVERAGE.md cites `operators/nograph.sssp` of no module",
+    ]
 
 
 def test_sweep_record_merge_semantics(tmp_path, monkeypatch):

@@ -308,7 +308,7 @@ def test_python_datasource_chain_edges_matches_generator(spark):
 
     register_chain_edges(spark)
     got = spark.read.format("chain_edges").option("k", "10").load()
-    expect, _ = chain_graph(spark, 10)
+    expect = chain_graph(spark, 10)
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in expect.collect()
     }
@@ -367,7 +367,7 @@ def test_python_datasource_stream_reader_drains_full_graph(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
     rows = spark.sql("SELECT * FROM t_chain_stream").collect()
-    expect, _ = chain_graph(spark, 10)
+    expect = chain_graph(spark, 10)
     assert len(rows) == 100  # exactly-once: no range replayed
     assert {tuple(r) for r in rows} == {tuple(r) for r in expect.collect()}
 

@@ -11,7 +11,8 @@ The §2 mapping is parsed from COVERAGE.md itself (the `query:`name``
 / `queries:`a`, `b`` citation convention), so
 the index can never drift from the document it indexes. The tool also
 lints both directions: registry entries cited nowhere in a §2 row, and
-citations naming queries that no longer exist.
+citations naming queries that no longer exist; and it flags every
+`<pkg-dir>/<module>.<symbol>` citation whose symbol the module lacks.
 
 Usage:
   python tools/coverage_index.py          # lint + print table to stdout
@@ -44,6 +45,9 @@ _CITE = re.compile(
     r"((?:\s*`[a-z0-9_*]+`(?:\s*\([^)|]*\))?,?)+)"
 )
 _NAME = re.compile(r"`([a-z0-9_*]+)`")
+# `<pkg-dir>/<module>.<symbol>` citations of package code; a `.py` file
+# citation names no symbol
+_SYMBOL = re.compile(r"`([a-z_]+)/([a-z0-9_]+)\.(\w+)")
 
 
 def parse_coverage_sections() -> dict[str, set[str]]:
@@ -73,6 +77,29 @@ def parse_coverage_sections() -> dict[str, set[str]]:
                         label = " ".join(section.split(" ")[:2]).rstrip(":")
                     cites.setdefault(name, set()).add(label)
     return cites
+
+
+def stale_symbol_citations() -> list[str]:
+    """COVERAGE.md's package-symbol citations that name no attribute of
+    their module (a deleted or renamed function)."""
+    import importlib
+
+    problems = []
+    with open(COVERAGE_PATH) as f:
+        cited = set(_SYMBOL.findall(f.read()))
+    for pkg_dir, module, symbol in sorted(cited):
+        pkg = os.path.join(REPO, "mapreducelearnings_spark", pkg_dir)
+        if symbol == "py" or not os.path.isdir(pkg):
+            continue
+        name = f"{pkg_dir}/{module}.{symbol}"
+        if not os.path.isfile(os.path.join(pkg, f"{module}.py")):
+            problems.append(f"COVERAGE.md cites `{name}` of no module")
+        elif not hasattr(
+            importlib.import_module(f"mapreducelearnings_spark.{pkg_dir}.{module}"),
+            symbol,
+        ):
+            problems.append(f"COVERAGE.md cites unknown symbol `{name}`")
+    return problems
 
 
 def expand_wildcards(cites: dict[str, set[str]], known: list[str]) -> dict[str, set[str]]:
@@ -128,7 +155,7 @@ def build_table() -> tuple[str, list[str]]:
     driver = latest_driver_rows()
     sweeps = local_sweeps()
 
-    problems: list[str] = []
+    problems = stale_symbol_citations()
     for name in cites:
         if name not in known:
             problems.append(f"COVERAGE.md cites unknown query `{name}`")
