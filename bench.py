@@ -17,7 +17,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from mapreducelearnings_spark.session import default_cpus  # noqa: E402
+from mapreducelearnings_spark.session import (  # noqa: E402
+    _env,
+    _positive_float,
+    _positive_int,
+    default_cpus,
+)
 
 # Headline set: one representative per workload family; grows with the
 # engine. Keep in sync with SURVEY.md §2 coverage.
@@ -222,7 +227,7 @@ SURFACE_TWINS = [
 # and then times enough work to average over it. Observed idle noise
 # is ±9%; the 20% flag threshold clears it while still catching the
 # ~39% r6 contention event.
-_CALIBRATION_REF_SEC = float(os.environ.get("SPARK_GRAFT_CAL_REF", "0.62"))
+_CALIBRATION_REF_SEC = _env("SPARK_GRAFT_CAL_REF", _positive_float, 0.62)
 _CALIBRATION_TOL = 0.20
 
 
@@ -254,9 +259,7 @@ def _calibration_probe() -> float:
 # Reference = median of a 32-way pool of the 10M loop on a GOOD host
 # window (0.60-0.64 observed); same one-sided slower-than tolerance as
 # the narrow probe (see its comment), per-host override via env var.
-_CALIBRATION_WIDE_REF_SEC = float(
-    os.environ.get("SPARK_GRAFT_CAL_WIDE_REF", "0.62")
-)
+_CALIBRATION_WIDE_REF_SEC = _env("SPARK_GRAFT_CAL_WIDE_REF", _positive_float, 0.62)
 
 # The wide probe models the workload's actual parallelism: local
 # [$SPARK_GRAFT_CPUS] (the bench session's master), capped at the
@@ -361,7 +364,7 @@ def main() -> None:
     # unchanged query 2.5× purely by bench ordering. Every repeat is
     # still a fully cold plan (cache + RDD blocks cleared each time) —
     # min-of-k de-noises the measurement without warming anything.
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+    repeats = _env("SPARK_GRAFT_BENCH_REPEATS", _positive_int, 3)
 
     # Phase split of the repeat that PRODUCED the min (ADVICE r12: the
     # old code paired min-of-k chain times with the LAST repeat's
@@ -424,11 +427,10 @@ def main() -> None:
     # on this 32-thread host but would flag near-idle 8-core hosts):
     # 0.1 runnable tasks per core, floored at 1.5 so tiny hosts still
     # get a meaningful leading indicator; absolute override via env.
-    _LOADAVG_MAX = float(
-        os.environ.get(
-            "SPARK_GRAFT_CAL_LOADAVG_MAX",
-            str(max(1.5, 0.1 * (os.cpu_count() or 32))),
-        )
+    _LOADAVG_MAX = _env(
+        "SPARK_GRAFT_CAL_LOADAVG_MAX",
+        _positive_float,
+        max(1.5, 0.1 * (os.cpu_count() or 32)),
     )
     contended = (
         any(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.iterate import state_width
 from ..sources.io import from_rows, to_driver
 
 _SCHEMA = "cluster_id long, centroid double, n_points long"
@@ -100,14 +101,12 @@ def kmeans_1d(
     # one job over the cache reads the seed's max and the table size
     mx, n = weighted.agg(F.max("x"), F.count(F.lit(1))).first()
     centroids = {j + 1: c for j, c in enumerate(seed_centroids(mx, k))}
-    # Size the round scans to the distinct-value table (≈1 partition per
-    # 250k rows, the loop_width rule without its floor of 4): at fixture
-    # scale one partition, so every round's k-group aggregate and the
-    # final one plan with no Exchange — plan-local, where a scoped
-    # shuffle-width conf would flip the shared session. Not a fixed 1:
-    # the distinct table grows with scale (kmeans_centroids clusters
-    # o_totalprice).
-    table = weighted.coalesce(max(1, n // 250_000))
+    # Size the round scans to the distinct-value table: at fixture scale
+    # one partition, so every round's k-group aggregate and the final one
+    # plan with no Exchange — plan-local, where a scoped shuffle-width
+    # conf would flip the shared session. Not a fixed 1: the distinct
+    # table grows with scale (kmeans_centroids clusters o_totalprice).
+    table = weighted.coalesce(state_width(n))
 
     for _ in range(rounds):
         updated = (

@@ -53,16 +53,6 @@ def broadcast_join(
     return big.join(F.broadcast(small), on, how)
 
 
-def shuffle_join(
-    left: DataFrame, right: DataFrame, on: Column | Sequence[str], how: str = "inner"
-) -> DataFrame:
-    """Reduce-side join: both sides shuffled on the key. Spark's
-    sort-merge join replaces the reference's hand-tagged co-grouping
-    (ReduceSideJoin/.../CountFollowers.java:26-90). The per-key cartesian
-    the reference nests inside its reducer IS the join output."""
-    return left.hint("shuffle_merge").join(right, on, how)
-
-
 def two_hop_paths(edges: DataFrame) -> DataFrame:
     """Self-join on the middle vertex → (src, dst, n_paths) for paths of
     length 2 (triangle step 1, ReduceSideJoin/.../CountFollowers.java:79-89)."""

@@ -10,7 +10,7 @@ Design (the standard distributed BPE trainer shape):
    training round runs over the VOCABULARY (distinct words), not the
    corpus. At 100 TB the corpus scan is the only corpus-sized job; the
    vocab table is millions of rows at most and each round is one small
-   explode + partial-agg shuffle over it.
+   explode + partial aggregate over it.
 2. Each word is held as a delimited symbol string ``|s1||s2||...|``
    (every symbol individually wrapped in pipes). This makes the greedy
    left-to-right BPE merge EXACTLY a builtin ``replace``:
@@ -20,11 +20,17 @@ Design (the standard distributed BPE trainer shape):
    No UDF anywhere: wrapping, pair extraction, counting and merging
    are all whole-stage-codegen expressions (replace / split /
    transform / explode).
-3. Per round: adjacent-pair counts weighted by word frequency, top
-   pair by (count DESC, lhs ASC, rhs ASC) — a deterministic total
-   order — collected as a 1-row control read (the k-means/pagerank
-   loop discipline), then merged into the persisted vocab for the
-   next round.
+3. One trainer, :func:`train_merges`. Per round: adjacent-pair counts
+   weighted by word frequency, ranked by (count DESC, lhs ASC, rhs
+   ASC) — a deterministic total order — and a few top rows collected
+   as a control read (the k-means/pagerank loop discipline); the top
+   ``batch_size`` symbol-disjoint pairs are merged into the
+   checkpointed vocab for the next round. ``batch_size=1`` is the
+   sequential trainer (``bpe_merges``), a larger one the batched
+   trainer (``bpe_merges_batched``).
+4. The loop's width lives in the plan: the vocab is coalesced once to
+   its state width, so no round writes session conf (a scoped
+   shuffle-width conf measured a wash here; PERFORMANCE.md lesson 3).
 
 The DuckDB oracle unrolls the same rounds as nested CTEs (the
 pagerank-oracle pattern), using the same delimited representation and
@@ -33,19 +39,20 @@ the same ``replace`` semantics (verified identical cross-engine).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..plans.iterate import state_width
 
 # Only lowercase-alpha words participate: symbols then never contain
 # the '|' delimiter, digits, or whitespace, so the wrapped form is
 # unambiguous. Shared verbatim with the oracle SQL.
 BPE_WORD_PATTERN = "[a-z]+"
 
-# r15: shuffle width of the BPE training loops' per-round pair-count
-# aggregations — vocabulary-sized narrow state, same sizing rule as the
-# graph loops (plans.iterate.loop_width; None = inherit session width,
-# kept as an A/B toggle).
-_BPE_LOOP_PARTITIONS: int | None = 4
+# Ranked candidates read per batch slot: the disjoint selector may skip
+# conflicting pairs, so a round reads a few more than it can merge.
+# Shared with the batched DuckDB oracle.
+_CANDIDATES = 4
 
 
 def _syms():
@@ -100,53 +107,6 @@ def apply_merge(vocab: DataFrame, lhs: str, rhs: str) -> DataFrame:
     )
 
 
-def train_merges(
-    spark: SparkSession, docs: DataFrame, rounds: int, text_col: str = "text"
-) -> DataFrame:
-    """Run ``rounds`` BPE merge rounds; returns (merge_round, lhs, rhs,
-    pair_cnt) — the ordered merge table a tokenizer ships.
-
-    Loop discipline: the vocab is EAGERLY localCheckpoint-ed per round,
-    which truncates lineage to a one-node scan — round N's pair count
-    never recomputes rounds 1..N-1 AND the logical plan stays constant-
-    size. persist() alone is NOT enough here: it short-circuits
-    execution but keeps the full analyzed lineage, and the per-round
-    planning/cache-matching cost over the growing replace-chain plan
-    explodes superlinearly (measured at sf0.01: 0.5 s/round through
-    round 12, 47 s at round 15, 103 s at round 16; the checkpointed
-    loop holds ~0.25 s/round flat through round 24 with identical merge
-    picks — see PERFORMANCE.md). A 30k-merge trainer never gets past
-    round ~20 without this.
-    """
-    from ..plans.iterate import loop_conf
-
-    vocab = word_frequencies(docs, text_col).localCheckpoint(eager=True)
-    merges: list[tuple[int, str, str, int]] = []
-    # state-sized loop width (r15): the per-round pair-count aggregate
-    # shuffles a vocabulary-sized narrow table, so the width follows the
-    # graph loops' sizing rule (see plans.iterate.loop_width; ABBA
-    # bpe_merges below in OPTIMIZATION_r15.md). Counts are exact longs
-    # and tiebreaks total, so the width cannot change a merge pick.
-    with loop_conf(spark, _BPE_LOOP_PARTITIONS):
-        for rnd in range(1, rounds + 1):
-            best = (
-                pair_counts(vocab)
-                .orderBy(F.desc("pair_cnt"), F.asc("lhs"), F.asc("rhs"))
-                .limit(1)
-                .collect()
-            )
-            if not best:  # vocabulary exhausted (all words one symbol)
-                break
-            row = best[0]
-            merges.append((rnd, row["lhs"], row["rhs"], row["pair_cnt"]))
-            vocab = apply_merge(
-                vocab, row["lhs"], row["rhs"]
-            ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, "merge_round: long, lhs: string, rhs: string, pair_cnt: long"
-    )
-
-
 def _select_disjoint(
     ranked: list[tuple[str, str, int]], m: int
 ) -> list[tuple[str, str, int]]:
@@ -170,64 +130,72 @@ def _select_disjoint(
     return out
 
 
-def train_merges_batched(
+def train_merges(
     spark: SparkSession,
     docs: DataFrame,
-    num_merges: int,
-    batch_size: int = 8,
+    rounds: int,
     text_col: str = "text",
-    candidate_factor: int = 4,
+    batch_size: int = 1,
 ) -> DataFrame:
-    """Batched BPE training: per round, merge the top-``batch_size``
-    mutually symbol-disjoint pairs instead of one — the standard
-    batched-BPE scale fix (VERDICT r07 Next #3). A real 30k-merge
-    tokenizer costs ~30k/``batch_size`` Spark jobs instead of 30k;
-    :func:`train_merges` stays as the 1-at-a-time oracle-parity twin
-    (``batch_size=1`` reproduces it exactly, property-tested).
+    """Learn ``rounds`` BPE merges; returns (merge_round, lhs, rhs,
+    pair_cnt) — the ordered merge table a tokenizer ships.
 
-    Why the batch is safe: pairs sharing no symbol are independent —
-    a greedy ``replace`` of ``|l||r|`` only rewrites adjacencies whose
-    endpoints are ``l`` or ``r``, so a disjoint pair's occurrences (and
-    therefore its count) are invariant under the other merges in the
-    batch. When the sequential trainer's next ``batch_size`` picks
-    happen to be pairwise disjoint and none involves a symbol minted
-    earlier in the same window, the batched table is IDENTICAL
-    (tested); when they conflict, the greedy selector skips the
-    conflicting candidate to the next round, trading exact sequential
-    order for a bounded round count — the documented batched-BPE
-    approximation.
+    Each round ranks the top ``_CANDIDATES * batch_size`` pairs and
+    merges up to ``batch_size`` mutually symbol-disjoint ones
+    (:func:`_select_disjoint`; the top pair always qualifies, so every
+    round makes progress). ``batch_size=1`` is the sequential greedy
+    trainer; a larger batch is the standard batched-BPE scale fix — a
+    30k-merge tokenizer costs ~30k/``batch_size`` rounds of Spark jobs
+    instead of 30k. A greedy ``replace`` of ``|l||r|`` only rewrites
+    adjacencies whose endpoints are ``l`` or ``r``, so a disjoint pair's
+    count is invariant under the other merges of its batch: when the
+    sequential trainer's next picks are pairwise disjoint and none uses
+    a symbol minted in the same round, the batched table is identical
+    (tested); a conflicting candidate waits for a later round, where it
+    is recounted.
 
-    Control reads stay bounded: each round collects the top
-    ``candidate_factor * batch_size`` ranked pairs (a few hundred rows)
-    and selects driver-side; at least the global top pair is always
-    selected, so every round makes progress and the loop terminates in
-    ≤ ``num_merges`` rounds.
+    The vocabulary is EAGERLY localCheckpoint-ed per round, which
+    truncates lineage to a one-node scan — round N's pair count never
+    recomputes rounds 1..N-1 AND the logical plan stays constant-size.
+    persist() alone is NOT enough here: it short-circuits execution but
+    keeps the full analyzed lineage, and the per-round planning/cache-
+    matching cost over the growing replace-chain plan explodes
+    superlinearly (measured at sf0.01: 0.5 s/round through round 12,
+    47 s at round 15, 103 s at round 16; the checkpointed loop holds
+    ~0.25 s/round flat through round 24 with identical merge picks —
+    see PERFORMANCE.md).
+
+    The loop's width is set in the plan, not in session conf: the
+    vocabulary's checkpoint job also counts it (an ``Observation``), and
+    the checkpoint is coalesced to :func:`..plans.iterate.state_width`
+    partitions, so at fixture scale every round's pair count plans with
+    no Exchange. Counts are exact longs and the tiebreak is total, so
+    the width cannot change a pick.
     """
-    from ..plans.iterate import loop_conf
-
-    vocab = word_frequencies(docs, text_col).localCheckpoint(eager=True)
+    size = Observation()  # filled by the checkpoint job: no extra job
+    vocab = (
+        word_frequencies(docs, text_col)
+        .observe(size, F.count(F.lit(1)).alias("rows"))
+        .localCheckpoint(eager=True)
+        .coalesce(state_width(size.get["rows"]))
+    )
     merges: list[tuple[int, str, str, int]] = []
-    # state-sized loop width — see train_merges
-    with loop_conf(spark, _BPE_LOOP_PARTITIONS):
-        while len(merges) < num_merges:
-            want = min(batch_size, num_merges - len(merges))
-            ranked = [
-                (r["lhs"], r["rhs"], r["pair_cnt"])
-                for r in pair_counts(vocab)
-                .orderBy(F.desc("pair_cnt"), F.asc("lhs"), F.asc("rhs"))
-                .limit(max(candidate_factor, 1) * batch_size)
-                .collect()
-            ]
-            if not ranked:  # vocabulary exhausted
-                break
-            batch = _select_disjoint(ranked, want)
-            nxt = vocab
-            for lhs, rhs, cnt in batch:
-                merges.append((len(merges) + 1, lhs, rhs, cnt))
-                nxt = apply_merge(nxt, lhs, rhs)
-            # eager localCheckpoint per ROUND (not per merge): lineage
-            # and plan depth stay constant-size — see train_merges
-            vocab = nxt.localCheckpoint(eager=True)
+    while len(merges) < rounds:
+        ranked = [
+            (r["lhs"], r["rhs"], r["pair_cnt"])
+            for r in pair_counts(vocab)
+            .orderBy(F.desc("pair_cnt"), F.asc("lhs"), F.asc("rhs"))
+            .limit(_CANDIDATES * batch_size)
+            .collect()
+        ]
+        if not ranked:  # vocabulary exhausted (all words one symbol)
+            break
+        for lhs, rhs, cnt in _select_disjoint(
+            ranked, min(batch_size, rounds - len(merges))
+        ):
+            merges.append((len(merges) + 1, lhs, rhs, cnt))
+            vocab = apply_merge(vocab, lhs, rhs)
+        vocab = vocab.localCheckpoint(eager=True)
     return spark.createDataFrame(
         merges, "merge_round: long, lhs: string, rhs: string, pair_cnt: long"
     )

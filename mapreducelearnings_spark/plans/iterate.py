@@ -103,29 +103,51 @@ from contextlib import contextmanager  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 
+def state_width(state_rows: int) -> int:
+    """Partitions for ``state_rows`` of NARROW loop state (graph ranks and
+    distances, k-means values, a BPE vocabulary): ≈1 per 250k rows.
+    Guide §2.1 sizes partitions to data; this sits far below the 100 MB
+    guideline because loop stages also carry fixed per-stage cost that
+    small widths amortize. A loop that coalesces its state to this width
+    sets its parallelism in the plan: at fixture scale one partition, so
+    its per-round aggregates plan with no Exchange and no session conf
+    is touched (``kmeans_1d``, ``pipeline.bpe.train_merges``)."""
+    return max(1, state_rows // 250_000)
+
+
 def loop_width(state_rows: int) -> int:
-    """Scale-adaptive shuffle width for an iterative loop over
-    ``state_rows`` of NARROW state (graph ranks/distances: ~16 B/row).
-    Guide §2.1 sizes partitions to data (≈1 per 250k narrow rows here,
-    far below the 100 MB guideline because loop stages also carry fixed
-    per-stage cost that small widths amortize); floored at 4 — r15
-    measured width 2 regressing the path-unroll loop (sssp_paths
-    1.11×) while 4 won 0.84–0.90× over the old constant 8 on every
-    graph-loop bench entry — and capped so a huge-|V| caller that
-    forgot to pass an explicit width still gets a sane plan."""
-    return max(4, min(1024, state_rows // 250_000))
+    """Shuffle width for a distributed loop under :func:`loop_conf`:
+    :func:`state_width` floored at 4 — r15 measured width 2 regressing
+    the path-unroll loop (sssp_paths 1.11×) while 4 won 0.84–0.90× over
+    the old constant 8 on every graph-loop bench entry — and capped so a
+    huge-|V| caller that forgot to pass an explicit width still gets a
+    sane plan."""
+    return max(4, min(1024, state_width(state_rows)))
 
 
 @contextmanager
 def loop_conf(spark: SparkSession, partitions: int | None = 8):
-    """Scoped tuning for iterative loops over SMALL state (graph ranks,
-    centroid tables): shrink shuffle partitions to the state size (the
-    reference's HashPartitioner(3) analogue, PageRankRDD/.../FollowerCount
-    .scala:53) and disable AQE — adaptive execution materializes every
-    exchange as a separate query stage, a per-job overhead that buys
-    nothing on kilobyte shuffles (measured 9.3 s → 4.5 s on the k=100
-    PageRank bench). Both confs are restored on exit; AQE remains the
-    default everywhere else.
+    """Scoped tuning for the distributed graph loops: shrink shuffle
+    partitions to the state size (the reference's HashPartitioner(3)
+    analogue, PageRankRDD/.../FollowerCount.scala:53) and disable AQE —
+    adaptive execution materializes every exchange as a separate query
+    stage, a per-job overhead that buys nothing on kilobyte shuffles.
+    Both confs are restored on exit; AQE remains the default everywhere
+    else.
+
+    The scope flips session-global conf that other work on the session
+    shares, so it is entered only where it pays: the distributed
+    branches of ``sssp``, ``pagerank_standard`` and
+    ``connected_components`` above ``io.DRIVER_STATE_CAP``. Measured on
+    the 50k-edge follower graph at cap −1 (4 vCPUs, with vs without the
+    scope): ``sssp`` 2.3 s / 5 jobs vs 3.4 s / 37, ``pagerank_standard``
+    3.5 s / 13 vs 6.3 s / 59, CC at 400k edges 4.6 s / 7 vs 5.1 s / 23.
+    It was a wash for the BPE trainer (1.19–1.74 vs 1.38–1.87 s
+    sequential, 0.70–0.89 vs 0.73–0.97 s batched), which now sizes its
+    loop in the plan, and for the ``sssp_with_paths`` unroll (0.76 vs
+    0.70 s under the cap, 25.6 vs 24.8 s above), which runs at the
+    session's width. ``tests/test_conf_writes.py`` holds every
+    conf-writing site to an allow-list.
     """
     if partitions is None:
         yield

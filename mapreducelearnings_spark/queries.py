@@ -4507,11 +4507,10 @@ _BPE_BATCH_MERGES = 8
 _BPE_BATCH_SIZE = 4
 
 
-def _bpe_batched_oracle(
-    num_merges: int, batch_size: int, candidate_factor: int = 4
-) -> str:
-    """Unrolled-round DuckDB twin of pipeline.bpe.train_merges_batched:
-    per round, rank the top candidate_factor*batch_size pairs, then
+def _bpe_batched_oracle(num_merges: int, batch_size: int) -> str:
+    """Unrolled-round DuckDB twin of pipeline.bpe.train_merges with
+    ``batch_size`` > 1: per round, rank the top
+    ``BP._CANDIDATES * batch_size`` pairs, then
     unroll the GREEDY symbol-disjoint selection one slot at a time —
     slot j takes the best-ranked candidate sharing no symbol with
     slots 1..j-1 (an empty slot contributes no symbols, so later slots
@@ -4528,7 +4527,7 @@ def _bpe_batched_oracle(
     open-files abort before any wrong result could even emerge."""
     assert num_merges % batch_size == 0
     rounds = num_merges // batch_size
-    pool = max(candidate_factor, 1) * batch_size
+    pool = BP._CANDIDATES * batch_size
     ctes = [
         "w0 AS MATERIALIZED (SELECT regexp_replace(tok, '(.)', '|\\1|', 'g') AS w, "
         "CAST(COUNT(*) AS BIGINT) AS freq FROM "
@@ -4596,11 +4595,11 @@ def _bpe_batched_oracle(
     "bpe_merges_batched",
     _bpe_batched_oracle(_BPE_BATCH_MERGES, _BPE_BATCH_SIZE),
     doc="BPE training merging up to 4 disjoint top pairs per round "
-    "(pipeline/bpe.py train_merges_batched).",
+    "(pipeline/bpe.py train_merges with batch_size=4).",
 )
 def q_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return BP.train_merges_batched(
+    return BP.train_merges(
         spark, docs, _BPE_BATCH_MERGES, batch_size=_BPE_BATCH_SIZE
     )
 

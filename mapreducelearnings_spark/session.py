@@ -56,6 +56,13 @@ def _positive_int(raw: str) -> int:
     return value
 
 
+def _positive_float(raw: str) -> float:
+    value = float(raw)
+    if not value > 0 or value == float("inf"):
+        raise ValueError(raw)
+    return value
+
+
 def _jvm_size(raw: str) -> str:
     """A JVM memory string as ``spark.driver.memory`` takes it (``512m``,
     ``16g``; a bare number is MiB)."""

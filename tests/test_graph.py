@@ -1012,18 +1012,47 @@ def test_loop_operators_under_cap_run_only_the_bounded_read(spark, follower_parq
         assert jobs == 0 and rows
 
 
-def test_loop_operators_under_cap_leave_session_conf_alone(spark, micro_graph):
-    """Under the cap no operator enters loop_conf: the session's conf is
-    identical before and after each call."""
+def test_loop_operators_under_cap_leave_session_conf_alone(
+    spark, micro_graph, monkeypatch
+):
+    """Under the cap no loop operator writes session conf, not even
+    inside a scope it restores: every RuntimeConfig.set/unset made during
+    the call is recorded, and the conf is identical before and after."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from mapreducelearnings_spark.pipeline import bpe as BP
+
+    writes = []
+    for name in ("set", "unset"):
+        orig = getattr(RuntimeConfig, name)
+
+        def record(self, key, *args, _orig=orig, _name=name):
+            writes.append((_name, key))
+            return _orig(self, key, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, record)
     points = spark.createDataFrame([(1.0,), (2.0,), (9.0,)], "v double")
-    for run in (
-        lambda: G.pagerank_standard(spark, micro_graph),
-        lambda: G.pagerank_chain(spark, k=10),
-        lambda: G.sssp(spark, micro_graph, 1),
-        lambda: KM.kmeans_1d(points, "v", k=2),
-        lambda: G.triangle_count(micro_graph),
-        lambda: G.triangle_count_ordered(micro_graph),
-    ):
+    docs = spark.createDataFrame(
+        [(1, "low lower lowest newer")], "doc_id: long, text: string"
+    )
+    cases = {
+        "pagerank_standard": lambda: G.pagerank_standard(spark, micro_graph),
+        "pagerank_chain": lambda: G.pagerank_chain(spark, k=10),
+        "sssp": lambda: G.sssp(spark, micro_graph, 1),
+        "sssp_with_paths": lambda: G.sssp_with_paths(spark, micro_graph, 1),
+        "kmeans_1d": lambda: KM.kmeans_1d(points, "v", k=2),
+        "triangle_count": lambda: G.triangle_count(micro_graph),
+        "triangle_count_ordered": lambda: G.triangle_count_ordered(micro_graph),
+        "train_merges": lambda: BP.train_merges(spark, docs, 3),
+        "train_merges batched": lambda: BP.train_merges(
+            spark, docs, 4, batch_size=2
+        ),
+    }
+    flips = {}
+    for name, run in cases.items():
         before = spark.conf.getAll
+        writes.clear()
         run().collect()
-        assert spark.conf.getAll == before
+        if writes or spark.conf.getAll != before:
+            flips[name] = list(writes)
+    assert flips == {}

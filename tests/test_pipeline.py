@@ -1712,27 +1712,23 @@ def test_bpe_encode_round_trips_training_merges(spark):
 
 
 def test_bpe_batched_m1_equals_sequential(spark):
-    """batch_size=1 is the oracle-parity twin: the batched trainer must
-    reproduce the sequential merge table EXACTLY on any corpus — same
-    pairs, same order, same counts (VERDICT r07 Next #3)."""
+    """batch_size=1 is the sequential trainer: on any corpus it
+    reproduces the pure-Python greedy trainer's merge table EXACTLY —
+    same pairs, same order, same counts (VERDICT r07 Next #3)."""
     from mapreducelearnings_spark.pipeline import bpe as BP
 
-    docs = spark.createDataFrame(
-        [
-            (1, "aaaa aaa low low low lower"),
-            (2, "low lowest aaaa the the them"),
-            (3, "newest widest the them band banded"),
-        ],
-        "doc_id: long, text: string",
-    )
-    seq = [tuple(r) for r in BP.train_merges(spark, docs, rounds=6).collect()]
-    bat = [
-        tuple(r)
-        for r in BP.train_merges_batched(
-            spark, docs, num_merges=6, batch_size=1
-        ).collect()
+    from .test_properties import _bpe_reference
+
+    texts = [
+        "aaaa aaa low low low lower",
+        "low lowest aaaa the the them",
+        "newest widest the them band banded",
     ]
-    assert bat == seq
+    docs = spark.createDataFrame(
+        list(enumerate(texts, 1)), "doc_id: long, text: string"
+    )
+    seq = [tuple(r) for r in BP.train_merges(spark, docs, 6, batch_size=1).collect()]
+    assert seq == _bpe_reference(texts, 6)
 
 
 def test_bpe_batched_disjoint_equals_sequential(spark):
@@ -1752,9 +1748,7 @@ def test_bpe_batched_disjoint_equals_sequential(spark):
     seq = [tuple(r) for r in BP.train_merges(spark, docs, rounds=3).collect()]
     bat = [
         tuple(r)
-        for r in BP.train_merges_batched(
-            spark, docs, num_merges=3, batch_size=3
-        ).collect()
+        for r in BP.train_merges(spark, docs, 3, batch_size=3).collect()
     ]
     assert bat == seq == [
         (1, "a", "b", 9),
@@ -1780,9 +1774,7 @@ def test_bpe_batched_conflict_defers_to_next_round(spark):
         "doc_id: long, text: string",
     )
     # pair counts round 1: (a,b)=9, (b,c)=7 — conflicting on b.
-    out = BP.train_merges_batched(
-        spark, docs, num_merges=2, batch_size=2
-    ).collect()
+    out = BP.train_merges(spark, docs, 2, batch_size=2).collect()
     assert (out[0]["lhs"], out[0]["rhs"], out[0]["pair_cnt"]) == ("a", "b", 9)
     # (b,c) was deferred and RECOUNTED after (a,b) applied: the three
     # 'abc' occurrences became (ab)(c), so only the four standalone

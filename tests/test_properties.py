@@ -560,12 +560,13 @@ def test_degree_distribution_matches_python_reference(spark, edges):
     assert got == sorted((d, n) for d, n in hist.items())
 
 
-def _bpe_reference(texts: list[str], rounds: int):
+def _bpe_reference(texts: list[str], rounds: int, batch_size: int = 1):
     """Pure-Python greedy BPE trainer — the independent oracle for
     pipeline.bpe.train_merges (cross-implementation pattern, SURVEY §5):
     symbols as tuples, naive adjacent-pair counts with multiplicity,
     (count DESC, lhs ASC, rhs ASC) tiebreak, greedy LEFT-TO-RIGHT
-    non-overlapping merge."""
+    non-overlapping merge. Each round merges the first ``batch_size``
+    mutually symbol-disjoint pairs among the top ``4 * batch_size``."""
     import re
     from collections import Counter
 
@@ -575,28 +576,36 @@ def _bpe_reference(texts: list[str], rounds: int):
             wf[w] += 1
     vocab = {tuple(w): f for w, f in wf.items()}
     merges = []
-    for rnd in range(1, rounds + 1):
+    while len(merges) < rounds:
         pc = Counter()
         for syms, f in vocab.items():
             for i in range(len(syms) - 1):
                 pc[(syms[i], syms[i + 1])] += f
         if not pc:
             break
-        (lhs, rhs), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((rnd, lhs, rhs, cnt))
-        nxt = {}
-        for syms, f in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == lhs and syms[i + 1] == rhs:
-                    out.append(lhs + rhs)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            key = tuple(out)
-            nxt[key] = nxt.get(key, 0) + f
-        vocab = nxt
+        ranked = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))
+        used, batch = set(), []
+        for (lhs, rhs), cnt in ranked[: 4 * batch_size]:
+            if len(batch) == min(batch_size, rounds - len(merges)):
+                break
+            if lhs not in used and rhs not in used:
+                batch.append((lhs, rhs, cnt))
+                used.update((lhs, rhs))
+        for lhs, rhs, cnt in batch:
+            merges.append((len(merges) + 1, lhs, rhs, cnt))
+            nxt = {}
+            for syms, f in vocab.items():
+                out, i = [], 0
+                while i < len(syms):
+                    if i + 1 < len(syms) and syms[i] == lhs and syms[i + 1] == rhs:
+                        out.append(lhs + rhs)
+                        i += 2
+                    else:
+                        out.append(syms[i])
+                        i += 1
+                key = tuple(out)
+                nxt[key] = nxt.get(key, 0) + f
+            vocab = nxt
     return merges
 
 
@@ -619,3 +628,34 @@ def test_bpe_trainer_matches_python_reference(spark, docs):
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     got = [tuple(r) for r in BP.train_merges(spark, df, rounds=4).collect()]
     assert got == _bpe_reference(texts, rounds=4)
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    texts=st.lists(st.text(alphabet=" 09_-.!ÉÄ", max_size=8), max_size=3),
+    batch_size=st.sampled_from([1, 3]),
+)
+def test_bpe_trainer_learns_nothing_from_wordless_corpora(spark, texts, batch_size):
+    """An empty corpus, or one whose words have no [a-z] character
+    (digits, punctuation, non-ASCII letters), has no vocabulary: the
+    trainer returns an empty merge table, as the Python trainer does."""
+    from mapreducelearnings_spark.pipeline import bpe as BP
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id: long, text: string")
+    got = BP.train_merges(spark, df, rounds=3, batch_size=batch_size).collect()
+    assert [tuple(r) for r in got] == _bpe_reference(texts, 3, batch_size) == []
+
+
+@settings(max_examples=6, deadline=None)
+@given(docs=st.lists(_bpe_words, min_size=1, max_size=3), batch_size=st.integers(3, 8))
+def test_bpe_batch_wider_than_its_disjoint_pairs(spark, docs, batch_size):
+    """Over the {a,b} alphabet a round has at most two symbol-disjoint
+    pairs at first, so a batch of 3–8 slots comes up short: the rounds
+    merge what the disjoint selection allows, exactly like the Python
+    trainer, and stop at the merge budget or an exhausted vocabulary."""
+    from mapreducelearnings_spark.pipeline import bpe as BP
+
+    texts = [" ".join(ws) for ws in docs]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id: long, text: string")
+    got = BP.train_merges(spark, df, rounds=6, batch_size=batch_size).collect()
+    assert [tuple(r) for r in got] == _bpe_reference(texts, 6, batch_size)

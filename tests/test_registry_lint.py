@@ -100,6 +100,25 @@ def test_coverage_index_flags_stale_symbol_citations(tmp_path, monkeypatch):
     ]
 
 
+def test_coverage_index_reads_no_query_from_a_citation_note(
+    tmp_path, monkeypatch
+):
+    """A backticked identifier inside a citation's `(…)` note is not a
+    query name: only the names outside the parentheses are cited."""
+    mod = _load_script("tools/coverage_index.py")
+    doc = tmp_path / "COVERAGE.md"
+    doc.write_text(
+        "## §2.8 Graph\n"
+        "| a | queries: `pagerank_idfilter` (via `pagerank_standard`), "
+        "`sssp_paths` |\n"
+    )
+    monkeypatch.setattr(mod, "COVERAGE_PATH", str(doc))
+    assert mod.parse_coverage_sections() == {
+        "pagerank_idfilter": {"§2.8"},
+        "sssp_paths": {"§2.8"},
+    }
+
+
 def test_sweep_record_merge_semantics(tmp_path, monkeypatch):
     """SWEEPS.json merge rules (tools/check_oracles.record_sweep): a
     deeper-scale pass supersedes a shallower pass and is NOT

@@ -40,6 +40,17 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
         ("SPARK_GRAFT_DRIVER_MEM", S._jvm_size, "16g", "-4g", "16g"),
         ("SPARK_GRAFT_DRIVER_MEM", S._jvm_size, "16g", "0g", "16g"),
         ("SPARK_GRAFT_DRIVER_MEM", S._jvm_size, "16g", "1.5g", "16g"),
+        ("SPARK_GRAFT_BENCH_REPEATS", S._positive_int, 3, "5", 5),
+        ("SPARK_GRAFT_BENCH_REPEATS", S._positive_int, 3, "three", 3),
+        ("SPARK_GRAFT_BENCH_REPEATS", S._positive_int, 3, "0", 3),
+        ("SPARK_GRAFT_CAL_REF", S._positive_float, 0.62, "0.7", 0.7),
+        ("SPARK_GRAFT_CAL_REF", S._positive_float, 0.62, "fast", 0.62),
+        ("SPARK_GRAFT_CAL_REF", S._positive_float, 0.62, "0", 0.62),
+        ("SPARK_GRAFT_CAL_WIDE_REF", S._positive_float, 0.62, "nan", 0.62),
+        ("SPARK_GRAFT_CAL_WIDE_REF", S._positive_float, 0.62, "inf", 0.62),
+        ("SPARK_GRAFT_CAL_LOADAVG_MAX", S._positive_float, 1.5, "4", 4.0),
+        ("SPARK_GRAFT_CAL_LOADAVG_MAX", S._positive_float, 1.5, "-1", 1.5),
+        ("SPARK_GRAFT_CAL_LOADAVG_MAX", S._positive_float, 1.5, "busy", 1.5),
     ],
 )
 def test_env_knob_reader_falls_back_on_malformed(
@@ -52,6 +63,27 @@ def test_env_knob_reader_falls_back_on_malformed(
     assert S._env(name, parse, default) == want
     monkeypatch.delenv(name)
     assert S._env(name, parse, default) == default
+
+
+@pytest.mark.parametrize(
+    "name, raw",
+    [
+        ("SPARK_GRAFT_CAL_REF", "fast"),
+        ("SPARK_GRAFT_CAL_REF", "-0.5"),
+        ("SPARK_GRAFT_CAL_WIDE_REF", "0.6s"),
+        ("SPARK_GRAFT_CAL_WIDE_REF", "nan"),
+    ],
+)
+def test_bench_imports_with_malformed_calibration_knob(monkeypatch, name, raw):
+    """bench.py reads its calibration references at import: a malformed
+    value keeps the default reference instead of failing the import."""
+    import importlib.util
+
+    monkeypatch.setenv(name, raw)
+    spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    assert bench._CALIBRATION_REF_SEC == bench._CALIBRATION_WIDE_REF_SEC == 0.62
 
 
 def test_workers_import_package_from_another_directory(tmp_path):

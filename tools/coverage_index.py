@@ -45,6 +45,8 @@ _CITE = re.compile(
     r"((?:\s*`[a-z0-9_*]+`(?:\s*\([^)|]*\))?,?)+)"
 )
 _NAME = re.compile(r"`([a-z0-9_*]+)`")
+# a citation's `(…)` note may backtick other identifiers: not query names
+_NOTE = re.compile(r"\([^)|]*\)")
 # `<pkg-dir>/<module>.<symbol>` citations of package code; a `.py` file
 # citation names no symbol
 _SYMBOL = re.compile(r"`([a-z_]+)/([a-z0-9_]+)\.(\w+)")
@@ -67,7 +69,7 @@ def parse_coverage_sections() -> dict[str, set[str]]:
             if section is None:
                 continue
             for m in _CITE.finditer(line):
-                for name in _NAME.findall(m.group(1)):
+                for name in _NAME.findall(_NOTE.sub("", m.group(1))):
                     # short label: "§2.4" for inventory sections, the
                     # first two words otherwise ("Round 8", "Extras
                     # beyond", "Decision-support pack")

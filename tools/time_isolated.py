@@ -25,10 +25,10 @@ def main() -> None:
     from bench import _calibration_probe
 
     from mapreducelearnings_spark.queries import PHASE_TIMES, REGISTRY
-    from mapreducelearnings_spark.session import get_spark
+    from mapreducelearnings_spark.session import _env, _positive_int, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+    repeats = _env("SPARK_GRAFT_BENCH_REPEATS", _positive_int, 3)
     probe_before = _calibration_probe()
     spark = get_spark("time-isolated")
     REGISTRY["pricing_summary"].spark(spark, sf_dir).count()  # JVM warmup
