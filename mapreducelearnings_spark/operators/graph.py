@@ -540,7 +540,7 @@ def sssp_with_paths(
     paths = reach.where(F.col("vertex") == source).select(
         "vertex", "dist", F.array(F.col("vertex")).alias("path")
     )
-    frontier = paths
+    frontier, persisted = paths, [pred]
     # pure-lazy unroll: depth is bounded by max_d (small for real graphs'
     # diameters), frontiers persist lazily, and the whole forest
     # materializes in ONE job — no per-depth checkpoint/isEmpty
@@ -564,8 +564,12 @@ def sssp_with_paths(
         )
         paths = paths.unionByName(nxt)
         frontier = nxt
+        persisted.append(nxt)
     out = paths.localCheckpoint(eager=True)
-    pred.unpersist()
+    # the checkpoint holds the forest: release pred and every frontier,
+    # or a repeated call cache-matches the stale frames
+    for df in persisted:
+        df.unpersist()
     return out
 
 

@@ -154,8 +154,9 @@ def train_merges(
     (tested); a conflicting candidate waits for a later round, where it
     is recounted.
 
-    The vocabulary is EAGERLY localCheckpoint-ed per round, which
-    truncates lineage to a one-node scan — round N's pair count never
+    The vocabulary is EAGERLY localCheckpoint-ed after every round but
+    the last (nothing reads that one), which truncates lineage to a
+    one-node scan — round N's pair count never
     recomputes rounds 1..N-1 AND the logical plan stays constant-size.
     persist() alone is NOT enough here: it short-circuits execution but
     keeps the full analyzed lineage, and the per-round planning/cache-
@@ -195,7 +196,8 @@ def train_merges(
         ):
             merges.append((len(merges) + 1, lhs, rhs, cnt))
             vocab = apply_merge(vocab, lhs, rhs)
-        vocab = vocab.localCheckpoint(eager=True)
+        if len(merges) < rounds:
+            vocab = vocab.localCheckpoint(eager=True)
     return spark.createDataFrame(
         merges, "merge_round: long, lhs: string, rhs: string, pair_cnt: long"
     )

@@ -17,8 +17,8 @@ private stages, all over unit vectors ``ne``:
   opens;
 - :func:`_semi`: the optional ``keep`` metadata filter (left semi join);
 - :func:`_exact_in_cells`: exact cosine of every probed row, or
-  :func:`_adc_rerank`: an ADC pre-rank over PQ codes (absolute, or
-  residual to the cell centroid) and an exact rerank of the top R;
+  :func:`_adc_rerank`: an ADC pre-rank over PQ codes residual to the
+  cell centroid and an exact rerank of the top R;
 - :func:`_rank` / :func:`_top`: per-query row_number over (score DESC,
   tiebreak ASC), cut at k, scores rounded to 4 dp.
 
@@ -34,11 +34,10 @@ The paths (each function's docstring says only what differs):
 - **IVF × residual PQ** (:func:`ivf_pq_residual_topk`) — probe →
   residual ADC → exact rerank.
 - **on-disk index** (:func:`ann_index_write` / :func:`ann_index_append`
-  / :func:`ann_index_compact`) — the IVF × PQ layout stored partitioned
-  by cell, so the probe becomes partition pruning. Read by
-  :func:`ann_index_topk` (absolute ADC; ``recall_sla=`` picks the
-  residual read :func:`ann_index_residual_topk` or the exact read
-  :func:`ann_index_filtered_topk`).
+  / :func:`ann_index_compact`) — the IVF × residual PQ layout stored
+  partitioned by cell, so the probe becomes partition pruning. Read by
+  :func:`ann_index_topk` (residual ADC; ``recall_sla=`` widens the
+  rerank budget or picks the exact read :func:`ann_index_filtered_topk`).
 - **LSH near-dup** (:func:`embedding_nearest_lsh`) — multi-table
   random-hyperplane buckets (md5-derived planes embedded as literals in
   both the Spark plan and the SQL oracle); candidates are (table,
@@ -66,8 +65,6 @@ N_TABLES = 8
 MULTI_PLANES = 4
 
 PQ_M = 8          # subspaces
-PQ_DSUB = DIMS // PQ_M
-PQ_K = 16         # codes per subspace (4 bits) → 8×4 = 32-bit PQ code
 # 8 bits per subspace → 8×8 = 64-bit codes: the CODE-RESOLUTION lever
 # the round-9 30× recall measurement named (PERFORMANCE.md "30× recall":
 # a 32-bit code cannot order within a ~3 000-member cluster, so recall
@@ -301,16 +298,14 @@ def _adc_rerank(
     vectors: DataFrame,
     q: DataFrame,
     budget: int,
-    residual: bool,
     pq_m: int = PQ_M,
 ) -> DataFrame:
     """(query_id, neighbor_id, cos): ADC pre-rank, then exact rerank.
     Each (vec_id, cell, m, code) row of a probed cell scores
-    ⟨qe_m, cb[m, code]⟩; per (query, neighbor) the sum — plus the
-    probe's ⟨qe, ce_cell⟩ when the codes are ``residual`` to the cell
-    centroid — is rounded to 6 dp, and each query's top ``budget`` are
-    rescored exactly against their unit vectors in ``vectors``
-    (vec_id, ne)."""
+    ⟨qe_m, cb[m, code]⟩ over codes residual to the cell centroid; per
+    (query, neighbor) the probe's ⟨qe, ce_cell⟩ plus the sum is rounded
+    to 6 dp, and each query's top ``budget`` are rescored exactly
+    against their unit vectors in ``vectors`` (vec_id, ne)."""
     dsub = DIMS // pq_m
     part = (
         codes.join(F.broadcast(probe), "cell")
@@ -329,9 +324,8 @@ def _adc_rerank(
     )
     # cs is constant within a (query, neighbor) group (one cell per
     # vector); MAX picks it deterministically without widening the key
-    adc = F.max("cs") + F.sum("ps") if residual else F.sum("ps")
     approx = part.groupBy("query_id", "neighbor_id").agg(
-        F.round(adc, 6).alias("adc")
+        F.round(F.max("cs") + F.sum("ps"), 6).alias("adc")
     )
     cand = (
         _rank(approx, "adc", name="ar")
@@ -798,24 +792,14 @@ def corpus_size(embeddings: DataFrame) -> int:
     return n
 
 
-def pq_codebooks(
-    embeddings: DataFrame, pq_k: int = PQ_K, pq_m: int = PQ_M
-) -> DataFrame:
-    """(m, code, ce): per-subspace codebooks, sampled deterministically
-    (subvectors of the first ``pq_k`` vec_ids — the same
-    reproducible-init convention as the IVF quantizer).
-    PQ_M·pq_k tiny rows (128 at the 4-bit default, 2 048 at the 8-bit
-    :data:`PQ_K64`) collected through the k-row control channel and
-    broadcast."""
-    return codebooks_from_normed(_emb_normed(embeddings), pq_k, pq_m)
-
-
 def codebooks_from_normed(
-    normed: DataFrame, pq_k: int = PQ_K, pq_m: int = PQ_M
+    normed: DataFrame, pq_k: int = PQ_K64, pq_m: int = PQ_M
 ) -> DataFrame:
-    """:func:`pq_codebooks` over an already-normalized (vec_id, ne)
-    frame — the form :func:`ann_index_append` needs, since the stored
-    index carries unit vectors, not raw embeddings."""
+    """(m, code, ce): per-subspace codebooks over a (vec_id, ne) frame,
+    sampled deterministically (subvectors of the first ``pq_k`` vec_ids
+    — the same reproducible-init convention as the IVF quantizer).
+    PQ_M·pq_k tiny rows (2 048 at the 8-bit :data:`PQ_K64`) collected
+    through the k-row control channel and broadcast."""
     spark = normed.sparkSession
     rows = (
         normed
@@ -1015,7 +999,7 @@ def ivf_pq_residual_topk(
     )
     return _top(
         _adc_rerank(
-            _semi(codes, keep), probe, cb, embn, q, k * rerank_mult, True, pq_m
+            _semi(codes, keep), probe, cb, embn, q, k * rerank_mult, pq_m
         ),
         k,
     )
@@ -1032,8 +1016,7 @@ def ivf_pq_residual_topk(
 #: exactly like an inferring read (same ``semanticHash``, which keys
 #: the corpus-size cache) but runs no inference job.
 _INDEX_SCHEMA = (
-    "vec_id BIGINT, ne ARRAY<DOUBLE>, pq_code ARRAY<BIGINT>, "
-    "rq_code ARRAY<BIGINT>, cell INT"
+    "vec_id BIGINT, ne ARRAY<DOUBLE>, rq_code ARRAY<BIGINT>, cell INT"
 )
 
 
@@ -1048,25 +1031,25 @@ def _read_index(spark, path: str) -> DataFrame:
 def ann_index_write(embeddings: DataFrame, path: str) -> None:
     """Materialize the production ANN index on disk: one parquet
     dataset partitioned by IVF cell, each row carrying the unit vector
-    (exact rerank), its 8×4-bit PQ code array (the default
-    :func:`ann_index_topk` ADC pre-rank) and its RESIDUAL 8×8-bit PQ
-    code array (the ``recall_sla`` pre-rank — PERFORMANCE.md "30×
-    recall, revisited": residual codes beat every absolute-code width
-    at equal budget), both computed ONCE at ingest. The rows always
+    (exact rerank) and its RESIDUAL 8×8-bit PQ code array (the
+    :func:`ann_index_topk` pre-rank — PERFORMANCE.md "30× recall,
+    revisited": residual codes beat every absolute-code width at equal
+    budget), computed ONCE at ingest. The rows always
     have the schema the index readers pass back (:func:`_read_index`),
     so an index built from an empty corpus reads as 0 rows.
 
     At 100 TB this is the ingest job: assignment is the broadcast
-    argmax (one partial-agg shuffle), encoding one more, and the
+    argmax (one partial-agg shuffle), the residual encode one more, and the
     partitioned write puts each cell in its own directory so a query's
     n_probes cell filter becomes PARTITION PRUNING — the scan never
     opens the other cells' files (asserted in
     tests/test_pipeline.py::test_ann_index_query_prunes_partitions).
     """
-    # The ingest job reads embn/assigned from FIVE consumers (two k-row
-    # quantizer collects, two full encode aggregations, the final join)
-    # — persist them for the job's duration so the scan + normalize +
-    # broadcast-argmax subtrees run once, not once per consumer. At
+    # The ingest job reads embn/assigned from several consumers (the
+    # centroid broadcast, the k-row codebook collect, the encode
+    # aggregation, the final join) — persist them for the job's
+    # duration so the scan + normalize + broadcast-argmax subtrees run
+    # once, not once per consumer. At
     # 100 TB this is the standard ingest discipline: the persisted
     # frames are ∝ corpus (the job's own input), released on return.
     # BOTH persist() calls sit INSIDE the try (ADVICE r10, re-flagged
@@ -1081,10 +1064,9 @@ def ann_index_write(embeddings: DataFrame, path: str) -> None:
         embn = embn.persist()
         cent = _centroids(embn, IVF_CELLS)
         assigned = _assign_cells(embn, cent).persist()  # (vec_id, cell, ne)
-        cb = codebooks_from_normed(embn)
         rcb = _residual_codebooks(assigned, cent)
         (
-            _index_rows(embn, assigned, cb, cent, rcb)
+            _index_rows(assigned, cent, rcb)
             .write.mode("overwrite")
             .partitionBy("cell")
             .parquet(path)
@@ -1125,17 +1107,12 @@ def _pack_codes(enc: DataFrame, colname: str) -> DataFrame:
 
 
 def _index_rows(
-    embn: DataFrame,
-    assigned: DataFrame,
-    cb: DataFrame,
-    cent: DataFrame,
-    rcb: DataFrame,
+    assigned: DataFrame, cent: DataFrame, rcb: DataFrame
 ) -> DataFrame:
-    """The stored row shape (vec_id, ne, pq_code, rq_code, cell) from a
-    normalized frame, its cell assignment and both
-    codebooks (absolute 8×16 and residual 8×256) — shared by the full
-    build and the incremental append so both write bit-identical
-    rows.
+    """The stored row shape (vec_id, ne, rq_code, cell) from a cell
+    assignment, its centroids and the residual 8×256 codebook — shared
+    by the full build and the incremental append so both write
+    bit-identical rows.
 
     The rows are hash-distributed by cell (r14, guide §6's
     write.distribution-mode=hash): without it every shuffle task
@@ -1143,14 +1120,12 @@ def _index_rows(
     795 files for a 1 500-row sf0.1 build, 397 more per 500-row append.
     One exchange clusters each cell onto one writer: n_cells files per
     write."""
-    codes = _pack_codes(pq_encode(embn, cb), "pq_code")
     rcodes = _pack_codes(
         pq_encode(_residual_frame(assigned, cent), rcb), "rq_code"
     )
-    return assigned.join(codes, "vec_id").join(rcodes, "vec_id").select(
+    return assigned.join(rcodes, "vec_id").select(
         F.col("vec_id").cast("long").alias("vec_id"),
         "ne",
-        "pq_code",
         "rq_code",
         "cell",
     ).repartition("cell")
@@ -1163,9 +1138,10 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
     daily (VERDICT r8 Next #7).
 
     The quantizers are read back out of the index itself: centroids
-    are the stored unit vectors of vec_id < IVF_CELLS, codebooks the
-    subvectors of vec_id < PQ_K — the same deterministic seed rows a
-    full rebuild over base ∪ batch would sample, PROVIDED the batch's
+    are the stored unit vectors of vec_id < IVF_CELLS, the residual
+    codebook the residuals of the stored (ne, cell) of vec_id < PQ_K64
+    — the same deterministic seed rows a full rebuild over base ∪
+    batch would sample, PROVIDED the batch's
     ids all exceed the stored max (validated; the daily-append id
     pattern). New rows are assigned and encoded by the
     shared :func:`_index_rows` builder and appended with a partitioned
@@ -1181,14 +1157,14 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
     itself sees exactly the build path's per-row work — broadcast
     argmax assign, one partial-agg encode shuffle — so append cost is
     ∝|batch|, never ∝|index|."""
-    stored = _read_index(spark, path).select("vec_id", "ne")
+    stored = _read_index(spark, path).select("vec_id", "ne", "cell")
     stored_max = stored.agg(F.max("vec_id")).first()[0]
     if stored_max is None:
         raise ValueError(f"empty or missing index at {path}; build first")
     new_min = new_embeddings.agg(F.min("vec_id")).first()[0]
     if new_min is None:
         return  # empty batch: nothing to append
-    floor = max(stored_max, IVF_CELLS - 1, PQ_K - 1, PQ_K64 - 1)
+    floor = max(stored_max, IVF_CELLS - 1, PQ_K64 - 1)
     if new_min <= floor:
         raise ValueError(
             f"append batch min vec_id {new_min} <= {floor}: ids must "
@@ -1196,11 +1172,8 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
             "the append to stay bit-identical to a rebuild"
         )
     cent = _centroids(stored, IVF_CELLS)
-    cb = codebooks_from_normed(stored)
-    # residual quantizer, also from the stored rows alone: residual of
-    # each seed row against its STORED cell centroid
-    stored_cells = _read_index(spark, path).select("vec_id", "ne", "cell")
-    rcb = _residual_codebooks(stored_cells, cent)
+    # residual of each seed row against its STORED cell centroid
+    rcb = _residual_codebooks(stored, cent)
     # Same persist discipline as the full build, batch-sided only: the
     # persisted frames are ∝|batch|, NEVER ∝|index| (the stored side
     # stays lazy parquet reads — at 100 TB persisting it would be the
@@ -1213,7 +1186,7 @@ def ann_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
         newn = newn.persist()
         assigned = _assign_cells(newn, cent).persist()
         (
-            _index_rows(newn, assigned, cb, cent, rcb)
+            _index_rows(assigned, cent, rcb)
             .write.mode("append")
             .partitionBy("cell")
             .parquet(path)
@@ -1284,9 +1257,8 @@ def ann_index_compact(spark, path: str, target_bytes: int | None = None) -> None
 # revisited", worst measured density: 20 clusters × ~3 000
 # near-identical members at 30×):
 #
-#   pre-rank column + budget            recall@5 at worst density
-#   absolute pq_code + log-n auto       0.325–0.725 (code-width bound)
-#   residual rq_code + log-n auto       0.775–0.800 (compressed floor)
+#   pre-rank + budget                   recall@5 at worst density
+#   residual rq_code + log-n auto       0.775–0.800 (the default read)
 #   residual rq_code + 4 % of corpus    ≥0.95 at every measured density
 #   exact (no pre-rank, probed cells)   1.0 (reads n_probes/n_cells)
 #
@@ -1334,7 +1306,6 @@ def ann_index_filtered_topk(
     keep: DataFrame | None = None,
     n_queries: int = 8,
     k: int = 5,
-    n_cells: int = IVF_CELLS,
     n_probes: int = IVF_PROBES,
     widen_to: int | None = None,
 ) -> DataFrame:
@@ -1348,11 +1319,9 @@ def ann_index_filtered_topk(
     With ``keep`` it is the filtered read over the stored layout
     (:func:`ivf_topk` with ``keep``): the widening's match-count pass
     reads only the index's (vec_id, cell) columns, and the semi join
-    runs over just the pruned rows. Filtered reads stay on this exact
-    path on purpose: a fixed pre-rank budget counts unfiltered
-    candidates, so under a selective predicate it can under-fill with
-    matching rows. Results are bit-identical to ``ivf_topk(...,
-    keep=keep)`` when the query and build frames match (pytest-pinned:
+    runs over just the pruned rows. Results are bit-identical to
+    ``ivf_topk(..., keep=keep)`` when the query and build frames match
+    (pytest-pinned:
     tests/test_pipeline.py::test_ann_index_filtered_matches_memory).
 
     Centroids come from the STORED index rows, not from the passed
@@ -1364,8 +1333,8 @@ def ann_index_filtered_topk(
     probe, cells = _local_probe(
         _probe(
             _queries(_emb_normed(embeddings), n_queries),
-            _centroids(stored, n_cells),
-            n_queries, k, n_cells, n_probes,
+            _centroids(stored, IVF_CELLS),
+            n_queries, k, IVF_CELLS, n_probes,
             keep, widen_to, stored.select("vec_id", "cell"),
         )
     )
@@ -1379,111 +1348,61 @@ def ann_index_topk(
     embeddings: DataFrame,
     n_queries: int = 8,
     k: int = 5,
-    n_cells: int = IVF_CELLS,
     n_probes: int = IVF_PROBES,
     rerank_mult: int | None = None,
     recall_sla: float | None = None,
+    keep: DataFrame | None = None,
+    widen_to: int | None = None,
 ) -> DataFrame:
     """Query the on-disk index: the collected probe's cell list is
     pushed as a literal ``cell IN (...)`` filter, which parquet
     partition pruning turns into "open only those cell directories".
-    ADC pre-rank runs over the stored absolute ``pq_code`` arrays
-    against codebooks sampled from ``embeddings``, exact rerank over
-    the stored unit vectors — bit-identical to the DuckDB IVF×PQ
-    oracle (``queries._ivf_pq_oracle``, tested), while reading
-    n_probes/n_cells of the dataset.
+    The ADC pre-rank runs over the stored residual ``rq_code`` arrays,
+    the exact rerank over the stored unit vectors. Self-contained on
+    the stored index: centroids are the stored unit vectors of vec_id <
+    IVF_CELLS and the residual codebook is re-derived from the stored
+    (ne, cell) of the first :data:`PQ_K64` rows — the reconstruction
+    :func:`ann_index_append` performs, so build, append and query agree
+    bit-for-bit. Results are bit-identical to the in-memory
+    :func:`ivf_pq_residual_topk` and its DuckDB oracle
+    (``queries._ivf_pq_residual_oracle``, tested), ``keep`` included:
+    widening against the STORED assignment, semi join before the
+    pre-rank.
 
     ``rerank_mult=None`` auto-scales R with the STORED corpus size —
     counted from the index at ``path`` (a parquet metadata-only count,
     memoized per path plan), not from the ``embeddings`` argument, so
     the budget is right even when the query vectors come from a
     different or subset frame than the one the index was built from
-    (ADVICE r8). When the two frames match — the tested default —
-    this keeps bit-parity with that oracle under defaults.
+    (ADVICE r8).
 
-    ``recall_sla`` (VERDICT r10 Next #2) picks the pre-rank column and
-    budget from the stored index's own stats per the measured ladder
-    above: ≤ :data:`SLA_COMPRESSED_FLOOR` → residual ``rq_code``
-    pre-rank under the auto budget; ≤ :data:`SLA_FRACTION_RECALL` →
-    residual pre-rank with :func:`sla_rerank_rows`; above → the exact
-    read (:func:`ann_index_filtered_topk` without ``keep``, recall 1.0
-    within probed cells). Mutually exclusive with ``rerank_mult``."""
-    if recall_sla is not None:
-        if rerank_mult is not None:
-            raise ValueError("pass recall_sla OR rerank_mult, not both")
-        if recall_sla > SLA_FRACTION_RECALL:
-            return ann_index_filtered_topk(
-                spark, path, embeddings, None, n_queries, k, n_cells, n_probes
-            )
-        rerank_rows = None
-        if recall_sla > SLA_COMPRESSED_FLOOR:
-            rerank_rows = sla_rerank_rows(
-                corpus_size(_read_index(spark, path)), k
-            )
-        return ann_index_residual_topk(
-            spark,
-            path,
-            embeddings,
-            n_queries=n_queries,
-            k=k,
-            n_cells=n_cells,
-            n_probes=n_probes,
-            rerank_rows=rerank_rows,
+    ``recall_sla`` (VERDICT r10 Next #2) picks the rung of the measured
+    ladder above from the stored index's own stats: ≤
+    :data:`SLA_COMPRESSED_FLOOR` → the default read; ≤
+    :data:`SLA_FRACTION_RECALL` → the same pre-rank with the
+    :func:`sla_rerank_rows` budget; above → the exact read
+    (:func:`ann_index_filtered_topk`, recall 1.0 within probed cells).
+    Mutually exclusive with ``rerank_mult``."""
+    if recall_sla is not None and rerank_mult is not None:
+        raise ValueError("pass recall_sla OR rerank_mult, not both")
+    sla = recall_sla or 0.0
+    if sla > SLA_FRACTION_RECALL:
+        return ann_index_filtered_topk(
+            spark, path, embeddings, keep, n_queries, k, n_probes, widen_to
         )
-    if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(_read_index(spark, path)))
-    embn = _emb_normed(embeddings)
-    q = _queries(embn, n_queries)
-    probe, cells = _local_probe(
-        _probe(q, _centroids(embn, n_cells), n_queries, k, n_cells, n_probes)
-    )
-    cb = pq_codebooks(embeddings)
-    idx = _read_index(spark, path).where(F.col("cell").isin(cells))
-    codes = idx.select("vec_id", "cell", F.posexplode("pq_code").alias("m", "code"))
-    return _top(_adc_rerank(codes, probe, cb, idx, q, k * rerank_mult, False), k)
-
-
-def ann_index_residual_topk(
-    spark,
-    path: str,
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    n_cells: int = IVF_CELLS,
-    n_probes: int = IVF_PROBES,
-    rerank_mult: int | None = None,
-    pq_m: int = PQ_M,
-    rerank_rows: int | None = None,
-    keep: DataFrame | None = None,
-    widen_to: int | None = None,
-) -> DataFrame:
-    """Query the on-disk index through its RESIDUAL code column — the
-    round-10 production default (PERFORMANCE.md "30× recall,
-    revisited": residual codes beat every absolute-code width at equal
-    budget and halve the exact-rerank fraction needed for full
-    recall). Fully self-contained on the stored index: centroids are
-    the stored unit vectors of vec_id < n_cells, the residual codebook
-    is re-derived from the stored (ne, cell) of the first
-    :data:`PQ_K64` rows — the same reconstruction the append path
-    performs, so build, append and query all agree bit-for-bit.
-    Results are bit-identical to the in-memory
-    :func:`ivf_pq_residual_topk` (pytest-pinned, ``keep`` included:
-    widening against the STORED assignment, semi join before the
-    pre-rank) while reading n_probes/n_cells of the dataset via
-    partition pruning. ``rerank_rows`` overrides the ``k × mult``
-    budget with an absolute per-query row count — the SLA-fraction
-    hook (see :func:`sla_rerank_rows`)."""
-    if rerank_mult is None:
-        rerank_mult = hamming_auto_mult(corpus_size(_read_index(spark, path)))
-    if rerank_rows is None:
-        rerank_rows = k * rerank_mult
     stored = _read_index(spark, path)
-    cent = _centroids(stored, n_cells)
+    if sla > SLA_COMPRESSED_FLOOR:
+        budget = sla_rerank_rows(corpus_size(stored), k)
+    elif rerank_mult is None:
+        budget = k * hamming_auto_mult(corpus_size(stored))
+    else:
+        budget = k * rerank_mult
+    cent = _centroids(stored, IVF_CELLS)
     rcb = _residual_codebooks(stored, cent)
     q = _queries(_emb_normed(embeddings), n_queries)
     probe, cells = _local_probe(
         _probe(
-            q, cent, n_queries, k, n_cells, n_probes,
+            q, cent, n_queries, k, IVF_CELLS, n_probes,
             keep, widen_to, stored.select("vec_id", "cell"),
         )
     )
@@ -1491,9 +1410,7 @@ def ann_index_residual_topk(
     codes = _semi(idx, keep).select(
         "vec_id", "cell", F.posexplode("rq_code").alias("m", "code")
     )
-    return _top(
-        _adc_rerank(codes, probe, rcb, idx, q, rerank_rows, True, pq_m), k
-    )
+    return _top(_adc_rerank(codes, probe, rcb, idx, q, budget), k)
 
 
 SEMDEDUP_THRESHOLD = 0.4

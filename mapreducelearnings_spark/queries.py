@@ -3915,77 +3915,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_pq_oracle(
-    n_queries: int = 8,
-    k: int = 5,
-    rerank_mult: int | None = None,
-    m: int = SS.PQ_M,
-    dsub: int = SS.PQ_DSUB,
-    kq: int = SS.PQ_K,
-) -> str:
-    """SQL mirror of SS.ann_index_topk's default read (absolute 8×16
-    PQ codes): the ann_ivf_topk oracle's cell assignment + probe, the
-    sampled codebook and argmin encode, the ADC pre-rank restricted to
-    probed cells, then the exact rerank of the top R."""
-    return f"""
-    WITH {_EMB_CTE},
-    cent AS (SELECT vec_id AS cid, ne AS ce FROM e
-             WHERE vec_id < {SS.IVF_CELLS}),
-    ac AS (SELECT e.vec_id, e.ne, cent.cid,
-           list_dot_product(e.ne, cent.ce) AS cs
-           FROM e CROSS JOIN cent),
-    cells AS (SELECT vec_id, cid AS cell FROM
-              (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY cs DESC, cid ASC) AS rn FROM ac)
-              WHERE rn = 1),
-    qprobe AS (SELECT vec_id AS query_id, ne AS qe, cid AS cell FROM
-               (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY cs DESC, cid ASC) AS rn
-                FROM ac WHERE vec_id < {n_queries})
-               WHERE rn <= {SS.IVF_PROBES}),
-    mr AS (SELECT CAST(range AS BIGINT) AS m FROM range(0, {m})),
-    cb AS (SELECT mr.m, vec_id AS code,
-           ne[1 + mr.m * {dsub} : {dsub} + mr.m * {dsub}] AS ce
-           FROM e CROSS JOIN mr WHERE vec_id < {kq}),
-    subs AS (SELECT vec_id, mr.m,
-             ne[1 + mr.m * {dsub} : {dsub} + mr.m * {dsub}] AS sub
-             FROM e CROSS JOIN mr),
-    enc AS (SELECT vec_id, m, code FROM (
-            SELECT s.vec_id, s.m, c.code,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-                     (list_dot_product(s.sub, s.sub)
-                      - 2 * list_dot_product(s.sub, c.ce)
-                      + list_dot_product(c.ce, c.ce)) ASC,
-                     c.code ASC) AS rn
-            FROM subs s JOIN cb c ON s.m = c.m) WHERE rn = 1),
-    part AS (SELECT q.query_id, enc.vec_id AS neighbor_id,
-             list_dot_product(
-               q.qe[1 + enc.m * {dsub} : {dsub} + enc.m * {dsub}], c.ce) AS ps
-             FROM enc
-             JOIN cells ON enc.vec_id = cells.vec_id
-             JOIN qprobe q ON cells.cell = q.cell
-             JOIN cb c ON enc.m = c.m AND enc.code = c.code
-             WHERE enc.vec_id <> q.query_id),
-    approx AS (SELECT query_id, neighbor_id, ROUND(SUM(ps), 6) AS adc
-               FROM part GROUP BY query_id, neighbor_id),
-    cand AS (SELECT query_id, neighbor_id FROM
-             (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY adc DESC, neighbor_id ASC) AS ar
-              FROM approx) WHERE ar <= {_rerank_budget_sql(k, rerank_mult)}),
-    scored AS (SELECT ca.query_id, ca.neighbor_id,
-               ROUND({_COS.format(a="q.ne", b="n.ne")}, 6) AS cos
-               FROM cand ca JOIN e n ON ca.neighbor_id = n.vec_id
-               JOIN e q ON ca.query_id = q.vec_id),
-    rk AS (SELECT query_id, neighbor_id, cos,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id ASC) AS rank
-           FROM scored)
-    SELECT query_id, neighbor_id, ROUND(cos, 4) AS cos,
-           CAST(rank AS BIGINT) AS rank
-    FROM rk WHERE rank <= {k}
-    """
-
-
 def _ivf_pq_residual_oracle(
     n_queries: int = 8,
     k: int = 5,
@@ -3995,12 +3924,13 @@ def _ivf_pq_residual_oracle(
     dims: int = SS.DIMS,
     budget_sql: str | None = None,
 ) -> str:
-    """SQL mirror of SS.ivf_pq_residual_topk: the IVF assignment CTE,
-    then the whole PQ pipeline runs over RESIDUALS r = ne − ce(cell)
-    (element-wise list_transform subtraction — the same IEEE subtract
-    Spark's zip_with performs), and the ADC estimate adds back the
-    query-centroid dot the probe ranking already computed:
-    adc = ROUND(MAX(cs) + SUM(ps), 6). ``budget_sql`` overrides the
+    """SQL mirror of SS.ivf_pq_residual_topk and of SS.ann_index_topk's
+    default read: the IVF assignment CTE, then the whole PQ pipeline
+    runs over RESIDUALS r = ne − ce(cell) (element-wise list_transform
+    subtraction — the same IEEE subtract Spark's zip_with performs),
+    and the ADC estimate adds back the query-centroid dot the probe
+    ranking already computed: adc = ROUND(MAX(cs) + SUM(ps), 6).
+    ``budget_sql`` overrides the
     rerank budget expression (the SLA-fraction hook)."""
     dsub = dims // m
     if budget_sql is None:
@@ -4084,7 +4014,7 @@ def q_ann_ivf_pq64_residual_topk(
 
 @register(
     "ann_index_compact_topk",
-    _ivf_pq_oracle(),
+    _ivf_pq_residual_oracle(),
     doc="On-disk index build, append, compact and query; phase times in "
     "PHASE_TIMES.",
 )
@@ -4095,7 +4025,7 @@ def q_ann_index_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = SS.corpus_size(emb)
-    cut = max(SS.PQ_K, SS.IVF_CELLS, (3 * n) // 4)
+    cut = max(SS.PQ_K64, SS.IVF_CELLS, (3 * n) // 4)
     root = tempfile.mkdtemp(prefix="ann_index_compact_q_")
     path = root + "/idx"
     try:

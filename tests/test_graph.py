@@ -1017,7 +1017,8 @@ def test_loop_operators_under_cap_leave_session_conf_alone(
 ):
     """Under the cap no loop operator writes session conf, not even
     inside a scope it restores: every RuntimeConfig.set/unset made during
-    the call is recorded, and the conf is identical before and after."""
+    the call is recorded, and the conf is identical before and after.
+    Nor does one leave a persisted frame in the session cache."""
     from pyspark.sql.conf import RuntimeConfig
 
     from mapreducelearnings_spark.pipeline import bpe as BP
@@ -1048,11 +1049,17 @@ def test_loop_operators_under_cap_leave_session_conf_alone(
             spark, docs, 4, batch_size=2
         ),
     }
-    flips = {}
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    flips, leaks = {}, []
     for name, run in cases.items():
         before = spark.conf.getAll
         writes.clear()
         run().collect()
         if writes or spark.conf.getAll != before:
             flips[name] = list(writes)
+        if not cache.isEmpty():
+            leaks.append(name)
+            spark.catalog.clearCache()
     assert flips == {}
+    assert leaks == []

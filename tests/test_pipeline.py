@@ -246,14 +246,14 @@ def test_ann_index_filtered_matches_memory(spark, sf_dir, tmp_path):
 
 
 def test_ann_index_residual_filtered_matches_memory(spark, sf_dir, tmp_path):
-    """Filtered × compressed composition (r13): the residual pre-rank
-    read with a metadata filter must (a) apply the semi join BEFORE
-    the pre-rank so the top-R budget counts MATCHING candidates, (b)
-    return only predicate-satisfying rows, and (c) stay bit-identical
-    between the in-memory and on-disk paths under both the plain keep
-    and the widen_to lever at its min-fill opt-out (widen_to=k),
-    the r14 3×k default (None), and a 6×k escalation — the same
-    disk≡memory convention as every other index read."""
+    """Filtered × compressed composition (r13): the index read (its
+    residual pre-rank) with a metadata filter must (a) apply the semi
+    join BEFORE the pre-rank so the top-R budget counts MATCHING
+    candidates, (b) return only predicate-satisfying rows, and (c)
+    stay bit-identical between the in-memory and on-disk paths under
+    both the plain keep and the widen_to lever at its min-fill opt-out
+    (widen_to=k), the r14 3×k default (None), and a 6×k escalation —
+    the same disk≡memory convention as every other index read."""
     from mapreducelearnings_spark.pipeline import simsearch as SS
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -264,7 +264,7 @@ def test_ann_index_residual_filtered_matches_memory(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ann_index_resid_filtered")
     SS.ann_index_write(emb, path)
     for widen in (5, None, 30):
-        disk = SS.ann_index_residual_topk(
+        disk = SS.ann_index_topk(
             spark, path, emb, n_queries=6, k=5, keep=keep, widen_to=widen
         ).collect()
         mem = SS.ivf_pq_residual_topk(
@@ -301,7 +301,7 @@ def test_quality_filter_is_conjunction_of_stats(spark, sf_dir):
 #: already built). A change of one means a read, broadcast or collect
 #: was added or removed.
 ANN_ENTRY_JOBS = {
-    "ann_index_compact_topk": 53,
+    "ann_index_compact_topk": 48,
     "ann_index_sla_topk": 14,
     "ann_ivf_filtered_topk": 23,
     "ann_ivf_pq64_residual_topk": 20,
@@ -793,12 +793,12 @@ def test_ann_index_roundtrip_matches_in_memory(
     spark, duck, sf_dir, tmp_path
 ):
     """The on-disk cell-partitioned index must return BIT-IDENTICAL
-    top-k to the IVF×PQ composition computed from the raw corpus — the
-    DuckDB reference the registered index chains are checked against,
-    with the same centroids, codes and rounding — while reading only
-    probed cells."""
+    top-k to the IVF × residual-PQ composition computed from the raw
+    corpus — the DuckDB reference the registered index chains are
+    checked against, with the same centroids, codes and rounding —
+    while reading only probed cells."""
     from mapreducelearnings_spark.pipeline import simsearch as SS
-    from mapreducelearnings_spark.queries import _ivf_pq_oracle
+    from mapreducelearnings_spark.queries import _ivf_pq_residual_oracle
 
     from .conftest import assert_matches_oracle
 
@@ -807,7 +807,7 @@ def test_ann_index_roundtrip_matches_in_memory(
     SS.ann_index_write(emb, path)
     on_disk = SS.ann_index_topk(spark, path, emb, n_queries=4, k=5)
     assert on_disk.count() > 0
-    assert_matches_oracle(on_disk, duck, _ivf_pq_oracle(n_queries=4))
+    assert_matches_oracle(on_disk, duck, _ivf_pq_residual_oracle(n_queries=4))
 
 
 def test_ann_index_append_matches_rebuild(spark, sf_dir, tmp_path):
@@ -821,7 +821,7 @@ def test_ann_index_append_matches_rebuild(spark, sf_dir, tmp_path):
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    cut = max(SS.PQ_K, SS.IVF_CELLS, (3 * n) // 4)
+    cut = max(SS.PQ_K64, SS.IVF_CELLS, (3 * n) // 4)
     base = emb.where(F.col("vec_id") < cut)
     batch = emb.where(F.col("vec_id") >= cut)
     assert batch.count() > 0, "fixture too small to split"
@@ -837,7 +837,6 @@ def test_ann_index_append_matches_rebuild(spark, sf_dir, tmp_path):
             (
                 r["vec_id"],
                 tuple(r["ne"]),
-                tuple(r["pq_code"]),
                 tuple(r["rq_code"]),
                 r["cell"],
             )
@@ -858,20 +857,6 @@ def test_ann_index_append_matches_rebuild(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert inc_topk == full_topk and len(inc_topk) > 0
-    # the residual read path agrees across append vs rebuild too
-    inc_res = {
-        tuple(r)
-        for r in SS.ann_index_residual_topk(
-            spark, inc_path, emb, n_queries=4, k=5
-        ).collect()
-    }
-    full_res = {
-        tuple(r)
-        for r in SS.ann_index_residual_topk(
-            spark, full_path, emb, n_queries=4, k=5
-        ).collect()
-    }
-    assert inc_res == full_res and len(inc_res) > 0
 
 
 def test_ann_index_residual_roundtrip_matches_in_memory(
@@ -888,9 +873,7 @@ def test_ann_index_residual_roundtrip_matches_in_memory(
     SS.ann_index_write(emb, path)
     on_disk = {
         tuple(r)
-        for r in SS.ann_index_residual_topk(
-            spark, path, emb, n_queries=4, k=5
-        ).collect()
+        for r in SS.ann_index_topk(spark, path, emb, n_queries=4, k=5).collect()
     }
     in_mem = {
         tuple(r)
@@ -924,15 +907,19 @@ def test_ann_index_append_chain_cleans_temp_and_reports_phases(
     assert all(v >= 0 for v in phases.values())
 
 
-def test_ann_index_recall_sla_ladder(spark, sf_dir, tmp_path):
+def test_ann_index_recall_sla_ladder(spark, duck, sf_dir, tmp_path):
     """ann_index_topk(recall_sla=...) must dispatch to the measured
     ladder rung the SLA requires (VERDICT r10 Next #2): >0.95 → the
     exact path (bit-identical to the in-memory exact-rerank IVF);
     (0.8, 0.95] → the residual pre-rank with the max(auto,
     ceil(SLA_RERANK_FRACTION·n)) budget (4% — the two-density
-    calibration on the constant's own docstring); ≤0.8 → the residual pre-rank under the auto budget. And the
-    knob is mutually exclusive with an explicit rerank_mult."""
+    calibration on the constant's own docstring); ≤0.8 → the default
+    read, the residual pre-rank under the auto budget. And the knob is
+    mutually exclusive with an explicit rerank_mult."""
     from mapreducelearnings_spark.pipeline import simsearch as SS
+    from mapreducelearnings_spark.queries import _ivf_pq_residual_oracle
+
+    from .conftest import assert_matches_oracle
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ann_index_sla")
@@ -952,18 +939,16 @@ def test_ann_index_recall_sla_ladder(spark, sf_dir, tmp_path):
     n = spark.read.parquet(path).count()
     budget = SS.sla_rerank_rows(n, 5)
     assert budget >= 5 * SS.hamming_auto_mult(n)
-    assert rows(
-        SS.ann_index_topk(spark, path, emb, n_queries=4, k=5, recall_sla=0.9)
-    ) == rows(
-        SS.ann_index_residual_topk(
-            spark, path, emb, n_queries=4, k=5, rerank_rows=budget
-        )
+    assert_matches_oracle(
+        SS.ann_index_topk(spark, path, emb, n_queries=4, k=5, recall_sla=0.9),
+        duck,
+        _ivf_pq_residual_oracle(n_queries=4, budget_sql=str(budget)),
     )
 
-    # ≤ 0.8 → residual pre-rank under the auto budget (the default)
+    # ≤ 0.8 → the default read
     assert rows(
         SS.ann_index_topk(spark, path, emb, n_queries=4, k=5, recall_sla=0.5)
-    ) == rows(SS.ann_index_residual_topk(spark, path, emb, n_queries=4, k=5))
+    ) == rows(SS.ann_index_topk(spark, path, emb, n_queries=4, k=5))
 
     with pytest.raises(ValueError, match="recall_sla OR rerank_mult"):
         SS.ann_index_topk(spark, path, emb, recall_sla=0.9, rerank_mult=16)
@@ -981,7 +966,7 @@ def test_ann_index_append_invalidates_corpus_size_cache(
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    cut = max(SS.PQ_K, SS.IVF_CELLS, (3 * n) // 4)
+    cut = max(SS.PQ_K64, SS.IVF_CELLS, (3 * n) // 4)
     path = str(tmp_path / "ann_index_cache")
     SS.ann_index_write(emb.where(F.col("vec_id") < cut), path)
     pre = SS.corpus_size(spark.read.parquet(path))  # primes the cache
@@ -1090,7 +1075,6 @@ def test_ann_index_compact_bit_identical(spark, sf_dir, tmp_path):
                 SS.ann_index_topk(
                     spark, path, emb, n_queries=4, k=5, recall_sla=0.9
                 ),
-                SS.ann_index_residual_topk(spark, path, emb, n_queries=4, k=5),
             )
         ]
 
@@ -1137,14 +1121,11 @@ def test_ann_index_compact_target_bytes(spark, sf_dir, tmp_path):
             for d in _glob.glob(f"{path}/cell=*")
         }
 
-    def reads() -> list[set]:
-        return [
-            {tuple(r) for r in df.collect()}
-            for df in (
-                SS.ann_index_topk(spark, path, emb, n_queries=4, k=5),
-                SS.ann_index_residual_topk(spark, path, emb, n_queries=4, k=5),
-            )
-        ]
+    def reads() -> set:
+        return {
+            tuple(r)
+            for r in SS.ann_index_topk(spark, path, emb, n_queries=4, k=5).collect()
+        }
 
     files = cell_files()
     total_bytes = sum(
@@ -1152,7 +1133,7 @@ def test_ann_index_compact_target_bytes(spark, sf_dir, tmp_path):
     )
     total_rows = spark.read.parquet(path).count()
     before = reads()
-    assert all(before)
+    assert before
 
     # (b)+(c): target at ~1/4 of the mean cell size forces multi-file
     # cells; the row bound mirrors compact_parquet's derivation
@@ -1212,7 +1193,7 @@ def test_ann_index_query_prunes_partitions(spark, sf_dir, tmp_path):
 
 def test_ann_index_empty_and_tiny_corpus(spark, sf_dir, tmp_path):
     """Degenerate corpora through the on-disk index, in both
-    ann_index_topk modes (default ADC pre-rank, recall_sla=0.9): an
+    ann_index_topk budgets (default auto, recall_sla=0.9): an
     empty corpus writes an index with no data file, and the query
     returns 0 rows with the normal result schema instead of failing
     schema inference; a 3-vector corpus (fewer vectors than k and than
@@ -1745,7 +1726,12 @@ def test_bpe_batched_disjoint_equals_sequential(spark):
         [(1, " ".join(["ab"] * 9 + ["cd"] * 7 + ["ef"] * 5))],
         "doc_id: long, text: string",
     )
-    seq = [tuple(r) for r in BP.train_merges(spark, docs, rounds=3).collect()]
+    seq, jobs = jobs_of(
+        spark,
+        lambda: [tuple(r) for r in BP.train_merges(spark, docs, rounds=3).collect()],
+    )
+    # the last round's vocabulary is never read, so it is not checkpointed
+    assert jobs == 8
     bat = [
         tuple(r)
         for r in BP.train_merges(spark, docs, 3, batch_size=3).collect()

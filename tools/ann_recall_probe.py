@@ -9,7 +9,8 @@ Usage: python tools/ann_recall_probe.py [sf_dir] [path ...]
 Paths: ivf (exact rerank), ivf_pq64_residual (residual-PQ pre-rank),
 filtered (recall-vs-selectivity sweep of the r13 adaptive widened
 filtered probe vs the pre-r13 fixed probe, at vec_id%m residue
-selectivities), index_sla (on-disk index, recall_sla=0.9 → residual
+selectivities), index (on-disk index, default read → residual pre-rank
+under the log-n auto budget), index_sla (recall_sla=0.9 → residual
 pre-rank + max(auto, ceil(SLA_RERANK_FRACTION·n)) budget, 4% per the
 two-density calibration), index_sla_exact (recall_sla=1.0 → exact
 scoring of probed cells). Default: ivf ivf_pq64_residual index_sla.
@@ -59,6 +60,9 @@ def main() -> int:
         "ivf": lambda: SS.ivf_topk(emb, n_queries=8, k=5),
         "ivf_pq64_residual": lambda: SS.ivf_pq_residual_topk(
             emb, n_queries=8, k=5
+        ),
+        "index": lambda: SS.ann_index_topk(
+            spark, _index_path(), emb, n_queries=8, k=5
         ),
         "index_sla": lambda: SS.ann_index_topk(
             spark, _index_path(), emb, n_queries=8, k=5, recall_sla=0.9
